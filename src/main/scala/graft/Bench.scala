@@ -124,55 +124,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Scale-aware agg fallback (VERDICT r16 #6, mirroring Verify): the
-    // sort-free 10M-key in-memory collect_list tuning is kept at
-    // fixture scale unconditionally, and at sf1-size ONLY when the
-    // heap can actually hold 10M keys per partition (the 48 GB sf1
-    // bench JVM can; a default 24 GB one OOM'd before the spillable
-    // sort path could engage). One binary now benches every SF at
-    // default heap; SPARK_GRAFT_AGG_FALLBACK stays as the override.
-    val sfBytes: Long =
-      try {
-        val root = java.nio.file.Paths.get(sfDir)
-        if (java.nio.file.Files.isDirectory(root)) {
-          val s = java.nio.file.Files.walk(root)
-          try s.filter(java.nio.file.Files.isRegularFile(_))
-            .mapToLong(java.nio.file.Files.size(_)).sum()
-          finally s.close()
-        } else 0L
-      } catch { case _: Throwable => Long.MaxValue }
-    val aggFallback = sys.env.getOrElse("SPARK_GRAFT_AGG_FALLBACK",
-      if (sfBytes <= 64L * 1024 * 1024 ||
-          Runtime.getRuntime.maxMemory >= 40L * 1024 * 1024 * 1024)
-        "10000000"
-      else "128")
-    // sf1-size bench chains stage the same tens-of-GB shuffle /
-    // checkpoint spill that ENOSPC'd round 16 when concurrent with a
-    // DuckDB sweep — same lock + same 64 MB cutover as Verify
-    // (VERDICT r17 #2). The solo forks run INSIDE the parent's held
-    // window (the parent holds until JVM exit and blocks on the
-    // fork), so a fork re-acquiring would deadlock against its own
-    // parent: the parent exports SPARK_GRAFT_DISKLOCK_HELD=1 and the
-    // fork skips the acquire.
-    if (sfBytes >= DiskLock.HeavyInputBytes &&
-        !sys.env.get("SPARK_GRAFT_DISKLOCK_HELD").contains("1"))
-      DiskLock.acquire(s"graft.Bench $sfDir")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // ObjectHashAggregate falls back to SORT-based aggregation after
-      // only 128 distinct keys per partition by default — every
-      // collect_set/collect_list groupBy (the normalization edge
-      // exchange, stats rollups) was paying an unnecessary sort
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        aggFallback)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder("graft-bench", sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =

@@ -81,14 +81,7 @@ object ScaleScaffold {
     val out = args.headOption.getOrElse("/tmp/graft_sf1")
     val base = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-scaffold")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder("graft-scale-scaffold", base)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     amplify(spark, base, out, factor)

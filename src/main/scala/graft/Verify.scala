@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,42 +9,7 @@ object Verify {
     // loop — check one query without dumping all of them)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Scale-aware agg fallback (VERDICT r15 #3): the bench-tuned 10M-key
-    // in-memory threshold (avoids a sort per collect_list partition)
-    // OOM'd a 24 GB JVM at sf1-size before the spillable sort path could
-    // engage — a correctness run must not need a magic knob to survive
-    // its input. Pick from the input scale: the driver's fixture gates
-    // are ≤17 MB on disk (sf0.1) while the amplified sf1 scaffold that
-    // OOM'd is 154 MB, so ≤64 MB keeps the fast in-memory path and
-    // anything larger gets Spark's spill-friendly default (128). The env
-    // var remains an explicit override for experiments.
-    val sfBytes: Long =
-      try {
-        val root = Paths.get(sfDir)
-        if (Files.isDirectory(root)) {
-          val s = Files.walk(root)
-          try s.filter(Files.isRegularFile(_))
-            .mapToLong(Files.size(_)).sum()
-          finally s.close()
-        } else 0L
-      } catch { case _: Throwable => Long.MaxValue }
-    val aggFallback = sys.env.getOrElse("SPARK_GRAFT_AGG_FALLBACK",
-      if (sfBytes <= 64L * 1024 * 1024) "10000000" else "128")
-    // sf1-size runs stage tens of GB (tile extraction, shuffle spill):
-    // serialize against a concurrent DuckDB compare via the advisory
-    // lock both sides honor (VERDICT r16 #5) — dev-scale runs skip it
-    if (sfBytes >= DiskLock.HeavyInputBytes)
-      DiskLock.acquire(s"graft.Verify $sfDir")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        aggFallback)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-verify", sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A query that throws must be LOUD: it is recorded in

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QuerySpec, Tables}
 import graft.functions.TextFunctions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -586,7 +587,65 @@ object CorpusProfile {
   // (checkpointed after the split), the dedup is one md5-keyed
   // partial agg, and decontamination only joins grams present on
   // both sides — the same never-all-pairs shape as the standalone
-  // contamination query.
+  // contamination query. Each stage is a def the profiler's
+  // `corpus_prep.*` phases call too (graft.Profile), so a stage timing
+  // is the query's own code.
+
+  /** The frame the query checkpoints first: one scan pays
+    * tokenize+quality+md5. The round-18 profile measured the old shape
+    * re-deriving this projection TWICE (once per side of the dedup
+    * join-back): the qf⋈dd stage cost ~2× the scan's 2.7 s at sf1
+    * while the gram join everyone suspected was ~1 s. text is dropped
+    * here: downstream only needs its md5 (dedup key) and toks (grams)
+    * — narrower checkpoint, narrower join input.
+    */
+  private[graft] def prepScored(s: SparkSession, d: String): DataFrame =
+    Tables.fanout(Tables.documents(s, d))
+      .select(col("doc_id"), col("source"), col("text"),
+        tokens(col("text")).as("toks"),
+        qualityScore(col("text")).as("score"))
+      .withColumn("ntok", size(col("toks")).cast("long"))
+      .filter(col("score") >= 0.5)
+      .select(col("doc_id"), col("source"), col("ntok"), col("toks"),
+        md5(col("text")).as("md5h"))
+
+  /** Exact dedup (min-id survivor per md5) and the hash split. */
+  private[graft] def prepSplit(scored: DataFrame): DataFrame = {
+    val dd = scored.groupBy(col("md5h").as("h"))
+      .agg(min("doc_id").as("doc_id")).select("doc_id")
+    scored.join(dd, "doc_id")
+      .withColumn("h", pmod(graft.functions.HashFunctions.hash32(
+        col("doc_id")), lit(100)))
+      .withColumn("split",
+        when(col("h") < 80, "train").when(col("h") < 90, "validation")
+          .otherwise("test"))
+      .select("doc_id", "source", "ntok", "toks", "split")
+  }
+
+  private[graft] def prepGrams(split: DataFrame): DataFrame =
+    split.select(col("doc_id"), col("split"),
+      explode(shingles(col("toks"), SpanGram)).as("gram"))
+
+  private[graft] def prepTestGrams(grams: DataFrame): DataFrame =
+    grams.filter(col("split") === "test").select("gram").distinct()
+
+  /** Train docs sharing a gram with the test split. */
+  private[graft] def prepContaminated(grams: DataFrame): DataFrame =
+    grams.filter(col("split") === "train")
+      .join(prepTestGrams(grams), "gram").select("doc_id").distinct()
+
+  private def prepRollup(split: DataFrame,
+      contaminated: DataFrame): DataFrame =
+    split.join(contaminated, Seq("doc_id"), "left_anti")
+      .groupBy("split", "source")
+      .agg(count(lit(1)).as("n_docs"),
+        sum("ntok").as("n_tokens"),
+        md5(array_join(transform(
+          array_sort(collect_list(struct(col("doc_id")))),
+          x => x.getField("doc_id").cast("string")), ","))
+          .as("member_md5"))
+      .orderBy("split", "source")
+
   private val qCorpusPrep = QuerySpec.of(
     "q_corpus_prep", headline = true, oracle = {
       val toks = sql.toks
@@ -621,46 +680,9 @@ object CorpusProfile {
         |FROM fin GROUP BY split, source
         |ORDER BY split, source""".stripMargin
     }) { (s, d) =>
-    import graft.functions.HashFunctions
-    // One scan pays tokenize+quality+md5, then a checkpoint — the
-    // round-18 profiler (CorpusPrepProfile) measured the old shape
-    // re-deriving this projection TWICE (once per side of the dedup
-    // join-back): the qf⋈dd stage cost ~2× the scan's 2.7 s at sf1
-    // while the gram join everyone suspected was ~1 s. text is
-    // dropped here: downstream only needs its md5 (dedup key) and
-    // toks (grams) — narrower checkpoint, narrower join input.
-    val qf = Tables.fanout(Tables.documents(s, d))
-      .select(col("doc_id"), col("source"), col("text"),
-        tokens(col("text")).as("toks"),
-        qualityScore(col("text")).as("score"))
-      .withColumn("ntok", size(col("toks")).cast("long"))
-      .filter(col("score") >= 0.5)
-      .select(col("doc_id"), col("source"), col("ntok"), col("toks"),
-        md5(col("text")).as("md5h"))
-      .localCheckpoint()
-    val dd = qf.groupBy(col("md5h").as("h"))
-      .agg(min("doc_id").as("doc_id")).select("doc_id")
-    val sp = qf.join(dd, "doc_id")
-      .withColumn("h", pmod(HashFunctions.hash32(col("doc_id")), lit(100)))
-      .withColumn("split",
-        when(col("h") < 80, "train").when(col("h") < 90, "validation")
-          .otherwise("test"))
-      .select("doc_id", "source", "ntok", "toks", "split")
+    val sp = prepSplit(prepScored(s, d).localCheckpoint())
       .localCheckpoint() // grams + the anti join + rollup all read it
-    val gr = sp.select(col("doc_id"), col("split"),
-      explode(shingles(col("toks"), SpanGram)).as("gram"))
-    val teg = gr.filter(col("split") === "test").select("gram").distinct()
-    val dr = gr.filter(col("split") === "train")
-      .join(teg, "gram").select("doc_id").distinct()
-    sp.join(dr, Seq("doc_id"), "left_anti")
-      .groupBy("split", "source")
-      .agg(count(lit(1)).as("n_docs"),
-        sum("ntok").as("n_tokens"),
-        md5(array_join(transform(
-          array_sort(collect_list(struct(col("doc_id")))),
-          x => x.getField("doc_id").cast("string")), ","))
-          .as("member_md5"))
-      .orderBy("split", "source")
+    prepRollup(sp, prepContaminated(prepGrams(sp)))
   }
 
   val specs: Seq[QuerySpec] = Seq(qVocabCoverage, qSourceOverlap, qDupSpans,

@@ -93,13 +93,7 @@ object DedupScaleProbe {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(500000L)
     val nVecs = if (args.length > 1) args(1).toLong else 200000L
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-dedup-scale-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder("graft-dedup-scale-probe", "")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // decade-up probes stage tens of GB of generated input + shuffle

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only one-decade-up probe for the MVT core: generates an
@@ -14,15 +13,7 @@ import org.apache.spark.sql.functions._
 object MvtScaleProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-mvt-scale-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "10000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder("graft-mvt-scale-probe", "")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // decade-up probes stage tens of GB of generated input + shuffle

@@ -28,15 +28,7 @@ object MvtSoakProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val overflow = args.length > 1 && args(1) == "overflow"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-mvt-soak-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "10000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder("graft-mvt-soak-probe", "")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // decade-up probes stage tens of GB of generated input + shuffle

@@ -118,7 +118,7 @@ object MvtTiles {
     * Shared with the GeoPackage BLOB encoder (same four layers, same
     * oracle CTEs).
     */
-  private[operators] def features(s: SparkSession, d: String): DataFrame = {
+  private[graft] def features(s: SparkSession, d: String): DataFrame = {
     val pt = (lonC: Column, latC: Column) =>
       struct(lonC.as("lon"), latC.as("lat"))
 
@@ -675,7 +675,7 @@ object MvtTiles {
     * only to the z≤8 slice; z9+ passes through untouched (geographic
     * sharding bounds those groups).
     */
-  private def capped(s: SparkSession, d: String): DataFrame = {
+  private[graft] def capped(s: SparkSession, d: String): DataFrame = {
     val fw = worldFeatures(s, d)
     val kcap = when(col("z") <= 4, lit(CapLowZ)).otherwise(lit(CapMidZ))
     val rh = pmod(pmod(col("fid"), lit(1000000007L)) * 2654435761L,
@@ -696,9 +696,6 @@ object MvtTiles {
   }
 
   /** Profiler hook: the capped fan-out without the prep kernel. */
-  private[operators] def cappedForProfile(s: SparkSession,
-      d: String): DataFrame = capped(s, d)
-
   /** Tile-assigned, capped, quantized, simplified, clipped features:
     * (layer, fid, gtype, z, tx, ty, geom, n_parts, n_points, chk,
     * pk, pv) where `geom` is the feature's FINAL packed MVT geometry

@@ -165,7 +165,7 @@ object Normalization {
     * but the window + collect_list re-aggregation become one
     * streaming walk (NormalizeSegmentsExec; measured A/B in
     * SCALING.md). `agg` restores the window/aggregate composition,
-    * which NormalizeProfile still exposes per-stage.
+    * which graft.Profile's `normalize.*` phases expose per-stage.
     */
   private def streamSegments(s: SparkSession): Boolean =
     s.conf.get("spark.graft.normalize.streamSegments",
@@ -208,8 +208,8 @@ object Normalization {
     * element_at(coords, pos+2), NOT zip_with/slice/transform:
     * higher-order functions are CodegenFallback (interpreted) and
     * dominated the map stage (~100 µs/row); this shape keeps the
-    * whole stage codegen'd. (Exposed per-stage for NormalizeProfile's
-    * sf1 attribution — composition is unchanged.)
+    * whole stage codegen'd. (Exposed per-stage as graft.Profile's
+    * `normalize.*` phases — composition is unchanged.)
     */
   private[graft] def edgesOf(runs: DataFrame): DataFrame = {
     def roundL(x: Column): Column =
@@ -282,7 +282,7 @@ object Normalization {
   /** N3 candidate discovery: joinable endpoints where exactly 2
     * same-props segments touch (props equality via the flat 64-bit
     * phash — N3's isPartOfSameRun), as (a, b) seg_id pairs. (Exposed
-    * per-stage for NormalizeProfile's sf1 attribution.)
+    * per-stage as graft.Profile's `normalize.deg2_pairs`.)
     */
   private[graft] def deg2Pairs(segments: DataFrame): DataFrame = {
     val ends = segments.select(col("seg_id"), col("phash"),

@@ -3,7 +3,7 @@ package graft.operators
 import graft.QuerySpec
 import graft.functions.GeoFunctions
 import graft.functions.GeoFunctions._
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Full-chain pipeline query (SURVEY §2 composition; the reference's
@@ -40,13 +40,180 @@ object PipelineE2E {
   private def qix(c: Column): Column =
     (c * 1e7 + when(c >= 0, 0.5).otherwise(-0.5)).cast("long")
 
-  /** Normalized canonical geometry per dataset fingerprint — the
-    * ingest-time materialization, persisted as a [[graft.Scaffold]]
-    * parquet artifact (see the stage-2 comment).
+  // Each stage is a def the profiler's `pipeline.*` phases call too
+  // (graft.Profile), so a stage timing is the query's own code.
+
+  /** Stages 1-2: formatted kept runs (P1/P7-P10) plus partial-overlap
+    * duplicates with conflicting props — same construction as
+    * q_ski_normalize_props, so N2 re-segmentation and the N4 lattice
+    * both fire inside the chain — normalized (N1-N4).
+    *
+    * Persisted per dataset fingerprint as a [[graft.Scaffold]] parquet
+    * artifact: the reference's prepare() MATERIALIZES each phase to a
+    * file and downstream stages read the prepared output
+    * (the reference's `src/PrepareGeoJSON.ts:95-270` writes normalized
+    * GeoJSON once; clustering and statistics consume it) — re-running
+    * normalization per query execution would be unlike the reference's
+    * own architecture. The parquet artifact (vs the former JVM memo of
+    * localCheckpoint blocks) survives restarts and executor loss, and
+    * keeps the bench measuring the downstream chain, not JVM warmth; it
+    * also keeps the clustering loop from re-running the chain per
+    * iteration.
     */
-  private def normalizedScaffold(s: org.apache.spark.sql.SparkSession,
-      d: String)(build: => org.apache.spark.sql.DataFrame) =
-    graft.Scaffold.table(s, "pipeline-norm", SkiFeatures.memoKey(s, d))(build)
+  private[graft] def normalized(s: SparkSession, d: String): DataFrame =
+    graft.Scaffold.table(s, "pipeline-norm", SkiFeatures.memoKey(s, d)) {
+      val fk = SkiQueries.formatted(s, d).filter(col("kept"))
+      val propsCol = struct(
+        col("uses"), col("name"), col("ref"), col("difficulty"),
+        col("grooming"), col("status"), col("oneway"), col("gladed"),
+        col("patrolled"), col("snowmaking"), col("snowfarming"),
+        col("tunnel"), col("lit"), col("wikidata_id"))
+      val base = fk.select(col("way_id").as("run_id"), propsCol.as("props"),
+        col("coords"))
+      val dupProps = struct(
+        array(lit("skitour")).as("uses"), lit("ZDUP").as("name"),
+        lit(null).cast("string").as("ref"), lit("novice").as("difficulty"),
+        lit(null).cast("string").as("grooming"), lit("operating").as("status"),
+        lit(false).as("oneway"), lit(null).cast("boolean").as("gladed"),
+        lit(true).as("patrolled"), lit(null).cast("boolean").as("snowmaking"),
+        lit(null).cast("boolean").as("snowfarming"),
+        lit(null).cast("boolean").as("tunnel"),
+        lit(null).cast("boolean").as("lit"), lit("Q1").as("wikidata_id"))
+      val overlap = fk.filter(pmod(col("way_id"), lit(10)) === 4)
+        .select((col("way_id") + 1000000000L).as("run_id"),
+          dupProps.as("props"), slice(col("coords"), 2, 2).as("coords"))
+      Normalization.normalizeRuns(base.unionByName(overlap),
+        Normalization.RunPropsLattice)
+    }
+
+  // cache keys travel as ONE packed long (x<<32 | y) — long-key
+  // equi-joins stay on the vectorized UnsafeRow path; the oracle's
+  // "x_y" string form is reconstructed only inside the stub fetch
+  // (the cache VALUE contract hashes the string key).
+  private def packKey(x: Column, y: Column): Column =
+    shiftleft(x, 32).bitwiseOR(y.bitwiseAND(lit(0xFFFFFFFFL)))
+  private def keyStr(k: Column): Column = concat_ws("_",
+    shiftright(k, 32), shiftright(shiftleft(k, 32), 32))
+
+  private def withEnds(norm: DataFrame): DataFrame =
+    norm.select(col("run_id").as("okey"),
+      col("props.uses").as("uses"),
+      coalesce(col("props.difficulty"), lit("other")).as("difficulty"),
+      col("coords"),
+      qix(element_at(element_at(col("coords"), 1), 1)).as("x0"),
+      qix(element_at(element_at(col("coords"), 1), 2)).as("y0"),
+      qix(element_at(element_at(col("coords"), -1), 1)).as("xn"),
+      qix(element_at(element_at(col("coords"), -1), 2)).as("yn"))
+
+  // ---- stage 3: elevation enrichment (E1 cache-aside, stub) ----
+  // EVERY coordinate gets a z — the reference appends z to every
+  // position of every geometry (reference `src/transforms/Elevation.ts:411-508`),
+  // not just segment endpoints: explode positions → packed quantized
+  // key → one cache-aside pass over the distinct keys → per-run
+  // profile stats in position order. Segment stats then read the
+  // full profile (min/max over ALL points), matching E1's standalone
+  // behavior.
+
+  /** Position rows, NARROW: only (okey, pidx, key) goes through the
+    * cache join — the 2-D coordinates never leave [[withEnds]].
+    */
+  private[graft] def pts(norm: DataFrame): DataFrame =
+    norm.select(col("run_id").as("okey"),
+        posexplode(col("coords")).as(Seq("pidx", "pt")))
+      .select(col("okey"), col("pidx"),
+        packKey(qix(element_at(col("pt"), 1)),
+          qix(element_at(col("pt"), 2))).as("key"))
+
+  private[graft] def elevationCache(s: SparkSession,
+      pts: DataFrame): DataFrame = {
+    val emptyCache = s.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL("key bigint, value double"))
+    Enrichment.cacheAside(pts.select("key"), emptyCache, lit(true),
+      missing => missing.select(col("key"),
+        Enrichment.stubElevation(keyStr(col("key"))).as("value")))._1
+  }
+
+  /** Per-run z profile. Downstream consumes only four scalars of it
+    * (first/last/min/max: geodesic length is z-independent), so the
+    * rollup is four DeclarativeAggregates (min_by/max_by over the
+    * unique pidx + min/max) in one HashAggregate — the former
+    * sort_array(collect_list) ObjectHashAggregate materialized every
+    * run's full z array only to reduce it to these scalars (and a
+    * zip_with rebuilt 3-D geometry whose z the length kernel ignores).
+    */
+  private[graft] def segZ(s: SparkSession, norm: DataFrame): DataFrame = {
+    val p = pts(norm)
+    p.join(elevationCache(s, p), Seq("key"))
+      .groupBy("okey")
+      .agg(min_by(col("value"), col("pidx")).as("z_start"),
+        max_by(col("value"), col("pidx")).as("z_end"),
+        min(col("value")).as("z_min"),
+        max(col("value")).as("z_max"))
+  }
+
+  /** The enriched frame, before the query's checkpoint: enriched feeds
+    * the clustering object table AND the final statistics scan, so the
+    * query materializes it once instead of re-running the cache join
+    * per consumer. NARROW: length is computed here so the coordinate
+    * arrays (the fat column) stop at this boundary; the checkpoint
+    * carries only per-run scalars plus the small uses array.
+    */
+  private[graft] def enriched(s: SparkSession, d: String): DataFrame = {
+    val norm = normalized(s, d)
+    withEnds(norm).join(segZ(s, norm), Seq("okey"))
+      .select(col("okey"), col("uses"), col("difficulty"),
+        col("x0"), col("y0"), col("xn"), col("yn"),
+        col("z_start"), col("z_end"), col("z_min"), col("z_max"),
+        lineLengthM(col("coords")).as("len_m"))
+  }
+
+  /** Stage 4: clustering (J10/J7) on the canonical anchor. */
+  private[graft] def assign(s: SparkSession, d: String,
+      enriched: DataFrame): DataFrame = {
+    val startIsAnchor = col("x0") < col("xn") ||
+      (col("x0") === col("xn") && col("y0") <= col("yn"))
+    val objs = enriched.select(col("okey"), col("uses"),
+      (when(startIsAnchor, col("x0")).otherwise(col("xn"))
+        .cast("double") / 1e7).as("lon"),
+      (when(startIsAnchor, col("y0")).otherwise(col("yn"))
+        .cast("double") / 1e7).as("lat"))
+    val areas = graft.Tables.orders(s, d)
+      .filter(pmod(col("o_orderkey"), lit(37)) === 0)
+      .select(col("o_orderkey").as("area_id"),
+        when(pmod(col("o_orderkey"), lit(2)) === 0, "downhill")
+          .otherwise("nordic").as("act"),
+        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
+          - 180.0).as("lon"),
+        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
+          - 60.0).as("lat"))
+    Clustering.transitiveAssign(areas, objs, RadiusM, CellDeg)
+  }
+
+  /** Stage 5: per-area statistics (A1 projection) over the assigned
+    * rows. ONE scan: partial sums per (area, difficulty), then a
+    * per-area rollup that also renders the sorted difficulty
+    * histogram — no second scan, no extra join.
+    */
+  private def areaStats(assigned: DataFrame): DataFrame =
+    assigned.groupBy("area_id", "difficulty")
+      .agg(count(lit(1)).as("n"), sum("len_m").as("len_m"),
+        min(col("z_min")).as("zmin"),
+        max(col("z_max")).as("zmax"),
+        sum(abs(col("z_end") - col("z_start"))).as("dz"))
+      .groupBy("area_id")
+      .agg(sum("n").as("n_segments"),
+        (floor((sum("len_m") / 1000.0) * 1e4 + 0.5) / 1e4).as("total_km"),
+        array_join(array_sort(collect_list(
+          concat(col("difficulty"), lit(":"), col("n")))), ";")
+          .as("difficulties"),
+        (floor((min("zmin")) * 1e1 + 0.5) / 1e1).as("min_elev"),
+        (floor((max("zmax")) * 1e1 + 0.5) / 1e1).as("max_elev"),
+        (floor((sum("dz")) * 1e2 + 0.5) / 1e2).as("vertical_m"))
+      .select(col("area_id"), col("n_segments"), col("total_km"),
+        col("difficulties"), col("min_elev"), col("max_elev"),
+        col("vertical_m"))
+      .orderBy("area_id")
 
   private val qPipeline = QuerySpec.of(
     "q_pipeline_e2e", {
@@ -164,154 +331,8 @@ object PipelineE2E {
         |ORDER BY area_id""".stripMargin
     },
     headline = true) { (s, d) =>
-    // ---- stage 1: format (P1/P7-P10, shared scaffolding) ----
-    val fk = SkiQueries.formatted(s, d).filter(col("kept"))
-    val propsCol = struct(
-      col("uses"), col("name"), col("ref"), col("difficulty"),
-      col("grooming"), col("status"), col("oneway"), col("gladed"),
-      col("patrolled"), col("snowmaking"), col("snowfarming"),
-      col("tunnel"), col("lit"), col("wikidata_id"))
-    val base = fk.select(col("way_id").as("run_id"), propsCol.as("props"),
-      col("coords"))
-    // partial-overlap duplicates with conflicting props — same
-    // construction as q_ski_normalize_props, so N2 re-segmentation and
-    // the N4 lattice both fire inside the chain
-    val dupProps = struct(
-      array(lit("skitour")).as("uses"), lit("ZDUP").as("name"),
-      lit(null).cast("string").as("ref"), lit("novice").as("difficulty"),
-      lit(null).cast("string").as("grooming"), lit("operating").as("status"),
-      lit(false).as("oneway"), lit(null).cast("boolean").as("gladed"),
-      lit(true).as("patrolled"), lit(null).cast("boolean").as("snowmaking"),
-      lit(null).cast("boolean").as("snowfarming"),
-      lit(null).cast("boolean").as("tunnel"),
-      lit(null).cast("boolean").as("lit"), lit("Q1").as("wikidata_id"))
-    val overlap = fk.filter(pmod(col("way_id"), lit(10)) === 4)
-      .select((col("way_id") + 1000000000L).as("run_id"),
-        dupProps.as("props"), slice(col("coords"), 2, 2).as("coords"))
-
-    // ---- stage 2: normalize (N1-N4) ----
-    // Persisted per dataset fingerprint: the reference's prepare()
-    // MATERIALIZES each phase to a file and downstream stages read the
-    // prepared output (`/root/reference/src/PrepareGeoJSON.ts:95-270`
-    // writes normalized GeoJSON once; clustering and statistics consume
-    // it) — re-running normalization per query execution would be
-    // unlike the reference's own architecture. The parquet artifact
-    // (vs the former JVM memo of localCheckpoint blocks) survives
-    // restarts and executor loss, and keeps the bench measuring the
-    // downstream chain, not JVM warmth; it also keeps the clustering
-    // loop from re-running the chain per iteration.
-    val norm = normalizedScaffold(s, d) {
-      Normalization.normalizeRuns(base.unionByName(overlap),
-        Normalization.RunPropsLattice)
-    }
-
-    // cache keys travel as ONE packed long (x<<32 | y) — long-key
-    // equi-joins stay on the vectorized UnsafeRow path; the oracle's
-    // "x_y" string form is reconstructed only inside the stub fetch
-    // (the cache VALUE contract hashes the string key).
-    def packKey(x: Column, y: Column): Column =
-      shiftleft(x, 32).bitwiseOR(y.bitwiseAND(lit(0xFFFFFFFFL)))
-    def keyStr(k: Column): Column = concat_ws("_",
-      shiftright(k, 32), shiftright(shiftleft(k, 32), 32))
-    val withEnds = norm.select(col("run_id").as("okey"),
-        col("props.uses").as("uses"),
-        coalesce(col("props.difficulty"), lit("other")).as("difficulty"),
-        col("coords"),
-        qix(element_at(element_at(col("coords"), 1), 1)).as("x0"),
-        qix(element_at(element_at(col("coords"), 1), 2)).as("y0"),
-        qix(element_at(element_at(col("coords"), -1), 1)).as("xn"),
-        qix(element_at(element_at(col("coords"), -1), 2)).as("yn"))
-
-    // ---- stage 3: elevation enrichment (E1 cache-aside, stub) ----
-    // EVERY coordinate gets a z — the reference appends z to every
-    // position of every geometry (`/root/reference/src/transforms/Elevation.ts:411-508`),
-    // not just segment endpoints: explode positions → packed quantized
-    // key → one cache-aside pass over the distinct keys → per-run
-    // profile stats in position order. Segment stats then read the
-    // full profile (min/max over ALL points), matching E1's standalone
-    // behavior.
-    // Position rows shuffle NARROW: only (okey, pidx, key) goes through
-    // the cache join — the 2-D coordinates never leave `withEnds`.
-    // Downstream consumes only four scalars of the z profile
-    // (first/last/min/max: geodesic length is z-independent), so the
-    // per-run rollup is four DeclarativeAggregates (min_by/max_by over
-    // the unique pidx + min/max) in one HashAggregate — the former
-    // sort_array(collect_list) ObjectHashAggregate materialized every
-    // run's full z array only to reduce it to these scalars (and a
-    // zip_with rebuilt 3-D geometry whose z the length kernel ignores).
-    val pts = norm.select(col("run_id").as("okey"),
-        posexplode(col("coords")).as(Seq("pidx", "pt")))
-      .select(col("okey"), col("pidx"),
-        packKey(qix(element_at(col("pt"), 1)),
-          qix(element_at(col("pt"), 2))).as("key"))
-    val emptyCache = s.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType.fromDDL("key bigint, value double"))
-    val (cache, _) = Enrichment.cacheAside(pts.select("key"), emptyCache,
-      lit(true),
-      missing => missing.select(col("key"),
-        Enrichment.stubElevation(keyStr(col("key"))).as("value")))
-    val segZ = pts.join(cache, Seq("key"))
-      .groupBy("okey")
-      .agg(min_by(col("value"), col("pidx")).as("z_start"),
-        max_by(col("value"), col("pidx")).as("z_end"),
-        min(col("value")).as("z_min"),
-        max(col("value")).as("z_max"))
-    // checkpoint: enriched feeds the clustering object table AND the
-    // final statistics scan — one materialization instead of re-running
-    // the cache join per consumer. Materialized NARROW: length is
-    // computed here so the coordinate arrays (the fat column) stop at
-    // this boundary; the checkpoint carries only per-run scalars plus
-    // the small uses array.
-    val enriched = withEnds.join(segZ, Seq("okey"))
-      .select(col("okey"), col("uses"), col("difficulty"),
-        col("x0"), col("y0"), col("xn"), col("yn"),
-        col("z_start"), col("z_end"), col("z_min"), col("z_max"),
-        lineLengthM(col("coords")).as("len_m"))
-      .localCheckpoint()
-
-    // ---- stage 4: clustering (J10/J7) on the canonical anchor ----
-    val startIsAnchor = col("x0") < col("xn") ||
-      (col("x0") === col("xn") && col("y0") <= col("yn"))
-    val objs = enriched.select(col("okey"), col("uses"),
-      (when(startIsAnchor, col("x0")).otherwise(col("xn"))
-        .cast("double") / 1e7).as("lon"),
-      (when(startIsAnchor, col("y0")).otherwise(col("yn"))
-        .cast("double") / 1e7).as("lat"))
-    val areas = graft.Tables.orders(s, d)
-      .filter(pmod(col("o_orderkey"), lit(37)) === 0)
-      .select(col("o_orderkey").as("area_id"),
-        when(pmod(col("o_orderkey"), lit(2)) === 0, "downhill")
-          .otherwise("nordic").as("act"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("lon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0).as("lat"))
-    val asg = Clustering.transitiveAssign(areas, objs, RadiusM, CellDeg)
-
-    // ---- stage 5: per-area statistics (A1 projection) ----
-    // ONE scan of the assigned table: partial sums per (area,
-    // difficulty), then a per-area rollup that also renders the sorted
-    // difficulty histogram — no second scan, no extra join.
-    val assigned = enriched.join(asg, Seq("okey"))
-    assigned.groupBy("area_id", "difficulty")
-      .agg(count(lit(1)).as("n"), sum("len_m").as("len_m"),
-        min(col("z_min")).as("zmin"),
-        max(col("z_max")).as("zmax"),
-        sum(abs(col("z_end") - col("z_start"))).as("dz"))
-      .groupBy("area_id")
-      .agg(sum("n").as("n_segments"),
-        (floor((sum("len_m") / 1000.0) * 1e4 + 0.5) / 1e4).as("total_km"),
-        array_join(array_sort(collect_list(
-          concat(col("difficulty"), lit(":"), col("n")))), ";")
-          .as("difficulties"),
-        (floor((min("zmin")) * 1e1 + 0.5) / 1e1).as("min_elev"),
-        (floor((max("zmax")) * 1e1 + 0.5) / 1e1).as("max_elev"),
-        (floor((sum("dz")) * 1e2 + 0.5) / 1e2).as("vertical_m"))
-      .select(col("area_id"), col("n_segments"), col("total_km"),
-        col("difficulties"), col("min_elev"), col("max_elev"),
-        col("vertical_m"))
-      .orderBy("area_id")
+    val enr = enriched(s, d).localCheckpoint()
+    areaStats(enr.join(assign(s, d, enr), Seq("okey")))
   }
 
   val specs: Seq[QuerySpec] = Seq(qPipeline)

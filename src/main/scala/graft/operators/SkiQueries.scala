@@ -419,8 +419,8 @@ object SkiQueries {
     * duplicates for every way with way_id % 10 = 4. 3D coords pass
     * straight through — normalization quantizes on the first two
     * elements of each point, so no interpreted 2D-projection
-    * transform is needed here. (Shared with NormalizeProfile's
-    * per-stage sf1 attribution.)
+    * transform is needed here. (Shared with graft.Profile's
+    * `normalize.*` phases.)
     */
   private[graft] def normalizeInput(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {

@@ -24,7 +24,7 @@ import org.apache.spark.sql.types._
   * growing per-segment buffers, then an interpreted `sort_array` over
   * each collected array — all to recover an ordering the rows
   * ALREADY have after the window's (run_id, idx) sort.
-  * NormalizeProfile's round-18 sf1 attribution (SCALING.md) measured
+  * The round-18 per-stage sf1 attribution (SCALING.md) measured
   * those two stages at ~2.9 s + ~3.9 s of the 10.2 s normalize total.
   *
   * This node keeps the one unavoidable exchange (hash on run_id) and
