@@ -1,12 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types.{BinaryType, DoubleType, IntegerType, LongType, StringType}
-import graft.functions.{AudioMetaExpr, DotProductExpr, GramHashExpr,
-  ImageDimsExpr, LineLengthMExpr, MinHashSigExpr, RollingMinExpr,
-  STDWithinExpr, ShinglesExpr, SimHash32Expr, VideoMetaExpr}
+import graft.functions.{AudioMetaExpr, GeoFunctions, GeoKernels, GpkgGeomExpr,
+  GpkgKernel, GramHashExpr, HilbertExpr, ImageDimsExpr, ImageKernels,
+  MinHashSigExpr, MvtDecodeExpr, MvtDecodeKernel, RollingMinExpr,
+  STDWithinExpr, ShinglesExpr, SimHash32Expr, SketchKernels, VectorFunctions,
+  VectorKernels, VideoMetaExpr}
 import graft.plans.{AsofJoinRule, AsofJoinStrategy, DistanceJoinRule,
   IntervalJoinRule, NormalizeSegmentsStrategy, TileStreamEncodeStrategy}
 
@@ -24,9 +27,9 @@ import graft.plans.{AsofJoinRule, AsofJoinStrategy, DistanceJoinRule,
   * Both make the codegen kernels available to pure-SQL users:
   * `graft_line_length_m(coords)` (geodesic polyline meters over
   * `array<array<double>>`) and `graft_vec_dot(a, b)` (dense
-  * double-vector dot product). The functions resolve to the SAME
-  * `Expression` nodes the DataFrame API uses, so SQL callers get
-  * whole-stage codegen, not a UDF shim.
+  * double-vector dot product). The functions call the SAME DataFrame
+  * API entries (the kernels' `StaticInvoke` calls), so SQL callers
+  * get whole-stage codegen, not a UDF shim.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -68,11 +71,21 @@ object GraftExtensions {
       s"$name expects 2 arguments, got ${args.size}")
   }
 
+  /** A kernel's DataFrame API entry as an expression builder, so SQL
+    * and DSL callers build the same `StaticInvoke`.
+    */
+  private def dsl1(f: Column => Column): Expression => Expression =
+    e => expression(f(column(e)))
+
+  private def dsl2(f: (Column, Column) => Column)
+      : (Expression, Expression) => Expression =
+    (a, b) => expression(f(column(a), column(b)))
+
   /** (expr, INT LITERAL) builders — the sketch kernels take their
     * width/count as a construction-time parameter, so the SQL argument
     * must be a foldable integer.
     */
-  private def withIntArg(name: String, f: (Expression, Int) => Expression)
+  private def withIntArg(name: String, f: (Column, Int) => Column)
       : Seq[Expression] => Expression = {
     case Seq(a, b) if b.foldable &&
         (b.dataType == IntegerType || b.dataType == LongType) =>
@@ -82,7 +95,7 @@ object GraftExtensions {
         case other => throw new IllegalArgumentException(
           s"$name expects a literal INT second argument, got $other")
       }
-      f(a, v)
+      expression(f(column(a), v))
     case args => throw new IllegalArgumentException(
       s"$name expects (expr, literal int), got ${args.size} args" +
         (if (args.size == 2) s" (2nd: ${args(1)})" else ""))
@@ -114,12 +127,12 @@ object GraftExtensions {
   val descriptions: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("graft_line_length_m"),
-      new ExpressionInfo(classOf[LineLengthMExpr].getName,
+      new ExpressionInfo(GeoKernels.getClass.getName,
         "graft_line_length_m"),
-      oneArg("graft_line_length_m", LineLengthMExpr)),
+      oneArg("graft_line_length_m", dsl1(GeoFunctions.lineLengthM))),
     (FunctionIdentifier("graft_vec_dot"),
-      new ExpressionInfo(classOf[DotProductExpr].getName, "graft_vec_dot"),
-      twoArg("graft_vec_dot", DotProductExpr(_, _))),
+      new ExpressionInfo(VectorKernels.getClass.getName, "graft_vec_dot"),
+      twoArg("graft_vec_dot", dsl2(VectorFunctions.dot))),
     (FunctionIdentifier("graft_hash32"),
       new ExpressionInfo(classOf[Md5].getName, "graft_hash32"),
       oneArg("graft_hash32", hashN(8, _))),
@@ -130,31 +143,27 @@ object GraftExtensions {
       new ExpressionInfo(classOf[BitwiseOr].getName, "graft_morton_z"),
       twoArg("graft_morton_z", mortonZ)),
     (FunctionIdentifier("graft_hilbert_d"),
-      new ExpressionInfo(
-        classOf[graft.functions.HilbertExpr].getName, "graft_hilbert_d"),
-      twoArg("graft_hilbert_d", (a, b) =>
-        graft.functions.HilbertExpr(
-          if (a.dataType == LongType) a else Cast(a, LongType),
-          if (b.dataType == LongType) b else Cast(b, LongType)))),
+      new ExpressionInfo(HilbertExpr.getClass.getName, "graft_hilbert_d"),
+      twoArg("graft_hilbert_d", dsl2(HilbertExpr.hilbertD))),
     (FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShinglesExpr].getName, "graft_shingles"),
-      withIntArg("graft_shingles", ShinglesExpr(_, _))),
+      new ExpressionInfo(SketchKernels.getClass.getName, "graft_shingles"),
+      withIntArg("graft_shingles", ShinglesExpr.shingles)),
     (FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSigExpr].getName,
+      new ExpressionInfo(SketchKernels.getClass.getName,
         "graft_minhash_sig"),
-      withIntArg("graft_minhash_sig", MinHashSigExpr(_, _))),
+      withIntArg("graft_minhash_sig", MinHashSigExpr.minhashSig)),
     (FunctionIdentifier("graft_simhash32"),
-      new ExpressionInfo(classOf[SimHash32Expr].getName,
+      new ExpressionInfo(SketchKernels.getClass.getName,
         "graft_simhash32"),
-      oneArg("graft_simhash32", SimHash32Expr)),
+      oneArg("graft_simhash32", dsl1(SimHash32Expr.simhash32))),
     (FunctionIdentifier("graft_gram_hashes"),
-      new ExpressionInfo(classOf[GramHashExpr].getName,
+      new ExpressionInfo(SketchKernels.getClass.getName,
         "graft_gram_hashes"),
-      withIntArg("graft_gram_hashes", GramHashExpr(_, _))),
+      withIntArg("graft_gram_hashes", GramHashExpr.gramHashes)),
     (FunctionIdentifier("graft_rolling_min"),
-      new ExpressionInfo(classOf[RollingMinExpr].getName,
+      new ExpressionInfo(SketchKernels.getClass.getName,
         "graft_rolling_min"),
-      withIntArg("graft_rolling_min", RollingMinExpr(_, _))),
+      withIntArg("graft_rolling_min", RollingMinExpr.rollingMin)),
     (FunctionIdentifier("graft_pii_redact"),
       new ExpressionInfo(classOf[RegExpReplace].getName,
         "graft_pii_redact"),
@@ -173,32 +182,29 @@ object GraftExtensions {
     // the real media-container header decoders — dashboards can audit
     // a binary column from pure SQL
     (FunctionIdentifier("graft_image_dims"),
-      new ExpressionInfo(classOf[ImageDimsExpr].getName,
+      new ExpressionInfo(ImageKernels.getClass.getName,
         "graft_image_dims"),
-      oneArg("graft_image_dims", ImageDimsExpr)),
+      oneArg("graft_image_dims", dsl1(ImageDimsExpr.imageDims))),
     (FunctionIdentifier("graft_audio_meta"),
-      new ExpressionInfo(classOf[AudioMetaExpr].getName,
+      new ExpressionInfo(ImageKernels.getClass.getName,
         "graft_audio_meta"),
-      oneArg("graft_audio_meta", AudioMetaExpr)),
+      oneArg("graft_audio_meta", dsl1(AudioMetaExpr.audioMeta))),
     (FunctionIdentifier("graft_video_meta"),
-      new ExpressionInfo(classOf[VideoMetaExpr].getName,
+      new ExpressionInfo(ImageKernels.getClass.getName,
         "graft_video_meta"),
-      oneArg("graft_video_meta", VideoMetaExpr)),
+      oneArg("graft_video_meta", dsl1(VideoMetaExpr.videoMeta))),
     // tile-serving audit surface: decode an MVT blob column back to
     // per-layer (layer, n_features, n_parts, n_points, coord_checksum)
     // rows from pure SQL — the same decoder q_tiles_mvt_bytes gates on
     (FunctionIdentifier("graft_mvt_decode"),
-      new ExpressionInfo(
-        classOf[graft.functions.MvtDecodeExpr].getName,
+      new ExpressionInfo(MvtDecodeKernel.getClass.getName,
         "graft_mvt_decode"),
-      oneArg("graft_mvt_decode", graft.functions.MvtDecodeExpr)),
+      oneArg("graft_mvt_decode", dsl1(MvtDecodeExpr.mvtDecode))),
     // GeoPackage geometry BLOB builder (GP header + WKB) for SQL
     // writers: (wkb_type, parts array<array<struct<lon,lat>>>)
     (FunctionIdentifier("graft_gpkg_geom"),
-      new ExpressionInfo(
-        classOf[graft.functions.GpkgGeomExpr].getName,
-        "graft_gpkg_geom"),
-      twoArg("graft_gpkg_geom", graft.functions.GpkgGeomExpr(_, _))),
+      new ExpressionInfo(GpkgKernel.getClass.getName, "graft_gpkg_geom"),
+      twoArg("graft_gpkg_geom", dsl2(GpkgGeomExpr.gpkgGeom))),
     (FunctionIdentifier("graft_asof_match"),
       new ExpressionInfo(
         classOf[graft.functions.AsofMatchExpr].getName, "graft_asof_match"),

@@ -19,6 +19,8 @@ import org.apache.spark.sql.types.{BooleanType, DataType, LongType,
   * under OR, no equi-conjunct, wrong join type, non-literal
   * tolerance), planning fails with Spark's standard unevaluable
   * error naming this function, instead of returning wrong rows.
+  *
+  * Not a StaticInvoke: [[graft.plans.AsofJoinRule]] matches on it.
   */
 case class AsofMatchExpr(
     leftTime: Expression,

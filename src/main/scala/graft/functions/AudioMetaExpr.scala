@@ -1,46 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftExpressionBridge
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types._
-
-/** Audio stream metadata from a real WAV (RIFF) container header —
-  * the audio twin of [[ImageDimsExpr]]: a native byte-walking
-  * expression over the length-prefixed RIFF chunk list (chunks may
-  * appear in any order and carry word-aligned padding), returning
-  * `struct(channels, sample_rate, bits, data_bytes, duration_ms)`;
-  * NULL for unrecognized/truncated input or a missing fmt/data chunk.
-  * Duration is exact integer math: data_bytes · 1000 / byte_rate.
-  */
-case class AudioMetaExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = AudioMetaExpr.schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"audioMeta expects binary, got $other")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    ImageKernels.audioMeta(input.asInstanceOf[Array[Byte]])
-  // explicit null path: the kernel returns null for unparseable bytes
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |${ev.value} = graft.functions.ImageKernels.audioMeta($c);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildInternal(
-      newChild: Expression): AudioMetaExpr = copy(child = newChild)
-}
 
 /** Movie duration/timescale from a real MP4 (ISO BMFF) box tree —
   * the video member of the header-decode family: an iterative walk of
@@ -49,31 +14,6 @@ case class AudioMetaExpr(child: Expression) extends UnaryExpression {
   * `struct(timescale int, duration bigint, duration_ms bigint)`;
   * NULL when the tree is malformed or `mvhd` is absent.
   */
-case class VideoMetaExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = VideoMetaExpr.schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"videoMeta expects binary, got $other")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    ImageKernels.videoMeta(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |${ev.value} = graft.functions.ImageKernels.videoMeta($c);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildInternal(
-      newChild: Expression): VideoMetaExpr = copy(child = newChild)
-}
-
 object VideoMetaExpr {
   val schema: StructType = StructType(Seq(
     StructField("timescale", IntegerType, nullable = false),
@@ -81,8 +21,8 @@ object VideoMetaExpr {
     StructField("duration_ms", LongType, nullable = false)))
 
   def videoMeta(bytes: Column): Column =
-    GraftExpressionBridge.column(
-      VideoMetaExpr(GraftExpressionBridge.expression(bytes)))
+    column(StaticInvoke(ImageKernels.getClass, schema, "videoMeta",
+      Seq(expression(bytes)), Seq(BinaryType), returnNullable = true))
 
   private[functions] def parse(b: Array[Byte]): InternalRow = {
     def be32(i: Int): Long =
@@ -127,6 +67,14 @@ object VideoMetaExpr {
   }
 }
 
+/** Audio stream metadata from a real WAV (RIFF) container header —
+  * the audio twin of [[ImageDimsExpr]]: a native byte-walking
+  * kernel over the length-prefixed RIFF chunk list (chunks may
+  * appear in any order and carry word-aligned padding), returning
+  * `struct(channels, sample_rate, bits, data_bytes, duration_ms)`;
+  * NULL for unrecognized/truncated input or a missing fmt/data chunk.
+  * Duration is exact integer math: data_bytes · 1000 / byte_rate.
+  */
 object AudioMetaExpr {
   val schema: StructType = StructType(Seq(
     StructField("channels", IntegerType, nullable = false),
@@ -136,8 +84,8 @@ object AudioMetaExpr {
     StructField("duration_ms", LongType, nullable = false)))
 
   def audioMeta(bytes: Column): Column =
-    GraftExpressionBridge.column(
-      AudioMetaExpr(GraftExpressionBridge.expression(bytes)))
+    column(StaticInvoke(ImageKernels.getClass, schema, "audioMeta",
+      Seq(expression(bytes)), Seq(BinaryType), returnNullable = true))
 
   /** WAV chunk walk (called from [[ImageKernels]]). */
   private[functions] def parse(b: Array[Byte]): InternalRow = {

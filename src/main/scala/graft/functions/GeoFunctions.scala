@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Geometry math as Catalyst column expressions (no UDFs): haversine
   * distances, geodesic line length, centroid, grid-cell spatial keys,
@@ -58,18 +60,19 @@ object GeoFunctions {
       s"pow(sin(radians($lon2 - $lon1) / 2), 2)))"
 
   /** Geodesic length in meters of a coords array (sum of haversine
-    * segment lengths, left-to-right). Implemented as a native codegen
-    * Catalyst expression ([[LineLengthMExpr]]) — the declarative
+    * segment lengths, left-to-right). A native codegen kernel call
+    * ([[GeoKernels.lineLengthM]]) — the declarative
     * `aggregate`-over-`sequence` form is an interpreted higher-order
     * function and this sits in the hottest scalar path of the run
-    * queries. Bit-identical results (see the kernel's contract).
+    * queries. Bit-identical results (see the kernel's contract). The
+    * kernel reads positions 0/1 directly, so a z ordinate needs no
+    * projection.
     */
   def lineLengthM(coords: Column): Column = {
-    import org.apache.spark.sql.GraftExpressionBridge
-    // drop any z ordinate cheaply only if elements are wider arrays —
-    // the kernel reads positions 0/1 directly, so no projection needed
-    GraftExpressionBridge.column(
-      LineLengthMExpr(GraftExpressionBridge.expression(coords)))
+    import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+    column(StaticInvoke(GeoKernels.getClass, DoubleType, "lineLengthM",
+      Seq(expression(coords)), Seq(ArrayType(ArrayType(DoubleType))),
+      returnNullable = false))
   }
 
   /** Vertex-average centroid as struct(lon, lat) — turf `centroid`
@@ -254,8 +257,8 @@ object GeoFunctions {
     * bit-identical.
     */
   def pointInPolygon(px: Column, py: Column, ring: Column): Column =
-    // native per-edge kernel (PointInRingExpr) — bit-identical to the
-    // former aggregate(sequence(...)) fold (same crossing op order,
+    // native per-edge kernel (GeoContainKernels.inRing) — bit-identical
+    // to the former aggregate(sequence(...)) fold (same crossing op order,
     // same null-edge skip algebra), but one fused loop inside
     // whole-stage codegen instead of an interpreted HOF rebuilding
     // the edge arithmetic per (point, edge)

@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftExpressionBridge
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -20,7 +19,7 @@ import org.apache.spark.sql.types._
   * the engine.
   *
   * Input: `(wkb_type int, parts array<array<array<struct<lon,lat>>>>)`
-  * — parts → rings → points, uniformly nested so one expression covers
+  * — parts → rings → points, uniformly nested so one kernel call covers
   * Point(1) / LineString(2) / Polygon(3) / MultiPoint(4) /
   * MultiLineString(5) / MultiPolygon(6); single-part values use a
   * one-element outer array, non-polygons a one-element ring level.
@@ -34,37 +33,6 @@ import org.apache.spark.sql.types._
   * count/min/max without parsing bytes (GpkgSpec does the byte-level
   * parse in tests).
   */
-case class GpkgGeomExpr(wkbType: Expression, parts: Expression)
-    extends BinaryExpression {
-  override def left: Expression = wkbType
-  override def right: Expression = parts
-  override def dataType: DataType = GpkgGeomExpr.schema
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (wkbType.dataType, parts.dataType) match {
-      case (IntegerType,
-        ArrayType(ArrayType(ArrayType(_: StructType, _), _), _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_gpkg_geom expects (int, array^3<struct>), got $other")
-    }
-
-  override protected def nullSafeEval(t: Any, p: Any): Any =
-    GpkgKernel.encode(t.asInstanceOf[Int], p.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, p) =>
-      s"${ev.value} = graft.functions.GpkgKernel.encode($t, $p);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): GpkgGeomExpr =
-    copy(wkbType = newLeft, parts = newRight)
-}
-
 object GpkgGeomExpr {
   val schema: StructType = StructType(Seq(
     StructField("blob", BinaryType, nullable = false),
@@ -74,10 +42,16 @@ object GpkgGeomExpr {
     StructField("miny", DoubleType, nullable = false),
     StructField("maxy", DoubleType, nullable = false)))
 
+  /** parts → rings → (lon, lat): any other shape is cast to it or
+    * refused at analysis, never read raw by the encoder.
+    */
+  private val Parts = ArrayType(ArrayType(ArrayType(StructType(Seq(
+    StructField("lon", DoubleType), StructField("lat", DoubleType))))))
+
   def gpkgGeom(wkbType: Column, parts: Column): Column =
-    GraftExpressionBridge.column(GpkgGeomExpr(
-      GraftExpressionBridge.expression(wkbType),
-      GraftExpressionBridge.expression(parts)))
+    column(StaticInvoke(GpkgKernel.getClass, schema, "encode",
+      Seq(expression(wkbType), expression(parts)),
+      Seq(IntegerType, Parts), returnNullable = true))
 }
 
 /** GeoPackageBinary + little-endian WKB byte building. */

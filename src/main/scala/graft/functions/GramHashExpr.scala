@@ -1,15 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftExpressionBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Rolling K-character-gram portable hashes over a string as a NATIVE
-  * Catalyst expression — the sketching front half of the winnowing
+  * kernel call — the sketching front half of the winnowing
   * dedup (its fingerprints are `hash32(substr(text, i, K))` for every
   * position i).
   *
@@ -28,32 +26,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * zero-extended). Inputs shorter than K code points yield an empty
   * array.
   */
-case class GramHashExpr(child: Expression, k: Int)
-    extends UnaryExpression {
-  require(k >= 1, s"gram width must be >= 1, got $k")
-  override def dataType: DataType =
-    ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"gramHashes expects string, got $other")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    SketchKernels.gramHashes(input.asInstanceOf[UTF8String], k)
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.SketchKernels.gramHashes($c, $k)")
-  override protected def withNewChildInternal(
-      newChild: Expression): GramHashExpr = copy(child = newChild)
-}
-
 object GramHashExpr {
-  def gramHashes(text: Column, k: Int): Column =
-    GraftExpressionBridge.column(
-      GramHashExpr(GraftExpressionBridge.expression(text), k))
+  def gramHashes(text: Column, k: Int): Column = {
+    require(k >= 1, s"gram width must be >= 1, got $k")
+    column(StaticInvoke(SketchKernels.getClass,
+      ArrayType(LongType, containsNull = false), "gramHashes",
+      Seq(expression(text), Literal(k)), Seq(StringType, IntegerType),
+      returnNullable = false))
+  }
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftExpressionBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.types.BinaryType
 
-/** Gzip compress/decompress as codegen expressions — the wire format
+/** Gzip compress/decompress as codegen'd kernel calls — the wire format
   * real tile artifacts carry: tippecanoe gzips `tile_data` by default
   * (`/root/reference/src/transforms/TilesGenerator.ts` shells out to
   * tippecanoe with no `--no-tile-compression`, so the reference's
@@ -20,63 +19,13 @@ import org.apache.spark.sql.types._
   * (gunzip ∘ gzip = id is the property under test, plus stock
   * python gzip reading the member in MbtilesSpec).
   */
-case class GzipExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_gzip expects binary, got $other")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GzipKernel.gzip(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.GzipKernel.gzip($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): GzipExpr = copy(child = newChild)
-}
-
-case class GunzipExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_gunzip expects binary, got $other")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GzipKernel.gunzip(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.GzipKernel.gunzip($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): GunzipExpr = copy(child = newChild)
-}
-
 object GzipExpr {
   def gzip(c: Column): Column =
-    GraftExpressionBridge.column(GzipExpr(
-      GraftExpressionBridge.expression(c)))
+    column(StaticInvoke(GzipKernel.getClass, BinaryType, "gzip",
+      Seq(expression(c)), Seq(BinaryType), returnNullable = false))
   def gunzip(c: Column): Column =
-    GraftExpressionBridge.column(GunzipExpr(
-      GraftExpressionBridge.expression(c)))
+    column(StaticInvoke(GzipKernel.getClass, BinaryType, "gunzip",
+      Seq(expression(c)), Seq(BinaryType), returnNullable = false))
 }
 
 object GzipKernel {

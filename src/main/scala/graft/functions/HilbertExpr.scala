@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.types.LongType
 
 /** `graft_hilbert_d(cell_x, cell_y)` — distance along the order-16
   * Hilbert curve of the 65536x65536 grid (the classic iterative
@@ -29,48 +27,19 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * role.
   *
   * Pure 64-bit integer state machine (the DuckDB oracle replays the
-  * identical 16 unrolled steps), evaluated via a static JVM kernel so
-  * codegen is one call inside the stage.
+  * identical 16 unrolled steps): [[HilbertExpr.hilbertD]] calls the
+  * static [[HilbertExpr.xy2d]] through `StaticInvoke`, so codegen is
+  * one call inside the stage.
   */
-case class HilbertExpr(x: Expression, y: Expression)
-  extends Expression {
-
-  override def children: Seq[Expression] = Seq(x, y)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (children.forall(_.dataType == LongType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_hilbert_d expects 2 bigint arguments, got " +
-        children.map(_.dataType.simpleString).mkString("(", ", ", ")"))
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def prettyName: String = "graft_hilbert_d"
-
-  override def eval(input: InternalRow): Any = {
-    val xv = x.eval(input); val yv = y.eval(input)
-    if (xv == null || yv == null) null
-    else HilbertExpr.xy2d(xv.asInstanceOf[Long], yv.asInstanceOf[Long])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val xe = x.genCode(ctx); val ye = y.genCode(ctx)
-    ev.copy(code = code"""
-      ${xe.code}
-      ${ye.code}
-      boolean ${ev.isNull} = ${xe.isNull} || ${ye.isNull};
-      long ${ev.value} = 0L;
-      if (!${ev.isNull}) {
-        ${ev.value} = graft.functions.HilbertExpr.xy2d(
-          ${xe.value}, ${ye.value});
-      }""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): HilbertExpr =
-    copy(x = newChildren(0), y = newChildren(1))
-}
-
 object HilbertExpr {
+
+  /** `graft_hilbert_d` as a column: both cells implicitly cast to
+    * bigint.
+    */
+  def hilbertD(x: Column, y: Column): Column =
+    column(StaticInvoke(HilbertExpr.getClass, LongType, "xy2d",
+      Seq(expression(x), expression(y)), Seq(LongType, LongType),
+      returnNullable = false))
 
   /** Grid side (order 16). */
   val Side = 65536L

@@ -1,17 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftExpressionBridge
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Image dimensions from raw container headers — a REAL media decode
-  * step that needs no codec libraries, as a native Catalyst
-  * expression: walks the byte array, recognizes PNG (IHDR), JPEG
+  * step that needs no codec libraries, as a native kernel: walks the byte array, recognizes PNG (IHDR), JPEG
   * (segment scan to the first SOF frame header), GIF (87a/89a logical
   * screen), and BMP (BITMAPINFOHEADER), and returns
   * `struct(format string, width int, height int)`; NULL for anything
@@ -24,33 +22,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * so the parse is a loop over length-prefixed segments (the PNG/GIF
   * fixed offsets alone could have been conv(hex(substring(...)))).
   */
-case class ImageDimsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ImageDimsExpr.schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"imageDims expects binary, got $other")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    ImageKernels.imageDims(input.asInstanceOf[Array[Byte]])
-  // not defineCodeGen: the kernel returns null for unrecognized
-  // bytes even when the input itself is non-null
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |${ev.value} = graft.functions.ImageKernels.imageDims($c);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildInternal(
-      newChild: Expression): ImageDimsExpr = copy(child = newChild)
-}
-
 object ImageDimsExpr {
   val schema: StructType = StructType(Seq(
     StructField("format", StringType, nullable = false),
@@ -58,8 +29,8 @@ object ImageDimsExpr {
     StructField("height", IntegerType, nullable = false)))
 
   def imageDims(bytes: Column): Column =
-    GraftExpressionBridge.column(
-      ImageDimsExpr(GraftExpressionBridge.expression(bytes)))
+    column(StaticInvoke(ImageKernels.getClass, schema, "imageDims",
+      Seq(expression(bytes)), Seq(BinaryType), returnNullable = true))
 }
 
 /** Header-walking parsers called from generated code. */

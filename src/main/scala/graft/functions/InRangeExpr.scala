@@ -24,6 +24,8 @@ import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
   * cells, one dimension down. Standalone (scalar context, OR-branch,
   * non-inner join) the expression simply evaluates; only the planner
   * shape changes when the rule applies.
+  *
+  * Not a StaticInvoke: [[graft.plans.IntervalJoinRule]] matches on it.
   */
 case class InRangeExpr(
     t: Expression,

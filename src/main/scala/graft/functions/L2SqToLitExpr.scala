@@ -23,6 +23,8 @@ import org.apache.spark.sql.types._
   * left-to-right `acc + (q(i) - c(i))²` — bit-identical float order —
   * and the zip_with/aggregate null algebra: a length mismatch (null
   * padding) or a null element poisons the fold → NULL result.
+  *
+  * Not a StaticInvoke: a shipped reference object and a boxed-null fold.
   */
 case class L2SqToLitExpr(child: Expression, cents: Seq[Double])
     extends UnaryExpression {

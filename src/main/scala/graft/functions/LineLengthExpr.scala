@@ -1,50 +1,25 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 
-/** Geodesic polyline length (G1) as a NATIVE Catalyst expression with
-  * whole-stage codegen.
+/** Static geodesic kernels called from generated code (Scala objects
+  * emit static forwarders, so `GeoKernels.lineLengthM(...)` resolves
+  * from Janino-compiled Java).
   *
-  * The declarative form (`aggregate` over `sequence` with a haversine
+  * Geodesic polyline length (G1): [[GeoFunctions.lineLengthM]] calls
+  * [[GeoKernels.lineLengthM]] through `StaticInvoke`. The declarative form (`aggregate` over `sequence` with a haversine
   * lambda) is a higher-order function — CodegenFallback, so every row
   * pays interpreted expression-tree evaluation in the hottest scalar
-  * path of the run queries (length/statistics/pipeline). This
-  * expression generates a single static call into [[GeoKernels]]
-  * (tight JVM loop over the unsafe array data, no per-element virtual
-  * dispatch) and stays inside the surrounding WholeStageCodegen span.
+  * path of the run queries (length/statistics/pipeline). The kernel
+  * is a single static call (tight JVM loop over the unsafe array data,
+  * no per-element virtual dispatch) and stays inside the surrounding
+  * WholeStageCodegen span.
   *
   * Bit-compatibility contract: [[GeoKernels.lineLengthM]] reproduces
   * the former expression tree's float op order exactly (same
   * `java.lang.Math` intrinsics the built-in trig expressions codegen
   * to, same left-to-right accumulation, same `2R·asin(√a)` constant
   * folding), so every oracle hash stays identical.
-  */
-case class LineLengthMExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(ArrayType(DoubleType, _), _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"lineLengthM expects array<array<double>>, got $other")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    GeoKernels.lineLengthM(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.GeoKernels.lineLengthM($c)")
-  override protected def withNewChildInternal(
-      newChild: Expression): LineLengthMExpr = copy(child = newChild)
-}
-
-/** Static kernels called from generated code (Scala objects emit
-  * static forwarders, so `GeoKernels.lineLengthM(...)` resolves from
-  * Janino-compiled Java).
   */
 object GeoKernels {
   private val TwoR = 2.0 * GeoFunctions.EarthRadiusM

@@ -1,14 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftExpressionBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types._
 
 /** MinHash signature (k seeded portable-hash minima over a shingle
-  * array) as a NATIVE Catalyst expression — the ingest-path kernel of
+  * array) as a NATIVE kernel call — the ingest-path kernel of
   * the LSH dedup index.
   *
   * The declarative form (`transform(sequence(0,k-1), j ->
@@ -29,31 +28,12 @@ import org.apache.spark.sql.types._
   * elements hash to null and are ignored (like `array_min`); an empty
   * or all-null shingle array yields k null elements.
   */
-case class MinHashSigExpr(child: Expression, k: Int)
-    extends UnaryExpression {
-  require(k >= 1, s"signature length must be >= 1, got $k")
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhashSig expects array<string>, got $other")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    SketchKernels.minhashSig(input.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.SketchKernels.minhashSig($c, $k)")
-  override protected def withNewChildInternal(
-      newChild: Expression): MinHashSigExpr = copy(child = newChild)
-}
-
 object MinHashSigExpr {
-  def minhashSig(sh: Column, k: Int): Column =
-    GraftExpressionBridge.column(
-      MinHashSigExpr(GraftExpressionBridge.expression(sh), k))
+  def minhashSig(sh: Column, k: Int): Column = {
+    require(k >= 1, s"signature length must be >= 1, got $k")
+    column(StaticInvoke(SketchKernels.getClass,
+      ArrayType(LongType, containsNull = true), "minhashSig",
+      Seq(expression(sh), Literal(k)), Seq(ArrayType(StringType), IntegerType),
+      returnNullable = false))
+  }
 }

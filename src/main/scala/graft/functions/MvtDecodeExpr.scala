@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftExpressionBridge
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,37 +20,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * `q_tiles_mvt` puts the byte encoding itself under the driver's
   * hash gate: any wire-format defect shows up as a stats mismatch.
   */
-case class MvtDecodeExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = MvtDecodeKernel.outType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_mvt_decode expects binary, got $other")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    MvtDecodeKernel.decode(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.MvtDecodeKernel.decode($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): MvtDecodeExpr = copy(child = newChild)
-}
-
 object MvtDecodeExpr {
   def mvtDecode(tile: Column): Column =
-    GraftExpressionBridge.column(MvtDecodeExpr(
-      GraftExpressionBridge.expression(tile)))
+    column(StaticInvoke(MvtDecodeKernel.getClass, MvtDecodeKernel.outType,
+      "decode", Seq(expression(tile)), Seq(BinaryType),
+      returnNullable = false))
 }
 
 object MvtDecodeKernel {

@@ -37,6 +37,8 @@ import org.apache.spark.sql.types._
   * This runs once per tile AFTER aggregation — not on the per-feature
   * hot path — so interpreted eval with a codegen passthrough (same
   * kernel call emitted into generated code) is the right shape.
+  *
+  * Not a StaticInvoke: its type check depends on the struct arity.
   */
 case class MvtTileEncodeExpr(features: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {

@@ -70,6 +70,8 @@ import org.apache.spark.sql.types._
   *
   * Runs once per post-cap feature-tile row with a static-kernel
   * codegen passthrough, so it stays inside whole-stage codegen.
+  *
+  * Not a StaticInvoke: PlanPinSpec pins it by class.
   */
 case class MvtPrepExpr(gtype: Expression, wpts: Expression,
     simplify: Expression, tile: Expression, tol: Long)

@@ -1,14 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftExpressionBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Even-odd point-in-polygon containment as NATIVE Catalyst
-  * expressions — one per-edge loop instead of the former
+/** Even-odd point-in-polygon containment as NATIVE kernels — one
+  * per-edge loop instead of the former
   * triple-interpreted fold (`aggregate(sequence(1, size(ring)), …)`
   * with two `element_at`s and the crossing arithmetic re-built per
   * edge per point), which every containment consumer (J2 refine, E4
@@ -72,65 +71,16 @@ object GeoContainKernels {
   }
 }
 
-case class PointInRingExpr(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-  override def dataType: DataType = BooleanType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (DoubleType, DoubleType, ArrayType(ArrayType(DoubleType, _), _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pointInPolygon expects (double, double, array<array<double>>), got $other")
-    }
-  override protected def nullSafeEval(px: Any, py: Any, ring: Any): Any =
-    GeoContainKernels.inRing(px.asInstanceOf[Double],
-      py.asInstanceOf[Double], ring.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (px, py, r) =>
-      s"graft.functions.GeoContainKernels.inRing($px, $py, $r)")
-  override protected def withNewChildrenInternal(f: Expression,
-      s: Expression, t: Expression): PointInRingExpr =
-    copy(first = f, second = s, third = t)
-}
-
-case class PointInRingsExpr(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-  override def dataType: DataType = BooleanType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (DoubleType, DoubleType,
-          ArrayType(ArrayType(ArrayType(DoubleType, _), _), _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pointInRings expects (double, double, array<array<array<double>>>), got $other")
-    }
-  override protected def nullSafeEval(px: Any, py: Any, rings: Any): Any =
-    GeoContainKernels.inRings(px.asInstanceOf[Double],
-      py.asInstanceOf[Double], rings.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (px, py, r) =>
-      s"graft.functions.GeoContainKernels.inRings($px, $py, $r)")
-  override protected def withNewChildrenInternal(f: Expression,
-      s: Expression, t: Expression): PointInRingsExpr =
-    copy(first = f, second = s, third = t)
-}
-
 object PointInRingsExpr {
+  private val Ring = ArrayType(ArrayType(DoubleType))
+
   def pointInPolygon(px: Column, py: Column, ring: Column): Column =
-    GraftExpressionBridge.column(PointInRingExpr(
-      GraftExpressionBridge.expression(px),
-      GraftExpressionBridge.expression(py),
-      GraftExpressionBridge.expression(ring)))
+    column(StaticInvoke(GeoContainKernels.getClass, BooleanType, "inRing",
+      Seq(expression(px), expression(py), expression(ring)),
+      Seq(DoubleType, DoubleType, Ring), returnNullable = false))
 
   def pointInRings(px: Column, py: Column, rings: Column): Column =
-    GraftExpressionBridge.column(PointInRingsExpr(
-      GraftExpressionBridge.expression(px),
-      GraftExpressionBridge.expression(py),
-      GraftExpressionBridge.expression(rings)))
+    column(StaticInvoke(GeoContainKernels.getClass, BooleanType, "inRings",
+      Seq(expression(px), expression(py), expression(rings)),
+      Seq(DoubleType, DoubleType, ArrayType(Ring)), returnNullable = false))
 }

@@ -1,21 +1,21 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftExpressionBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Sliding-window minimum over an `array<long>` as a NATIVE Catalyst
-  * expression — the winnowing sketch kernel (MOSS fingerprint
+/** Sliding-window minimum over an `array<long>` as a NATIVE kernel
+  * call — the winnowing sketch kernel (MOSS fingerprint
   * selection).
   *
   * The declarative form
   * (`transform(sequence(...), j -> array_min(slice(hs, j, W)))`) is a
   * higher-order function: CodegenFallback, interpreted per row, and
-  * O(n·W) because every window re-scans its W elements. This
-  * expression generates one static call into [[SketchKernels]] — a
+  * O(n·W) because every window re-scans its W elements. This is
+  * one static call into [[SketchKernels]] — a
   * monotonic-deque pass, O(n) total regardless of W, inside the
   * surrounding WholeStageCodegen span. At a 100 TB corpus the window
   * min runs once per character of every document; the asymptotic drop
@@ -31,34 +31,15 @@ import org.apache.spark.sql.types._
   * `sequence(1, k<1)` shape would walk descending indices), so the
   * kernel's guard is strictly saner for library callers.
   */
-case class RollingMinExpr(child: Expression, w: Int)
-    extends UnaryExpression {
-  require(w >= 1, s"window must be >= 1, got $w")
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"rollingMin expects array<bigint>, got $other")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    SketchKernels.rollingMin(input.asInstanceOf[ArrayData], w)
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.SketchKernels.rollingMin($c, $w)")
-  override protected def withNewChildInternal(
-      newChild: Expression): RollingMinExpr = copy(child = newChild)
-}
-
 object RollingMinExpr {
   /** Column-API lift: per-window minima of `hs` over window `w`. */
-  def rollingMin(hs: Column, w: Int): Column =
-    GraftExpressionBridge.column(
-      RollingMinExpr(GraftExpressionBridge.expression(hs), w))
+  def rollingMin(hs: Column, w: Int): Column = {
+    require(w >= 1, s"window must be >= 1, got $w")
+    column(StaticInvoke(SketchKernels.getClass,
+      ArrayType(LongType, containsNull = true), "rollingMin",
+      Seq(expression(hs), Literal(w)), Seq(ArrayType(LongType), IntegerType),
+      returnNullable = false))
+  }
 }
 
 /** Static kernels called from generated code. */

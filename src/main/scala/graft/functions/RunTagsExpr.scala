@@ -476,6 +476,7 @@ object RunTagsKernel {
   }
 }
 
+/** Not a StaticInvoke: a nondeterministic optimizer fence, see below. */
 case class RunTagsExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = RunTagsKernel.schema
   override def nullable: Boolean = false

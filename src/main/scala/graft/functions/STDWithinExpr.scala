@@ -26,6 +26,8 @@ import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType}
   * `refined` marks the copy the rule leaves behind as the exact
   * refinement filter, so the rewrite does not re-fire on its own
   * output. Both forms evaluate identically.
+  *
+  * Not a StaticInvoke: [[graft.plans.DistanceJoinRule]] matches on it.
   */
 case class STDWithinExpr(
     lon1: Expression,

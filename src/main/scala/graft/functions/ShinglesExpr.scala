@@ -1,15 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftExpressionBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Word-n-gram shingles ("w1 w2 w3" space-joined windows) as a NATIVE
-  * Catalyst expression — the fan-out stage of every n-gram operator
+  * kernel call — the fan-out stage of every n-gram operator
   * (minhash signatures, duplicate-span coverage, trigram novelty,
   * vocabulary/top-gram building, cross-split contamination).
   *
@@ -25,32 +23,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * Spark's string-typed `concat_ws` lowers to); output elements are
   * never null.
   */
-case class ShinglesExpr(child: Expression, n: Int)
-    extends UnaryExpression {
-  require(n >= 1, s"shingle width must be >= 1, got $n")
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"shingles expects array<string>, got $other")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    SketchKernels.shingles(input.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.SketchKernels.shingles($c, $n)")
-  override protected def withNewChildInternal(
-      newChild: Expression): ShinglesExpr = copy(child = newChild)
-}
-
 object ShinglesExpr {
-  def shingles(toks: Column, n: Int): Column =
-    GraftExpressionBridge.column(
-      ShinglesExpr(GraftExpressionBridge.expression(toks), n))
+  def shingles(toks: Column, n: Int): Column = {
+    require(n >= 1, s"shingle width must be >= 1, got $n")
+    column(StaticInvoke(SketchKernels.getClass,
+      ArrayType(StringType, containsNull = false), "shingles",
+      Seq(expression(toks), Literal(n)), Seq(ArrayType(StringType), IntegerType),
+      returnNullable = false))
+  }
 }

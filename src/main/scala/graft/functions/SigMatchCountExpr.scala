@@ -1,14 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftExpressionBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Position-wise equal-element count of two long arrays (MinHash
-  * signature agreement) as a NATIVE Catalyst expression.
+  * signature agreement) as a NATIVE kernel.
   *
   * The declarative form —
   * `aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
@@ -23,34 +22,6 @@ import org.apache.spark.sql.types._
   * 0 — exactly the replaced form's zip_with null-padding and
   * `when(x === y, …)` null semantics.
   */
-case class SigMatchCountExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"sigMatchCount expects (array<bigint>, array<bigint>), got $other")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    SigMatchCountExpr.matchCount(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.SigMatchCountExpr.matchCount($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): SigMatchCountExpr =
-    copy(left = newLeft, right = newRight)
-}
-
 object SigMatchCountExpr {
   def matchCount(a: ArrayData, b: ArrayData): Int = {
     val n = math.min(a.numElements(), b.numElements())
@@ -65,7 +36,7 @@ object SigMatchCountExpr {
   }
 
   def sigMatchCount(a: Column, b: Column): Column =
-    GraftExpressionBridge.column(SigMatchCountExpr(
-      GraftExpressionBridge.expression(a),
-      GraftExpressionBridge.expression(b)))
+    column(StaticInvoke(SigMatchCountExpr.getClass, IntegerType, "matchCount",
+      Seq(expression(a), expression(b)),
+      Seq(ArrayType(LongType), ArrayType(LongType)), returnNullable = false))
 }

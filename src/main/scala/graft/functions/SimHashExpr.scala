@@ -1,14 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftExpressionBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types._
 
 /** 32-bit SimHash majority vote over a pre-computed token-hash array
-  * as a NATIVE Catalyst expression.
+  * as a NATIVE kernel call.
   *
   * The declarative form (aggregate over sequence(0,31) of an inner
   * aggregate over the hash array) is doubly interpreted — O(32·n)
@@ -23,29 +21,9 @@ import org.apache.spark.sql.types._
   * `when(cond, 1).otherwise(-1)` did with a null condition — which is
   * the same as hashing to 0. An empty array yields 0.
   */
-case class SimHash32Expr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"simhash32 expects array<bigint>, got $other")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    SketchKernels.simhash32(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.SketchKernels.simhash32($c)")
-  override protected def withNewChildInternal(
-      newChild: Expression): SimHash32Expr = copy(child = newChild)
-}
-
 object SimHash32Expr {
   def simhash32(hashes: Column): Column =
-    GraftExpressionBridge.column(
-      SimHash32Expr(GraftExpressionBridge.expression(hashes)))
+    column(StaticInvoke(SketchKernels.getClass, LongType, "simhash32",
+      Seq(expression(hashes)), Seq(ArrayType(LongType)),
+      returnNullable = false))
 }

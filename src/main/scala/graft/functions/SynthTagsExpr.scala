@@ -214,6 +214,7 @@ object SynthTagsKernel {
   }
 }
 
+/** Not a StaticInvoke: variadic (ten boxed, nullable columns). */
 case class SynthTagsExpr(children: Seq[Expression]) extends Expression {
   require(children.length == 10)
   override def dataType: DataType = MapType(StringType, StringType)

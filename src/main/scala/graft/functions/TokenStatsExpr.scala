@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftExpressionBridge
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -36,8 +35,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Java regex \s is ASCII-only ([ \t\n\x0B\f\r]) — the kernel uses the
   * same set, so whitespace classification matches split() exactly.
   */
-case class TokenStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
+object TokenStatsExpr {
+  val schema: StructType = StructType(Seq(
     StructField("n_chars", IntegerType, nullable = false),
     StructField("ws_tokens", IntegerType, nullable = false),
     StructField("bpe_tokens", IntegerType, nullable = false),
@@ -45,32 +44,9 @@ case class TokenStatsExpr(child: Expression) extends UnaryExpression {
     StructField("alnum_chars", IntegerType, nullable = false),
     StructField("alnum_runs", IntegerType, nullable = false)))
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"tokenStats expects string, got $other")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    TokenStatsKernel.tokenStats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TokenStatsKernel.tokenStats($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): TokenStatsExpr = copy(child = newChild)
-}
-
-object TokenStatsExpr {
   def tokenStats(text: Column): Column =
-    GraftExpressionBridge.column(
-      TokenStatsExpr(GraftExpressionBridge.expression(text)))
+    column(StaticInvoke(TokenStatsKernel.getClass, schema, "tokenStats",
+      Seq(expression(text)), Seq(StringType), returnNullable = false))
 }
 
 object TokenStatsKernel {

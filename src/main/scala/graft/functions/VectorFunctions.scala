@@ -1,18 +1,18 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftExpressionBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 import org.apache.spark.sql.functions._
 
 /** Embedding-vector kernels. The declarative dot product
   * (`aggregate(zip_with(a, b, _*_), 0.0, _+_)`) is a higher-order
   * function — CodegenFallback — and sits in the hottest loop of the
   * ANN queries (the brute-force baseline evaluates it corpus × query
-  * times). [[DotProductExpr]] generates one static call into a tight
-  * JVM loop and keeps the surrounding stage in whole-stage codegen.
+  * times). [[dot]] is one static call into a tight JVM loop
+  * ([[VectorKernels.dot]]) and keeps the surrounding stage in
+  * whole-stage codegen.
   *
   * Bit-compatibility: the kernel accumulates `acc + a(i)·b(i)` left to
   * right — exactly the old fold's float op order — so every ANN oracle
@@ -21,37 +21,16 @@ import org.apache.spark.sql.functions._
   */
 object VectorFunctions {
 
-  def dot(a: Column, b: Column): Column =
-    GraftExpressionBridge.column(DotProductExpr(
-      GraftExpressionBridge.expression(a),
-      GraftExpressionBridge.expression(b)))
+  def dot(a: Column, b: Column): Column = {
+    import GraftExpressionBridge.{column, expression}
+    column(StaticInvoke(VectorKernels.getClass, DoubleType, "dot",
+      Seq(expression(a), expression(b)),
+      Seq(ArrayType(DoubleType), ArrayType(DoubleType)),
+      returnNullable = false))
+  }
 
   /** √(v·v) with the same element order as the former norm fold. */
   def norm(v: Column): Column = sqrt(dot(v, v))
-}
-
-case class DotProductExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (org.apache.spark.sql.types.ArrayType(DoubleType, _),
-            org.apache.spark.sql.types.ArrayType(DoubleType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dot expects two array<double>, got $other")
-    }
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.VectorKernels.dot($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): DotProductExpr =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Static kernel target for generated code. */

@@ -1,62 +1,32 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftExpressionBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Count of tokens contained in a fixed vocabulary (WITH multiplicity
-  * — `array_intersect` would dedupe) as a NATIVE Catalyst expression.
+  * — `array_intersect` would dedupe) as a NATIVE kernel call.
   *
   * The declarative form (`size(filter(toks, t -> t.isin(vocab)))`) is
   * an interpreted higher-order function walking an In-list per
   * element; the language-ID confusion matrix evaluates it once per
   * candidate language per document. This kernel is one pass over the
-  * token array against a hash set shipped as a codegen reference
-  * object.
+  * token array against a hash set shipped as an object-typed literal
+  * (a codegen reference object).
   *
   * Value contract: null elements are not hits (isin(null) is null →
   * filtered out), so counts match the replaced form exactly.
   */
-case class VocabHitsExpr(child: Expression, vocab: Seq[String])
-    extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"vocabHits expects array<string>, got $other")
-    }
-
-  @transient private lazy val vocabSet: java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String](vocab.size * 2)
-    vocab.foreach(w => s.add(UTF8String.fromString(w)))
-    s
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    SketchKernels.vocabHits(input.asInstanceOf[ArrayData], vocabSet)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("vocabSet", vocabSet,
-      classOf[java.util.HashSet[UTF8String]].getName)
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.SketchKernels.vocabHits($c, $setRef)")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): VocabHitsExpr = copy(child = newChild)
-}
-
 object VocabHitsExpr {
-  def vocabHits(toks: Column, vocab: Seq[String]): Column =
-    GraftExpressionBridge.column(
-      VocabHitsExpr(GraftExpressionBridge.expression(toks), vocab))
+  def vocabHits(toks: Column, vocab: Seq[String]): Column = {
+    val set = new java.util.HashSet[UTF8String](vocab.size * 2)
+    vocab.foreach(w => set.add(UTF8String.fromString(w)))
+    column(StaticInvoke(SketchKernels.getClass, IntegerType, "vocabHits",
+      Seq(expression(toks), Literal(set, ObjectType(set.getClass))),
+      Seq(ArrayType(StringType), ObjectType(set.getClass)),
+      returnNullable = false))
+  }
 }

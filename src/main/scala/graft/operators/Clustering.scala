@@ -79,9 +79,7 @@ object Clustering {
     // anti-join. `spark.graft.cluster.broadcastFrontier=false`
     // restores the exchange join for frontiers too big to broadcast.
     val bcastFrontier = areas.sparkSession.conf
-      .getOption("spark.graft.cluster.broadcastFrontier")
-      .orElse(sys.env.get("SPARK_GRAFT_CLUSTER_BROADCAST"))
-      .forall(_.toBoolean)
+      .get("spark.graft.cluster.broadcastFrontier", "true").toBoolean
     def expand(frontier: DataFrame): DataFrame = {
       val f = frontier.select(col("area_id"), col("act"),
         col("lon"), col("lat"))
@@ -287,9 +285,7 @@ object Clustering {
   def cellCandidates(areas: DataFrame, runs: DataFrame, cellDeg: Double,
       reach: Int): DataFrame = {
     val useBroadcast = areas.sparkSession.conf
-      .getOption("spark.graft.containment.broadcast")
-      .orElse(sys.env.get("SPARK_GRAFT_CONTAIN_BROADCAST"))
-      .forall(_.toBoolean)
+      .get("spark.graft.containment.broadcast", "true").toBoolean
     if (useBroadcast) {
       val acells = areas
         .withColumn("cx", floor(col("alon") / cellDeg).cast("long"))

@@ -263,15 +263,9 @@ object Formatters {
     * kernel [[graft.functions.RunTagsExpr]] (~80 µs/row of interpreted
     * map_filter/per-row-regex/HOF evaluation → one map traversal; see
     * the kernel doc for the measured breakdown). RunTagsSpec pins the
-    * kernel output field-by-field against [[formatRunsLegacy]];
-    * `spark.graft.format.runKernel=false` restores the expression form.
+    * kernel output field-by-field against [[formatRunsLegacy]].
     */
   def formatRuns(features: DataFrame): DataFrame = {
-    val useKernel = features.sparkSession.conf
-      .getOption("spark.graft.format.runKernel")
-      .orElse(sys.env.get("SPARK_GRAFT_FORMAT_KERNEL"))
-      .forall(_.toBoolean)
-    if (!useKernel) return formatRunsLegacy(features)
     val k = graft.functions.RunTagsExpr.runTags(col("tags"))
     features
       .withColumn("__rt", k)
@@ -299,8 +293,7 @@ object Formatters {
   }
 
   /** The pre-r19 expression-tree formatter, kept verbatim as the
-    * value-identity reference for RunTagsSpec and as the
-    * `spark.graft.format.runKernel=false` escape hatch.
+    * value-identity reference for RunTagsSpec.
     */
   private[graft] def formatRunsLegacy(features: DataFrame): DataFrame = {
     val tags = col("tags")

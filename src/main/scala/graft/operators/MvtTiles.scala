@@ -960,8 +960,7 @@ object MvtTiles {
       .orderBy("zoom", "tile_x", "tile_y")
 
   /** A/B switch for the serving-path encode shape (VERDICT r17 #5):
-    * `spark.graft.tiles.streamEncode` (or env
-    * SPARK_GRAFT_TILE_ENCODE=stream|agg) flips the headline query
+    * `spark.graft.tiles.streamEncode` flips the headline query
     * between the collect_list aggregate shape and the sorted-stream
     * exec. The two are bit-identical (MvtStreamEncodeSpec). The
     * DEFAULT is the sorted-stream exec — the round-18 matched
@@ -972,9 +971,7 @@ object MvtTiles {
     * per-tile array ever materializes — see SCALING.md round-18.
     */
   private def streamEncode(s: SparkSession): Boolean =
-    s.conf.get("spark.graft.tiles.streamEncode",
-      if (sys.env.get("SPARK_GRAFT_TILE_ENCODE").contains("agg")) "false"
-      else "true").toBoolean
+    s.conf.get("spark.graft.tiles.streamEncode", "true").toBoolean
 
   // Incremental maintenance gate: the streaming tile-refresh
   // (graft.streaming.TilesStreaming) must equal the batch rebuild of

@@ -159,19 +159,15 @@ object Normalization {
       ownedSegments(segmented(arcMembers(edgesOf(runs), merge)), merge)
 
   /** Round-18 A/B switch for the N2 split shape:
-    * `spark.graft.normalize.streamSegments` (or env
-    * SPARK_GRAFT_NORMALIZE_SEGMENTS=stream|agg). Default: the
+    * `spark.graft.normalize.streamSegments`. Default: the
     * sorted-stream exec — same exchange + same (run_id, idx) sort,
     * but the window + collect_list re-aggregation become one
     * streaming walk (NormalizeSegmentsExec; measured A/B in
-    * SCALING.md). `agg` restores the window/aggregate composition,
+    * SCALING.md). `false` restores the window/aggregate composition,
     * which graft.Profile's `normalize.*` phases expose per-stage.
     */
   private def streamSegments(s: SparkSession): Boolean =
-    s.conf.get("spark.graft.normalize.streamSegments",
-      if (sys.env.get("SPARK_GRAFT_NORMALIZE_SEGMENTS").contains("agg"))
-        "false"
-      else "true").toBoolean
+    s.conf.get("spark.graft.normalize.streamSegments", "true").toBoolean
 
   /** Sorted-stream variant of `segmented → ownedSegments`: same
     * arc-membership input, same output columns, values identical by

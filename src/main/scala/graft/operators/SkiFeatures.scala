@@ -69,8 +69,12 @@ object SkiFeatures {
   def synthesize(s: SparkSession, d: String): DataFrame =
     memo.getOrElseUpdate((s, memoKey(s, d)), build(s, d))
 
-  // private[graft]: SynthTagsSpec builds both conf arms memo-free
-  private[graft] def build(s: SparkSession, d: String): DataFrame = {
+  /** `kernel = false` builds the tag map as the replaced 27-entry
+    * CreateMap form: the value-identity reference SynthTagsSpec
+    * compares the kernel against (private[graft], memo-free).
+    */
+  private[graft] def build(s: SparkSession, d: String,
+      kernel: Boolean = true): DataFrame = {
     val li = Tables.lineitem(s, d)
     val part = Tables.part(s, d).select("p_partkey", "p_name", "p_brand")
     // Round 19: the 27-entry CreateMap-of-when-cascades generated so
@@ -78,12 +82,7 @@ object SkiFeatures {
     // HotSpot's huge-method JIT limit and ran bytecode-interpreted
     // (measured 4× on the whole 6M-row stage; see SynthTagsExpr doc).
     // The native kernel emits the identical map (SynthTagsSpec pins
-    // full map equality on real rows); `spark.graft.synth.kernel=false`
-    // restores the expression form.
-    val useKernel = s.conf
-      .getOption("spark.graft.synth.kernel")
-      .orElse(sys.env.get("SPARK_GRAFT_SYNTH_KERNEL"))
-      .forall(_.toBoolean)
+    // full map equality on real rows against `kernel = false`).
     val wayId = (col("l_orderkey") * 10 + col("l_linenumber")).cast("long")
     val usesRaw =
       when(col("l_returnflag") === "R", "downhill")
@@ -206,7 +205,7 @@ object SkiFeatures {
     li.join(broadcast(part), col("l_partkey") === col("p_partkey"))
       .repartition(s.sparkContext.defaultParallelism)
       .select(wayId.as("way_id"),
-        (if (useKernel) kernelTags else tags).as("tags"),
+        (if (kernel) kernelTags else tags).as("tags"),
         coords.as("coords"))
   }
 

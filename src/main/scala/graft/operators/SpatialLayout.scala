@@ -334,12 +334,8 @@ object SpatialLayout {
           concat(lit("lat:"), col("c_custkey").cast("string"))), lit(18000))
           .cast("long").as("cell_y"))
     val codes = pts
-      .withColumn("hval", org.apache.spark.sql.GraftExpressionBridge
-        .column(graft.functions.HilbertExpr(
-          org.apache.spark.sql.GraftExpressionBridge
-            .expression(col("cell_x")),
-          org.apache.spark.sql.GraftExpressionBridge
-            .expression(col("cell_y")))))
+      .withColumn("hval",
+        graft.functions.HilbertExpr.hilbertD(col("cell_x"), col("cell_y")))
       .withColumn("zval", mortonZ(col("cell_x"), col("cell_y")))
     val u = codes.select(lit("hilbert").as("curve"), col("id"),
         col("cell_x"), col("cell_y"), col("hval").as("code"))

@@ -165,4 +165,22 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(g.getAs[Int]("n_points") == 1)
     assert(g.getAs[Double]("minx") == 7.5 && g.getAs[Double]("maxy") == 46.5)
   }
+
+  test("graft_gpkg_geom refuses parts that are not array^3<struct<lon, lat>>") {
+    GraftExtensions.register(spark)
+    // these cannot be cast to the (lon, lat) shape, so the call fails at
+    // analysis instead of reaching the encoder's raw reads
+    Seq("array(1)", "array(array(array(5)))", "array('a')").foreach { p =>
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT graft_gpkg_geom(1, $p)").queryExecution.assertAnalyzed()
+      }
+      assert(e.getCondition.startsWith("DATATYPE_MISMATCH"), s"$p: ${e.getMessage}")
+    }
+    // int coordinates inside the right struct shape are cast to double
+    val g = spark.sql(
+      """SELECT graft_gpkg_geom(1, array(array(array(
+        |  named_struct('lon', 7, 'lat', 46))))) AS g""".stripMargin)
+      .collect().head.getStruct(0)
+    assert(g.getDouble(2) == 7.0 && g.getDouble(5) == 46.0)
+  }
 }

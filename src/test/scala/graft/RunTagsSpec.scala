@@ -138,14 +138,7 @@ class RunTagsSpec extends SparkSpec {
     k.zip(l).foreach { case (a, b) => assert(a == b, s"\nkernel $a\nlegacy $b") }
   }
 
-  test("conf escape hatch restores the legacy plan shape") {
-    spark.conf.set("spark.graft.format.runKernel", "false")
-    try {
-      val plan = Formatters.formatRuns(inputDf)
-        .queryExecution.optimizedPlan.toString
-      assert(!plan.contains("runtagsexpr") && plan.contains("map_filter"),
-        s"expected legacy expression shape:\n$plan")
-    } finally spark.conf.unset("spark.graft.format.runKernel")
+  test("default formatRuns plans the kernel") {
     val kplan = Formatters.formatRuns(inputDf)
       .queryExecution.optimizedPlan.toString
     assert(kplan.toLowerCase.contains("runtags"), s"kernel missing:\n$kplan")

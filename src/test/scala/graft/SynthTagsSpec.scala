@@ -12,13 +12,10 @@ import org.apache.spark.sql.functions._
   */
 class SynthTagsSpec extends SparkSpec {
 
-  private def buildArm(kernelOn: Boolean) = {
-    spark.conf.set("spark.graft.synth.kernel", kernelOn.toString)
-    try SkiFeatures.build(spark, sf)
+  private def buildArm(kernelOn: Boolean) =
+    SkiFeatures.build(spark, sf, kernel = kernelOn)
       .select(col("way_id"), map_entries(col("tags")).as("e"),
         col("coords"))
-    finally spark.conf.unset("spark.graft.synth.kernel")
-  }
 
   test("kernel map equals the CreateMap form on every sf0.001 row") {
     val k = buildArm(kernelOn = true).collect()
@@ -36,16 +33,18 @@ class SynthTagsSpec extends SparkSpec {
     }
   }
 
-  test("default build uses the kernel; conf restores CreateMap") {
+  test("default build uses the kernel") {
     val kplan = SkiFeatures.build(spark, sf)
       .queryExecution.optimizedPlan.toString.toLowerCase
     assert(kplan.contains("synthtags"), s"kernel missing:\n${kplan.take(500)}")
-    spark.conf.set("spark.graft.synth.kernel", "false")
-    try {
-      val lplan = SkiFeatures.build(spark, sf)
-        .queryExecution.optimizedPlan.toString.toLowerCase
-      assert(!lplan.contains("synthtags") && lplan.contains("map("),
-        s"legacy form missing:\n${lplan.take(500)}")
-    } finally spark.conf.unset("spark.graft.synth.kernel")
+  }
+
+  test("kernel = false builds the CreateMap form") {
+    // the row-for-row test above compares against this arm, so it must
+    // really be the replaced form and not the kernel again
+    val lplan = SkiFeatures.build(spark, sf, kernel = false)
+      .queryExecution.optimizedPlan.toString.toLowerCase
+    assert(!lplan.contains("synthtags") && lplan.contains("map("),
+      s"legacy form missing:\n${lplan.take(500)}")
   }
 }
