@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType}
   * node in an inner-join condition and rewrites the join into the
   * grid-cell explode + equi-join + refine shape, turning O(n·m) into a
   * shuffle-partitioned equi-join — the planner-level version of
-  * [[graft.operators.Clustering.distanceJoin]].
+  * [[graft.operators.GridJoin]].
   *
   * `refined` marks the copy the rule leaves behind as the exact
   * refinement filter, so the rewrite does not re-fire on its own

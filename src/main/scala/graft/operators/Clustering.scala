@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Ski-area clustering core (SURVEY §2.6): the transitive-closure
   * proximity assignment (J10) built from the grid-cell distance join
-  * (J1) with activity compatibility (J7).
+  * ([[GridJoin]], J1) with activity compatibility (J7).
   *
   * Reference behavior: starting from each ski area's geometry,
   * repeatedly claim compatible objects within 500 m of anything
@@ -18,45 +18,31 @@ import org.apache.spark.sql.functions._
   * areas — the label-propagation design SURVEY J10 prescribes in place
   * of sequential claiming (divergence documented there).
   *
-  * Scale notes: each iteration shuffles only the frontier (shrinks
-  * fast) against the cell-partitioned object table; the object side is
-  * computed once and cached. localCheckpoint after each iteration cuts
-  * the growing lineage. Chains are geographically short, so the loop
-  * converges in a handful of iterations regardless of data size.
+  * Scale notes: each iteration joins only the frontier (shrinks fast)
+  * against the object table, which is computed once and cached.
+  * localCheckpoint after each iteration cuts the growing lineage.
+  * Chains are geographically short, so the loop converges in a
+  * handful of iterations regardless of data size.
   */
 object Clustering {
 
-  /** J1 grid-cell distance join — the shared spatial-join kernel
-    * (SURVEY §4.2) every proximity operator composes: candidates from
-    * a ±1-cell neighborhood equi-join (cellDeg must be ≥ the radius in
-    * degrees at the highest latitude of interest), exact haversine
-    * refine. `left` and `right` are point tables with (lon, lat);
-    * left's are renamed (l_lon, l_lat) in the output, all other
-    * columns pass through. `keys` prepends extra equi-join keys (e.g.
-    * activity). When `right` already carries cx/cy — precomputed once
-    * and persisted, as the iterative closure does — they are reused
-    * instead of recomputed per call.
+  /** One closure round: each frontier row (area_id, act, lon, lat)
+    * claims the objects (okey, uses, lon, lat) within `radiusM` that
+    * support its activity. The frontier is the small, shrinking side
+    * (the areas, then each round's newly reached objects); `rows`, its
+    * count from the previous round, sizes the grid join's broadcast.
     */
-  def distanceJoin(left: DataFrame, right: DataFrame, radiusM: Double,
-      cellDeg: Double, keys: Seq[String] = Nil): DataFrame = {
-    val l = left
-      .withColumnRenamed("lon", "l_lon")
-      .withColumnRenamed("lat", "l_lat")
-      .withColumn("cx", explode(transform(sequence(lit(-1), lit(1)),
-        i => floor(col("l_lon") / cellDeg).cast("long") + i)))
-      .withColumn("cyb", floor(col("l_lat") / cellDeg).cast("long"))
-      .withColumn("cy", explode(transform(sequence(lit(-1), lit(1)),
-        j => col("cyb") + j)))
-      .drop("cyb")
-    val r = if (right.columns.contains("cx")) right
-      else right
-        .withColumn("cx", floor(col("lon") / cellDeg).cast("long"))
-        .withColumn("cy", floor(col("lat") / cellDeg).cast("long"))
-    l.join(r, keys ++ Seq("cx", "cy"))
-      .filter(GeoFunctions.haversineM(col("l_lon"), col("l_lat"),
-        col("lon"), col("lat")) <= radiusM)
-      .drop("cx", "cy")
-  }
+  private[graft] def expand(frontier: DataFrame, objs: DataFrame,
+      radiusM: Double, cellDeg: Double, rows: Option[Long]): DataFrame =
+    GridJoin(
+      frontier.select(col("area_id"), col("act"),
+        col("lon").as("l_lon"), col("lat").as("l_lat")),
+      objs, (col("l_lon"), col("l_lat")), (col("lon"), col("lat")),
+      cellDeg, GridJoin.Within(radiusM), leftRows = rows)
+      .filter(array_contains(col("uses"), col("act")))
+      .select(col("area_id"), col("act"), col("okey"),
+        col("lon"), col("lat"))
+      .distinct()
 
   /** areas: area_id (long), act (string), lon, lat
     * objs:  okey (long), uses (array<string>), lon, lat
@@ -64,34 +50,7 @@ object Clustering {
     */
   def transitiveAssign(areas: DataFrame, objs: DataFrame,
       radiusM: Double, cellDeg: Double): DataFrame = {
-    val objCells = objs
-      .withColumn("cx", floor(col("lon") / cellDeg).cast("long"))
-      .withColumn("cy", floor(col("lat") / cellDeg).cast("long"))
-      .persist()
-
-    // Round 19 (guide §3.1): the frontier is the SMALL, shrinking side
-    // (the areas, then each round's newly-reached objects) while
-    // objCells is the persisted FULL object table — yet the sort-merge
-    // grid join re-exchanged and re-sorted every cached object row on
-    // (cx, cy) every iteration. Broadcasting the frontier streams the
-    // cache with no exchange of the big side at all; the only
-    // shuffles left per iteration are the small candidate distinct +
-    // anti-join. `spark.graft.cluster.broadcastFrontier=false`
-    // restores the exchange join for frontiers too big to broadcast.
-    val bcastFrontier = areas.sparkSession.conf
-      .get("spark.graft.cluster.broadcastFrontier", "true").toBoolean
-    def expand(frontier: DataFrame): DataFrame = {
-      val f = frontier.select(col("area_id"), col("act"),
-        col("lon"), col("lat"))
-      distanceJoin(
-        if (bcastFrontier) broadcast(f) else f,
-        objCells, radiusM, cellDeg)
-        .filter(array_contains(col("uses"), col("act")))
-        .select(col("area_id"), col("act"), col("okey"),
-          col("lon"), col("lat"))
-        .distinct()
-    }
-
+    val objsCached = objs.persist()
     var frontier = areas.select(col("area_id"), col("act"),
       col("lon"), col("lat"))
     // reached = lazy union over per-iteration CHECKPOINTED frontier
@@ -102,14 +61,11 @@ object Clustering {
       scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.DataFrame]()
     def reached: org.apache.spark.sql.DataFrame =
       reachedParts.reduce(_ unionByName _)
-    // SPARK_GRAFT_CLUSTER_DEBUG=1: per-iteration frontier size + wall
-    // time on stdout (the count is paid either way — convergence test)
-    val dbg = sys.env.get("SPARK_GRAFT_CLUSTER_DEBUG").contains("1")
+    var frontierRows: Option[Long] = None
     var iter = 0
     var done = false
     while (!done && iter < 30) {
-      val t0 = if (dbg) System.nanoTime() else 0L
-      val cand = expand(frontier)
+      val cand = expand(frontier, objsCached, radiusM, cellDeg, frontierRows)
       // LAZY checkpoint + count: ONE driver action per iteration both
       // materializes the round's blocks (doCheckpoint completes every
       // partition at job end) and answers the convergence question —
@@ -119,18 +75,18 @@ object Clustering {
           Seq("area_id", "okey"), "left_anti"))
         .localCheckpoint(false)
       val n = newPairs.count()
-      if (dbg) println(f"[cluster] iter=$iter%2d new=$n%9d " +
-        f"${(System.nanoTime() - t0) / 1e9}%6.2f s")
       if (n == 0) done = true
       else {
         reachedParts += newPairs
         frontier = newPairs
+        frontierRows = Some(n)
       }
       iter += 1
     }
-    objCells.unpersist()
+    objsCached.unpersist()
     if (reachedParts.isEmpty)
-      expand(areas.limit(0)).groupBy("okey")
+      expand(areas.limit(0), objsCached, radiusM, cellDeg, None)
+        .groupBy("okey")
         .agg(min("area_id").as("area_id"))
     else
       reached.groupBy("okey").agg(min("area_id").as("area_id"))
@@ -169,14 +125,13 @@ object Clustering {
     val nodes = nodes0
       .withColumn("nid",
         col("oid") * 2 + when(col("act") === "nordic", 1L).otherwise(0L))
-      .withColumn("cx", floor(col("lon") / cellDeg).cast("long"))
-      .withColumn("cy", floor(col("lat") / cellDeg).cast("long"))
       .localCheckpoint()
-    val gpairs = distanceJoin(
-      nodes.select(col("act"), col("nid").as("a"), col("lon"), col("lat")),
-      nodes.select(col("act"), col("nid").as("b"), col("lon"), col("lat"),
-        col("cx"), col("cy")),
-      radiusM, cellDeg, keys = Seq("act"))
+    val gpairs = GridJoin(
+      nodes.select(col("act"), col("nid").as("a"),
+        col("lon").as("l_lon"), col("lat").as("l_lat")),
+      nodes.select(col("act"), col("nid").as("b"), col("lon"), col("lat")),
+      (col("l_lon"), col("l_lat")), (col("lon"), col("lat")),
+      cellDeg, GridJoin.Within(radiusM), keys = Seq("act"))
       .filter(col("a") < col("b"))
       .select("a", "b")
     val labels = minLabelComponents(gpairs)
@@ -263,62 +218,19 @@ object Clustering {
         element_at(p, 1), element_at(p, 2), col("ring"))))
 
   /** Containment-join candidate generation shared by [[coveredBy]] and
-    * the multipolygon variants: area anchor cell ±reach × run
-    * first-vertex cell. areas: (alon, alat, …); runs: (coords, …).
-    *
-    * Default strategy (round 19, guide §3.1/§8): BROADCAST the area
-    * side at its ANCHOR cell and explode the RUN side to the ±reach
-    * neighborhood — the candidate pair set is identical (acx + i = rcx
-    * ⟺ acx = rcx − i over the symmetric ±reach range, one distinct
-    * cell pair per candidate either way), but neither the run coords
-    * nor the ring arrays ever cross an exchange, and the sort-merge
-    * join's per-partition sort of fat array rows disappears. That sort
-    * was the scale killer: at sf1 the partitioned shape cost ~24
-    * CPU-MINUTES at 4 shuffle partitions (spilling sorter, measured
-    * wall 346 s on local[4]) vs 112 CPU-s at 16 partitions — the same
-    * query, 13× the CPU, purely from re-sorting/spilling shuffled
-    * geometry. The ring side is the small one at every realistic scale
-    * (ski-area polygons ≪ runs, mirroring the reference's shape);
-    * when it is not, `spark.graft.containment.broadcast=false`
-    * restores the partitioned exchange join.
+    * the multipolygon variants: run first-vertex cell ±reach × area
+    * anchor cell, through [[GridJoin]]. `reach` is a fixed cell count,
+    * not a metric radius: containment is a degree-space test. The run
+    * side walks, so the fat ring arrays stay one row per area; the
+    * exploded runs outgrow the broadcast threshold at any real size,
+    * and the area side is broadcast when it fits.
+    * areas: (alon, alat, …); runs: (coords, …).
     */
   def cellCandidates(areas: DataFrame, runs: DataFrame, cellDeg: Double,
       reach: Int): DataFrame = {
-    val useBroadcast = areas.sparkSession.conf
-      .get("spark.graft.containment.broadcast", "true").toBoolean
-    if (useBroadcast) {
-      val acells = areas
-        .withColumn("cx", floor(col("alon") / cellDeg).cast("long"))
-        .withColumn("cy", floor(col("alat") / cellDeg).cast("long"))
-      val rcells = runs
-        .withColumn("cx",
-          explode(transform(sequence(lit(-reach), lit(reach)),
-            i => floor(element_at(element_at(col("coords"), 1), 1)
-              / cellDeg).cast("long") + i)))
-        .withColumn("cyb", floor(element_at(element_at(col("coords"), 1), 2)
-          / cellDeg).cast("long"))
-        .withColumn("cy",
-          explode(transform(sequence(lit(-reach), lit(reach)),
-            j => col("cyb") + j)))
-        .drop("cyb")
-      rcells.join(broadcast(acells), Seq("cx", "cy")).drop("cx", "cy")
-    } else {
-      val acells = areas
-        .withColumn("cx",
-          explode(transform(sequence(lit(-reach), lit(reach)),
-            i => floor(col("alon") / cellDeg).cast("long") + i)))
-        .withColumn("cyb", floor(col("alat") / cellDeg).cast("long"))
-        .withColumn("cy",
-          explode(transform(sequence(lit(-reach), lit(reach)),
-            j => col("cyb") + j)))
-        .drop("cyb")
-      val rcells = runs
-        .withColumn("cx", floor(element_at(element_at(col("coords"), 1), 1)
-          / cellDeg).cast("long"))
-        .withColumn("cy", floor(element_at(element_at(col("coords"), 1), 2)
-          / cellDeg).cast("long"))
-      acells.join(rcells, Seq("cx", "cy")).drop("cx", "cy")
-    }
+    def first(i: Int) = element_at(element_at(col("coords"), 1), i)
+    GridJoin(runs, areas, (first(1), first(2)), (col("alon"), col("alat")),
+      cellDeg, GridJoin.Cells(reach))
   }
 
   /** Both step-2 area-removal rules over [[coveredBy]] output

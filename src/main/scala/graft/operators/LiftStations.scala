@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * along-line positions, lateral offsets, and elevations — some beyond
   * 30 m to exercise orphan removal, some with explicit positions).
   *
-  * Scale notes: candidate generation is a grid-cell equi-join (station
-  * cell vs lift vertex 3×3 cells, deduped per pair) — no cross join;
+  * Scale notes: candidate generation is the grid join (station walk
+  * vs lift vertex cells, deduped per pair) — no cross join;
   * the projection refine is per candidate pair; best-of window runs on
   * (station) partitions. All float math is written with the exact op
   * order of the DuckDB oracle.
@@ -43,7 +43,7 @@ object LiftStations {
     * (`LiftStationAssociator.ts:155-184`).
     *
     * Rules: candidates within thresholdM of the nearest point on the
-    * lift line (grid-cell prefilter: station cell vs lift vertex 3×3
+    * lift line (grid-join prefilter: station walk vs lift vertex
     * cells); best lift = min distance, lift id then part tie-break;
     * orphans (no lift within threshold) drop out; position =
     * explicit_pos else bottom/top/mid from sz against the lift's
@@ -54,21 +54,11 @@ object LiftStations {
       thresholdM: Double, cellDeg: Double): DataFrame = {
     val lf = if (lifts.columns.contains("part_no")) lifts
       else lifts.withColumn("part_no", lit(0))
-    val lvert = lf
-      .select(col("lift_id"), col("part_no"), col("coords"),
-        explode(col("coords")).as("v"))
-      .select(col("lift_id"), col("part_no"), col("coords"),
-        explode(transform(sequence(lit(-1), lit(1)), i =>
-          floor(element_at(col("v"), 1) / cellDeg).cast("long") + i)).as("cx"),
-        floor(element_at(col("v"), 2) / cellDeg).cast("long").as("cyb"))
-      .select(col("lift_id"), col("part_no"), col("coords"), col("cx"),
-        explode(transform(sequence(lit(-1), lit(1)), j =>
-          col("cyb") + j)).as("cy"))
-      .dropDuplicates("lift_id", "part_no", "cx", "cy")
-    val st = stations
-      .withColumn("cx", floor(col("slon") / cellDeg).cast("long"))
-      .withColumn("cy", floor(col("slat") / cellDeg).cast("long"))
-    val cand = st.join(lvert, Seq("cx", "cy"))
+    val lvert = lf.select(col("lift_id"), col("part_no"), col("coords"),
+      explode(col("coords")).as("v"))
+    val cand = GridJoin(stations, lvert, (col("slon"), col("slat")),
+        (element_at(col("v"), 1), element_at(col("v"), 2)), cellDeg,
+        GridJoin.Within(thresholdM, refine = false))
       .dropDuplicates("sid", "lift_id", "part_no")
     val np = GeoFunctions.nearestPointOnLine(
       col("slon"), col("slat"), col("coords"))

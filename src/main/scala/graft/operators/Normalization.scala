@@ -201,7 +201,7 @@ object Normalization {
     *
     * The canonical undirected key is (lo, hi) — two flat longs, the
     * fast grouping path. Edge pairs are formed with posexplode +
-    * element_at(coords, pos+2), NOT zip_with/slice/transform:
+    * try_element_at(coords, pos+2), NOT zip_with/slice/transform:
     * higher-order functions are CodegenFallback (interpreted) and
     * dominated the map stage (~100 µs/row); this shape keeps the
     * whole stage codegen'd. (Exposed per-stage as graft.Profile's
@@ -219,7 +219,10 @@ object Normalization {
       .filter(col("pos") < size(col("coords")) - 1)
       .select(col("run_id"), col("props"), col("pos").as("idx"),
         packPt(col("col")).as("p1"),
-        packPt(element_at(col("coords"), col("pos") + 2)).as("p2"))
+        // try_: the optimizer merges the two filters, and without
+        // whole-stage codegen the merged predicate evaluates p2 on the
+        // last point too, where element_at throws under ANSI
+        packPt(try_element_at(col("coords"), col("pos") + 2)).as("p2"))
       .filter(col("p1") =!= col("p2"))
       .withColumn("lo", least(col("p1"), col("p2")))
       .withColumn("hi", greatest(col("p1"), col("p2")))

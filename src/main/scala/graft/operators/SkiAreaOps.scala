@@ -185,11 +185,12 @@ object SkiAreaOps {
     */
   def mergeSkiAreas(osm: DataFrame, sk: DataFrame, radiusM: Double,
       cellDeg: Double): DataFrame = {
-    val matched = Clustering.distanceJoin(
-      osm.select(col("area_id"), col("lon"), col("lat"),
-        col("acts").as("oacts")),
+    val matched = GridJoin(
+      osm.select(col("area_id"), col("lon").as("l_lon"),
+        col("lat").as("l_lat"), col("acts").as("oacts")),
       sk.select(col("sk_id"), col("lon"), col("lat"), col("acts")),
-      radiusM, cellDeg)
+      (col("l_lon"), col("l_lat")), (col("lon"), col("lat")),
+      cellDeg, GridJoin.Within(radiusM))
       // A Skimap area with UNKNOWN activities matches as if it had all
       // of them (`SkiAreaClusteringService.ts:796-799`, scenario :1559).
       .filter(size(array_intersect(col("oacts"), col("acts"))) > 0 ||
@@ -217,10 +218,12 @@ object SkiAreaOps {
     */
   def mergeSkiAreasViaObjects(osm: DataFrame, sk: DataFrame,
       objects: DataFrame, radiusM: Double, cellDeg: Double): DataFrame = {
-    val matched = Clustering.distanceJoin(
-      objects.select(col("area_id"), col("lon"), col("lat")),
+    val matched = GridJoin(
+      objects.select(col("area_id"), col("lon").as("l_lon"),
+        col("lat").as("l_lat")),
       sk.select(col("sk_id"), col("lon"), col("lat"), col("acts")),
-      radiusM, cellDeg)
+      (col("l_lon"), col("l_lat")), (col("lon"), col("lat")),
+      cellDeg, GridJoin.Within(radiusM))
       .select("area_id", "sk_id", "acts")
       .distinct()
       .join(osm.select(col("area_id"), col("acts").as("oacts")), "area_id")
@@ -472,25 +475,11 @@ object SkiAreaOps {
           - 180.0).as("alon"),
         (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
           - 60.0).as("alat"))
-    val acells = areas
-      .select(col("area_id"), col("alon"), col("alat"),
-        explode(transform(sequence(lit(-1), lit(1)),
-          i => floor(col("alon") / CellDeg).cast("long") + i)).as("cx"),
-        floor(col("alat") / CellDeg).cast("long").as("cyb"))
-      .select(col("area_id"), col("alon"), col("alat"), col("cx"),
-        explode(transform(sequence(lit(-1), lit(1)),
-          j => col("cyb") + j)).as("cy"))
     def p1(j: Int) = element_at(element_at(col("coords"), 1), j)
     val rr = SkiQueries.formatted(s, d).filter(col("kept"))
       .select(col("way_id"), col("coords"),
         p1(1).as("lon"), p1(2).as("lat"))
-      .withColumn("cx", floor(col("lon") / CellDeg).cast("long"))
-      .withColumn("cy", floor(col("lat") / CellDeg).cast("long"))
-    val rasg = acells.join(rr.select("way_id", "lon", "lat", "cx", "cy"),
-        Seq("cx", "cy"))
-      .filter(haversineM(col("alon"), col("alat"), col("lon"), col("lat"))
-        <= RadiusM)
-      .groupBy("way_id").agg(min("area_id").as("area_id"))
+    val rasg = SkiQueries.nearestArea(areas, rr, "way_id")
     val pts = rr.join(rasg, "way_id")
       .select(col("area_id"), col("way_id"),
         posexplode(col("coords")))
@@ -634,22 +623,10 @@ object SkiAreaOps {
         (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
           - 60.0).as("alat"))
       .localCheckpoint()
-    val acells = areas
-      .select(col("area_id"), col("alon"), col("alat"),
-        explode(transform(sequence(lit(-1), lit(1)),
-          i => floor(col("alon") / CellDeg).cast("long") + i)).as("cx"),
-        floor(col("alat") / CellDeg).cast("long").as("cyb"))
-      .select(col("area_id"), col("alon"), col("alat"), col("cx"),
-        explode(transform(sequence(lit(-1), lit(1)),
-          j => col("cyb") + j)).as("cy"))
     def p1(j: Int) = element_at(element_at(col("coords"), 1), j)
     val rr = SkiQueries.formatted(s, d).filter(col("kept"))
       .select(col("way_id"), p1(1).as("lon"), p1(2).as("lat"))
-      .withColumn("cx", floor(col("lon") / CellDeg).cast("long"))
-      .withColumn("cy", floor(col("lat") / CellDeg).cast("long"))
-    val rasg = acells.join(rr, Seq("cx", "cy"))
-      .filter(haversineM(col("alon"), col("alat"), col("lon"), col("lat"))
-        <= RadiusM)
+    val rasg = SkiQueries.nearAreas(areas.select("area_id", "alon", "alat"), rr)
       .groupBy("way_id")
       .agg(min("area_id").as("area_id"),
         first("lon").as("plon"), first("lat").as("plat"))

@@ -3,6 +3,7 @@ package graft.operators
 import graft.QuerySpec
 import graft.functions.GeoFunctions
 import graft.functions.GeoFunctions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -169,6 +170,23 @@ object SkiQueries {
   private[operators] val CellDeg = 0.01
   private[operators] val RadiusM = 500.0
 
+  /** Anchors (area_id, alon, alat, …) × points (`lon`, `lat`, …)
+    * within [[RadiusM]]: the grid join the area-assignment queries
+    * share.
+    */
+  private[operators] def nearAreas(areas: DataFrame, pts: DataFrame,
+      lon: String = "lon", lat: String = "lat"): DataFrame =
+    GridJoin(areas, pts, (col("alon"), col("alat")), (col(lon), col(lat)),
+      CellDeg, GridJoin.Within(RadiusM))
+
+  /** Each point `key` within [[RadiusM]] of an anchor → the min such
+    * area_id: the area assignment of the statistics queries.
+    */
+  private[graft] def nearestArea(areas: DataFrame, pts: DataFrame,
+      key: String, lon: String = "lon", lat: String = "lat"): DataFrame =
+    nearAreas(areas, pts.select(key, lon, lat), lon, lat)
+      .groupBy(key).agg(min("area_id").as("area_id"))
+
   private val qGridJoin = QuerySpec.of(
     "q_ski_grid_join",
     s"""WITH $oraclePrelude,
@@ -203,10 +221,7 @@ object SkiQueries {
       .select(col("way_id"),
         element_at(element_at(col("coords"), 1), 1).as("lon"),
         element_at(element_at(col("coords"), 1), 2).as("lat"))
-    Clustering.distanceJoin(
-      areas.select(col("area_id"), col("alon").as("lon"),
-        col("alat").as("lat")),
-      runs, RadiusM, CellDeg)
+    nearAreas(areas, runs)
       .groupBy("area_id")
       .agg(count(lit(1)).as("n_runs"))
       .orderBy("area_id")
@@ -216,8 +231,8 @@ object SkiQueries {
   // Per-anchor k-nearest-neighbor search bounded by the same 500 m
   // grid (a kNN without a radius bound is a global problem; bounding
   // by the join radius keeps it a per-cell one — the standard
-  // production compromise). Candidates come from the shared
-  // distanceJoin kernel; the top-3 per anchor ranks on the rounded
+  // production compromise). Candidates come from the shared grid
+  // join; the top-3 per anchor ranks on the rounded
   // metre distance with way_id tiebreak, so the hash compare is
   // stable. Anchors with fewer than 3 runs in range report what they
   // have; anchors with none don't appear (same contract as the grid
@@ -259,17 +274,17 @@ object SkiQueries {
       .filter(pmod(col("o_orderkey"), lit(37)) === 0)
       .select(col("o_orderkey").as("area_id"),
         (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("lon"),
+          - 180.0).as("alon"),
         (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double")
-          / 1000.0 - 60.0).as("lat"))
+          / 1000.0 - 60.0).as("alat"))
     val runs = formatted(s, d).filter(col("kept"))
       .select(col("way_id"),
         element_at(element_at(col("coords"), 1), 1).as("lon"),
         element_at(element_at(col("coords"), 1), 2).as("lat"))
     val w = Window.partitionBy("area_id").orderBy("dist_m", "way_id")
-    Clustering.distanceJoin(areas, runs, RadiusM, CellDeg)
+    nearAreas(areas, runs)
       .select(col("area_id"), col("way_id"),
-        (floor((GeoFunctions.haversineM(col("l_lon"), col("l_lat"),
+        (floor((GeoFunctions.haversineM(col("alon"), col("alat"),
           col("lon"), col("lat"))) * 1e3 + 0.5) / 1e3).as("dist_m"))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= KnnPerAnchor)
@@ -281,10 +296,10 @@ object SkiQueries {
   // The reference's "intersects" search is ST_DWithin against the full
   // geometry (`database/PostgreSQLClusteringDatabase.ts:688-693`) —
   // distance to the run LINE, not to a representative vertex. Candidates
-  // come from the run-vertex grid cells (a run within 500 m of an anchor
-  // has some vertex within 500 m + one segment length, covered by the
-  // 3×3 neighborhood at this geometry scale); the refine snaps the
-  // anchor onto the line (G3) and checks the snapped distance.
+  // come from the grid join of each anchor's 500 m walk against the
+  // run-vertex cells (at this geometry scale a run within 500 m of an
+  // anchor has a vertex in the walk); the refine snaps the anchor onto
+  // the line (G3) and checks the snapped distance.
   private val qLineJoin = QuerySpec.of(
     "q_ski_line_distance_join", {
       val hav = GeoFunctions.sqlHaversineM("alon", "alat", "snap_lon", "snap_lat")
@@ -345,21 +360,11 @@ object SkiQueries {
           - 180.0).as("alon"),
         (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
           - 60.0).as("alat"))
-    val acells = areas
-      .select(col("area_id"), col("alon"), col("alat"),
-        explode(transform(sequence(lit(-1), lit(1)),
-          i => floor(col("alon") / CellDeg).cast("long") + i)).as("cx"),
-        floor(col("alat") / CellDeg).cast("long").as("cyb"))
-      .select(col("area_id"), col("alon"), col("alat"), col("cx"),
-        explode(transform(sequence(lit(-1), lit(1)),
-          j => col("cyb") + j)).as("cy"))
     val rverts = formatted(s, d).filter(col("kept"))
       .select(col("way_id"), col("coords"), explode(col("coords")).as("v"))
-      .select(col("way_id"), col("coords"),
-        floor(element_at(col("v"), 1) / CellDeg).cast("long").as("cx"),
-        floor(element_at(col("v"), 2) / CellDeg).cast("long").as("cy"))
-      .dropDuplicates("way_id", "cx", "cy")
-    val cand = acells.join(rverts, Seq("cx", "cy"))
+    val cand = GridJoin(areas, rverts, (col("alon"), col("alat")),
+        (element_at(col("v"), 1), element_at(col("v"), 2)), CellDeg,
+        GridJoin.Within(RadiusM, refine = false))
       .dropDuplicates("area_id", "way_id")
     cand
       .withColumn("np", GeoFunctions.nearestPointOnLine(
@@ -798,37 +803,12 @@ object SkiQueries {
         (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
           - 60.0).as("lat"))
       .withColumn("is_lift", lit(true))
-    val nodes = runNodes.unionByName(liftNodes)
-      .withColumn("nid",
-        col("oid") * 2 + when(col("act") === "nordic", 1L).otherwise(0L))
-      .withColumn("cx", floor(col("lon") / CellDeg).cast("long"))
-      .withColumn("cy", floor(col("lat") / CellDeg).cast("long"))
-      .localCheckpoint()
-    val lcells = nodes
-      .select(col("act"), col("nid").as("a"),
-        col("lon").as("alon"), col("lat").as("alat"),
-        explode(transform(sequence(lit(-1), lit(1)),
-          i => col("cx") + i)).as("cx"),
-        col("cy").as("cyb"))
-      .select(col("act"), col("a"), col("alon"), col("alat"), col("cx"),
-        explode(transform(sequence(lit(-1), lit(1)),
-          j => col("cyb") + j)).as("cy"))
-    val pairs = lcells
-      .join(nodes.select(col("act"), col("nid").as("b"),
-        col("lon"), col("lat"), col("cx"), col("cy")), Seq("act", "cx", "cy"))
-      .filter(col("a") < col("b") &&
-        haversineM(col("alon"), col("alat"), col("lon"), col("lat")) <= RadiusM)
-      .select("a", "b")
-    val labels = Clustering.minLabelComponents(pairs)
-    nodes.join(labels, Seq("nid"), "left")
-      .withColumn("label", coalesce(col("label"), col("nid")))
-      .groupBy("act", "label")
+    Clustering.generateSkiAreas(runNodes.unionByName(liftNodes),
+        RadiusM, CellDeg)
+      .groupBy("act", "area_id")
       .agg(count(when(!col("is_lift"), 1)).as("n_runs"),
         count(when(col("is_lift"), 1)).as("n_lifts"))
-      .filter(col("n_runs") > 0 &&
-        !(col("act") === "downhill" && col("n_lifts") === 0))
-      .select(col("act").as("activity"),
-        shiftright(col("label"), 1).as("area_oid"),
+      .select(col("act").as("activity"), col("area_id").as("area_oid"),
         col("n_runs"), col("n_lifts"))
       .orderBy("activity", "area_oid")
   }

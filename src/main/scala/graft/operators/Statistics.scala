@@ -127,14 +127,6 @@ object Statistics {
           - 180.0).as("alon"),
         (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
           - 60.0).as("alat"))
-    val acells = areas
-      .select(col("area_id"), col("alon"), col("alat"),
-        explode(transform(sequence(lit(-1), lit(1)),
-          i => floor(col("alon") / CellDeg).cast("long") + i)).as("cx"),
-        floor(col("alat") / CellDeg).cast("long").as("cyb"))
-      .select(col("area_id"), col("alon"), col("alat"), col("cx"),
-        explode(transform(sequence(lit(-1), lit(1)),
-          j => col("cyb") + j)).as("cy"))
 
     def pt(i: Int, j: Int) = element_at(element_at(col("coords"), i), j)
     val rr = SkiQueries.formatted(s, d).filter(col("kept"))
@@ -145,13 +137,7 @@ object Statistics {
         (pt(3, 3) - pt(1, 3)).as("dz"),
         pt(1, 3).as("minz"), pt(3, 3).as("maxz"),
         pt(1, 1).as("lon"), pt(1, 2).as("lat"))
-      .withColumn("cx", floor(col("lon") / CellDeg).cast("long"))
-      .withColumn("cy", floor(col("lat") / CellDeg).cast("long"))
-    val rasg = acells.join(rr.select("way_id", "lon", "lat", "cx", "cy"),
-        Seq("cx", "cy"))
-      .filter(haversineM(col("alon"), col("alat"), col("lon"), col("lat"))
-        <= RadiusM)
-      .groupBy("way_id").agg(min("area_id").as("area_id"))
+    val rasg = SkiQueries.nearestArea(areas, rr, "way_id")
     val runs = rr.join(rasg, "way_id")
       .select(col("*"), explode(filter(col("uses"),
         u => u.isin("downhill", "nordic"))).as("activity"))
@@ -181,13 +167,7 @@ object Statistics {
       .withColumn("dz", lit(2.0) * col("rise"))
       .withColumn("minz", col("lz0"))
       .withColumn("maxz", col("lz0") + lit(2.0) * col("rise"))
-      .withColumn("cx", floor(col("llon") / CellDeg).cast("long"))
-      .withColumn("cy", floor(col("llat") / CellDeg).cast("long"))
-    val lasg = acells.join(ll.select("lift_id", "llon", "llat", "cx", "cy"),
-        Seq("cx", "cy"))
-      .filter(haversineM(col("alon"), col("alat"), col("llon"), col("llat"))
-        <= RadiusM)
-      .groupBy("lift_id").agg(min("area_id").as("area_id"))
+    val lasg = SkiQueries.nearestArea(areas, ll, "lift_id", "llon", "llat")
     val lj = ll.join(lasg, "lift_id")
     val lroot = lj.groupBy("area_id")
       .agg(nzMin(col("minz")).as("lift_min"), nzMax(col("maxz")).as("lift_max"))

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.LongType
 
 import graft.functions.STDWithinExpr
+import graft.operators.GridJoin
 
 /** Plans `JOIN ... ON graft_st_dwithin(l.lon, l.lat, r.lon, r.lat, R)`
   * as a grid-cell equi-join instead of a cartesian product.
@@ -15,12 +16,12 @@ import graft.functions.STDWithinExpr
   * (`ST_DWithin`, /root/reference/src/clustering/database/
   * PostgreSQLClusteringDatabase.ts:688-694) where a GIST index prunes
   * candidates. Spark has no spatial index; the engine's equivalent is
-  * the grid recipe every proximity call-site uses
-  * ([[graft.operators.Clustering.distanceJoin]]): explode one side
-  * into its 3x3 neighborhood of ~radius-sized cells, equi-join on the
-  * cell id, refine with exact haversine. This rule makes that recipe a
-  * PLANNER capability, so pure-SQL users (and any DataFrame join that
-  * just states the predicate) get the scalable plan declaratively:
+  * the grid join every proximity operator composes
+  * ([[graft.operators.GridJoin]]): explode one side into its
+  * neighbourhood of ~radius-sized cells, equi-join on the cell id,
+  * refine with exact haversine. This rule makes that join a PLANNER
+  * capability, so pure-SQL users (and any DataFrame join that just
+  * states the predicate) get the scalable plan declaratively:
   *
   *   - match: inner/cross join whose condition conjunctively contains
   *     an unrefined [[STDWithinExpr]] with a foldable positive radius,
@@ -32,27 +33,18 @@ import graft.functions.STDWithinExpr
   *
   * Each right row lands in exactly one cell and left rows explode to
   * DISTINCT cells, so a qualifying pair joins exactly once — no
-  * post-dedup. Cell size is radius/[[MetersPerCellDegree]] degrees;
-  * latitude rows always need only the ±1 walk (lat degrees are
-  * uniform), but the LONGITUDE walk is LATITUDE-AWARE: the half-width
-  * in cells is ceil((28800/111320) / cos(reachable lat)) per row —
-  * exactly 1 for |lat| <= 75 deg (cos 75 = 0.2588 > 28800/111320,
-  * so equatorial-to-alpine data keeps the classic 3x3 explode), and
-  * widening smoothly toward the poles so arbitrary SQL at |lat| > 75
-  * stays COMPLETE instead of silently missing east-west pairs (the
-  * reachable lat is the row's |lat| plus the radius in lat degrees,
-  * clamped to 89.9 — rows closer to the pole than that have no
-  * east-west direction left to miss). Longitude wraparound at the
-  * antimeridian is out of contract (as in the hand-written kernel).
-  * When the rule cannot apply (non-literal radius, predicate under
-  * OR, both points from one side) the expression still evaluates
-  * correctly — just without the rewrite.
+  * post-dedup. Cell size is radius/[[MetersPerCellDegree]] degrees,
+  * and the walk is the grid join's: ±[[GridJoin.latHalfWidth]] rows
+  * (1 at this cell size) by ±[[GridJoin.lonHalfWidth]] columns, which
+  * is 1 below about 74.98 deg (the classic 3x3 explode) and widens
+  * toward the poles. Longitude wraparound at the antimeridian is out
+  * of contract. When the rule cannot apply (non-literal radius,
+  * predicate under OR, both points from one side) the expression
+  * still evaluates correctly — just without the rewrite.
   */
 object DistanceJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
-  /** radius meters -> cell degrees divisor; see scaladoc for the
-    * latitude bound it implies.
-    */
+  /** radius meters -> cell degrees divisor. */
   val MetersPerCellDegree = 28800.0
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
@@ -105,21 +97,13 @@ object DistanceJoinRule extends Rule[LogicalPlan] with PredicateHelper {
       BitwiseOr(ShiftLeft(cx, Literal(32)),
         BitwiseAnd(cy, Literal(0xFFFFFFFFL)))
 
-    // latitude-aware longitude half-width (cells): 1 for |lat| <= 75,
-    // ceil(0.2587 / cos(|lat| + radiusLatDeg)) beyond — see scaladoc
-    val reachLat = Least(Seq(
-      Add(Abs(Cast(lLat, org.apache.spark.sql.types.DoubleType)),
-        Literal(radius / 110574.0)),
-      Literal(89.9)))
-    val halfWidth = Greatest(Seq(
-      Ceil(Divide(Literal(radius / 111320.0 / cellDeg),
-        Cos(Multiply(reachLat, Literal(math.Pi / 180.0))))),
-      Literal(1L)))
+    val halfWidth = GridJoin.lonHalfWidth(lLat, radius, cellDeg)
+    val dy = GridJoin.latHalfWidth(radius, cellDeg)
     val cx0 = cellOf(lLon)
     val xVar = NamedLambdaVariable("graft_dwithin_cx", LongType,
       nullable = true)
-    val yCells = CreateArray(Seq(-1L, 0L, 1L).map(dj =>
-      pack(xVar, Add(cellOf(lLat), Literal(dj)))))
+    val yCells = CreateArray((-dy to dy).map(j =>
+      pack(xVar, Add(cellOf(lLat), Literal(j)))))
     // Sequence is TimeZoneAwareExpression: resolved only with a zone,
     // even for integral sequences where it is irrelevant
     val xRange = new Sequence(Subtract(cx0, halfWidth),

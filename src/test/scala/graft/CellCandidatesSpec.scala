@@ -1,15 +1,18 @@
 package graft
 
-import graft.operators.Clustering
+import graft.operators.{Clustering, GridJoin}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
-/** Value-identity pin for the round-19 containment-join restructure:
-  * `cellCandidates` now defaults to broadcasting the area side at its
-  * anchor cell and exploding the RUN side over the ±reach cell
-  * neighborhood (the pre-r19 shape exploded the AREA side and shuffled
-  * both). The candidate (area, run) multiset must be identical in both
-  * strategies — including multiplicity (MultiPart counts joined rows
-  * without a dedup) and null-coordinate behavior.
+/** Value-identity pin for the grid join's broadcast choice:
+  * `cellCandidates` (and every [[GridJoin]] call) broadcasts a side
+  * only when its size fits within `spark.sql.autoBroadcastJoinThreshold`.
+  * At the default threshold these tiny inputs broadcast; a 1-byte
+  * threshold forces the partitioned join. The candidate (area, run)
+  * multiset must be identical in both strategies — including
+  * multiplicity (MultiPart counts joined rows without a dedup) and
+  * null-coordinate behavior.
   */
 class CellCandidatesSpec extends SparkSpec {
   import spark.implicits._
@@ -33,15 +36,27 @@ class CellCandidatesSpec extends SparkSpec {
     (14L, None)                                               // null coords
   ).toDF("way_id", "coords")
 
-  private def pairs(reach: Int, broadcastOn: Boolean): Seq[(Long, Long)] = {
-    spark.conf.set("spark.graft.containment.broadcast",
-      broadcastOn.toString)
-    try Clustering.cellCandidates(areasDf, runsDf, Cell, reach)
-      .select("area_id", "way_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    finally spark.conf.unset("spark.graft.containment.broadcast")
+  /** Collects (a, b) id pairs under the chosen strategy, checking the
+    * executed plan took it.
+    */
+  private def collect(broadcastOn: Boolean)(df: => DataFrame)
+      : Seq[(Long, Long)] = {
+    if (!broadcastOn)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+    try {
+      val d = df
+      val out = d.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val broadcasts = planNodes(d.queryExecution.executedPlan)
+        .collect { case j: BroadcastHashJoinExec => j }
+      assert(broadcasts.nonEmpty == broadcastOn,
+        d.queryExecution.executedPlan.toString)
+      out.sorted
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
+  private def pairs(reach: Int, broadcastOn: Boolean): Seq[(Long, Long)] =
+    collect(broadcastOn)(Clustering.cellCandidates(areasDf, runsDf, Cell,
+      reach).select("area_id", "way_id"))
   test("broadcast and exchange strategies produce the identical candidate multiset (reach=1)") {
     val b = pairs(1, broadcastOn = true)
     val e = pairs(1, broadcastOn = false)
@@ -68,5 +83,30 @@ class CellCandidatesSpec extends SparkSpec {
       val p = pairs(reach, on)
       assert(p == p.distinct, s"duplicate candidates at reach=$reach broadcast=$on")
     }
+  }
+
+  test("radius path: both strategies give the brute-force pairs") {
+    // first vertices of runs 10..13 as points; 1200 m is more than one
+    // 0.01° cell, so the walk widens to ±2 cells on both axes
+    val pts = Seq((10L, 0.004, 0.004), (11L, 0.015, 0.005),
+      (12L, 0.045, 0.005), (13L, -0.015, -0.015))
+      .toDF("way_id", "lon", "lat")
+      .unionByName(Seq((14L, Option.empty[Double], Option.empty[Double]))
+        .toDF("way_id", "lon", "lat"))
+    def within(on: Boolean, radius: Double) = collect(on)(GridJoin(
+      areasDf.select("area_id", "alon", "alat"), pts,
+      (col("alon"), col("alat")), (col("lon"), col("lat")), Cell,
+      GridJoin.Within(radius)).select("area_id", "way_id"))
+    val truth = areasDf.crossJoin(pts)
+      .filter(graft.functions.GeoFunctions.haversineM(col("alon"),
+        col("alat"), col("lon"), col("lat")) <= 1200.0)
+      .select("area_id", "way_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val b = within(on = true, 1200.0)
+    val e = within(on = false, 1200.0)
+    assert(b == e, s"broadcast=$b exchange=$e")
+    assert(b == truth)
+    assert(b.contains((1L, 10L)) && b.contains((3L, 11L)))
+    assert(!b.exists(_._2 == 14L))
   }
 }

@@ -4,11 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.GeoFunctions
-import graft.operators.Clustering
+import graft.operators.GridJoin
 
 /** The declarative distance join: `graft_st_dwithin` in a join
-  * condition must (a) produce exactly the pairs the hand-written
-  * grid kernel produces, and (b) be PLANNED as a grid-cell equi-join
+  * condition must (a) produce exactly the pairs the grid join
+  * produces, and (b) be PLANNED as a grid-cell equi-join
   * — no cartesian product / nested-loop join in the physical plan.
   */
 class DistanceJoinRuleSpec extends SparkSpec {
@@ -36,10 +36,10 @@ class DistanceJoinRuleSpec extends SparkSpec {
       .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1)))
       .toSet
 
-    val kernel = Clustering.distanceJoin(
-        a.select(col("a"), col("a_lon").as("lon"), col("a_lat").as("lat")),
-        b.select(col("b"), col("b_lon").as("lon"), col("b_lat").as("lat")),
-        radius, radius / graft.plans.DistanceJoinRule.MetersPerCellDegree)
+    val kernel = GridJoin(a, b, (col("a_lon"), col("a_lat")),
+        (col("b_lon"), col("b_lat")),
+        radius / graft.plans.DistanceJoinRule.MetersPerCellDegree,
+        GridJoin.Within(radius))
       .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1)))
       .toSet
 
@@ -176,7 +176,10 @@ class DistanceJoinRuleSpec extends SparkSpec {
     }
     // lat-aware widening must not inflate the common case...
     assert(cellsAt(45.5) === 9)
-    assert(cellsAt(75.0) === 9)
+    assert(cellsAt(74.9) === 9)
+    // ...is already needed at 75.0: a point 499.9 m due west of a cell's
+    // west edge lies 0.01737° away, beyond the 0.01736° neighbour cell
+    assert(cellsAt(75.0) === 15)
     // ...and must widen where a 3x3 walk goes incomplete
     assert(cellsAt(84.0) === 21) // half-width 3 -> 7 x 3
   }

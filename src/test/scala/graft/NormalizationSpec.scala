@@ -13,6 +13,20 @@ class NormalizationSpec extends SparkSpec {
   private def runsDf(rows: (Long, String, Seq[Seq[Double]])*) =
     rows.toDF("run_id", "props", "coords")
 
+  test("edgesOf without whole-stage codegen never indexes past the last point") {
+    // the merged filter evaluates p2 on every posexplode row, the last
+    // point's included; element_at(coords, pos + 2) threw there
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try {
+      val edges = Normalization.edgesOf(runsDf(
+        (1L, "a", Seq(Seq(10.0, 47.0), Seq(10.001, 47.0), Seq(10.002, 47.001))),
+        (2L, "b", Seq(Seq(11.0, 46.0), Seq(11.001, 46.0))),
+        (3L, "c", Seq(Seq(12.0, 45.0)))))
+      val got = edges.select("run_id", "idx").as[(Long, Int)].collect()
+      assert(got.sorted.toSeq == Seq((1L, 0), (1L, 1), (2L, 0)))
+    } finally spark.conf.unset("spark.sql.codegen.wholeStage")
+  }
+
   test("identical duplicate runs collapse to one") {
     val line = Seq(Seq(10.0, 47.0), Seq(10.001, 47.0), Seq(10.002, 47.001))
     val out = Normalization.normalizeRuns(

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Clustering, LiftStations}
+import graft.operators.{Clustering, GridJoin, LiftStations}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -742,8 +742,10 @@ class ScenarioSpec extends SparkSpec {
       (7L, 0.002, 0.0),  // ~220 m from the area's anchor
       (8L, 0.5, 0.5))    // nothing anywhere near
       .toDF("spot_id", "lon", "lat")
-    val attached = Clustering.distanceJoin(
-      areas, spots.select(col("spot_id"), col("lon"), col("lat")), R, Cell)
+    val attached = GridJoin(
+      areas.select(col("area_id"), col("lon").as("alon"), col("lat").as("alat")),
+      spots, (col("alon"), col("alat")), (col("lon"), col("lat")),
+      Cell, GridJoin.Within(R))
       .select("spot_id", "area_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(attached == Seq((7L, 1L)))
