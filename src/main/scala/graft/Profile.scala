@@ -96,8 +96,6 @@ object Profile {
     "pipeline.enrich" -> ((s, d) => PipelineE2E.enriched(s, d)),
     "pipeline.cluster" -> ((s, d) =>
       PipelineE2E.assign(s, d, ck(PipelineE2E.enriched(s, d)))),
-    "pipeline.frontier" -> ((s, d) =>
-      PipelineE2E.firstFrontier(s, d, ck(PipelineE2E.enriched(s, d)))),
     // q_corpus_prep: scored frame (its first checkpoint) → dedup+split
     // → test grams → contaminated train docs
     "corpus_prep.scored" -> ((s, d) => CorpusProfile.prepScored(s, d)),

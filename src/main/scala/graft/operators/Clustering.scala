@@ -26,24 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object Clustering {
 
-  /** One closure round: each frontier row (area_id, act, lon, lat)
-    * claims the objects (okey, uses, lon, lat) within `radiusM` that
-    * support its activity. The frontier is the small, shrinking side
-    * (the areas, then each round's newly reached objects); `rows`, its
-    * count from the previous round, sizes the grid join's broadcast.
-    */
-  private[graft] def expand(frontier: DataFrame, objs: DataFrame,
-      radiusM: Double, cellDeg: Double, rows: Option[Long]): DataFrame =
-    GridJoin(
-      frontier.select(col("area_id"), col("act"),
-        col("lon").as("l_lon"), col("lat").as("l_lat")),
-      objs, (col("l_lon"), col("l_lat")), (col("lon"), col("lat")),
-      cellDeg, GridJoin.Within(radiusM), leftRows = rows)
-      .filter(array_contains(col("uses"), col("act")))
-      .select(col("area_id"), col("act"), col("okey"),
-        col("lon"), col("lat"))
-      .distinct()
-
   /** areas: area_id (long), act (string), lon, lat
     * objs:  okey (long), uses (array<string>), lon, lat
     * Returns: okey, area_id (min reaching area).
@@ -61,35 +43,40 @@ object Clustering {
       scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.DataFrame]()
     def reached: org.apache.spark.sql.DataFrame =
       reachedParts.reduce(_ unionByName _)
-    var frontierRows: Option[Long] = None
+    // the rows a frontier walks to, which size its round's broadcast
+    def walkRows(f: DataFrame): Long = f.agg(coalesce(sum(GridJoin
+      .walkCells(col("lat"), cellDeg, GridJoin.Within(radiusM))), lit(0L)))
+      .head.getLong(0)
+    var cells = walkRows(frontier)
     var iter = 0
-    var done = false
-    while (!done && iter < 30) {
-      val cand = expand(frontier, objsCached, radiusM, cellDeg, frontierRows)
-      // LAZY checkpoint + count: ONE driver action per iteration both
-      // materializes the round's blocks (doCheckpoint completes every
-      // partition at job end) and answers the convergence question —
-      // the former eager-checkpoint-then-isEmpty shape paid two.
+    while (iter == 0 || (cells > 0 && iter < 30)) {
+      // each frontier row (the areas, then each round's newly reached
+      // objects) claims the objects within the radius that support
+      // its activity
+      val cand = GridJoin(
+        frontier.select(col("area_id"), col("act"),
+          col("lon").as("l_lon"), col("lat").as("l_lat")),
+        objsCached, (col("l_lon"), col("l_lat")), (col("lon"), col("lat")),
+        cellDeg, GridJoin.Within(radiusM), buildRows = Some(cells))
+        .filter(array_contains(col("uses"), col("act")))
+        .select(col("area_id"), col("act"), col("okey"),
+          col("lon"), col("lat"))
+        .distinct()
+      // LAZY checkpoint + one aggregate: ONE driver action per
+      // iteration both materializes the round's blocks (doCheckpoint
+      // completes every partition at job end) and answers the
+      // convergence question (no rows walked = no new pairs)
       val newPairs = (if (reachedParts.isEmpty) cand
         else cand.join(reached.select("area_id", "okey"),
           Seq("area_id", "okey"), "left_anti"))
         .localCheckpoint(false)
-      val n = newPairs.count()
-      if (n == 0) done = true
-      else {
-        reachedParts += newPairs
-        frontier = newPairs
-        frontierRows = Some(n)
-      }
+      cells = walkRows(newPairs)
+      reachedParts += newPairs
+      frontier = newPairs
       iter += 1
     }
     objsCached.unpersist()
-    if (reachedParts.isEmpty)
-      expand(areas.limit(0), objsCached, radiusM, cellDeg, None)
-        .groupBy("okey")
-        .agg(min("area_id").as("area_id"))
-    else
-      reached.groupBy("okey").agg(min("area_id").as("area_id"))
+    reached.groupBy("okey").agg(min("area_id").as("area_id"))
   }
 
   /** Step-6 ski-area generation (`/root/reference/src/clustering/
@@ -131,7 +118,8 @@ object Clustering {
         col("lon").as("l_lon"), col("lat").as("l_lat")),
       nodes.select(col("act"), col("nid").as("b"), col("lon"), col("lat")),
       (col("l_lon"), col("l_lat")), (col("lon"), col("lat")),
-      cellDeg, GridJoin.Within(radiusM), keys = Seq("act"))
+      cellDeg, GridJoin.Within(radiusM), keys = Seq("act"),
+      build = GridJoin.BuildRight)
       .filter(col("a") < col("b"))
       .select("a", "b")
     val labels = minLabelComponents(gpairs)
@@ -221,16 +209,15 @@ object Clustering {
     * the multipolygon variants: run first-vertex cell ±reach × area
     * anchor cell, through [[GridJoin]]. `reach` is a fixed cell count,
     * not a metric radius: containment is a degree-space test. The run
-    * side walks, so the fat ring arrays stay one row per area; the
-    * exploded runs outgrow the broadcast threshold at any real size,
-    * and the area side is broadcast when it fits.
+    * side walks, so the fat ring arrays stay one row per area, and the
+    * area side is the one broadcast when it fits.
     * areas: (alon, alat, …); runs: (coords, …).
     */
   def cellCandidates(areas: DataFrame, runs: DataFrame, cellDeg: Double,
       reach: Int): DataFrame = {
     def first(i: Int) = element_at(element_at(col("coords"), 1), i)
     GridJoin(runs, areas, (first(1), first(2)), (col("alon"), col("alat")),
-      cellDeg, GridJoin.Cells(reach))
+      cellDeg, GridJoin.Cells(reach), build = GridJoin.BuildRight)
   }
 
   /** Both step-2 area-removal rules over [[coveredBy]] output

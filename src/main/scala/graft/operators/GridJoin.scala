@@ -13,18 +13,20 @@ import org.apache.spark.sql.types.DoubleType
   * walk [[graft.plans.DistanceJoinRule]] plans `graft_st_dwithin` with.
   *
   * The reference finds pairs with PostGIS `ST_DWithin`, complete at
-  * any latitude. Here each left row explodes to the cells of its
-  * neighbourhood and meets the right rows in those cells in an
-  * equi-join. Left rows explode to distinct cells and a right row has
-  * one, so a pair meets at most once. A metric walk ([[Within]]) is
-  * latitude-aware: a cell spans `cellDeg × 111 km × cos(lat)` east–
-  * west, so the longitude half-width grows toward the poles.
+  * any latitude. Here the rows of one side explode to the cells of
+  * their neighbourhood and meet the other side's rows in those cells
+  * in an equi-join. A walking row explodes to distinct cells and a
+  * celled row has one, so a pair meets at most once. A metric walk
+  * ([[Within]]) is latitude-aware: a cell spans `cellDeg × 111 km ×
+  * cos(lat)` east–west, so the longitude half-width grows toward the
+  * poles.
   *
   * Broadcast is chosen per call from a size the code already has, and
   * each call logs its choice at INFO on the `graft.GridJoin` logger.
-  * The left side, which callers make the small one, is broadcast when
-  * it fits within `spark.sql.autoBroadcastJoinThreshold`, else the
-  * right side when it fits, else neither.
+  * The caller names the side it expects to be small (`build`); that
+  * side alone is sized, and broadcast when its bytes fit within
+  * `spark.sql.autoBroadcastJoinThreshold`. Otherwise the join is
+  * partitioned, with no hint.
   */
 object GridJoin {
 
@@ -72,64 +74,103 @@ object GridJoin {
       Literal(1L)))
   }
 
+  /** Cells a row at `lat` walks to: its rows after the walk. */
+  def walkCells(lat: Column, cellDeg: Double, reach: Reach): Column = {
+    val (xr, yr) = halfWidths(lat, cellDeg, reach)
+    (xr * 2 + 1) * (yr * 2 + 1)
+  }
+
+  private def halfWidths(lat: Column, cellDeg: Double,
+      reach: Reach): (Column, Column) = reach match {
+    case Within(m, _) => (column(lonHalfWidth(expression(lat), m, cellDeg)),
+      lit(latHalfWidth(m, cellDeg)))
+    case Cells(n) => (lit(n.toLong), lit(n.toLong))
+  }
+
+  /** The side of a grid join to try to broadcast: the one the caller
+    * knows to be small.
+    */
+  sealed trait Build
+  case object BuildLeft extends Build
+  case object BuildRight extends Build
+
   private val CellX = "gj_cx"
   private val CellY = "gj_cy"
 
-  /** Joins `left` to `right` on the grid: each left point's
-    * neighbourhood (`reach`) against each right point's cell, plus
-    * the extra equi-join `keys`. `leftPt`/`rightPt` are (lon, lat)
+  /** Joins `left` to `right` on the grid: each point's neighbourhood
+    * (`reach`) on one side against each point's cell on the other,
+    * plus the extra equi-join `keys`. `leftPt`/`rightPt` are (lon, lat)
     * columns over their own side; the refine reads both after the
     * join, so their names must not clash. A null coordinate never
     * matches. Returns every column of both sides, keys once.
     *
-    * `leftRows`, when the caller already counted the left side, sizes
-    * it for the broadcast choice instead of Catalyst's estimate.
+    * `build` is the side to broadcast if it fits. A broadcast join
+    * walks the left side; a partitioned one walks the build side, so
+    * the fewest rows cross the exchange. Either way a pair meets once
+    * and the refined pairs are the same, since every walk reaches all
+    * points within the radius of its own.
+    *
+    * The build side's bytes are, for the left, its rows after the walk
+    * and, for the right, its rows, times Spark's per-row size of their
+    * columns; `buildRows` is that row count when the caller counted
+    * it (for the left, the sum of [[walkCells]]). Without it the side
+    * is sized by Catalyst's estimate; for the left, times the cells of
+    * a ±1 longitude walk, a lower bound where a walk is wider (|lat|
+    * above about 63° at a 500 m radius on the 0.01° grid).
+    *
+    * `distinctRight`, when non-empty, keeps one right row per cell for
+    * rows that agree on those columns: enough for callers whose right
+    * points are the vertices of one geometry and whose refine reads
+    * the whole geometry.
     */
   def apply(left: DataFrame, right: DataFrame,
       leftPt: (Column, Column), rightPt: (Column, Column),
       cellDeg: Double, reach: Reach, keys: Seq[String] = Nil,
-      leftRows: Option[Long] = None): DataFrame = {
-    val (lon, lat) = leftPt
-    val (xr, yr) = reach match {
-      case Within(m, _) => (column(lonHalfWidth(expression(lat), m, cellDeg)),
-        lit(latHalfWidth(m, cellDeg)))
-      case Cells(n) => (lit(n.toLong), lit(n.toLong))
+      build: Build = BuildLeft, buildRows: Option[Long] = None,
+      distinctRight: Seq[String] = Nil): DataFrame = {
+    def celled(df: DataFrame, pt: (Column, Column)) = df
+      .withColumn(CellX, floor(pt._1 / cellDeg))
+      .withColumn(CellY, floor(pt._2 / cellDeg))
+    def walked(df: DataFrame, pt: (Column, Column)) = {
+      val (xr, yr) = halfWidths(pt._2, cellDeg, reach)
+      val (cx, cy) = (floor(pt._1 / cellDeg), floor(pt._2 / cellDeg))
+      df.withColumn(CellX, explode(sequence(cx - xr, cx + xr)))
+        .withColumn(CellY, explode(sequence(cy - yr, cy + yr)))
     }
-    val (cx, cy) = (floor(lon / cellDeg), floor(lat / cellDeg))
-    val walked = left
-      .withColumn(CellX, explode(sequence(cx - xr, cx + xr)))
-      .withColumn(CellY, explode(sequence(cy - yr, cy + yr)))
-    val celled = right
-      .withColumn(CellX, floor(rightPt._1 / cellDeg))
-      .withColumn(CellY, floor(rightPt._2 / cellDeg))
-    // broadcast the first side whose bytes fit: the left (counted rows
-    // × row size, else Catalyst's estimate) once per cell of the
-    // fewest a row explodes to, a ±1 walk; then the right (estimated
-    // only when the left does not fit)
-    val perRow = reach match {
-      case Within(m, _) => 3 * (2 * latHalfWidth(m, cellDeg) + 1)
-      case Cells(n) => (2L * n + 1) * (2L * n + 1)
+    val right1 =
+      if (distinctRight.isEmpty) right
+      else celled(right, rightPt)
+        .dropDuplicates(distinctRight ++ Seq(CellX, CellY))
+        .drop(CellX, CellY)
+    val (side, sized, perRow) = (build, reach) match {
+      case (BuildLeft, Within(m, _)) =>
+        (walked(left, leftPt), left, 3 * (2 * latHalfWidth(m, cellDeg) + 1))
+      case (BuildLeft, Cells(n)) =>
+        (walked(left, leftPt), left, (2L * n + 1) * (2L * n + 1))
+      case (BuildRight, _) => (celled(right1, rightPt), right1, 1L)
     }
-    def estimate(df: DataFrame): BigInt =
-      df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val lBytes = perRow * leftRows.fold(estimate(left))(n =>
-      n * EstimationUtils.getSizePerRow(left.queryExecution.analyzed.output))
-    lazy val rBytes = estimate(right)
+    val bytes = buildRows match {
+      case Some(n) =>
+        n * EstimationUtils.getSizePerRow(side.queryExecution.analyzed.output)
+      case None => perRow * sized.queryExecution.optimizedPlan.stats.sizeInBytes
+    }
     val threshold = left.sparkSession.sessionState.conf
       .autoBroadcastJoinThreshold
-    val (l, r, choice) =
-      if (lBytes <= threshold) (broadcast(walked), celled, "left")
-      else if (rBytes <= threshold) (walked, broadcast(celled), "right")
-      else (walked, celled, "none")
-    log.info(s"broadcast $choice: left $lBytes B (" +
-      leftRows.fold("estimated")(n => s"$n rows counted") +
-      s", $perRow cells a row)" +
-      (if (choice == "left") "" else s", right $rBytes B estimated") +
-      s", threshold $threshold B")
+    val fits = bytes <= threshold
+    val name = if (build == BuildLeft) "left" else "right"
+    log.info(s"broadcast ${if (fits) name else "none"}: $name $bytes B (" +
+      buildRows.fold("estimated")(n => s"$n rows counted") +
+      s"), threshold $threshold B")
+    val (l, r) = (fits, build) match {
+      case (true, BuildLeft) => (broadcast(side), celled(right1, rightPt))
+      case (true, BuildRight) => (walked(left, leftPt), broadcast(side))
+      case (false, BuildLeft) => (side, celled(right1, rightPt))
+      case (false, BuildRight) => (celled(left, leftPt), walked(right1, rightPt))
+    }
     val joined = l.join(r, keys ++ Seq(CellX, CellY)).drop(CellX, CellY)
     reach match {
-      case Within(m, true) => joined.filter(
-        GeoFunctions.haversineM(lon, lat, rightPt._1, rightPt._2) <= m)
+      case Within(m, true) => joined.filter(GeoFunctions.haversineM(
+        leftPt._1, leftPt._2, rightPt._1, rightPt._2) <= m)
       case _ => joined
     }
   }

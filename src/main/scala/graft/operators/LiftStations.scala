@@ -58,7 +58,8 @@ object LiftStations {
       explode(col("coords")).as("v"))
     val cand = GridJoin(stations, lvert, (col("slon"), col("slat")),
         (element_at(col("v"), 1), element_at(col("v"), 2)), cellDeg,
-        GridJoin.Within(thresholdM, refine = false))
+        GridJoin.Within(thresholdM, refine = false),
+        distinctRight = Seq("lift_id", "part_no"))
       .dropDuplicates("sid", "lift_id", "part_no")
     val np = GeoFunctions.nearestPointOnLine(
       col("slon"), col("slat"), col("coords"))

@@ -171,22 +171,6 @@ object PipelineE2E {
   /** Stage 4: clustering (J10/J7) on the canonical anchor. */
   private[graft] def assign(s: SparkSession, d: String,
       enriched: DataFrame): DataFrame = {
-    val (areas, objs) = clusterInputs(s, d, enriched)
-    Clustering.transitiveAssign(areas, objs, RadiusM, CellDeg)
-  }
-
-  /** The closure's first frontier join, which [[assign]] hides behind
-    * its per-round checkpoints.
-    */
-  private[graft] def firstFrontier(s: SparkSession, d: String,
-      enriched: DataFrame): DataFrame = {
-    val (areas, objs) = clusterInputs(s, d, enriched)
-    Clustering.expand(areas, objs.persist(), RadiusM, CellDeg, None)
-  }
-
-  /** The closure's (areas, objects) on the canonical anchor. */
-  private def clusterInputs(s: SparkSession, d: String,
-      enriched: DataFrame): (DataFrame, DataFrame) = {
     val startIsAnchor = col("x0") < col("xn") ||
       (col("x0") === col("xn") && col("y0") <= col("yn"))
     val objs = enriched.select(col("okey"), col("uses"),
@@ -203,7 +187,7 @@ object PipelineE2E {
           - 180.0).as("lon"),
         (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
           - 60.0).as("lat"))
-    (areas, objs)
+    Clustering.transitiveAssign(areas, objs, RadiusM, CellDeg)
   }
 
   /** Stage 5: per-area statistics (A1 projection) over the assigned

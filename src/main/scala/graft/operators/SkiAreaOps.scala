@@ -219,9 +219,9 @@ object SkiAreaOps {
   def mergeSkiAreasViaObjects(osm: DataFrame, sk: DataFrame,
       objects: DataFrame, radiusM: Double, cellDeg: Double): DataFrame = {
     val matched = GridJoin(
-      objects.select(col("area_id"), col("lon").as("l_lon"),
-        col("lat").as("l_lat")),
-      sk.select(col("sk_id"), col("lon"), col("lat"), col("acts")),
+      sk.select(col("sk_id"), col("lon").as("l_lon"), col("lat").as("l_lat"),
+        col("acts")),
+      objects.select(col("area_id"), col("lon"), col("lat")),
       (col("l_lon"), col("l_lat")), (col("lon"), col("lat")),
       cellDeg, GridJoin.Within(radiusM))
       .select("area_id", "sk_id", "acts")

@@ -364,7 +364,8 @@ object SkiQueries {
       .select(col("way_id"), col("coords"), explode(col("coords")).as("v"))
     val cand = GridJoin(areas, rverts, (col("alon"), col("alat")),
         (element_at(col("v"), 1), element_at(col("v"), 2)), CellDeg,
-        GridJoin.Within(RadiusM, refine = false))
+        GridJoin.Within(RadiusM, refine = false),
+        distinctRight = Seq("way_id"))
       .dropDuplicates("area_id", "way_id")
     cand
       .withColumn("np", GeoFunctions.nearestPointOnLine(

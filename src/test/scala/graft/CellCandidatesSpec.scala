@@ -2,17 +2,18 @@ package graft
 
 import graft.operators.{Clustering, GridJoin}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.optimizer.{BuildRight, BuildSide}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
 /** Value-identity pin for the grid join's broadcast choice:
   * `cellCandidates` (and every [[GridJoin]] call) broadcasts a side
   * only when its size fits within `spark.sql.autoBroadcastJoinThreshold`.
-  * At the default threshold these tiny inputs broadcast; a 1-byte
-  * threshold forces the partitioned join. The candidate (area, run)
-  * multiset must be identical in both strategies — including
-  * multiplicity (MultiPart counts joined rows without a dedup) and
-  * null-coordinate behavior.
+  * At the default threshold these tiny inputs broadcast the areas; a
+  * 1-byte threshold forces the partitioned join, which walks the areas
+  * instead of the runs. The candidate (area, run) multiset must be
+  * identical in both strategies — including multiplicity (MultiPart
+  * counts joined rows without a dedup) and null-coordinate behavior.
   */
 class CellCandidatesSpec extends SparkSpec {
   import spark.implicits._
@@ -37,10 +38,10 @@ class CellCandidatesSpec extends SparkSpec {
   ).toDF("way_id", "coords")
 
   /** Collects (a, b) id pairs under the chosen strategy, checking the
-    * executed plan took it.
+    * executed plan took it, and built its broadcast on `build`.
     */
-  private def collect(broadcastOn: Boolean)(df: => DataFrame)
-      : Seq[(Long, Long)] = {
+  private def collect(broadcastOn: Boolean, build: Option[BuildSide] = None)(
+      df: => DataFrame): Seq[(Long, Long)] = {
     if (!broadcastOn)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
     try {
@@ -50,13 +51,16 @@ class CellCandidatesSpec extends SparkSpec {
         .collect { case j: BroadcastHashJoinExec => j }
       assert(broadcasts.nonEmpty == broadcastOn,
         d.queryExecution.executedPlan.toString)
+      build.foreach(b => assert(broadcasts.forall(_.buildSide == b),
+        d.queryExecution.executedPlan.toString))
       out.sorted
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   private def pairs(reach: Int, broadcastOn: Boolean): Seq[(Long, Long)] =
-    collect(broadcastOn)(Clustering.cellCandidates(areasDf, runsDf, Cell,
-      reach).select("area_id", "way_id"))
+    // the areas are the side containment broadcasts
+    collect(broadcastOn, Some(BuildRight))(Clustering.cellCandidates(
+      areasDf, runsDf, Cell, reach).select("area_id", "way_id"))
   test("broadcast and exchange strategies produce the identical candidate multiset (reach=1)") {
     val b = pairs(1, broadcastOn = true)
     val e = pairs(1, broadcastOn = false)

@@ -72,7 +72,9 @@ class GridJoinSpec extends SparkSpec {
   }
 
   test("grid join == brute force in both broadcast strategies") {
-    for (threshold <- Seq(None, Some("1"))) {
+    // a partitioned join with the right as build side walks the right
+    for (threshold <- Seq(None, Some("1"));
+         build <- Seq(GridJoin.BuildLeft, GridJoin.BuildRight)) {
       threshold.foreach(spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
       try {
         val got = GridJoin(
@@ -80,11 +82,11 @@ class GridJoinSpec extends SparkSpec {
             col("lat").as("alat")),
           pts.select(col("id").as("b"), col("lon"), col("lat")),
           (col("alon"), col("alat")), (col("lon"), col("lat")), Cell,
-          GridJoin.Within(R))
+          GridJoin.Within(R), build = build)
           .select("a", "b").as[(Long, Long)].collect()
         assert(got.length == got.distinct.length, "a pair joined twice")
         assert(got.toSet.filter(p => p._1 != p._2) == allPairs,
-          s"threshold $threshold")
+          s"threshold $threshold, $build")
       } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
@@ -119,6 +121,25 @@ class GridJoinSpec extends SparkSpec {
           col("lat"), lit(R)))
       .select("a", "b").as[(Long, Long)].collect()
     assert(rule.contains((1L, 2L)), "the rule missed it at 75.0°")
+  }
+
+  test("walkCells counts the cells the walk reaches") {
+    // one right point at the centre of every cell in a ±30-cell window
+    // around each left point: the unrefined join meets one per cell
+    for (lat <- Seq(40.0, 63.2, 68.4, -78.0, 85.0)) {
+      val (cx, cy) = (math.floor(5.004 / Cell), math.floor(lat / Cell))
+      val grid = (for (i <- -30 to 30; j <- -30 to 30)
+        yield ((cx + i + 0.5) * Cell, (cy + j + 0.5) * Cell))
+        .toDF("lon", "lat")
+      val left = Seq((5.004, lat)).toDF("alon", "alat")
+      val met = GridJoin(left, grid, (col("alon"), col("alat")),
+        (col("lon"), col("lat")), Cell, GridJoin.Within(R, refine = false))
+        .count()
+      val cells = left.select(GridJoin.walkCells(col("alat"), Cell,
+        GridJoin.Within(R))).head.getLong(0)
+      assert(met == cells, s"at $lat")
+      assert((math.abs(lat) <= 63.2) == (cells == 9), s"$cells cells at $lat")
+    }
   }
 
   test("graft_st_dwithin through DistanceJoinRule == brute force") {
