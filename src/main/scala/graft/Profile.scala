@@ -31,8 +31,9 @@ import graft.operators._
   *    plan under a conf header. `--plan <file>.md` instead executes each
   *    name once and writes its settled AQE plan plus exchange / codegen
   *    / scan counts (the PLANS.md audit).
-  *  - `--conf k=v` overlays a session conf (e.g. an engine-shape switch
-  *    to reconstruct an older plan from the same binary).
+  *  - `--conf k=v` overlays a session conf (e.g.
+  *    `spark.sql.autoBroadcastJoinThreshold=-1` to see a plan without
+  *    broadcast joins).
   */
 object Profile {
   type Frame = (SparkSession, String) => DataFrame
@@ -59,10 +60,6 @@ object Profile {
     "mvt.encode" -> ((s, d) => MvtTiles.tileBytes(s, d)),
     "mvt.encode_stats" -> ((s, d) =>
       MvtTiles.encodeStatsOf(MvtTiles.prepped(s, d))),
-    "mvt.encode_stats_stream" -> ((s, d) =>
-      MvtTiles.encodeStatsOfStreamed(MvtTiles.prepped(s, d))),
-    "mvt.encode_stream" -> ((s, d) =>
-      MvtTiles.encodeOfStreamed(MvtTiles.prepped(s, d))),
     // q_ski_normalize: N1 edges → N2 arc exchange / segmentation /
     // split → N3 deg-2 pairs / components / combine
     "normalize.input" -> ((s, d) => SkiQueries.normalizeInput(s, d)),
@@ -70,9 +67,6 @@ object Profile {
       Normalization.edgesOf(SkiQueries.normalizeInput(s, d))),
     "normalize.arc_exchange" -> ((s, d) => Normalization.arcMembers(
       Normalization.edgesOf(SkiQueries.normalizeInput(s, d)))),
-    "normalize.window_segment" -> ((s, d) =>
-      Normalization.segmented(Normalization.arcMembers(
-        Normalization.edgesOf(SkiQueries.normalizeInput(s, d))))),
     // the split shape the full query hides behind combineSegments'
     // checkpoint
     "normalize.split" -> ((s, d) =>

@@ -1,16 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftExpressionBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Mapbox Vector Tile (MVT) encoder — the in-engine replacement for
   * the reference's tippecanoe shell-out
   * (`/root/reference/src/transforms/TilesGenerator.ts:15-97`), as a
-  * native Catalyst expression over per-tile grouped features.
+  * native kernel over per-tile grouped features.
   *
   * Input: ONE tile's features across all layers as
   * `array<struct<layer string, fid bigint, gtype int,
@@ -24,88 +24,32 @@ import org.apache.spark.sql.types._
   * only frames and concatenates bytes — the per-point work never
   * crosses the exchange and is never done twice.
   *
-  * Output: the complete tile blob — a length-delimited `Tile.layers`
-  * frame (field 3) per layer run, concatenated in layer-name order,
-  * per the public vector-tile-spec 2.1 wire format: name(1),
-  * features(2), keys(3), values(4), extent(5), version(15)=2;
-  * `Feature` = id(1), packed tags(2), type(3), packed command-encoded
-  * geometry(4); params zigzag-encoded, MoveTo/LineTo/ClosePath
-  * command integers, cursor carried across commands. Encoding the
-  * whole tile in one call means ONE wide exchange on (z, tx, ty)
-  * builds final tiles — no second shuffle of per-layer frames.
-  *
-  * This runs once per tile AFTER aggregation — not on the per-feature
-  * hot path — so interpreted eval with a codegen passthrough (same
-  * kernel call emitted into generated code) is the right shape.
-  *
-  * Not a StaticInvoke: its type check depends on the struct arity.
+  * Output: `struct<tile binary, n_layers int>` — the complete tile
+  * blob, a length-delimited `Tile.layers` frame (field 3) per layer
+  * run, concatenated in layer-name order, per the public
+  * vector-tile-spec 2.1 wire format: name(1), features(2), keys(3),
+  * values(4), extent(5), version(15)=2; `Feature` = id(1), packed
+  * tags(2), type(3), packed command-encoded geometry(4); params
+  * zigzag-encoded, MoveTo/LineTo/ClosePath command integers, cursor
+  * carried across commands. n_layers falls out of the same layer-run
+  * walk. Encoding the whole tile in one call means ONE wide exchange
+  * on (z, tx, ty) builds final tiles — no second shuffle of per-layer
+  * frames.
   */
-case class MvtTileEncodeExpr(features: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def child: Expression = features
-  // n_layers falls out of the same layer-run walk the encoder already
-  // does — returning it here saves an interpreted
-  // size(array_distinct(transform(...))) pass over every tile group.
-  // Likewise the per-tile stat sums (n_features/n_parts/n_points/chk):
-  // when the input structs carry the prep kernel's per-feature stats
-  // as trailing fields 6-8, the encoder sums them inside the walk it
-  // already does. Three shapes were measured at sf1 (26.85M features):
-  // four extra agg functions riding the collect_list
-  // ObjectHashAggregate cost ~5 s/run (the agg's per-row update path
-  // is the hot loop); re-deriving the stats by varint-walking the
-  // packed geom bytes inside this kernel cost ~3 s/run (the walk is
-  // as long as the splice it shadows); three trailing bigints through
-  // the collect cost ~2 s — the cheapest. With 6-field input (the
-  // blob/stream paths) tile/n_layers/n_features are all meaningful
-  // (n_features is the element count at any arity); only the three
-  // trailing sums n_parts/n_points/chk read as zeros.
-  override def dataType: DataType = StructType(Seq(
-    StructField("tile", BinaryType, nullable = false),
-    StructField("n_layers", IntegerType, nullable = false),
-    StructField("n_features", IntegerType, nullable = false),
-    StructField("n_parts", LongType, nullable = false),
-    StructField("n_points", LongType, nullable = false),
-    StructField("chk", LongType, nullable = false)))
-  override def nullable: Boolean = true
-
-  // The kernel reads tile features positionally (UnsafeRow getStruct
-  // needs the EXACT writer arity), so the element arity is resolved
-  // statically from the child's type and passed into every call.
-  private lazy val elementArity: Int = features.dataType match {
-    case ArrayType(s: StructType, _) => s.length
-    case _ => 6
-  }
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    features.dataType match {
-      case ArrayType(s: StructType, _)
-          if s.length == 6 ||
-            (s.length == 9 &&
-              s.fields.drop(6).forall(_.dataType == LongType)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_mvt_tile expects array<struct> of arity 6, or 9 with " +
-            s"three trailing bigint stat fields, got $other")
-    }
-
-  override protected def nullSafeEval(feats: Any): Any =
-    MvtKernel.encodeTile(feats.asInstanceOf[ArrayData], elementArity)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      f => s"graft.functions.MvtKernel.encodeTile($f, $elementArity)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): MvtTileEncodeExpr = copy(features = newChild)
-}
-
 object MvtTileEncodeExpr {
+  /** The feature struct the encoder reads by position; any other
+    * element type is cast to it or refused at analysis.
+    */
+  val featureType: StructType = StructType(Seq(
+    StructField("layer", StringType), StructField("fid", LongType),
+    StructField("gtype", IntegerType), StructField("geom", BinaryType),
+    StructField("pkeys", ArrayType(StringType)),
+    StructField("pvals", ArrayType(StringType))))
+
   def mvtTile(features: Column): Column =
-    GraftExpressionBridge.column(MvtTileEncodeExpr(
-      GraftExpressionBridge.expression(features)))
+    column(StaticInvoke(MvtKernel.getClass, MvtKernel.outType,
+      "encodeTile", Seq(expression(features)), Seq(ArrayType(featureType)),
+      returnNullable = false))
 }
 
 /** Protobuf wire-format byte building for the MVT layer frame. */
@@ -211,61 +155,47 @@ object MvtKernel {
     out.toByteArray
   }
 
+  val outType: StructType = StructType(Seq(
+    StructField("tile", BinaryType, nullable = false),
+    StructField("n_layers", IntegerType, nullable = false)))
+
+  // UnsafeRow struct reads need the exact writer arity
+  private val Arity = MvtTileEncodeExpr.featureType.length
+
   /** Encode one whole tile: `feats` rows sorted by (layer, fid), each
     * (layer string, fid long, gtype int, geom binary,
-    *  pkeys array<string>, pvals array<string>[, n_parts long,
-    *  n_points long, chk long]).
+    *  pkeys array<string>, pvals array<string>).
     * Consecutive same-layer runs become one layer frame each; the tile
     * is their concatenation (layer-name order follows from the sort).
-    * `arity` is the features' struct width (UnsafeRow reads need the
-    * exact writer arity); with arity 9 the trailing per-feature stats
-    * are summed inside the same walk — zero extra passes — so the
-    * stats query needs no aggregate functions beyond the collect.
-    * Returns (tile bytes, n_layers, n_features, n_parts, n_points, chk).
+    * Returns (tile bytes, n_layers).
     */
-  def encodeTile(feats: ArrayData, arity: Int)
-      : org.apache.spark.sql.catalyst.InternalRow = {
+  def encodeTile(feats: ArrayData): InternalRow = {
     val out = new java.io.ByteArrayOutputStream()
     val n = feats.numElements()
     var from = 0
     var nLayers = 0
-    // per-tile stat sums accumulate inside encodeLayerSlice's
-    // per-feature loop (the struct is already fetched there) — the
-    // walk that frames the bytes is the only walk (ADVICE r17)
-    val stats = new Array[Long](3)
     while (from < n) {
       // compare UTF8String directly — converting every row's layer to
       // a java String would allocate per feature in the tile kernel
-      val name = feats.getStruct(from, arity).getUTF8String(0)
+      val name = feats.getStruct(from, Arity).getUTF8String(0)
       var until = from + 1
       while (until < n &&
-        feats.getStruct(until, arity).getUTF8String(0).equals(name))
+        feats.getStruct(until, Arity).getUTF8String(0).equals(name))
         until += 1
-      out.write(
-        encodeLayerSlice(name.toString, feats, from, until, arity, stats))
+      out.write(encodeLayerSlice(name.toString, feats, from, until))
       nLayers += 1
       from = until
     }
-    org.apache.spark.sql.catalyst.InternalRow(
-      out.toByteArray, nLayers, n, stats(0), stats(1), stats(2))
+    InternalRow(out.toByteArray, nLayers)
   }
 
-  /** One layer frame from the [from, until) slice of tile features.
-    * With arity 9 the trailing per-feature stats (n_parts, n_points,
-    * chk) are added into `stats(0..2)` inside the same loop that
-    * frames each feature — zero extra passes over the array.
-    */
+  /** One layer frame from the [from, until) slice of tile features. */
   private def encodeLayerSlice(name: String, feats: ArrayData,
-      from: Int, until: Int, arity: Int, stats: Array[Long]): Array[Byte] = {
+      from: Int, until: Int): Array[Byte] = {
     val ls = new LayerStream(name)
     var i = from
     while (i < until) {
-      val f = feats.getStruct(i, arity)
-      if (arity > 6) {
-        stats(0) += f.getLong(6)
-        stats(1) += f.getLong(7)
-        stats(2) += f.getLong(8)
-      }
+      val f = feats.getStruct(i, Arity)
       ls.feature(f.getLong(1), f.getInt(2), f.getBinary(3),
         f.getArray(4), f.getArray(5))
       i += 1

@@ -180,8 +180,4 @@ object TagFunctions {
     when(v.isNotNull, split(v, ";").getItem(0))
       .otherwise(lit(null).cast("string"))
   }
-
-  /** First non-null of several tag keys (OSMTransforms.getOrElse). */
-  def tagOrElse(tags: Column, keys: String*): Column =
-    coalesce(keys.map(k => element_at(tags, k)): _*)
 }

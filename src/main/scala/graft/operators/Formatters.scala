@@ -259,11 +259,11 @@ object Formatters {
     * non-kept features outright; keeping them visible exercises the
     * full cascade under the oracle.
     *
-    * Round 19: the tag cascade runs through the single-pass native
-    * kernel [[graft.functions.RunTagsExpr]] (~80 µs/row of interpreted
-    * map_filter/per-row-regex/HOF evaluation → one map traversal; see
-    * the kernel doc for the measured breakdown). RunTagsSpec pins the
-    * kernel output field-by-field against [[formatRunsLegacy]].
+    * The tag cascade runs through the single-pass native kernel
+    * [[graft.functions.RunTagsExpr]] (one map traversal per row; see
+    * the kernel doc for the rules). RunTagsSpec pins its rows and
+    * schema to golden data from the expression-tree formatter it
+    * replaced.
     */
   def formatRuns(features: DataFrame): DataFrame = {
     val k = graft.functions.RunTagsExpr.runTags(col("tags"))
@@ -290,79 +290,5 @@ object Formatters {
         col("status"), concat_ws(";", col("uses")), col("difficulty"),
         col("name")))
       .drop("__rt", "tags")
-  }
-
-  /** The pre-r19 expression-tree formatter, kept verbatim as the
-    * value-identity reference for RunTagsSpec.
-    */
-  private[graft] def formatRunsLegacy(features: DataFrame): DataFrame = {
-    val tags = col("tags")
-    val st = lifecycleStatus(tags, "piste:type")
-
-    val usesArr = filter(
-      transform(split(col("st").getField("value"), ";"), u => lower(trim(u))),
-      u => u.isin(SkiFeatures.ValidUses.map(x => x: Any): _*))
-
-    val diffRaw = element_at(tags, "piste:difficulty")
-    val difficulty = when(
-      diffRaw.isin(SkiFeatures.ValidDifficulties.map(x => x: Any): _*), diffRaw)
-
-    // grooming (RunFormatter.getGrooming): normalize first ';' → '+',
-    // classic+skating combination, enum validation, then
-    // difficulty-based backcountry default (raw tag value!), then
-    // grooming=no → backcountry.
-    val groomRaw = element_at(tags, "piste:grooming")
-    val groomNorm = when(groomRaw.contains(";"),
-        concat(substring_index(groomRaw, ";", 1), lit("+"),
-          groomRaw.substr(instr(groomRaw, ";") + 1, length(groomRaw))))
-      .otherwise(groomRaw)
-    val groomParts = split(groomNorm, "\\+")
-    val grooming =
-      when(groomRaw.isNotNull && array_contains(groomParts, "classic")
-          && array_contains(groomParts, "skating"), lit("classic+skating"))
-        .when(groomRaw.isNotNull &&
-          groomNorm.isin(SkiFeatures.ValidGrooming.map(x => x: Any): _*),
-          groomNorm)
-        .when(diffRaw.isin("expert", "freeride", "extreme"), lit("backcountry"))
-        .when(groomRaw === "no", lit("backcountry"))
-
-    val gladed = coalesce(
-      tagBoolean(tagOrElse(tags, "piste:gladed", "gladed")),
-      when(element_at(tags, "natural") === "wood"
-        || element_at(tags, "landuse") === "forest", true))
-
-    val ref = osmRef(tags)
-    val status =
-      when(element_at(tags, "piste:abandoned") === "yes", lit("abandoned"))
-        .otherwise(col("st").getField("status"))
-
-    features
-      .withColumn("st", st)
-      .filter(not(col("st").getField("status") <=> "dropped"))
-      .withColumn("uses", usesArr)
-      .withColumn("difficulty", difficulty)
-      .withColumn("grooming", grooming)
-      .withColumn("gladed", gladed)
-      .withColumn("oneway", coalesce(
-        tagBoolean(tagOrElse(tags, "piste:oneway", "oneway")),
-        when(array_contains(col("uses"), "downhill"), true)))
-      .withColumn("patrolled",
-        tagBoolean(tagOrElse(tags, "piste:patrolled", "patrolled")))
-      .withColumn("snowmaking", tagBoolean(element_at(tags, "piste:snowmaking")))
-      .withColumn("snowfarming",
-        tagBoolean(element_at(tags, "piste:snowfarming")))
-      .withColumn("tunnel",
-        when(element_at(tags, "tunnel").isNotNull, lit(true)))
-      .withColumn("lit", tagBoolean(tagOrElse(tags, "piste:lit", "lit")))
-      .withColumn("ref", ref)
-      .withColumn("name", osmName(tags, "piste:name", Some("name"), ref))
-      .withColumn("website", element_at(tags, "website"))
-      .withColumn("wikidata_id", tagFirstValue(tags, "wikidata"))
-      .withColumn("status", status)
-      .withColumn("kept", col("status") === "operating" && size(col("uses")) > 0)
-      .withColumn("id", HashFunctions.contentId(lit("run"), col("way_id"),
-        col("status"), concat_ws(";", col("uses")), col("difficulty"),
-        col("name")))
-      .drop("st", "tags")
   }
 }

@@ -772,67 +772,41 @@ object MvtTiles {
       .orderBy("zoom", "tile_x", "tile_y", "layer")
 
   // ---- encoded tile blobs -------------------------------------------------
-  // The full MVT surface: ONE wide exchange on (z, tx, ty) collects a
-  // tile's features across all layers, sorted by (layer, fid) so the
-  // bytes are shuffle-order independent, and the kernel emits the
-  // whole multi-layer tile in a single call — no second shuffle of
-  // per-layer frames. Group sizes are bounded by the density cap at
-  // low zooms and geographic sharding at z9+.
+  // The full MVT surface: ONE wide exchange on (z, tx, ty) brings a
+  // tile's features across all layers together, sorted by (layer, fid)
+  // so the bytes are shuffle-order independent, and each tile is
+  // emitted whole — no second shuffle of per-layer frames. Group sizes
+  // are bounded by the density cap at low zooms and geographic
+  // sharding at z9+.
   def tileBytes(s: SparkSession, d: String): DataFrame =
-    if (streamEncode(s)) encodeOfStreamed(prepped(s, d))
-    else encodeOf(prepped(s, d))
+    encodeOfStreamed(prepped(s, d))
 
   /** Per-tile collect + whole-tile protobuf encode of any prepped
-    * frame (shared with the streaming tile-refresh). With
-    * `keepStats` the collected struct carries the prep kernel's
-    * per-feature stats as three trailing bigints (the encoder sums
-    * them inside its walk — see MvtTileEncodeExpr's shape
-    * measurements) and the projection keeps the per-tile stat sums
-    * instead of the tile bytes; the default keeps the bytes (the
-    * blob / decode-gate shape, 6-field struct). Either way the
-    * encoder runs exactly once per tile.
+    * frame: (zoom, tile_x, tile_y, n_layers, tile). The streaming
+    * tile-refresh and the scale probes encode through it; the batch
+    * paths use [[encodeOfStreamed]], whose bytes are identical
+    * (MvtStreamEncodeSpec).
     */
-  private[graft] def encodeOf(prep: DataFrame,
-      keepStats: Boolean = false): DataFrame = {
-    val featFields =
-      Seq(col("layer"), col("fid"), col("gtype"), col("geom"),
-        col("pk").as("pkeys"), col("pv").as("pvals")) ++
-        (if (keepStats)
-          Seq(col("n_parts"), col("n_points"), col("chk"))
-        else Nil)
-    val enc = prep
+  private[graft] def encodeOf(prep: DataFrame): DataFrame =
+    prep
       .select(col("z"), col("tx"), col("ty"),
-        struct(featFields: _*).as("feat"))
+        struct(col("layer"), col("fid"), col("gtype"), col("geom"),
+          col("pk").as("pkeys"), col("pv").as("pvals")).as("feat"))
       .groupBy("z", "tx", "ty")
       .agg(sort_array(collect_list(col("feat"))).as("feats"))
       .select(col("z").cast("int").as("zoom"), col("tx").as("tile_x"),
         col("ty").as("tile_y"),
         graft.functions.MvtTileEncodeExpr.mvtTile(col("feats")).as("enc"))
-    if (keepStats)
-      enc.select(col("zoom"), col("tile_x"), col("tile_y"),
-        col("enc.n_layers").as("n_layers"),
-        col("enc.n_features").as("n_features"),
-        col("enc.n_parts").as("n_parts"),
-        col("enc.n_points").as("n_points"),
-        col("enc.chk").as("coord_checksum"))
-    else
-      enc.select(col("zoom"), col("tile_x"), col("tile_y"),
+      .select(col("zoom"), col("tile_x"), col("tile_y"),
         col("enc.n_layers").as("n_layers"), col("enc.tile").as("tile"))
-  }
 
-  /** Sorted-stream variant of [[encodeOf]]: same prep input, same
-    * output columns, bytes identical by construction (the exec frames
-    * features through the SAME MvtKernel.LayerStream the aggregate
-    * path uses) — but the per-tile collect_list aggregation is
-    * replaced by one hash exchange on (z, tx, ty) + a spillable local
-    * sort + a streaming walk ([[graft.plans.TileStreamEncodeExec]]).
-    * Memory per task is O(one tile's bytes) instead of O(densest
-    * tile's collected array). Built for the round-18 A/B against the
-    * aggregate shape (VERDICT r17 #5); whichever measures faster at
-    * sf1 owns the serving-path headline.
+  /** The sorted-stream whole-tile encode of a prepped frame: one hash
+    * exchange on (z, tx, ty) + a spillable local sort + a streaming
+    * walk ([[graft.plans.TileStreamEncodeExec]]), so memory per task is
+    * O(one tile's bytes) and no per-tile array materializes. Every
+    * column the exec emits: the tile plus its stat sums.
     */
-  private[graft] def encodeOfStreamed(prep: DataFrame,
-      keepStats: Boolean = false): DataFrame = {
+  private def streamedTiles(prep: DataFrame): DataFrame = {
     val spark = prep.sparkSession
     graft.GraftExtensions.registerPlanning(spark)
     val flat = prep.select(
@@ -840,27 +814,14 @@ object MvtTiles {
       col("fid"), col("gtype"), col("geom"), col("pk"), col("pv"),
       col("n_parts"), col("n_points"), col("chk"))
     val analyzed = flat.queryExecution.analyzed
-    val enc = org.apache.spark.sql.graftshim.SqlBridge.ofRows(spark,
+    org.apache.spark.sql.graftshim.SqlBridge.ofRows(spark,
       graft.plans.TileStreamEncodePlan(analyzed, analyzed.output))
-    if (keepStats)
-      enc.select(col("zoom"), col("tile_x"), col("tile_y"),
-        col("n_layers"), col("n_features"),
-        col("n_parts"), col("n_points"), col("chk").as("coord_checksum"))
-    else
-      enc.select(col("zoom"), col("tile_x"), col("tile_y"),
-        col("n_layers"), col("tile"))
   }
 
-  /** [[encodeStatsOf]]'s projection over the streamed shape — the A/B
-    * counterpart of the serving-path headline query.
-    */
-  private[graft] def encodeStatsOfStreamed(prep: DataFrame): DataFrame =
-    encodeOfStreamed(prep, keepStats = true)
-      .select(col("zoom"), col("tile_x"), col("tile_y"),
-        col("n_layers").cast("long").as("n_layers"),
-        col("n_features").cast("long").as("n_features"),
-        col("n_parts"), col("n_points"), col("coord_checksum"))
-      .orderBy("zoom", "tile_x", "tile_y")
+  /** [[encodeOf]]'s columns from the sorted-stream encode. */
+  private[graft] def encodeOfStreamed(prep: DataFrame): DataFrame =
+    streamedTiles(prep).select(col("zoom"), col("tile_x"), col("tile_y"),
+      col("n_layers"), col("tile"))
 
   /** Decode tile blobs (zoom, tile_x, tile_y, tile) back to the
     * oracled per-layer stats columns (shared by `q_tiles_mvt_bytes`
@@ -904,10 +865,10 @@ object MvtTiles {
   // MVT solo figure, SCALING.md) that production tile serving never
   // pays. The encode stays load-bearing under the oracle through
   // `n_layers`, which only the encoder's layer-run walk produces; the
-  // per-tile feature/part/point/checksum stats ride the SAME
-  // aggregation that collects the features, so nothing is computed
-  // twice. This is the bench headline; q_tiles_mvt_bytes (decode
-  // round-trip, hash-equal to the same oracle) stays the gate.
+  // per-tile feature/part/point/checksum stats are summed by the SAME
+  // walk that frames the features, so nothing is computed twice. This
+  // is the bench headline; q_tiles_mvt_bytes (decode round-trip,
+  // hash-equal to the same oracle) stays the gate.
   private val qEncode = QuerySpec.of(
     "q_tiles_mvt_encode", {
       s"""WITH ${SkiQueries.oraclePrelude},
@@ -926,52 +887,21 @@ object MvtTiles {
     encodeStatsOf(prepped(s, d))
   }
 
-  /** Per-tile encode + stats in ONE exchange with a collect-only
-    * aggregation — the blob path's aggregation shape plus three
-    * trailing bigints on the collected struct, which the encoder sums
-    * inside the walk it already does. The fastest of three measured
-    * shapes at sf1 (see MvtTileEncodeExpr): stat sums as agg
-    * functions riding the ObjectHashAggregate cost ~5 s/run, a
-    * varint re-walk of the packed geom inside the kernel ~3 s, the
-    * trailing-bigint carry ~2 s. The trailing fields can't disturb
-    * byte determinism: sort_array order is already decided by the
-    * leading (layer, fid). The tile bytes are dropped by the final
-    * projection instead of being re-decoded — byte-groundedness is
-    * the decode GATE's job (q_tiles_mvt_bytes hash-matches the same
-    * oracle through a full protobuf re-parse); this query is the
-    * serving-path figure.
+  /** Per-tile encode + stats in ONE pass: the sorted-stream exec sums
+    * the prep kernel's per-feature stats while it frames the bytes, so
+    * no aggregate function runs beside the encode. The tile bytes are
+    * dropped by the final projection instead of being re-decoded —
+    * byte-groundedness is the decode GATE's job (q_tiles_mvt_bytes
+    * hash-matches the same oracle through a full protobuf re-parse);
+    * this query is the serving-path figure.
     */
   private[graft] def encodeStatsOf(prep: DataFrame): DataFrame =
-    if (streamEncode(prep.sparkSession)) encodeStatsOfStreamed(prep)
-    else encodeStatsOfAggregate(prep)
-
-  /** The collect_list-aggregate serving-path shape, exposed by name so
-    * the A/B specs can pin agg-vs-stream equality regardless of which
-    * shape owns the default (round 18 flipped it to the stream exec).
-    * Still production-load-bearing: the streaming tile-refresh and the
-    * scale probes call [[encodeOf]] directly.
-    */
-  private[graft] def encodeStatsOfAggregate(prep: DataFrame): DataFrame =
-    encodeOf(prep, keepStats = true)
+    streamedTiles(prep)
       .select(col("zoom"), col("tile_x"), col("tile_y"),
         col("n_layers").cast("long").as("n_layers"),
         col("n_features").cast("long").as("n_features"),
-        col("n_parts"), col("n_points"), col("coord_checksum"))
+        col("n_parts"), col("n_points"), col("chk").as("coord_checksum"))
       .orderBy("zoom", "tile_x", "tile_y")
-
-  /** A/B switch for the serving-path encode shape (VERDICT r17 #5):
-    * `spark.graft.tiles.streamEncode` flips the headline query
-    * between the collect_list aggregate shape and the sorted-stream
-    * exec. The two are bit-identical (MvtStreamEncodeSpec). The
-    * DEFAULT is the sorted-stream exec — the round-18 matched
-    * fresh-JVM solos at sf1 read stream 16.8-20.1 s (median 17.7)
-    * against aggregate 19.7-64.1 s (quiet-band medians 21.7-31.2,
-    * with 2-3× GC/spill outlier samples at zero external load); the
-    * stream shape is both faster and far lower-variance because no
-    * per-tile array ever materializes — see SCALING.md round-18.
-    */
-  private def streamEncode(s: SparkSession): Boolean =
-    s.conf.get("spark.graft.tiles.streamEncode", "true").toBoolean
 
   // Incremental maintenance gate: the streaming tile-refresh
   // (graft.streaming.TilesStreaming) must equal the batch rebuild of

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Run topology normalization (SURVEY §2.4, N1-N4).
@@ -21,8 +20,8 @@ import org.apache.spark.sql.functions._
   *      through (collect_list + explode) — no join-back of the full
   *      edge table, one exchange instead of two;
   *  N2  re-segment: per run, split where the membership set changes
-  *      (window lag + running sum), emit each shared arc once (owner =
-  *      least member id), merged props from the member props;
+  *      (one sorted streaming walk per run), emit each shared arc once
+  *      (owner = least member id), merged props from the member props;
   *  N3  chain-merge: segments with identical merged props meeting at a
   *      degree-2 endpoint are label-propagated into components and
   *      stitched back into one line per component (mapGroups; groups
@@ -153,29 +152,12 @@ object Normalization {
     */
   def splitSharedArcs(runs: DataFrame,
       merge: PropsMerge = StringProps): DataFrame =
-    if (streamSegments(runs.sparkSession))
-      streamedOwnedSegments(arcMembers(edgesOf(runs), merge), merge)
-    else
-      ownedSegments(segmented(arcMembers(edgesOf(runs), merge)), merge)
+    streamedOwnedSegments(arcMembers(edgesOf(runs), merge), merge)
 
-  /** Round-18 A/B switch for the N2 split shape:
-    * `spark.graft.normalize.streamSegments`. Default: the
-    * sorted-stream exec — same exchange + same (run_id, idx) sort,
-    * but the window + collect_list re-aggregation become one
-    * streaming walk (NormalizeSegmentsExec; measured A/B in
-    * SCALING.md). `false` restores the window/aggregate composition,
-    * which graft.Profile's `normalize.*` phases expose per-stage.
-    */
-  private def streamSegments(s: SparkSession): Boolean =
-    s.conf.get("spark.graft.normalize.streamSegments", "true").toBoolean
-
-  /** Sorted-stream variant of `segmented → ownedSegments`: same
-    * arc-membership input, same output columns, values identical by
-    * construction (NormalizeStreamSegmentsSpec pins both shapes
-    * equal on the fixtures) — but the per-run window and the
-    * per-segment collect_list/sort_array aggregation are replaced by
-    * one hash exchange on run_id + a spillable (run_id, idx) local
-    * sort + a streaming walk ([[graft.plans.NormalizeSegmentsExec]]).
+  /** N2 over the arc-membership rows: one hash exchange on run_id + a
+    * spillable (run_id, idx) local sort + a streaming walk
+    * ([[graft.plans.NormalizeSegmentsExec]]) that splits each run where
+    * its membership changes and emits each owned stretch once.
     */
   private[graft] def streamedOwnedSegments(withM: DataFrame,
       merge: PropsMerge = StringProps): DataFrame = {
@@ -248,35 +230,8 @@ object Normalization {
         col("o.p1").as("p1"), col("o.p2").as("p2"),
         col("members"), col("mprops"))
       // change detection key: a 64-bit hash of the member set — flat
-      // long compares in the window instead of array compares
+      // long compares in the segment walk instead of array compares
       .withColumn("mh", xxhash64(col("members")))
-
-  /** N2: per-run segmentation where membership changes. */
-  private[graft] def segmented(withM: DataFrame): DataFrame = {
-    val w = Window.partitionBy("run_id").orderBy("idx")
-    withM
-      .withColumn("chg",
-        when(lag("mh", 1).over(w).isNull
-          || lag("mh", 1).over(w) =!= col("mh"), 1).otherwise(0))
-      .withColumn("seg_no", sum("chg").over(
-        w.rowsBetween(Window.unboundedPreceding, 0)))
-  }
-
-  /** Each shared arc once: the least member id owns it. */
-  private[graft] def ownedSegments(seg: DataFrame,
-      merge: PropsMerge = StringProps): DataFrame =
-    seg.filter(col("run_id") === element_at(col("members"), 1))
-      .groupBy(col("run_id").as("seg_run"), col("seg_no"))
-      .agg(
-        first(col("members")).as("members"),
-        first(col("mprops")).as("props"),
-        array_append(
-          transform(sort_array(collect_list(struct(col("idx"), col("p1")))),
-            s => s.getField("p1")),
-          max_by(col("p2"), col("idx"))).as("pts"))
-      .withColumn("seg_id", segId(col("seg_run"), col("seg_no")))
-      .withColumn("phash", merge.hash(col("props")))
-      .select("seg_run", "seg_id", "members", "props", "phash", "pts")
 
   /** N3 candidate discovery: joinable endpoints where exactly 2
     * same-props segments touch (props equality via the flat 64-bit

@@ -12,42 +12,24 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types._
 
-/** Sorted-stream run re-segmentation (Normalization N2): the
-  * aggregation-free alternative to
-  * `segmented(...)` (window lag + running sum over (run_id, idx)) `→`
-  * `ownedSegments(...)` (filter owner + groupBy(run, seg_no) with
-  * `sort_array(collect_list(struct(idx, p1)))` + `max_by(p2, idx)`).
+/** Sorted-stream run re-segmentation (Normalization N2): split each
+  * run into maximal stretches of constant arc membership and emit each
+  * stretch that the run owns once.
   *
-  * The window/aggregate shape pays, per edge occurrence: the window
-  * exec's partition buffering and two frame evaluations, then an
-  * ObjectHashAggregate per-row update copying (idx, p1) structs into
-  * growing per-segment buffers, then an interpreted `sort_array` over
-  * each collected array — all to recover an ordering the rows
-  * ALREADY have after the window's (run_id, idx) sort.
-  * The round-18 per-stage sf1 attribution (SCALING.md) measured
-  * those two stages at ~2.9 s + ~3.9 s of the 10.2 s normalize total.
-  *
-  * This node keeps the one unavoidable exchange (hash on run_id) and
+  * The node keeps the one unavoidable exchange (hash on run_id) and
   * Spark's spillable local sort on (run_id, idx) — EnsureRequirements
-  * plans both — and replaces the window + aggregation with a single
-  * streaming walk over the sorted run: a segment counter increments
-  * whenever the membership hash changes (or a new run starts), owned
-  * stretches (least member == run) accumulate their p1 chain and
-  * final p2, and a segment row emits the moment its stretch closes.
-  * Memory per task is O(one segment's points) instead of O(per-run
-  * collected arrays); at 100 TB that bound holds regardless of how
-  * long a run gets.
-  *
-  * Semantics are identical by construction to the window/aggregate
-  * composition (NormalizeStreamSegmentsSpec pins bit-identity):
-  * change detection compares the same xxhash64 membership hash the
-  * window's lag compared; seg_no counts changes over ALL of the
-  * run's rows (owned and unowned — an unowned stretch between two
-  * same-membership owned stretches must keep them separate segments);
-  * pts is the idx-ordered p1 chain plus the last row's p2, exactly
-  * what `sort_array(collect_list) + max_by` reconstructed; members /
-  * props are the stretch's constant values (the aggregate's
-  * `first(...)` over a membership-constant group).
+  * plans both — and walks each sorted run once:
+  *  - seg_no starts at 1 for each run and increments whenever the
+  *    membership hash `mh` differs from the previous row's. It counts
+  *    changes over ALL of the run's rows, owned and unowned, so an
+  *    unowned stretch between two same-membership owned stretches
+  *    keeps them separate segments.
+  *  - A stretch is owned when its least member is the run itself.
+  *  - An owned stretch emits one row when it closes: its pts are the
+  *    idx-ordered p1 chain plus the last row's p2; members and props
+  *    are the stretch's constant values.
+  * Memory per task is O(one segment's points), however long a run
+  * gets; no window and no per-segment aggregation run.
   *
   * Child contract (by position; [[graft.operators.Normalization]]
   * builds the projection): run_id bigint, idx int, p1 bigint,

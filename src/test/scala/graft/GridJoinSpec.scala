@@ -227,28 +227,17 @@ class GridJoinSpec extends SparkSpec {
   }
 
   test("the grid join is the only cell-neighbourhood walk in src/main") {
-    val loc = new java.io.File(classOf[GridJoinSpec].getProtectionDomain
-      .getCodeSource.getLocation.toURI)
-    // target/scala-2.x/test-classes -> the project root
-    val root = Iterator.iterate(loc)(_.getParentFile).takeWhile(_ != null)
-      .find(d => new java.io.File(d, "src/main/scala").isDirectory)
-      .getOrElse(new java.io.File(sys.props("user.dir")))
-    val main = new java.io.File(root, "src/main/scala")
-    def files(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).toSeq.flatten.flatMap(f =>
-        if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala")))
-    val sources = files(main)
+    val sources = MainSources.files
     assert(sources.exists(_.getName == "GridJoin.scala"),
-      s"no GridJoin.scala under $main")
+      s"no GridJoin.scala under ${MainSources.root}")
     // a symmetric cell walk: sequence(lit(-n), lit(n)) exploded over a
     // cell id, the shape every hand-written grid join used
     val walk = """sequence\(\s*lit\(\s*-""".r
     val offenders = for {
-      f <- sources if f.getName != "GridJoin.scala"
-      src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      (line, n) <- src.linesIterator.zipWithIndex
+      (path, n, line) <- MainSources.lines(
+        sources.filter(_.getName != "GridJoin.scala"))
       if walk.findFirstIn(line).nonEmpty
-    } yield s"${main.toPath.relativize(f.toPath)}:${n + 1}: ${line.trim}"
+    } yield s"$path:$n: ${line.trim}"
     assert(offenders.isEmpty,
       "cell walks outside GridJoin; call GridJoin instead:\n" +
         offenders.mkString("\n"))

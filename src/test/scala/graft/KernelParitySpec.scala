@@ -32,7 +32,6 @@ class KernelParitySpec extends AnyFunSuite {
     "RunTagsExpr" -> "nondeterministic optimizer fence",
     "L2SqToLitExpr" -> "shipped reference object, boxed-null fold",
     "SynthTagsExpr" -> "variadic",
-    "MvtTileEncodeExpr" -> "type check depends on the struct arity",
     "MvtPrepExpr" -> "PlanPinSpec pins it by class",
     "InRangeExpr" -> "IntervalJoinRule matches on it",
     "STDWithinExpr" -> "DistanceJoinRule matches on it",
@@ -172,7 +171,7 @@ class KernelParitySpec extends AnyFunSuite {
     1 -> bytes,
     4 -> features.map(fs => MvtKernel.encodeTile(
       toFeatures(fs).asInstanceOf[
-        org.apache.spark.sql.catalyst.util.ArrayData], 6).getBinary(0)))
+        org.apache.spark.sql.catalyst.util.ArrayData]).getBinary(0)))
 
   private val lonLat = StructType(Seq(
     StructField("lon", DoubleType), StructField("lat", DoubleType)))
@@ -272,6 +271,8 @@ class KernelParitySpec extends AnyFunSuite {
           .map(t => Seq(t._1, t._2)),
         4 -> wellFormedGeom))(c =>
       GpkgGeomExpr.gpkgGeom(c(0), c(1))),
+    dsl("mvtTile", Seq(ArrayType(featureType)), one(orNull(features)))(c =>
+      MvtTileEncodeExpr.mvtTile(c(0))),
     // ---- the hand-written kernels ----
     dsl("RunTagsExpr", Seq(MapType(StringType, StringType)),
       one(orNull(Gen.listOf(Gen.zip(Gen.oneOf(tagKeys), tagVals))
@@ -285,8 +286,6 @@ class KernelParitySpec extends AnyFunSuite {
         orNull(Gen.chooseNum(0, 9)), orNull(dbl), orNull(dbl), orNull(dbl),
         orNull(Gen.oneOf("R", "A", "N", "é")), orNull(str), orNull(str))))(
       c => SynthTagsExpr.synthTags(c: _*)),
-    dsl("MvtTileEncodeExpr", Seq(ArrayType(featureType)),
-      one(orNull(features)))(c => MvtTileEncodeExpr.mvtTile(c(0))),
     dsl("MvtPrepExpr", Seq(IntegerType,
         ArrayType(StructType(Seq(StructField("wx", LongType),
           StructField("wy", LongType)))),

@@ -301,38 +301,6 @@ class MvtTilesSpec extends SparkSpec {
     }
   }
 
-  test("arity-9 encoder stat-carry equals the stats query's rollup") {
-    // The AGGREGATE serving-path's per-tile sums come from
-    // MvtKernel.encodeTile summing three TRAILING bigints inside the
-    // layer-slice walk (the arity-9 input path) — a completely
-    // different code path from q_tiles_mvt's sum()/count()
-    // aggregation. Pinning their equality in the fast suite means the
-    // stat-carry kernel path no longer rests solely on the external
-    // DuckDB sweep (ADVICE r17). Called by name because round 18
-    // flipped q_tiles_mvt_encode's default to the stream exec (whose
-    // own stat carry MvtStreamEncodeSpec pins against this shape).
-    val viaKernel = operators.MvtTiles
-      .encodeStatsOfAggregate(operators.MvtTiles.prepped(spark, sf))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)) ->
-        (r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
-          r.getLong(7)))
-      .toMap
-    val viaAgg = SparkEntry.queries("q_tiles_mvt")(spark, sf)
-      .groupBy("zoom", "tile_x", "tile_y")
-      .agg(count(lit(1)).as("n_layers"), sum("n_features"),
-        sum("n_parts"), sum("n_points"), sum("coord_checksum"))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)) ->
-        (r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
-          r.getLong(7)))
-      .toMap
-    assert(viaKernel.nonEmpty)
-    assert(viaKernel === viaAgg)
-    // the carried sums are live data, not defaulted zeros
-    assert(viaKernel.values.exists(v => v._3 > 0 && v._4 > 0))
-  }
-
   test("runs layer carries name/difficulty tags with dedup'd tables") {
     val one = operators.MvtTiles.tileBytes(spark, sf)
       .filter(col("zoom") === 9)

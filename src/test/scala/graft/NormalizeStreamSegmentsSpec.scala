@@ -7,12 +7,16 @@ import org.apache.spark.sql.execution.aggregate.{
 import org.apache.spark.sql.execution.window.WindowExec
 
 /** The sorted-stream N2 split (NormalizeSegmentsExec) must be
-  * indistinguishable from the window/aggregate composition
-  * `ownedSegments(segmented(arcMembers(...)))`: same seg_ids (pins
-  * the seg_no counting — including that UNOWNED stretches advance
-  * the counter), same members/props/phash, same pts chains. Plus the
-  * plan shape: the exec replaces the window and the collect_list
-  * aggregation outright.
+  * indistinguishable from the window/aggregate composition it replaced
+  * (a window lag + running sum over (run_id, idx), then the owned rows
+  * re-aggregated per (run, seg_no)): same seg_ids (pins the seg_no
+  * counting — including that UNOWNED stretches advance the counter),
+  * same members/props/phash, same pts chains. That composition's output
+  * was frozen before it was deleted: its `canon` tuples on the three
+  * crafted scenarios are the literals below, and its `q_ski_normalize`
+  * rows at sf0.001 are a count and digest in
+  * `golden/ski_normalize_window.txt`. Plus the plan shape: no window
+  * and no re-aggregation in the split.
   */
 class NormalizeStreamSegmentsSpec extends SparkSpec {
   import spark.implicits._
@@ -29,15 +33,10 @@ class NormalizeStreamSegmentsSpec extends SparkSpec {
       .sortBy(t => (t._1, t._2))
       .toList
 
-  private def bothShapes(runs: org.apache.spark.sql.DataFrame,
-      merge: Normalization.PropsMerge) = {
-    val withM = Normalization.arcMembers(Normalization.edgesOf(runs), merge)
-    val agg = canon(Normalization.ownedSegments(
-      Normalization.segmented(withM), merge))
-    val streamed = canon(
-      Normalization.streamedOwnedSegments(withM, merge))
-    (agg, streamed)
-  }
+  private def streamed(runs: org.apache.spark.sql.DataFrame,
+      merge: Normalization.PropsMerge) =
+    canon(Normalization.streamedOwnedSegments(
+      Normalization.arcMembers(Normalization.edgesOf(runs), merge), merge))
 
   test("owned-unowned-owned resumption keeps two segments (StringProps)") {
     // run 2's middle edges are shared with run 1 (lower id owns them):
@@ -48,11 +47,16 @@ class NormalizeStreamSegmentsSpec extends SparkSpec {
     val runs = runsDf(
       (1L, "a", Seq(p(1), p(2), p(3))),
       (2L, "b", Seq(p(0), p(1), p(2), p(3), p(4))))
-    val (agg, streamed) = bothShapes(runs, Normalization.StringProps)
-    assert(agg.nonEmpty)
+    val window = List(
+      (1L, 1048577L, List(1L, 2L), "a+b", -8981002402066878004L,
+        List(429539679742960000L, 429582629415920000L, 429625579088880000L)),
+      (2L, 2097153L, List(2L), "b", -6391946315847899181L,
+        List(429496730070000000L, 429539679742960000L)),
+      (2L, 2097155L, List(2L), "b", -6391946315847899181L,
+        List(429625579088880000L, 429668528761840000L)))
     // run 2 contributes exactly two solo segments with distinct seg_ids
-    assert(agg.count(_._1 == 2L) == 2)
-    assert(streamed === agg)
+    assert(window.count(_._1 == 2L) == 2)
+    assert(streamed(runs, Normalization.StringProps) === window)
   }
 
   test("multi-run scenario equal across shapes (StringProps)") {
@@ -63,9 +67,20 @@ class NormalizeStreamSegmentsSpec extends SparkSpec {
       (3L, "a", Seq(p(3, 0), p(4, 0), p(4, 1))), // chains onto run 1
       (4L, "c", Seq(p(9, 9), p(9, 8))), // disjoint singleton
       (5L, "d", Seq(p(0, 5), p(0, 5), p(1, 5)))) // degenerate edge dropped
-    val (agg, streamed) = bothShapes(runs, Normalization.StringProps)
-    assert(agg.nonEmpty)
-    assert(streamed === agg)
+    val window = List(
+      (1L, 1048577L, List(1L), "a", -8582455328737087284L,
+        List(429496730070000000L, 429539679742960000L)),
+      (1L, 1048578L, List(1L, 2L), "a+b", -8981002402066878004L,
+        List(429539679742960000L, 429582629415920000L)),
+      (1L, 1048579L, List(1L), "a", -8582455328737087284L,
+        List(429582629415920000L, 429625579088880000L)),
+      (3L, 3145729L, List(3L), "a", -8582455328737087284L,
+        List(429625579088880000L, 429668528761840000L, 429668528761850000L)),
+      (4L, 4194305L, List(4L), "c", -3446348257159517350L,
+        List(429883277126730000L, 429883277126720000L)),
+      (5L, 5242881L, List(5L), "d", 4409375254388155230L,
+        List(429496730070050000L, 429539679743010000L)))
+    assert(streamed(runs, Normalization.StringProps) === window)
   }
 
   test("lattice props (struct type) equal across shapes") {
@@ -95,22 +110,28 @@ class NormalizeStreamSegmentsSpec extends SparkSpec {
         .when(col("run_id") === 2, props("West", "expert", null))
         .otherwise(props("East", "easy", true)))
       .select("run_id", "props", "coords")
-    val (agg, streamed) = bothShapes(runs, Normalization.RunPropsLattice)
-    assert(agg.nonEmpty)
-    assert(streamed === agg)
+    val window = List(
+      (1L, 1048577L, List(1L),
+        "{[downhill], East, null, easy, null, operating, true, null, true, null, null, null, null, null}",
+        522578815932028527L, List(429496730070000000L, 429539679742960000L)),
+      (1L, 1048578L, List(1L, 2L),
+        "{[downhill], East, West, null, easy, null, operating, true, null, true, null, null, null, null, null}",
+        -2250177475652791228L, List(429539679742960000L, 429582629415920000L)),
+      (1L, 1048579L, List(1L),
+        "{[downhill], East, null, easy, null, operating, true, null, true, null, null, null, null, null}",
+        522578815932028527L, List(429582629415920000L, 429625579088880000L)),
+      (3L, 3145729L, List(3L),
+        "{[downhill], East, null, easy, null, operating, true, null, true, null, null, null, null, null}",
+        522578815932028527L, List(429625579088880000L, 429668528761840000L)))
+    assert(streamed(runs, Normalization.RunPropsLattice) === window)
   }
 
   test("full q_ski_normalize equal under both shapes at fixture scale") {
-    val fn = SparkEntry.queries("q_ski_normalize")
-    def run(shape: String) = {
-      spark.conf.set("spark.graft.normalize.streamSegments", shape)
-      try fn(spark, sf).collect().map(_.toString).sorted.toList
-      finally spark.conf.unset("spark.graft.normalize.streamSegments")
-    }
-    val agg = run("false")
-    val streamed = run("true")
-    assert(agg.nonEmpty)
-    assert(streamed === agg)
+    val rows = SparkEntry.queries("q_ski_normalize")(spark, sf)
+      .collect().map(_.toString).sorted.toList
+    val window = Golden.header(Golden.lines("ski_normalize_window.txt"))
+    assert(rows.size.toString == window("rows"))
+    assert(Golden.sha256(rows) == window("sha256"), s"rows: $rows")
   }
 
   test("streamed plan: exec present, no window, no aggregate in split") {

@@ -5,10 +5,11 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Value-identity pin for the round-19 run-formatter kernel
-  * (RunTagsExpr): `formatRuns` (single-pass native kernel) must
-  * produce EXACTLY the rows of `formatRunsLegacy` (the replaced
-  * expression cascade) on tag maps covering every branch of the
+/** Value-identity pin for the run-formatter kernel (RunTagsExpr):
+  * `formatRuns` must produce EXACTLY the rows and schema of the
+  * expression-cascade formatter it replaced, frozen as golden data
+  * (`golden/run_tags_legacy.txt`) before that formatter was deleted,
+  * on tag maps covering every branch of the
   * lifecycle/uses/grooming/name/boolean rules — including the edge
   * shapes that made the expression forms subtle: empty-string values
   * (JS falsiness), NULL map values (absent-key semantics), multi-key
@@ -125,15 +126,16 @@ class RunTagsSpec extends SparkSpec {
     df.collect().map(_.toString).sorted.toSeq
 
   test("kernel formatRuns matches the legacy expression cascade row-for-row") {
+    // `column<TAB>name<TAB>type` lines, then `row<TAB>text` lines
+    // sorted by text, written from the legacy formatter on tagMaps
+    val golden = Golden.lines("run_tags_legacy.txt")
     val kernel = Formatters.formatRuns(inputDf)
-    val legacy = Formatters.formatRunsLegacy(inputDf)
-    assert(kernel.columns.toSeq == legacy.columns.toSeq,
-      s"column order drifted: ${kernel.columns.toSeq} vs ${legacy.columns.toSeq}")
-    assert(kernel.schema.map(f => (f.name, f.dataType)) ==
-      legacy.schema.map(f => (f.name, f.dataType)),
-      s"schema drifted:\n${kernel.schema}\n${legacy.schema}")
+    val columns = golden.filter(_.startsWith("column\t"))
+      .map(_.split("\t")).map { case Array(_, n, t) => (n, t) }
+    assert(kernel.schema.map(f => (f.name, f.dataType.simpleString)) ==
+      columns, s"schema drifted:\n${kernel.schema}\nlegacy $columns")
     val k = collectSorted(kernel)
-    val l = collectSorted(legacy)
+    val l = golden.filter(_.startsWith("row\t")).map(_.stripPrefix("row\t"))
     assert(k.size == l.size, s"row count ${k.size} vs ${l.size}")
     k.zip(l).foreach { case (a, b) => assert(a == b, s"\nkernel $a\nlegacy $b") }
   }

@@ -1,50 +1,49 @@
 package graft
 
 import graft.operators.SkiFeatures
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-/** Value-identity pin for the round-19 synth-tags kernel: the native
-  * SynthTagsExpr map must equal the replaced 27-entry CreateMap form
+/** Value-identity pin for the synth-tags kernel: the native
+  * SynthTagsExpr map must equal the 27-entry CreateMap form it replaced
   * ENTRY-FOR-ENTRY (same keys in the same order, same null-valued
   * entries) on every real row of the sf0.001 tables — the full input
   * domain the scaffold actually sees, covering every lifecycle branch,
-  * all modular cascades and the concat-null edges.
+  * all modular cascades and the concat-null edges. The CreateMap form's
+  * rows were frozen as golden data (`golden/synth_tags_createmap.txt`:
+  * row count, SHA-256 of every canonical row, the first 50 rows in
+  * full) before that form was deleted.
   */
 class SynthTagsSpec extends SparkSpec {
 
-  private def buildArm(kernelOn: Boolean) =
-    SkiFeatures.build(spark, sf, kernel = kernelOn)
-      .select(col("way_id"), map_entries(col("tags")).as("e"),
-        col("coords"))
+  /** `way_id<TAB>{k=v;…}<TAB>[x,y,z;…]`, entries in map order. */
+  private def canon(r: Row): String = {
+    val tags = r.getSeq[Row](1).map(kv => kv.getString(0) + "=" + kv.getString(1))
+      .mkString("{", ";", "}")
+    val coords = r.getSeq[scala.collection.Seq[Double]](2)
+      .map(_.mkString(",")).mkString("[", ";", "]")
+    s"${r.getLong(0)}\t$tags\t$coords"
+  }
 
   test("kernel map equals the CreateMap form on every sf0.001 row") {
-    val k = buildArm(kernelOn = true).collect()
-      .map(r => r.getLong(0) -> (r.getSeq[Any](1), r.getSeq[Any](2)))
-      .sortBy(_._1)
-    val l = buildArm(kernelOn = false).collect()
-      .map(r => r.getLong(0) -> (r.getSeq[Any](1), r.getSeq[Any](2)))
-      .sortBy(_._1)
-    assert(k.length == l.length && k.length > 1000,
-      s"row counts ${k.length} vs ${l.length}")
-    k.zip(l).foreach { case ((wk, (ek, ck)), (wl, (el, cl))) =>
-      assert(wk == wl)
-      assert(ek == el, s"way $wk tags differ:\nkernel $ek\nlegacy $el")
-      assert(ck == cl, s"way $wk coords differ")
-    }
+    val golden = Golden.lines("synth_tags_createmap.txt")
+    val want = Golden.header(golden)
+    val rows = SkiFeatures.build(spark, sf)
+      .select(col("way_id"), map_entries(col("tags")).as("e"),
+        col("coords"))
+      .collect().map(r => (r.getLong(0), canon(r))).sorted.map(_._2).toSeq
+    val first = golden.drop(2)
+    rows.zip(first).foreach { case (k, l) =>
+      assert(k == l, s"\nkernel $k\nlegacy $l") }
+    assert(rows.size.toString == want("rows") && rows.size > 1000,
+      s"row count ${rows.size} vs ${want("rows")}")
+    assert(Golden.sha256(rows) == want("sha256"),
+      s"the first ${first.size} rows match, a later one differs")
   }
 
   test("default build uses the kernel") {
     val kplan = SkiFeatures.build(spark, sf)
       .queryExecution.optimizedPlan.toString.toLowerCase
     assert(kplan.contains("synthtags"), s"kernel missing:\n${kplan.take(500)}")
-  }
-
-  test("kernel = false builds the CreateMap form") {
-    // the row-for-row test above compares against this arm, so it must
-    // really be the replaced form and not the kernel again
-    val lplan = SkiFeatures.build(spark, sf, kernel = false)
-      .queryExecution.optimizedPlan.toString.toLowerCase
-    assert(!lplan.contains("synthtags") && lplan.contains("map("),
-      s"legacy form missing:\n${lplan.take(500)}")
   }
 }
