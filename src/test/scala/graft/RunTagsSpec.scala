@@ -126,13 +126,13 @@ class RunTagsSpec extends SparkSpec {
     df.collect().map(_.toString).sorted.toSeq
 
   test("kernel formatRuns matches the legacy expression cascade row-for-row") {
-    // `column<TAB>name<TAB>type` lines, then `row<TAB>text` lines
+    // `column<TAB>name<TAB>type json` lines, then `row<TAB>text` lines
     // sorted by text, written from the legacy formatter on tagMaps
     val golden = Golden.lines("run_tags_legacy.txt")
     val kernel = Formatters.formatRuns(inputDf)
     val columns = golden.filter(_.startsWith("column\t"))
       .map(_.split("\t")).map { case Array(_, n, t) => (n, t) }
-    assert(kernel.schema.map(f => (f.name, f.dataType.simpleString)) ==
+    assert(kernel.schema.map(f => (f.name, f.dataType.json)) ==
       columns, s"schema drifted:\n${kernel.schema}\nlegacy $columns")
     val k = collectSorted(kernel)
     val l = golden.filter(_.startsWith("row\t")).map(_.stripPrefix("row\t"))
