@@ -301,6 +301,30 @@ class MvtTilesSpec extends SparkSpec {
     }
   }
 
+  test("arity-9 encoder stat-carry equals the stats query's rollup") {
+    // The per-tile sums of q_tiles_mvt_encode are carried by the
+    // encoder itself: TileStreamEncodeExec sums the prep kernel's
+    // per-feature stats inside the walk that frames the bytes (the
+    // carry once rode three trailing bigints of an arity-9 input) — a
+    // code path independent of q_tiles_mvt's relational sum()/count()
+    // rollup. Pinning their equality in the fast suite means the stat
+    // carry does not rest solely on the external DuckDB sweep.
+    def byTile(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)) ->
+        (r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
+          r.getLong(7))).toMap
+    val viaKernel = byTile(operators.MvtTiles
+      .encodeStatsOf(operators.MvtTiles.prepped(spark, sf)))
+    val viaAgg = byTile(SparkEntry.queries("q_tiles_mvt")(spark, sf)
+      .groupBy("zoom", "tile_x", "tile_y")
+      .agg(count(lit(1)).as("n_layers"), sum("n_features"),
+        sum("n_parts"), sum("n_points"), sum("coord_checksum")))
+    assert(viaKernel.nonEmpty)
+    assert(viaKernel === viaAgg)
+    // the carried sums are live data, not defaulted zeros
+    assert(viaKernel.values.exists(v => v._3 > 0 && v._4 > 0))
+  }
+
   test("runs layer carries name/difficulty tags with dedup'd tables") {
     val one = operators.MvtTiles.tileBytes(spark, sf)
       .filter(col("zoom") === 9)
