@@ -24,9 +24,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    the planner — column pruning and filter pushdown apply to the
   *    scaffold scan like any other source.
   *
-  * Location: `spark.graft.scaffoldDir` conf, else
-  * `SPARK_GRAFT_SCAFFOLD_DIR` env, else a per-user directory under
-  * `java.io.tmpdir` (the same place Spark puts its own local dirs).
+  * Location: the `spark.graft.scaffoldDir` conf, else a per-user
+  * directory under `java.io.tmpdir` (the same place Spark puts its own
+  * local dirs).
   * At warehouse scale this would be a dfs:// path owned by the ingest
   * pipeline.
   *
@@ -42,7 +42,6 @@ object Scaffold {
 
   def root(spark: SparkSession): String =
     spark.conf.getOption("spark.graft.scaffoldDir")
-      .orElse(sys.env.get("SPARK_GRAFT_SCAFFOLD_DIR"))
       .getOrElse(new java.io.File(
         sys.props("java.io.tmpdir"),
         s"graft-scaffold-${sys.props.getOrElse("user.name", "anon")}")

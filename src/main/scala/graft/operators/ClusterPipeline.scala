@@ -5,6 +5,7 @@ import graft.functions.GeoFunctions
 import graft.functions.GeoFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import SkiFeatures.{CellDeg, RadiusM}
 
 /** Priority-layered clustering pipeline (the reference's pass ordering
   * in `performClustering`, `SkiAreaClusteringService.ts:337-447`):
@@ -28,35 +29,25 @@ import org.apache.spark.sql.functions._
   */
 object ClusterPipeline {
 
-  private val CellDeg = 0.01
-  private val RadiusM = 500.0
-
   private val qPriority = QuerySpec.of(
     "q_ski_cluster_priority", {
       val lenSqlLocal = SkiQueries.lenSql
       val havA = GeoFunctions.sqlHaversineM("a.alon", "a.alat", "r.lon", "r.lat")
       val havR = GeoFunctions.sqlHaversineM("r.lon", "r.lat", "o.lon", "o.lat")
       val havG = GeoFunctions.sqlHaversineM("l.lon", "l.lat", "r2.lon", "r2.lat")
+      val (hexLon, hexLat) =
+        SkiFeatures.sql.hexVertex("area_id", "alon", "alat", 0.004)
       s"""WITH RECURSIVE ${SkiQueries.oraclePrelude},
         |areas AS (
         |  SELECT o_orderkey AS area_id,
         |    CASE WHEN o_orderkey % 2 = 0 THEN 'downhill' ELSE 'nordic' END AS act,
-        |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS alon,
-        |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS alat
-        |  FROM orders WHERE o_orderkey % 37 = 0),
+        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
+        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
+        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
         |verts AS (
         |  SELECT area_id, alon, alat, k,
-        |    alon + (CAST(0.004 AS DOUBLE) * (CAST(1 AS DOUBLE)
-        |      + CAST((area_id + k) % 3 AS DOUBLE) * CAST(0.3 AS DOUBLE)))
-        |      * (CASE k WHEN 0 THEN CAST(1 AS DOUBLE) WHEN 1 THEN CAST(0.5 AS DOUBLE)
-        |         WHEN 2 THEN CAST(-0.5 AS DOUBLE) WHEN 3 THEN CAST(-1 AS DOUBLE)
-        |         WHEN 4 THEN CAST(-0.5 AS DOUBLE) ELSE CAST(0.5 AS DOUBLE) END) AS vx,
-        |    alat + (CAST(0.004 AS DOUBLE) * (CAST(1 AS DOUBLE)
-        |      + CAST((area_id + k) % 3 AS DOUBLE) * CAST(0.3 AS DOUBLE)))
-        |      * (CASE k WHEN 0 THEN CAST(0 AS DOUBLE) WHEN 1 THEN sqrt(CAST(3 AS DOUBLE)) / 2
-        |         WHEN 2 THEN sqrt(CAST(3 AS DOUBLE)) / 2 WHEN 3 THEN CAST(0 AS DOUBLE)
-        |         WHEN 4 THEN -(sqrt(CAST(3 AS DOUBLE)) / 2)
-        |         ELSE -(sqrt(CAST(3 AS DOUBLE)) / 2) END) AS vy
+        |    $hexLon AS vx,
+        |    $hexLat AS vy
         |  FROM areas, unnest([0, 1, 2, 3, 4, 5]) AS uk(k)),
         |pedges AS (
         |  SELECT a.area_id, a.vx AS x1, a.vy AS y1, b.vx AS x2, b.vy AS y2
@@ -128,11 +119,11 @@ object ClusterPipeline {
         |  UNION ALL
         |  SELECT (o_orderkey + 100000000) * 2 AS nid, 'downhill' AS act,
         |    o_orderkey + 100000000 AS oid,
-        |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS lon,
-        |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS lat,
+        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS lon,
+        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS lat,
         |    true AS is_lift,
-        |    CAST(floor((CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0) / $CellDeg) AS BIGINT) AS cx,
-        |    CAST(floor((CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0) / $CellDeg) AS BIGINT) AS cy
+        |    CAST(floor(${SkiFeatures.sql.anchorLon("o_orderkey")} / $CellDeg) AS BIGINT) AS cx,
+        |    CAST(floor(${SkiFeatures.sql.anchorLat("o_orderkey")} / $CellDeg) AS BIGINT) AS cy
         |  FROM orders WHERE o_orderkey % 23 = 0),
         |glc AS (
         |  SELECT nid, act, lon, lat, cx + i AS cx2, cy + j AS cy2
@@ -167,23 +158,11 @@ object ClusterPipeline {
         |UNION ALL SELECT way_id, 3 AS pass, area_id FROM pass3
         |ORDER BY pass, way_id, area_id""".stripMargin
     }) { (s, d) =>
-    val sqrt32 = sqrt(lit(3.0)) / 2
-    val cosK = Seq(lit(1.0), lit(0.5), lit(-0.5), lit(-1.0), lit(-0.5), lit(0.5))
-    val sinK = Seq(lit(0.0), sqrt32, sqrt32, lit(0.0), -sqrt32, -sqrt32)
-    val areas = graft.Tables.orders(s, d)
-      .filter(pmod(col("o_orderkey"), lit(37)) === 0)
-      .select(col("o_orderkey").as("area_id"),
-        when(pmod(col("o_orderkey"), lit(2)) === 0, "downhill")
-          .otherwise("nordic").as("act"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("alon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0).as("alat"))
-      .withColumn("ring", array((0 until 6).map { k =>
-        val r = lit(0.004) * (lit(1.0)
-          + pmod(col("area_id") + k, lit(3)).cast("double") * lit(0.3))
-        array(col("alon") + r * cosK(k), col("alat") + r * sinK(k))
-      }: _*))
+    val areas = SkiFeatures.areas(s, d)
+      .select(col("area_id"), col("act"), col("lon").as("alon"),
+        col("lat").as("alat"))
+      .withColumn("ring", array(SkiFeatures.hexRing(col("area_id"),
+        col("alon"), col("alat"), 0.004).map { case (x, y) => array(x, y) }: _*))
       .localCheckpoint()
     val rc = SkiQueries.formatted(s, d).filter(col("kept"))
       .select(col("way_id"), col("uses"),
@@ -224,10 +203,8 @@ object ClusterPipeline {
       .filter(pmod(col("o_orderkey"), lit(23)) === 0)
       .select((col("o_orderkey") + 100000000L).as("oid"),
         lit("downhill").as("act"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("lon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0).as("lat"))
+        SkiFeatures.anchorLon(col("o_orderkey")).as("lon"),
+        SkiFeatures.anchorLat(col("o_orderkey")).as("lat"))
       .withColumn("is_lift", lit(true))
     val pass3 = Clustering.generateSkiAreas(
       runNodes.unionByName(liftNodes), RadiusM, CellDeg)

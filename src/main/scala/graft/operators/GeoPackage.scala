@@ -372,9 +372,9 @@ object GeoPackage {
         |  SELECT lift_id AS k,
         |    md5(concat_ws('|', 'lift', CAST(lift_id AS VARCHAR), status,
         |      lift_type, name)) AS fid,
-        |    CAST((lift_id * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0
+        |    ${SkiFeatures.sql.anchorLon("lift_id")}
         |      AS lon,
-        |    CAST((lift_id * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0
+        |    ${SkiFeatures.sql.anchorLat("lift_id")}
         |      AS lat
         |  FROM lfmt),
         |allrows AS (
@@ -452,10 +452,8 @@ object GeoPackage {
       .select(col("lift_id").cast("long").as("k"),
         md5(concat_ws("|", lit("lift"), col("lift_id"), col("status"),
           col("lift_type"), col("name"))).as("fid"),
-        (pmod(col("lift_id") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("lon"),
-        (pmod(col("lift_id") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0).as("lat"))
+        SkiFeatures.anchorLon(col("lift_id")).as("lon"),
+        SkiFeatures.anchorLat(col("lift_id")).as("lat"))
     def part(df: DataFrame, dir: Int, kind: String, file: String,
         cond: Column) =
       df.filter(cond).select(lit(dir).as("dir_idx"), lit(kind).as("kind"),
@@ -548,16 +546,16 @@ object GeoPackage {
         |  SELECT 'skiareas_point' AS layer, o_orderkey AS fid,
         |    1 AS wkb_type, CAST(1 AS BIGINT) AS n_points,
         |    CAST(61 AS BIGINT) AS blob_len,
-        |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0
+        |    ${SkiFeatures.sql.anchorLon("o_orderkey")}
         |      AS ax,
-        |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0
+        |    ${SkiFeatures.sql.anchorLat("o_orderkey")}
         |      AS ay
-        |  FROM orders WHERE o_orderkey % 37 = 0),
+        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
         |mverts AS (
         |  SELECT o_orderkey AS fid, (p).part AS part,
-        |    (CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0)
+        |    ${SkiFeatures.sql.anchorLon("o_orderkey")}
         |      + (p).vx * $u AS x,
-        |    (CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0)
+        |    ${SkiFeatures.sql.anchorLat("o_orderkey")}
         |      + (p).vy * $u AS y
         |  FROM orders, unnest(CASE WHEN o_orderkey % 2 = 0
         |    THEN [${vertRows(MultiPart.RectXY, 0)},
@@ -565,7 +563,7 @@ object GeoPackage {
         |    ELSE [${vertRows(MultiPart.CXY, 0)},
         |        ${vertRows(MultiPart.Rect2XY, 1)}]
         |    END) AS u(p)
-        |  WHERE o_orderkey % 37 = 0),
+        |  WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
         |mpartn AS (
         |  SELECT fid, part, count(*) AS n FROM mverts GROUP BY 1, 2),
         |mrows AS (
@@ -611,15 +609,10 @@ object GeoPackage {
     val single = MvtTiles.features(s, d)
       .select(col("layer"), col("fid"), col("gtype").as("wkb_type"),
         array(array(col("pts"))).as("parts"))
-    val apoints = graft.Tables.orders(s, d)
-      .filter(pmod(col("o_orderkey"), lit(37)) === 0)
+    val apoints = SkiFeatures.areas(s, d)
       .select(lit("skiareas_point").as("layer"),
-        col("o_orderkey").as("fid"), lit(1).as("wkb_type"),
-        array(array(array(struct(
-          (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double")
-            / 1000.0 - 180.0).as("lon"),
-          (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double")
-            / 1000.0 - 60.0).as("lat"))))).as("parts"))
+        col("area_id").as("fid"), lit(1).as("wkb_type"),
+        array(array(array(struct(col("lon"), col("lat"))))).as("parts"))
     val multi = MultiPart.multiAreas(s, d)
       .select(lit("skiareas_multi").as("layer"),
         col("area_id").as("fid"), lit(6).as("wkb_type"),

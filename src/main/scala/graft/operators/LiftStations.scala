@@ -5,6 +5,7 @@ import graft.functions.GeoFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import SkiFeatures.CellDeg
 
 /** Lift-station association (SURVEY clustering step 8 + G3,
   * `/root/reference/src/clustering/LiftStationAssociator.ts:12-214`):
@@ -30,7 +31,6 @@ import org.apache.spark.sql.functions._
 object LiftStations {
 
   private val ThresholdM = 30.0
-  private val CellDeg = 0.01
 
   /** Reusable station→lift association (step 8; the unit the scenario
     * suite `ClusterSkiAreas.integration.test.ts:3019-3532` exercises).
@@ -110,8 +110,8 @@ object LiftStations {
       val hav = GeoFunctions.sqlHaversineM("slon", "slat", "snap_lon", "snap_lat")
       s"""WITH lifts AS (
         |  SELECT o_orderkey AS lift_id,
-        |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS alon,
-        |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS alat,
+        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
+        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat,
         |    CAST((o_orderkey % 4 + 1) AS DOUBLE) * 0.0012 AS ldx,
         |    CAST((o_orderkey % 3 + 1) AS DOUBLE) * 0.0004 AS ldy,
         |    CAST(o_orderkey % 2500 AS DOUBLE) AS z0,
@@ -203,10 +203,8 @@ object LiftStations {
     val o = graft.Tables.orders(s, d)
     val lifts = o.filter(pmod(col("o_orderkey"), lit(3)) === 0)
       .select(col("o_orderkey").as("lift_id"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("alon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0).as("alat"),
+        SkiFeatures.anchorLon(col("o_orderkey")).as("alon"),
+        SkiFeatures.anchorLat(col("o_orderkey")).as("alat"),
         (pmod(col("o_orderkey"), lit(4)) + 1).cast("double")
           .*(0.0012).as("ldx"),
         (pmod(col("o_orderkey"), lit(3)) + 1).cast("double")

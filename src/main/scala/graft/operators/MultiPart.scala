@@ -5,6 +5,7 @@ import graft.functions.GeoFunctions
 import graft.functions.GeoFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import SkiFeatures.CellDeg
 
 /** Multi-part geometry operators: hole-aware containment over
   * MultiPolygon ski areas (J2 with interior rings — the reference's
@@ -34,7 +35,6 @@ import org.apache.spark.sql.functions._
   */
 object MultiPart {
 
-  private val CellDeg = SkiQueries.CellDeg
   private[operators] val U = 0.001
 
   /** (ring_no, vertex list in 0.001° units). */
@@ -54,9 +54,9 @@ object MultiPart {
       s"""WITH ${SkiQueries.oraclePrelude},
         |areas AS (
         |  SELECT o_orderkey AS area_id,
-        |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS alon,
-        |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS alat
-        |  FROM orders WHERE o_orderkey % 37 = 0),
+        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
+        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
+        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
         |verts AS (
         |  SELECT area_id, (p).rn AS rn, (p).k AS k,
         |    alon + (p).vx * $U AS x, alat + (p).vy * $U AS y
@@ -105,13 +105,8 @@ object MultiPart {
       array(ring.map { case (vx, vy) =>
         array(col("alon") + lit(vx) * U, col("alat") + lit(vy) * U)
       }: _*)): _*)
-    val areas = graft.Tables.orders(s, d)
-      .filter(pmod(col("o_orderkey"), lit(37)) === 0)
-      .select(col("o_orderkey").as("area_id"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("alon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0).as("alat"))
+    val areas = SkiFeatures.areas(s, d)
+      .select(col("area_id"), col("lon").as("alon"), col("lat").as("alat"))
       .withColumn("rings", rings)
     val runs = SkiQueries.formatted(s, d).filter(col("kept"))
       .select(col("way_id"), lineLengthM(col("coords")).as("len_m"),
@@ -157,14 +152,14 @@ object MultiPart {
       array(col("alon") + lit(vx.toDouble) * U,
         col("alat") + lit(vy.toDouble) * U)
     }: _*)
+    // its own select, not one over SkiFeatures.areas: GeoPackage's union
+    // pushdown would fold that select up into the parts projection
     graft.Tables.orders(s, d)
-      .filter(pmod(col("o_orderkey"), lit(37)) === 0)
+      .filter(SkiFeatures.isArea(col("o_orderkey")))
       .select(col("o_orderkey").as("area_id"),
         (pmod(col("o_orderkey"), lit(2)) === 0).as("convex"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("alon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0).as("alat"))
+        SkiFeatures.anchorLon(col("o_orderkey")).as("alon"),
+        SkiFeatures.anchorLat(col("o_orderkey")).as("alat"))
       .withColumn("parts",
         when(col("convex"), array(ring(RectXY), ring(Rect2XY)))
           .otherwise(array(ring(CXY), ring(Rect2XY))))
@@ -181,9 +176,9 @@ object MultiPart {
         }).mkString(",\n        |          ")
       s"""WITH areas AS (
         |  SELECT o_orderkey AS area_id, (o_orderkey % 2 = 0) AS convex,
-        |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS alon,
-        |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS alat
-        |  FROM orders WHERE o_orderkey % 37 = 0),
+        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
+        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
+        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
         |verts AS (
         |  SELECT area_id, (p).part AS part, (p).k AS k,
         |    alon + (p).vx * $U AS x, alat + (p).vy * $U AS y
@@ -290,13 +285,7 @@ object MultiPart {
     }) { (s, d) =>
     val li = graft.Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_linenumber")).distinct()
-    val lon0 = (pmod(col("l_orderkey") * 7919, lit(360000)).cast("double")
-      / 1000.0 - 180.0) + col("l_linenumber") * 0.001
-    val lat0 = pmod(col("l_orderkey") * 104729, lit(120000)).cast("double") /
-      1000.0 - 60.0
-    val wayId = (col("l_orderkey") * 10 + col("l_linenumber")).cast("long")
-    val dx = (pmod(wayId, lit(5)) + 1).cast("double") * 0.001
-    val dy = (pmod(wayId, lit(3)) + 1).cast("double") * 0.0005
+    import SkiFeatures.{lon0, lat0, dx, dy}
     val line = array(
       array(lon0, lat0),
       array(lon0 + dx, lat0 + dy),

@@ -97,9 +97,9 @@ object MvtSoakProbe {
 
     val dir = java.nio.file.Files.createTempDirectory("graft_soak_")
     val out = dir.resolve("soak.mbtiles")
-    if (overflow) spark.conf.set(MvtTiles.GzipKey, "true")
     val t0 = System.nanoTime()
-    MvtTiles.writeMbtilesOf(spark, tiles, out, barrier = false)
+    MvtTiles.writeMbtilesOf(spark, tiles, out, gzip = overflow,
+      barrier = false)
     val secs = (System.nanoTime() - t0) / 1e9
     // per-phase high-water: the WRITE phase is the sink claim under
     // test (one page + one partition); the round-trip decode that

@@ -141,6 +141,8 @@ object MvtTiles {
         array(col("name"), col("difficulty")).as("pv"))
 
     val o = graft.Tables.orders(s, d)
+    // the tiles' own lift layout, not SkiFeatures.anchorLon/Lat: the two
+    // multipliers swap (104729 for lon, 7919 for lat), here and in the oracle
     val lifts = o.filter(pmod(col("o_orderkey"), lit(23)) === 0)
       .select(col("o_orderkey").as("fid"),
         (pmod(col("o_orderkey") * 104729, lit(360000)).cast("double")
@@ -159,24 +161,17 @@ object MvtTiles {
         array(lit("lift"),
           concat(lit("L"), pmod(col("fid"), lit(30)))).as("pv"))
 
-    // hexagon ring, ClusterPipeline's fixture formulas verbatim
-    val sqrt32 = sqrt(lit(3.0)) / 2
-    val cosK = Seq(lit(1.0), lit(0.5), lit(-0.5), lit(-1.0), lit(-0.5),
-      lit(0.5))
-    val sinK = Seq(lit(0.0), sqrt32, sqrt32, lit(0.0), -sqrt32, -sqrt32)
-    val areas = o.filter(pmod(col("o_orderkey"), lit(37)) === 0)
+    // the clustering fixtures' hexagon ring (ClusterPipeline's scale).
+    // Its own select, not a rename over SkiFeatures.areas: GeoPackage's
+    // union pushdown would fold that rename up into the ring projection.
+    val areas = o.filter(SkiFeatures.isArea(col("o_orderkey")))
       .select(col("o_orderkey").as("fid"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double")
-          / 1000.0 - 180.0).as("alon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double")
-          / 1000.0 - 60.0).as("alat"))
+        SkiFeatures.anchorLon(col("o_orderkey")).as("alon"),
+        SkiFeatures.anchorLat(col("o_orderkey")).as("alat"))
       .select(lit("skiareas").as("layer"), col("fid"), lit(3).as("gtype"),
         lit(0).as("minz"),
-        array((0 until 6).map { k =>
-          val r = lit(0.004) * (lit(1.0)
-            + pmod(col("fid") + k, lit(3)).cast("double") * lit(0.3))
-          pt(col("alon") + r * cosK(k), col("alat") + r * sinK(k))
-        }: _*).as("pts"),
+        array(SkiFeatures.hexRing(col("fid"), col("alon"), col("alat"), 0.004)
+          .map { case (x, y) => pt(x, y) }: _*).as("pts"),
         array(lit("kind")).as("pk"), array(lit("skiarea")).as("pv"))
 
     runs.unionByName(lifts).unionByName(areas)
@@ -193,15 +188,16 @@ object MvtTiles {
       .select(lit("spots").as("layer"), col("event_id").as("fid"),
         lit(1).as("gtype"), lit(9).as("minz"),
         array(struct(
-          (pmod(col("event_id") * 7919, lit(360000)).cast("double")
-            / 1000.0 - 180.0).as("lon"),
-          (pmod(col("event_id") * 104729, lit(120000)).cast("double")
-            / 1000.0 - 60.0).as("lat"))).as("pts"),
+          SkiFeatures.anchorLon(col("event_id")).as("lon"),
+          SkiFeatures.anchorLat(col("event_id")).as("lat"))).as("pts"),
         array(lit("kind")).as("pk"), array(lit("spot")).as("pv"))
 
   // one row per (layer, fid, pidx, lon, lat) + per-feature meta;
   // shared with the GeoPackage BLOB oracle
   private[operators] val oracleFeatPtsCtes: String = {
+    val (hexLon, hexLat) = SkiFeatures.sql.hexVertex("o_orderkey",
+      SkiFeatures.sql.anchorLon("o_orderkey"),
+      SkiFeatures.sql.anchorLat("o_orderkey"), 0.004)
     s"""runs_dd AS (
       |  SELECT way_id, min(lon0) AS lon0, min(lat0) AS lat0,
       |    min(dx) AS dx, min(dy) AS dy
@@ -223,29 +219,14 @@ object MvtTiles {
       |  WHERE o_orderkey % 23 = 0
       |  UNION ALL
       |  SELECT 'skiareas', o_orderkey, 3, 0, k,
-      |    (CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0)
-      |      + (CAST(0.004 AS DOUBLE) * (CAST(1 AS DOUBLE)
-      |        + CAST((o_orderkey + k) % 3 AS DOUBLE) * CAST(0.3 AS DOUBLE)))
-      |      * (CASE k WHEN 0 THEN CAST(1 AS DOUBLE)
-      |         WHEN 1 THEN CAST(0.5 AS DOUBLE)
-      |         WHEN 2 THEN CAST(-0.5 AS DOUBLE) WHEN 3 THEN CAST(-1 AS DOUBLE)
-      |         WHEN 4 THEN CAST(-0.5 AS DOUBLE)
-      |         ELSE CAST(0.5 AS DOUBLE) END),
-      |    (CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0)
-      |      + (CAST(0.004 AS DOUBLE) * (CAST(1 AS DOUBLE)
-      |        + CAST((o_orderkey + k) % 3 AS DOUBLE) * CAST(0.3 AS DOUBLE)))
-      |      * (CASE k WHEN 0 THEN CAST(0 AS DOUBLE)
-      |         WHEN 1 THEN sqrt(CAST(3 AS DOUBLE)) / 2
-      |         WHEN 2 THEN sqrt(CAST(3 AS DOUBLE)) / 2
-      |         WHEN 3 THEN CAST(0 AS DOUBLE)
-      |         WHEN 4 THEN -(sqrt(CAST(3 AS DOUBLE)) / 2)
-      |         ELSE -(sqrt(CAST(3 AS DOUBLE)) / 2) END)
+      |    $hexLon,
+      |    $hexLat
       |  FROM orders, unnest([0, 1, 2, 3, 4, 5]) AS uk(k)
-      |  WHERE o_orderkey % 37 = 0
+      |  WHERE ${SkiFeatures.sql.isArea("o_orderkey")}
       |  UNION ALL
       |  SELECT 'spots', event_id, 1, 9, 0,
-      |    CAST((event_id * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0,
-      |    CAST((event_id * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0
+      |    ${SkiFeatures.sql.anchorLon("event_id")},
+      |    ${SkiFeatures.sql.anchorLat("event_id")}
       |  FROM events)""".stripMargin
   }
 
@@ -597,15 +578,20 @@ object MvtTiles {
     * flag works out of the box locally) and survives executor loss
     * at the cost of one distributed write of the feature rows.
     */
-  private def worldFeatures(s: SparkSession, d: String): DataFrame = {
-    val fw = graft.Tables.fanout(withWorldCols(features(s, d)))
+  private def worldFeatures(s: SparkSession, d: String): DataFrame =
+    checkpointed(s, graft.Tables.fanout(withWorldCols(features(s, d))))
+
+  /** The tile build's barrier: executor-local blocks by default, the
+    * reliable checkpoint dir under [[ReliableCheckpointKey]] (a temp
+    * dir is provisioned when none is set).
+    */
+  private def checkpointed(s: SparkSession, df: DataFrame): DataFrame =
     if (s.conf.get(ReliableCheckpointKey, "false").toBoolean) {
       if (s.sparkContext.getCheckpointDir.isEmpty)
         s.sparkContext.setCheckpointDir(
           graft.TempDirs.scoped("graft_tiles_ckpt_").toString)
-      fw.checkpoint(false)
-    } else fw.localCheckpoint(false)
-  }
+      df.checkpoint(false)
+    } else df.localCheckpoint(false)
 
   /** Opt-in fault-tolerant barrier for the tile build (see
     * [[worldFeatures]]).
@@ -928,35 +914,29 @@ object MvtTiles {
   // Validated by Python's stdlib sqlite3 in MbtilesSpec.
   def writeMbtilesFile(s: SparkSession, d: String,
       path: java.nio.file.Path): Seq[(String, Int, Long)] =
-    writeMbtilesOf(s, tileBytes(s, d), path)
+    writeMbtilesOf(s, tileBytes(s, d), path,
+      gzip = s.conf.get(GzipKey, "false").toBoolean)
 
   /** Container write of any encoded-tiles frame (zoom, tile_x, tile_y,
     * …, tile) — the soak probe feeds a generated decade-up workload
     * through the same streaming sink the production path uses.
-    * `barrier = false` skips the checkpoint when the caller already
-    * materialized the frame (the soak probe, to isolate the SINK's
-    * heap footprint from the build's).
+    * `gzip` compresses each tile first. `barrier = false` skips the
+    * checkpoint when the caller already materialized the frame (the
+    * soak probe, to isolate the SINK's heap footprint from the
+    * build's).
     */
   private[graft] def writeMbtilesOf(s: SparkSession,
       built: org.apache.spark.sql.DataFrame,
       path: java.nio.file.Path,
+      gzip: Boolean,
       barrier: Boolean = true): Seq[(String, Int, Long)] = {
     import graft.sources.SqliteFile
     val encoded =
-      if (s.conf.get(GzipKey, "false").toBoolean)
+      if (gzip)
         built.withColumn("tile",
           graft.functions.GzipExpr.gzip(col("tile")))
       else built
-    // same barrier policy as the tile build: local blocks by default,
-    // the reliable checkpoint dir under the opt-in flag
-    val tiles =
-      if (!barrier) encoded
-      else if (s.conf.get(ReliableCheckpointKey, "false").toBoolean) {
-        if (s.sparkContext.getCheckpointDir.isEmpty)
-          s.sparkContext.setCheckpointDir(
-            graft.TempDirs.scoped("graft_tiles_ckpt_").toString)
-        encoded.checkpoint(false)
-      } else encoded.localCheckpoint(false)
+    val tiles = if (barrier) checkpointed(s, encoded) else encoded
     // metadata needs the zoom extremes — a tiny pre-aggregate, not a
     // scan of collected rows
     val zrow = tiles.agg(min("zoom"), max("zoom")).head()
@@ -1146,13 +1126,7 @@ object MvtTiles {
     }) { (s, d) =>
     val dir = graft.TempDirs.scoped("graft_extract_gz_")
     val mb = dir.resolve("in.mbtiles")
-    val prev = s.conf.getOption(GzipKey)
-    s.conf.set(GzipKey, "true")
-    try writeMbtilesFile(s, d, mb)
-    finally prev match {
-      case Some(v) => s.conf.set(GzipKey, v)
-      case None => s.conf.unset(GzipKey)
-    }
+    writeMbtilesOf(s, tileBytes(s, d), mb, gzip = true)
     val outDir = dir.resolve("tiles")
     extractTiles(s, mb, outDir)
     decodedStats(readTileDir(s, outDir).withColumn("tile",

@@ -277,15 +277,6 @@ object OutputFormats {
     val hav2 = GeoFunctions.haversineM(pt(2, 1), pt(2, 2), pt(3, 1), pt(3, 2))
     val dz1 = pt(2, 3) - pt(1, 3)
     val dz2 = pt(3, 3) - pt(2, 3)
-    def esc(c: Column): Column =
-      when(c.isNull, "")
-        .when(c.rlike("[,\";\\n\\r]"),
-          concat(lit("\""), regexp_replace(c, "\"", "\"\""), lit("\"")))
-        .otherwise(c)
-    def yn(c: Column): Column =
-      when(c.isNull, "").when(c, "yes").otherwise("no")
-    def fixed0(c: Column): Column =
-      floor(c + 0.5).cast("long").cast("string")
     val centroid = GeoFunctions.centroid(col("coords"))
     kept
       .withColumn("conv", difficultyConvention(pt(1, 1), pt(1, 2)))
@@ -506,7 +497,7 @@ object OutputFormats {
   // from the event id.
   private val qCsvSpots = QuerySpec.of(
     "q_csv_spots",
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT event_id, event_type,
       |    CAST(floor(value) AS BIGINT) % 4 AS pidx
       |  FROM events),
@@ -525,8 +516,8 @@ object OutputFormats {
       |      ELSE ['lift_station', 'crossing'] END) AS u(spot_type)),
       |x AS (
       |  SELECT event_id AS node_id, spot_type, position,
-      |    CAST((event_id * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS lon,
-      |    CAST((event_id * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS lat,
+      |    ${SkiFeatures.sql.anchorLon("event_id")} AS lon,
+      |    ${SkiFeatures.sql.anchorLat("event_id")} AS lat,
       |    md5('spot|' || CAST(event_id AS VARCHAR) || '|' || spot_type) AS id
       |  FROM s)
       |SELECT node_id, spot_type,
@@ -565,11 +556,9 @@ object OutputFormats {
     val isStation = col("spot_type") === "lift_station"
     Formatters.formatSpots(features)
       .withColumn("lon",
-        pmod(col("node_id") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0)
+        SkiFeatures.anchorLon(col("node_id")))
       .withColumn("lat",
-        pmod(col("node_id") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0)
+        SkiFeatures.anchorLat(col("node_id")))
       .withColumn("id", md5(concat_ws("|", lit("spot"), col("node_id"),
         col("spot_type"))))
       .select(col("node_id"), col("spot_type"), concat_ws(",",
@@ -691,7 +680,7 @@ object OutputFormats {
   // carry base properties only (null type-specific columns here).
   private val qGlSpots = QuerySpec.of(
     "q_mapbox_spots",
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT event_id, event_type,
       |    CAST(floor(value) AS BIGINT) % 4 AS pidx
       |  FROM events),
@@ -722,9 +711,9 @@ object OutputFormats {
       |  CASE WHEN spot_type = 'crossing' THEN
       |    CASE event_id % 3 WHEN 0 THEN 'yes' WHEN 1 THEN 'no'
       |      ELSE 'sometimes' END END AS dismount,
-      |  (floor((CAST((event_id * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0) * 1e6 + 0.5) / 1e6)
+      |  (floor(${SkiFeatures.sql.anchorLon("event_id")} * 1e6 + 0.5) / 1e6)
       |    AS lon,
-      |  (floor((CAST((event_id * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0) * 1e6 + 0.5) / 1e6)
+      |  (floor(${SkiFeatures.sql.anchorLat("event_id")} * 1e6 + 0.5) / 1e6)
       |    AS lat
       |FROM s ORDER BY node_id, spot_type""".stripMargin) { (s, d) =>
     val pidx = pmod(floor(col("value")).cast("long"), lit(4))
@@ -758,10 +747,8 @@ object OutputFormats {
           when(pmod(col("node_id"), lit(3)) === 0, "yes")
             .when(pmod(col("node_id"), lit(3)) === 1, "no")
             .otherwise("sometimes")).as("dismount"),
-        (floor((pmod(col("node_id") * 7919, lit(360000)).cast("double")
-          / 1000.0 - 180.0) * 1e6 + 0.5) / 1e6).as("lon"),
-        (floor((pmod(col("node_id") * 104729, lit(120000)).cast("double")
-          / 1000.0 - 60.0) * 1e6 + 0.5) / 1e6).as("lat"))
+        (floor(SkiFeatures.anchorLon(col("node_id")) * 1e6 + 0.5) / 1e6).as("lon"),
+        (floor(SkiFeatures.anchorLat(col("node_id")) * 1e6 + 0.5) / 1e6).as("lat"))
       .orderBy("node_id", "spot_type")
   }
 

@@ -5,6 +5,7 @@ import graft.functions.GeoFunctions
 import graft.functions.GeoFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import SkiFeatures.{CellDeg, RadiusM}
 
 /** Full-chain pipeline query (SURVEY §2 composition; the reference's
   * `prepare()` DAG, `/root/reference/src/PrepareGeoJSON.ts:95-270`,
@@ -33,9 +34,6 @@ import org.apache.spark.sql.functions._
   * stats (length, |Δz|, min/max z) are direction-symmetric.
   */
 object PipelineE2E {
-
-  private val CellDeg = 0.01
-  private val RadiusM = 500.0
 
   private def qix(c: Column): Column =
     (c * 1e7 + when(c >= 0, 0.5).otherwise(-0.5)).cast("long")
@@ -178,15 +176,7 @@ object PipelineE2E {
         .cast("double") / 1e7).as("lon"),
       (when(startIsAnchor, col("y0")).otherwise(col("yn"))
         .cast("double") / 1e7).as("lat"))
-    val areas = graft.Tables.orders(s, d)
-      .filter(pmod(col("o_orderkey"), lit(37)) === 0)
-      .select(col("o_orderkey").as("area_id"),
-        when(pmod(col("o_orderkey"), lit(2)) === 0, "downhill")
-          .otherwise("nordic").as("act"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("lon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0).as("lat"))
+    val areas = SkiFeatures.areas(s, d)
     Clustering.transitiveAssign(areas, objs, RadiusM, CellDeg)
   }
 
@@ -278,9 +268,9 @@ object PipelineE2E {
         |areas AS (
         |  SELECT o_orderkey AS area_id,
         |    CASE WHEN o_orderkey % 2 = 0 THEN 'downhill' ELSE 'nordic' END AS act,
-        |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS alon,
-        |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS alat
-        |  FROM orders WHERE o_orderkey % 37 = 0),
+        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
+        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
+        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
         |acell AS (
         |  SELECT area_id, act, alon, alat,
         |    CAST(floor(alon / $CellDeg) AS BIGINT) + i AS cx,

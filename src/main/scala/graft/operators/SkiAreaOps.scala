@@ -6,6 +6,7 @@ import graft.functions.GeoFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import SkiFeatures.{CellDeg, RadiusM}
 
 /** Ski-area object operations: the Skimap↔OSM merge (clustering step 4,
   * `/root/reference/src/clustering/MergeSkiAreaObjects.ts:8-100`), the
@@ -26,9 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object SkiAreaOps {
 
-  private val CellDeg = 0.01
-  private val RadiusM = 500.0
-
   // ---- step 4: Skimap ↔ OSM ski-area merge -------------------------------
   private val qMerge = QuerySpec.of(
     "q_ski_area_merge", {
@@ -45,14 +43,14 @@ object SkiAreaOps {
         |      THEN 'Q' || CAST(o_orderkey AS VARCHAR) END AS wikidata,
         |    (o_orderkey % 5 = 0) AS placeholder,
         |    CASE WHEN o_orderkey % 5 = 0 THEN CAST(360 AS DOUBLE)
-        |      ELSE CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0
+        |      ELSE ${SkiFeatures.sql.anchorLon("o_orderkey")}
         |    END AS glon,
         |    CASE WHEN o_orderkey % 5 = 0 THEN CAST(360 AS DOUBLE)
-        |      ELSE CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0
+        |      ELSE ${SkiFeatures.sql.anchorLat("o_orderkey")}
         |    END AS glat,
-        |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS lon,
-        |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS lat
-        |  FROM orders WHERE o_orderkey % 37 = 0),
+        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS lon,
+        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS lat
+        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
         |sk AS (
         |  SELECT o_orderkey AS sk_id, 'Skimap ' || CAST(o_orderkey AS VARCHAR) AS name,
         |    CASE WHEN o_orderkey % 2 = 0 THEN ['downhill']
@@ -60,8 +58,8 @@ object SkiAreaOps {
         |    ['https://skimap.example/' || CAST(o_orderkey AS VARCHAR)] AS websites,
         |    CASE WHEN o_orderkey % 13 = 0
         |      THEN 'Q' || CAST(o_orderkey * 2 AS VARCHAR) END AS wikidata,
-        |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS lon,
-        |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS lat
+        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS lon,
+        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS lat
         |  FROM orders WHERE o_orderkey % 41 = 0),
         |ocell AS (
         |  SELECT area_id, lon, lat, acts,
@@ -124,11 +122,11 @@ object SkiAreaOps {
         |ORDER BY source, area_id""".stripMargin
     }) { (s, d) =>
     val o = graft.Tables.orders(s, d)
-    val anchorLon = (pmod(col("o_orderkey") * 7919, lit(360000))
-      .cast("double") / 1000.0 - 180.0)
-    val anchorLat = (pmod(col("o_orderkey") * 104729, lit(120000))
-      .cast("double") / 1000.0 - 60.0)
-    val osm = o.filter(pmod(col("o_orderkey"), lit(37)) === 0)
+    val anchorLon = SkiFeatures.anchorLon(col("o_orderkey"))
+    val anchorLat = SkiFeatures.anchorLat(col("o_orderkey"))
+    // its own select, not SkiFeatures.areas: glon and lon both read the
+    // anchor, so a second projection over areas' would not collapse
+    val osm = o.filter(SkiFeatures.isArea(col("o_orderkey")))
       .select(col("o_orderkey").as("area_id"),
         when(pmod(col("o_orderkey"), lit(7)) =!= 0,
           concat(lit("Osm "), col("o_orderkey"))).as("name"),
@@ -298,9 +296,9 @@ object SkiAreaOps {
       val hav = GeoFunctions.sqlHaversineM("cx0", "cy0", "snap_lon", "snap_lat")
       s"""WITH areas AS (
         |  SELECT o_orderkey AS area_id, (o_orderkey % 2 = 0) AS convex,
-        |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS alon,
-        |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS alat
-        |  FROM orders WHERE o_orderkey % 37 = 0),
+        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
+        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
+        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
         |verts AS (
         |  SELECT area_id, convex, alon, alat, (p).k AS k,
         |    alon + (p).vx * 0.001 AS x, alat + (p).vy * 0.001 AS y
@@ -371,14 +369,9 @@ object SkiAreaOps {
       array(col("alon") + lit(vx.toDouble) * 0.001,
         col("alat") + lit(vy.toDouble) * 0.001)
     }: _*)
-    val areas = graft.Tables.orders(s, d)
-      .filter(pmod(col("o_orderkey"), lit(37)) === 0)
-      .select(col("o_orderkey").as("area_id"),
-        (pmod(col("o_orderkey"), lit(2)) === 0).as("convex"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("alon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0).as("alat"))
+    val areas = SkiFeatures.areas(s, d)
+      .select(col("area_id"), (pmod(col("area_id"), lit(2)) === 0).as("convex"),
+        col("lon").as("alon"), col("lat").as("alat"))
       .withColumn("ring",
         when(col("convex"), ring(rectXY)).otherwise(ring(cXY)))
     val c = GeoFunctions.centroid(col("ring"))
@@ -413,9 +406,9 @@ object SkiAreaOps {
       s"""WITH ${SkiQueries.oraclePrelude},
         |areas AS (
         |  SELECT o_orderkey AS area_id,
-        |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS alon,
-        |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS alat
-        |  FROM orders WHERE o_orderkey % 37 = 0),
+        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
+        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
+        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
         |acells AS (
         |  SELECT area_id, alon, alat,
         |    CAST(floor(alon / $CellDeg) AS BIGINT) + i AS cx,
@@ -468,13 +461,8 @@ object SkiAreaOps {
         |  floor((bs + bn) / 2 * 1000000.0 + 0.5) / 1000000.0 AS center_lat
         |FROM nearest ORDER BY area_id""".stripMargin
     }) { (s, d) =>
-    val areas = graft.Tables.orders(s, d)
-      .filter(pmod(col("o_orderkey"), lit(37)) === 0)
-      .select(col("o_orderkey").as("area_id"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("alon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0).as("alat"))
+    val areas = SkiFeatures.areas(s, d)
+      .select(col("area_id"), col("lon").as("alon"), col("lat").as("alat"))
     def p1(j: Int) = element_at(element_at(col("coords"), 1), j)
     val rr = SkiQueries.formatted(s, d).filter(col("kept"))
       .select(col("way_id"), col("coords"),
@@ -561,9 +549,9 @@ object SkiAreaOps {
         |  SELECT o_orderkey AS area_id,
         |    (o_orderkey % 41 = 0) AS has_skimap,
         |    (o_orderkey % 5 = 0) AS placeholder,
-        |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS alon,
-        |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS alat
-        |  FROM orders WHERE o_orderkey % 37 = 0),
+        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
+        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
+        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
         |acells AS (
         |  SELECT area_id, alon, alat,
         |    CAST(floor(alon / $CellDeg) AS BIGINT) + i AS cx,
@@ -613,15 +601,11 @@ object SkiAreaOps {
         |WHERE (m.area_id IS NOT NULL OR a.has_skimap) AND NOT a.placeholder
         |ORDER BY a.area_id""".stripMargin
     }) { (s, d) =>
-    val areas = graft.Tables.orders(s, d)
-      .filter(pmod(col("o_orderkey"), lit(37)) === 0)
-      .select(col("o_orderkey").as("area_id"),
-        (pmod(col("o_orderkey"), lit(41)) === 0).as("has_skimap"),
-        (pmod(col("o_orderkey"), lit(5)) === 0).as("placeholder"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("alon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0).as("alat"))
+    val areas = SkiFeatures.areas(s, d)
+      .select(col("area_id"),
+        (pmod(col("area_id"), lit(41)) === 0).as("has_skimap"),
+        (pmod(col("area_id"), lit(5)) === 0).as("placeholder"),
+        col("lon").as("alon"), col("lat").as("alat"))
       .localCheckpoint()
     def p1(j: Int) = element_at(element_at(col("coords"), 1), j)
     val rr = SkiQueries.formatted(s, d).filter(col("kept"))
@@ -683,8 +667,8 @@ object SkiAreaOps {
         |    CASE WHEN p_partkey % 8 = 0
         |      THEN 'Q' || CAST(p_partkey AS VARCHAR) END AS wikidata_id,
         |    '' AS activities,
-        |    CAST((p_partkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS lon,
-        |    CAST((p_partkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS lat
+        |    ${SkiFeatures.sql.anchorLon("p_partkey")} AS lon,
+        |    ${SkiFeatures.sql.anchorLat("p_partkey")} AS lat
         |  FROM part
         |  WHERE p_partkey % 4 <> 3
         |    AND p_partkey % 3 <> 2
@@ -722,8 +706,8 @@ object SkiAreaOps {
         |    CAST(NULL AS VARCHAR) AS wikidata_id,
         |    CASE c_custkey % 3 WHEN 0 THEN 'downhill' WHEN 1 THEN 'nordic'
         |      ELSE 'downhill;nordic' END AS activities,
-        |    CAST((c_custkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS lon,
-        |    CAST((c_custkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS lat
+        |    ${SkiFeatures.sql.anchorLon("c_custkey")} AS lon,
+        |    ${SkiFeatures.sql.anchorLat("c_custkey")} AS lat
         |  FROM customer),
         |sm2 AS (
         |  SELECT source, src_id, status, name, website, wikidata_id,
@@ -755,8 +739,8 @@ object SkiAreaOps {
         concat(lit("https://example.com/a"), pk)),
       lit("wikidata"), when(pmod(pk, lit(8)) === 0,
         concat(lit("Q"), pk, lit(";Q7"))))
-    val alon = pmod(pk * 7919, lit(360000)).cast("double") / 1000.0 - 180.0
-    val alat = pmod(pk * 104729, lit(120000)).cast("double") / 1000.0 - 60.0
+    val alon = SkiFeatures.anchorLon(pk)
+    val alat = SkiFeatures.anchorLat(pk)
     val r = lit(0.002)
     val openRing = array(
       array(alon, alat), array(alon + r, alat),
@@ -796,9 +780,9 @@ object SkiAreaOps {
           .otherwise("operating").as("status"),
         when(pmod(ck, lit(2)) === 0,
           concat(lit("https://skimap.org/"), ck)).as("website"),
-        (pmod(ck * 7919, lit(360000)).cast("double") / 1000.0 - 180.0)
+        SkiFeatures.anchorLon(ck)
           .as("lon"),
-        (pmod(ck * 104729, lit(120000)).cast("double") / 1000.0 - 60.0)
+        SkiFeatures.anchorLat(ck)
           .as("lat"))
     Formatters.formatSkiAreas(landuse, sites, skimap)
       .select(col("source"), col("src_id"), col("id"), col("status"),

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic OSM-like feature synthesis from the driver-provided
@@ -24,10 +24,16 @@ import org.apache.spark.sql.functions._
   *                 patrolled/snowmaking/snowfarming/tunnel/lit, name
   *                 rootKey piste:name with fallback name + ref-prefix
   *                 strip (P9), ref selection (P8), website/wikidata
-  *  - `coords`   = 3-point LineString near a deterministic per-order
-  *                 anchor (lat clamped to ±60 so the 0.01° grid join's
-  *                 3×3 neighborhood always covers a 500 m radius),
-  *                 with z from the part/quantity columns
+  *  - `coords`   = 3-point LineString near the order's [[anchorLon]] /
+  *                 [[anchorLat]] anchor (lat clamped to ±60 so the
+  *                 0.01° grid join's 3×3 neighborhood always covers a
+  *                 500 m radius), with z from the part/quantity columns
+  *
+  * This object also owns the rest of the synthesized ski world, so
+  * every query reads one copy of it: the per-key anchor, the ski areas
+  * ([[areas]], every 37th order), their hexagon outlines ([[hexRing]])
+  * and the grid join's [[CellDeg]] / [[RadiusM]]; [[sql]] is the DuckDB
+  * twin the oracles interpolate.
   *
   * Lifecycle encoding (lifecycle = l_linenumber % 7):
   *  0  piste:type=uses + piste:abandoned=yes        → abandoned
@@ -51,6 +57,62 @@ object SkiFeatures {
 
   val ValidGrooming: Seq[String] = Seq("classic", "skating",
     "classic+skating", "mogul", "scooter", "backcountry")
+
+  /** Cell size and proximity radius of the synthesized world's grid
+    * joins (anchors and run starts within 500 m).
+    */
+  val CellDeg = 0.01
+  val RadiusM = 500.0
+
+  /** The deterministic anchor of a key (orders, lifts, spots, parts,
+    * customers): a longitude in [-180, 180) and a latitude in
+    * [-60, 60), spread by two primes.
+    */
+  def anchorLon(key: Column): Column =
+    pmod(key * 7919, lit(360000)).cast("double") / 1000.0 - 180.0
+  def anchorLat(key: Column): Column =
+    pmod(key * 104729, lit(120000)).cast("double") / 1000.0 - 60.0
+
+  /** Whether an orders key is a ski area: every 37th order. */
+  def isArea(key: Column): Column = pmod(key, lit(37)) === 0
+
+  /** The synthesized ski areas at their anchors, downhill when the key
+    * is even and nordic otherwise — (area_id, act, lon, lat).
+    */
+  def areas(s: SparkSession, d: String): DataFrame = {
+    val k = col("o_orderkey")
+    Tables.orders(s, d).filter(isArea(k))
+      .select(k.as("area_id"),
+        when(pmod(k, lit(2)) === 0, "downhill").otherwise("nordic").as("act"),
+        anchorLon(k).as("lon"), anchorLat(k).as("lat"))
+  }
+
+  /** An area's hexagon outline around (lon, lat): six (lon, lat)
+    * vertices, vertex k at radius scale·(1 + 0.3·((id + k) mod 3))
+    * degrees and angle 60°·k, so the rings are convex but irregular.
+    */
+  def hexRing(id: Column, lon: Column, lat: Column,
+      scale: Double): Seq[(Column, Column)] = {
+    val sqrt32 = sqrt(lit(3.0)) / 2
+    val cosK = Seq(lit(1.0), lit(0.5), lit(-0.5), lit(-1.0), lit(-0.5), lit(0.5))
+    val sinK = Seq(lit(0.0), sqrt32, sqrt32, lit(0.0), -sqrt32, -sqrt32)
+    (0 until 6).map { k =>
+      val r = lit(scale) * (lit(1.0)
+        + pmod(id + k, lit(3)).cast("double") * lit(0.3))
+      (lon + r * cosK(k), lat + r * sinK(k))
+    }
+  }
+
+  /** A synthesized run's geometry over a lineitem row: way id, start
+    * point and per-vertex step (shared with MultiPart's line parts).
+    */
+  private[operators] val wayId =
+    (col("l_orderkey") * 10 + col("l_linenumber")).cast("long")
+  private[operators] val lon0 =
+    anchorLon(col("l_orderkey")) + col("l_linenumber") * 0.001
+  private[operators] val lat0 = anchorLat(col("l_orderkey"))
+  private[operators] val dx = (pmod(wayId, lit(5)) + 1).cast("double") * 0.001
+  private[operators] val dy = (pmod(wayId, lit(3)) + 1).cast("double") * 0.0005
 
   private val memo =
     scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
@@ -80,17 +142,11 @@ object SkiFeatures {
   private[graft] def build(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d)
     val part = Tables.part(s, d).select("p_partkey", "p_name", "p_brand")
-    val wayId = (col("l_orderkey") * 10 + col("l_linenumber")).cast("long")
     val tags = graft.functions.SynthTagsExpr.synthTags(
       col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
       col("l_linenumber"), col("l_quantity"), col("l_discount"),
       col("l_tax"), col("l_returnflag"), col("p_name"), col("p_brand"))
 
-    val lon0 = (pmod(col("l_orderkey") * 7919, lit(360000)).cast("double")
-      / 1000.0 - 180.0) + col("l_linenumber") * 0.001
-    val lat0 = pmod(col("l_orderkey") * 104729, lit(120000)).cast("double") / 1000.0 - 60.0
-    val dx = (pmod(wayId, lit(5)) + 1).cast("double") * 0.001
-    val dy = (pmod(wayId, lit(3)) + 1).cast("double") * 0.0005
     val z0 = pmod(wayId, lit(3000)).cast("double")
     val coords = array(
       array(lon0, lat0, z0),
@@ -117,14 +173,37 @@ object SkiFeatures {
   }
 
   /** DuckDB twin of the synthesis geometry (lon/lat/z expressions over
-    * a joined lineitem×part row), for oracle SQL composition.
+    * a joined lineitem×part row) and of the anchors, area filter and
+    * hexagon rings, for oracle SQL composition.
     */
   object sql {
+    def anchorLon(k: String): String =
+      s"(CAST(($k * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0)"
+    def anchorLat(k: String): String =
+      s"(CAST(($k * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0)"
+    /** The area filter over an orders key. */
+    def isArea(k: String): String = s"$k % 37 = 0"
+
+    /** Vertex `k` of [[hexRing]] as (lon, lat), `k` (0..5) being a
+      * column of the query.
+      */
+    def hexVertex(id: String, lon: String, lat: String,
+        scale: Double): (String, String) = {
+      val r = s"(CAST($scale AS DOUBLE) * (CAST(1 AS DOUBLE)" +
+        s" + CAST(($id + k) % 3 AS DOUBLE) * CAST(0.3 AS DOUBLE)))"
+      val sqrt32 = "sqrt(CAST(3 AS DOUBLE)) / 2"
+      (s"$lon + $r * (CASE k WHEN 0 THEN CAST(1 AS DOUBLE)" +
+        s" WHEN 1 THEN CAST(0.5 AS DOUBLE) WHEN 2 THEN CAST(-0.5 AS DOUBLE)" +
+        s" WHEN 3 THEN CAST(-1 AS DOUBLE) WHEN 4 THEN CAST(-0.5 AS DOUBLE)" +
+        s" ELSE CAST(0.5 AS DOUBLE) END)",
+        s"$lat + $r * (CASE k WHEN 0 THEN CAST(0 AS DOUBLE)" +
+          s" WHEN 1 THEN $sqrt32 WHEN 2 THEN $sqrt32 WHEN 3 THEN CAST(0 AS DOUBLE)" +
+          s" WHEN 4 THEN -($sqrt32) ELSE -($sqrt32) END)")
+    }
+
     val wayId = "(l_orderkey * 10 + l_linenumber)"
-    val lon0 =
-      s"(CAST((l_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 + l_linenumber * 0.001)"
-    val lat0 =
-      s"(CAST((l_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0)"
+    val lon0 = s"(${anchorLon("l_orderkey")} + l_linenumber * 0.001)"
+    val lat0 = anchorLat("l_orderkey")
     val dx = s"(CAST($wayId % 5 + 1 AS DOUBLE) * 0.001)"
     val dy = s"(CAST($wayId % 3 + 1 AS DOUBLE) * 0.0005)"
     val z0 = s"CAST($wayId % 3000 AS DOUBLE)"

@@ -6,6 +6,7 @@ import graft.functions.GeoFunctions._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import SkiFeatures.{CellDeg, RadiusM}
 
 /** Ski-domain operator queries (SURVEY §2): run formatting P1/P7-P10,
   * geodesic length G1, grid-cell distance join J1, VIIRS pixel
@@ -167,9 +168,6 @@ object SkiQueries {
   }
 
   // ---- J1: grid-cell distance join (500 m radius) ------------------------
-  private[operators] val CellDeg = 0.01
-  private[operators] val RadiusM = 500.0
-
   /** Anchors (area_id, alon, alat, …) × points (`lon`, `lat`, …)
     * within [[RadiusM]]: the grid join the area-assignment queries
     * share.
@@ -192,9 +190,9 @@ object SkiQueries {
     s"""WITH $oraclePrelude,
       |areas AS (
       |  SELECT o_orderkey AS area_id,
-      |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS alon,
-      |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS alat
-      |  FROM orders WHERE o_orderkey % 37 = 0),
+      |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
+      |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
+      |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
       |acells AS (
       |  SELECT area_id, alon, alat,
       |    CAST(floor(alon / $CellDeg) AS BIGINT) + i AS cx,
@@ -210,13 +208,8 @@ object SkiQueries {
       |WHERE ${GeoFunctions.sqlHaversineM("a.alon", "a.alat", "r.lon0", "r.lat0")} <= $RadiusM
       |GROUP BY area_id ORDER BY area_id""".stripMargin,
     headline = true) { (s, d) =>
-    val areas = graft.Tables.orders(s, d)
-      .filter(pmod(col("o_orderkey"), lit(37)) === 0)
-      .select(col("o_orderkey").as("area_id"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("alon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0).as("alat"))
+    val areas = SkiFeatures.areas(s, d)
+      .select(col("area_id"), col("lon").as("alon"), col("lat").as("alat"))
     val runs = formatted(s, d).filter(col("kept"))
       .select(col("way_id"),
         element_at(element_at(col("coords"), 1), 1).as("lon"),
@@ -246,9 +239,9 @@ object SkiQueries {
       s"""WITH $oraclePrelude,
         |areas AS (
         |  SELECT o_orderkey AS area_id,
-        |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS alon,
-        |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS alat
-        |  FROM orders WHERE o_orderkey % 37 = 0),
+        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
+        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
+        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
         |acells AS (
         |  SELECT area_id, alon, alat,
         |    CAST(floor(alon / $CellDeg) AS BIGINT) + i AS cx,
@@ -270,13 +263,8 @@ object SkiQueries {
         |FROM ranked WHERE rk <= $KnnPerAnchor
         |ORDER BY area_id, rk""".stripMargin
     }) { (s, d) =>
-    val areas = graft.Tables.orders(s, d)
-      .filter(pmod(col("o_orderkey"), lit(37)) === 0)
-      .select(col("o_orderkey").as("area_id"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("alon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double")
-          / 1000.0 - 60.0).as("alat"))
+    val areas = SkiFeatures.areas(s, d)
+      .select(col("area_id"), col("lon").as("alon"), col("lat").as("alat"))
     val runs = formatted(s, d).filter(col("kept"))
       .select(col("way_id"),
         element_at(element_at(col("coords"), 1), 1).as("lon"),
@@ -306,9 +294,9 @@ object SkiQueries {
       s"""WITH $oraclePrelude,
         |areas AS (
         |  SELECT o_orderkey AS area_id,
-        |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS alon,
-        |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS alat
-        |  FROM orders WHERE o_orderkey % 37 = 0),
+        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
+        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
+        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
         |acells AS (
         |  SELECT area_id, alon, alat,
         |    CAST(floor(alon / $CellDeg) AS BIGINT) + i AS cx,
@@ -353,13 +341,8 @@ object SkiQueries {
         |FROM best WHERE dist_m <= $RadiusM
         |GROUP BY area_id ORDER BY area_id""".stripMargin
     }) { (s, d) =>
-    val areas = graft.Tables.orders(s, d)
-      .filter(pmod(col("o_orderkey"), lit(37)) === 0)
-      .select(col("o_orderkey").as("area_id"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("alon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0).as("alat"))
+    val areas = SkiFeatures.areas(s, d)
+      .select(col("area_id"), col("lon").as("alon"), col("lat").as("alat"))
     val rverts = formatted(s, d).filter(col("kept"))
       .select(col("way_id"), col("coords"), explode(col("coords")).as("v"))
     val cand = GridJoin(areas, rverts, (col("alon"), col("alat")),
@@ -617,25 +600,18 @@ object SkiQueries {
   private val qPolygonAssign = QuerySpec.of(
     "q_ski_polygon_assign", {
       val lenSqlLocal = lenSql
+      val (hexLon, hexLat) =
+        SkiFeatures.sql.hexVertex("area_id", "alon", "alat", 0.012)
       s"""WITH $oraclePrelude,
         |areas AS (
         |  SELECT o_orderkey AS area_id,
-        |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS alon,
-        |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS alat
-        |  FROM orders WHERE o_orderkey % 37 = 0),
+        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
+        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
+        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
         |verts AS (
         |  SELECT area_id, alon, alat, k,
-        |    alon + (CAST(0.012 AS DOUBLE) * (CAST(1 AS DOUBLE)
-        |      + CAST((area_id + k) % 3 AS DOUBLE) * CAST(0.3 AS DOUBLE)))
-        |      * (CASE k WHEN 0 THEN CAST(1 AS DOUBLE) WHEN 1 THEN CAST(0.5 AS DOUBLE)
-        |         WHEN 2 THEN CAST(-0.5 AS DOUBLE) WHEN 3 THEN CAST(-1 AS DOUBLE)
-        |         WHEN 4 THEN CAST(-0.5 AS DOUBLE) ELSE CAST(0.5 AS DOUBLE) END) AS vx,
-        |    alat + (CAST(0.012 AS DOUBLE) * (CAST(1 AS DOUBLE)
-        |      + CAST((area_id + k) % 3 AS DOUBLE) * CAST(0.3 AS DOUBLE)))
-        |      * (CASE k WHEN 0 THEN CAST(0 AS DOUBLE) WHEN 1 THEN sqrt(CAST(3 AS DOUBLE)) / 2
-        |         WHEN 2 THEN sqrt(CAST(3 AS DOUBLE)) / 2 WHEN 3 THEN CAST(0 AS DOUBLE)
-        |         WHEN 4 THEN -(sqrt(CAST(3 AS DOUBLE)) / 2)
-        |         ELSE -(sqrt(CAST(3 AS DOUBLE)) / 2) END) AS vy
+        |    $hexLon AS vx,
+        |    $hexLat AS vy
         |  FROM areas, unnest([0, 1, 2, 3, 4, 5]) AS uk(k)),
         |edges AS (
         |  SELECT a.area_id, a.vx AS x1, a.vy AS y1, b.vx AS x2, b.vy AS y2
@@ -684,21 +660,10 @@ object SkiQueries {
         |ORDER BY area_id""".stripMargin
     }) { (s, d) =>
     import graft.functions.GeoFunctions.pointInPolygon
-    val sqrt32 = sqrt(lit(3.0)) / 2
-    val cosK = Seq(lit(1.0), lit(0.5), lit(-0.5), lit(-1.0), lit(-0.5), lit(0.5))
-    val sinK = Seq(lit(0.0), sqrt32, sqrt32, lit(0.0), -sqrt32, -sqrt32)
-    val areas = graft.Tables.orders(s, d)
-      .filter(pmod(col("o_orderkey"), lit(37)) === 0)
-      .select(col("o_orderkey").as("area_id"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("alon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0).as("alat"))
-      .withColumn("ring", array((0 until 6).map { k =>
-        val r = lit(0.012) * (lit(1.0)
-          + pmod(col("area_id") + k, lit(3)).cast("double") * lit(0.3))
-        array(col("alon") + r * cosK(k), col("alat") + r * sinK(k))
-      }: _*))
+    val areas = SkiFeatures.areas(s, d)
+      .select(col("area_id"), col("lon").as("alon"), col("lat").as("alat"))
+      .withColumn("ring", array(SkiFeatures.hexRing(col("area_id"),
+        col("alon"), col("alat"), 0.012).map { case (x, y) => array(x, y) }: _*))
     // one row per way_id: the synthetic lineitem carries duplicate
     // (orderkey, linenumber) pairs, and a feature participates in
     // containment once (the 2D geometry, length and site flag are all
@@ -749,8 +714,8 @@ object SkiQueries {
         |    x -> x IN ('downhill', 'nordic'))) AS u(act)),
         |lf AS (
         |  SELECT o_orderkey + 100000000 AS oid, 'downhill' AS act,
-        |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS lon,
-        |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS lat,
+        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS lon,
+        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS lat,
         |    true AS is_lift
         |  FROM orders WHERE o_orderkey % 23 = 0),
         |nodes AS (
@@ -799,10 +764,8 @@ object SkiQueries {
       .filter(pmod(col("o_orderkey"), lit(23)) === 0)
       .select((col("o_orderkey") + 100000000L).as("oid"),
         lit("downhill").as("act"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("lon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0).as("lat"))
+        SkiFeatures.anchorLon(col("o_orderkey")).as("lon"),
+        SkiFeatures.anchorLat(col("o_orderkey")).as("lat"))
       .withColumn("is_lift", lit(true))
     Clustering.generateSkiAreas(runNodes.unionByName(liftNodes),
         RadiusM, CellDeg)
@@ -826,9 +789,9 @@ object SkiQueries {
         |areas AS (
         |  SELECT o_orderkey AS area_id,
         |    CASE WHEN o_orderkey % 2 = 0 THEN 'downhill' ELSE 'nordic' END AS act,
-        |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS alon,
-        |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS alat
-        |  FROM orders WHERE o_orderkey % 37 = 0),
+        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
+        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
+        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
         |rc AS (
         |  SELECT way_id AS okey, uses, lon0 AS lon, lat0 AS lat,
         |    CAST(floor(lon0 / $CellDeg) AS BIGINT) AS cx,
@@ -856,15 +819,7 @@ object SkiQueries {
         |GROUP BY area_id ORDER BY area_id""".stripMargin
     },
     headline = true) { (s, d) =>
-    val areas = graft.Tables.orders(s, d)
-      .filter(pmod(col("o_orderkey"), lit(37)) === 0)
-      .select(col("o_orderkey").as("area_id"),
-        when(pmod(col("o_orderkey"), lit(2)) === 0, "downhill")
-          .otherwise("nordic").as("act"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("lon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0).as("lat"))
+    val areas = SkiFeatures.areas(s, d)
     val objs = formatted(s, d).filter(col("kept"))
       .select(col("way_id").as("okey"), col("uses"),
         element_at(element_at(col("coords"), 1), 1).as("lon"),

@@ -5,6 +5,7 @@ import graft.functions.GeoFunctions
 import graft.functions.GeoFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import SkiFeatures.{CellDeg, RadiusM}
 
 /** Full ski-area statistics shape (SURVEY A1,
   * `/root/reference/src/statistics/SkiAreaStatistics.ts:37-235`) and
@@ -27,9 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object Statistics {
 
-  private val CellDeg = 0.01
-  private val RadiusM = 500.0
-
   /** Shared oracle CTE block for the per-area machinery (areas, grid
     * assignment, per-activity run rows, lift rows, root elevations) —
     * prefixed by `SkiQueries.oraclePrelude` at each use site. Reused by
@@ -46,9 +44,9 @@ object Statistics {
         "(llon + ldx * 2)", "(llat + ldy)")
     s"""areas AS (
       |  SELECT o_orderkey AS area_id,
-      |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS alon,
-      |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS alat
-      |  FROM orders WHERE o_orderkey % 37 = 0),
+      |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
+      |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
+      |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
       |acells AS (
       |  SELECT area_id, alon, alat,
       |    CAST(floor(alon / $CellDeg) AS BIGINT) + i AS cx,
@@ -80,8 +78,8 @@ object Statistics {
       |    CASE o_custkey % 6 WHEN 0 THEN 'chair_lift' WHEN 1 THEN 'gondola'
       |      WHEN 2 THEN 't-bar' WHEN 3 THEN 'platter'
       |      WHEN 4 THEN 'drag_lift' ELSE NULL END AS lift_type,
-      |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS llon,
-      |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS llat,
+      |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS llon,
+      |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS llat,
       |    CAST((o_orderkey % 4 + 1) AS DOUBLE) * 0.0012 AS ldx,
       |    CAST((o_orderkey % 3 + 1) AS DOUBLE) * 0.0004 AS ldy,
       |    CAST(o_orderkey % 2500 AS DOUBLE) AS lz0,
@@ -120,13 +118,8 @@ object Statistics {
   private[operators] def areaFrames(s: SparkSession, d: String): AreaFrames = {
     def nzMin(c: Column) = min(when(c =!= 0.0, c))
     def nzMax(c: Column) = max(when(c =!= 0.0, c))
-    val areas = graft.Tables.orders(s, d)
-      .filter(pmod(col("o_orderkey"), lit(37)) === 0)
-      .select(col("o_orderkey").as("area_id"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("alon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0).as("alat"))
+    val areas = SkiFeatures.areas(s, d)
+      .select(col("area_id"), col("lon").as("alon"), col("lat").as("alat"))
 
     def pt(i: Int, j: Int) = element_at(element_at(col("coords"), i), j)
     val rr = SkiQueries.formatted(s, d).filter(col("kept"))
@@ -151,10 +144,8 @@ object Statistics {
         coalesce(when(tsel === 0, "chair_lift").when(tsel === 1, "gondola")
           .when(tsel === 2, "t-bar").when(tsel === 3, "platter")
           .when(tsel === 4, "drag_lift"), lit("other")).as("lift_type"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("llon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0).as("llat"),
+        SkiFeatures.anchorLon(col("o_orderkey")).as("llon"),
+        SkiFeatures.anchorLat(col("o_orderkey")).as("llat"),
         (pmod(col("o_orderkey"), lit(4)) + 1).cast("double").*(0.0012).as("ldx"),
         (pmod(col("o_orderkey"), lit(3)) + 1).cast("double").*(0.0004).as("ldy"),
         pmod(col("o_orderkey"), lit(2500)).cast("double").as("lz0"),

@@ -21,10 +21,10 @@ object Validity {
 
   private val qValid = QuerySpec.of(
     "q_ski_geometry_valid",
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT o_orderkey AS fid, o_orderkey % 5 AS cls,
-      |    CAST((o_orderkey * 7919) % 360000 AS DOUBLE) / 1000.0 - 180.0 AS alon,
-      |    CAST((o_orderkey * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0 AS alat,
+      |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
+      |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat,
       |    CAST(o_orderkey % 3 + 1 AS DOUBLE) * 0.001 AS r,
       |    CAST(o_orderkey % 100 AS DOUBLE) AS z
       |  FROM orders),
@@ -80,10 +80,8 @@ object Validity {
     val o = graft.Tables.orders(s, d)
       .select(col("o_orderkey").as("fid"),
         pmod(col("o_orderkey"), lit(5)).as("cls"),
-        (pmod(col("o_orderkey") * 7919, lit(360000)).cast("double") / 1000.0
-          - 180.0).as("alon"),
-        (pmod(col("o_orderkey") * 104729, lit(120000)).cast("double") / 1000.0
-          - 60.0).as("alat"),
+        SkiFeatures.anchorLon(col("o_orderkey")).as("alon"),
+        SkiFeatures.anchorLat(col("o_orderkey")).as("alat"),
         ((pmod(col("o_orderkey"), lit(3)) + 1).cast("double") * 0.001).as("r"),
         pmod(col("o_orderkey"), lit(100)).cast("double").as("z"))
     def p(dlon: org.apache.spark.sql.Column, dlat: org.apache.spark.sql.Column,

@@ -25,4 +25,15 @@ object Golden {
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(lines.mkString("\n").getBytes(UTF_8))
       .map(b => f"$b%02x").mkString
+
+  /** Freeze the row count and digest of `lines` as the [[header]] of
+    * `src/test/resources/golden/<name>`; returns the file written.
+    */
+  def write(name: String, lines: Seq[String]): java.io.File = {
+    val f = new java.io.File(MainSources.root,
+      s"../../test/resources/golden/$name").getCanonicalFile
+    java.nio.file.Files.write(f.toPath,
+      s"rows\t${lines.size}\nsha256\t${sha256(lines)}\n".getBytes(UTF_8))
+    f
+  }
 }

@@ -17,6 +17,17 @@ import org.apache.spark.sql.execution.window.WindowExec
   * rows at sf0.001 are a count and digest in
   * `golden/ski_normalize_window.txt`. Plus the plan shape: no window
   * and no re-aggregation in the split.
+  *
+  * That summary row cannot see segment ids, so N2 itself is also pinned
+  * at fixture scale: every `splitSharedArcs` row of the normalize input
+  * at sf0.001, seg_id included, digested in
+  * `golden/ski_normalize_segments.txt`. A synthesized run is a diagonal
+  * arc then a horizontal one, so two runs never share the first arc
+  * without the second, and that input has no unowned stretch before an
+  * owned one. `golden/ski_normalize_segments_stubs.txt` adds, for every
+  * run whose id ends in 5, a copy of its first arc under a smaller
+  * (negated) id, so those runs open unowned and the seg_no count past it is pinned too.
+  * [[NormalizeSegmentsGolden]] writes both from the sorted-stream code.
   */
 class NormalizeStreamSegmentsSpec extends SparkSpec {
   import spark.implicits._
@@ -134,6 +145,15 @@ class NormalizeStreamSegmentsSpec extends SparkSpec {
     assert(Golden.sha256(rows) == window("sha256"), s"rows: $rows")
   }
 
+  test("N2 segments (seg_id in every row) match the golden digest at fixture scale") {
+    for ((name, stubs) <- NormalizeStreamSegmentsSpec.Goldens) {
+      val rows = NormalizeStreamSegmentsSpec.segmentRows(spark, sf, stubs)
+      val golden = Golden.header(Golden.lines(name))
+      assert(rows.size.toString == golden("rows"), name)
+      assert(Golden.sha256(rows) == golden("sha256"), name)
+    }
+  }
+
   test("streamed plan: exec present, no window, no aggregate in split") {
     val p = (i: Int) => Seq(10.0 + i * 0.001, 47.0)
     val runs = runsDf(
@@ -152,4 +172,39 @@ class NormalizeStreamSegmentsSpec extends SparkSpec {
       n.isInstanceOf[HashAggregateExec] || n.isInstanceOf[SortAggregateExec])
     assert(aggs <= 2, s"expected only arcMembers' aggregate, got $aggs")
   }
+}
+
+object NormalizeStreamSegmentsSpec {
+  /** golden file -> whether its input carries the first-arc stubs. */
+  val Goldens: Seq[(String, Boolean)] = Seq(
+    "ski_normalize_segments.txt" -> false,
+    "ski_normalize_segments_stubs.txt" -> true)
+
+  /** Every N2 row of the normalize input (plus, with `firstArcStubs`,
+    * the first arc of each run whose id ends in 5, under its negated
+    * id), as sorted strings.
+    */
+  def segmentRows(spark: org.apache.spark.sql.SparkSession, sf: String,
+      firstArcStubs: Boolean): List[String] = {
+    val in = graft.operators.SkiQueries.normalizeInput(spark, sf)
+    val runs =
+      if (!firstArcStubs) in
+      else in.unionByName(in.filter(pmod(col("run_id"), lit(10)) === 5)
+        .select((-col("run_id")).as("run_id"), col("props"),
+          slice(col("coords"), 1, 2).as("coords")))
+    Normalization.splitSharedArcs(runs)
+      .collect().map(_.toString).sorted.toList
+  }
+}
+
+/** Rewrites the N2 golden digests from the current code:
+  * `sbt "Test/runMain graft.NormalizeSegmentsGolden <sf0.001 dir>"`.
+  */
+object NormalizeSegmentsGolden {
+  def main(args: Array[String]): Unit =
+    for ((name, stubs) <- NormalizeStreamSegmentsSpec.Goldens) {
+      val rows = NormalizeStreamSegmentsSpec.segmentRows(
+        SparkSpec.session, args(0), stubs)
+      println(s"${Golden.write(name, rows)}: ${rows.size} rows")
+    }
 }

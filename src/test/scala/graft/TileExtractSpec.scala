@@ -63,7 +63,7 @@ class TileExtractSpec extends SparkSpec {
       .toDF("zoom", "tile_x", "tile_y", "n_layers", "tile")
     val dir = java.nio.file.Files.createTempDirectory("graft_bigtile_")
     val mb = dir.resolve("big.mbtiles")
-    graft.operators.MvtTiles.writeMbtilesOf(spark, tiles, mb)
+    graft.operators.MvtTiles.writeMbtilesOf(spark, tiles, mb, gzip = false)
     val out = dir.resolve("tiles")
     assert(graft.operators.MvtTiles.extractTiles(spark, mb, out) == 3L)
     Seq((3, 1L, 2L, 50000, 7), (3, 1L, 3L, 100, 9),
@@ -102,13 +102,7 @@ class TileExtractSpec extends SparkSpec {
       .toDF("zoom", "tile_x", "tile_y", "n_layers", "tile")
     val dir = java.nio.file.Files.createTempDirectory("graft_gzct_")
     val mb = dir.resolve("gz.mbtiles")
-    val prev = spark.conf.getOption(MvtTiles.GzipKey)
-    spark.conf.set(MvtTiles.GzipKey, "true")
-    try MvtTiles.writeMbtilesOf(spark, tiles, mb)
-    finally prev match {
-      case Some(v) => spark.conf.set(MvtTiles.GzipKey, v)
-      case None => spark.conf.unset(MvtTiles.GzipKey)
-    }
+    MvtTiles.writeMbtilesOf(spark, tiles, mb, gzip = true)
     val out = dir.resolve("tiles")
     assert(MvtTiles.extractTiles(spark, mb, out) == 1L)
     val bytes = java.nio.file.Files.readAllBytes(out.resolve("2/1/1.pbf"))
