@@ -38,12 +38,7 @@ object ClusterPipeline {
       val (hexLon, hexLat) =
         SkiFeatures.sql.hexVertex("area_id", "alon", "alat", 0.004)
       s"""WITH RECURSIVE ${SkiQueries.oraclePrelude},
-        |areas AS (
-        |  SELECT o_orderkey AS area_id,
-        |    CASE WHEN o_orderkey % 2 = 0 THEN 'downhill' ELSE 'nordic' END AS act,
-        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
-        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
-        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
+        |areas AS (${SkiFeatures.sql.areas(withAct = true)}),
         |verts AS (
         |  SELECT area_id, alon, alat, k,
         |    $hexLon AS vx,
@@ -54,10 +49,8 @@ object ClusterPipeline {
         |  FROM verts a JOIN verts b
         |    ON a.area_id = b.area_id AND b.k = (a.k + 1) % 6),
         |acells AS (
-        |  SELECT area_id, act, alon, alat,
-        |    CAST(floor(alon / $CellDeg) AS BIGINT) + i AS cx,
-        |    CAST(floor(alat / $CellDeg) AS BIGINT) + j AS cy
-        |  FROM areas, unnest([-1, 0, 1]) AS ui(i), unnest([-1, 0, 1]) AS uj(j)),
+        |  ${GridJoin.sqlWalk("area_id, act, alon, alat", "alon", "alat",
+              "areas", CellDeg, GridJoin.Within(RadiusM))}),
         |rc AS (
         |  SELECT way_id, uses, (way_id % 8 = 3) AS in_site, ($lenSqlLocal) AS len_m,
         |    lon0 AS lon, lat0 AS lat, dx, dy,
@@ -102,8 +95,7 @@ object ClusterPipeline {
         |  UNION
         |  SELECT r.area_id, r.act, o.way_id, o.lon, o.lat, o.cx, o.cy
         |  FROM reach r JOIN rc2 o
-        |    ON o.cx BETWEEN r.cx - 1 AND r.cx + 1
-        |    AND o.cy BETWEEN r.cy - 1 AND r.cy + 1
+        |    ON ${GridJoin.sqlNear("r", "o", CellDeg, GridJoin.Within(RadiusM))}
         |  WHERE ${GeoFunctions.sqlHaversineM("r.lon", "r.lat", "o.lon", "o.lat")} <= $RadiusM
         |    AND list_contains(o.uses, r.act)),
         |pass2 AS (
@@ -117,17 +109,13 @@ object ClusterPipeline {
         |  FROM rc3, unnest(list_filter(uses,
         |    x -> x IN ('downhill', 'nordic'))) AS u(act)
         |  UNION ALL
-        |  SELECT (o_orderkey + 100000000) * 2 AS nid, 'downhill' AS act,
-        |    o_orderkey + 100000000 AS oid,
-        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS lon,
-        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS lat,
-        |    true AS is_lift,
-        |    CAST(floor(${SkiFeatures.sql.anchorLon("o_orderkey")} / $CellDeg) AS BIGINT) AS cx,
-        |    CAST(floor(${SkiFeatures.sql.anchorLat("o_orderkey")} / $CellDeg) AS BIGINT) AS cy
-        |  FROM orders WHERE o_orderkey % 23 = 0),
+        |  SELECT oid * 2 AS nid, act, oid, lon, lat, is_lift,
+        |    CAST(floor(lon / $CellDeg) AS BIGINT) AS cx,
+        |    CAST(floor(lat / $CellDeg) AS BIGINT) AS cy
+        |  FROM (${SkiFeatures.sql.liftNodes})),
         |glc AS (
-        |  SELECT nid, act, lon, lat, cx + i AS cx2, cy + j AS cy2
-        |  FROM gn, unnest([-1, 0, 1]) AS ui(i), unnest([-1, 0, 1]) AS uj(j)),
+        |  ${GridJoin.sqlWalk("nid, act, lon, lat", "lon", "lat", "gn",
+              CellDeg, GridJoin.Within(RadiusM), ("cx2", "cy2"))}),
         |gpairs AS (
         |  SELECT l.nid AS a, r2.nid AS b
         |  FROM glc l JOIN gn r2
@@ -199,15 +187,8 @@ object ClusterPipeline {
           array(lit("downhill"), lit("nordic")))).as("act"),
         col("lon"), col("lat"))
       .withColumn("is_lift", lit(false))
-    val liftNodes = graft.Tables.orders(s, d)
-      .filter(pmod(col("o_orderkey"), lit(23)) === 0)
-      .select((col("o_orderkey") + 100000000L).as("oid"),
-        lit("downhill").as("act"),
-        SkiFeatures.anchorLon(col("o_orderkey")).as("lon"),
-        SkiFeatures.anchorLat(col("o_orderkey")).as("lat"))
-      .withColumn("is_lift", lit(true))
     val pass3 = Clustering.generateSkiAreas(
-      runNodes.unionByName(liftNodes), RadiusM, CellDeg)
+      runNodes.unionByName(SkiFeatures.liftNodes(s, d)), RadiusM, CellDeg)
       .filter(!col("is_lift"))
       .select(col("oid").as("way_id"), col("area_id"))
       .distinct()

@@ -80,6 +80,40 @@ object GridJoin {
     (xr * 2 + 1) * (yr * 2 + 1)
   }
 
+  /** The DuckDB twin of a walk, for the oracles: a SELECT of `cols`
+    * and, per row of `from` at (`lon`, `lat`), each cell it walks to,
+    * named `out`. It walks a fixed square of a [[Within]] walk's
+    * latitude half-width on both axes, so at a 500 m radius on the
+    * 0.01° grid it is exact up to about |lat| 63° (FIXTURES.md); an
+    * oracle walk that widens with latitude belongs here and in
+    * [[sqlNear]].
+    */
+  def sqlWalk(cols: String, lon: String, lat: String, from: String,
+      cellDeg: Double, reach: Reach,
+      out: (String, String) = ("cx", "cy")): String = {
+    val n = sqlHalfWidth(cellDeg, reach)
+    val offsets = (-n to n).mkString("[", ", ", "]")
+    def cell(x: String) = s"CAST(floor($x / $cellDeg) AS BIGINT)"
+    s"""SELECT $cols,
+       |    ${cell(lon)} + i AS ${out._1}, ${cell(lat)} + j AS ${out._2}
+       |  FROM $from, unnest($offsets) AS ui(i), unnest($offsets) AS uj(j)""".stripMargin
+  }
+
+  /** The same walk as a join condition, for the oracles' recursive
+    * closures: the cell (`b`.cx, `b`.cy) is one the cell of row `a`
+    * walks to.
+    */
+  def sqlNear(a: String, b: String, cellDeg: Double, reach: Reach): String = {
+    val n = sqlHalfWidth(cellDeg, reach)
+    s"""$b.cx BETWEEN $a.cx - $n AND $a.cx + $n
+       |    AND $b.cy BETWEEN $a.cy - $n AND $a.cy + $n""".stripMargin
+  }
+
+  private def sqlHalfWidth(cellDeg: Double, reach: Reach): Long = reach match {
+    case Within(m, _) => latHalfWidth(m, cellDeg)
+    case Cells(k) => k.toLong
+  }
+
   private def halfWidths(lat: Column, cellDeg: Double,
       reach: Reach): (Column, Column) = reach match {
     case Within(m, _) => (column(lonHalfWidth(expression(lat), m, cellDeg)),

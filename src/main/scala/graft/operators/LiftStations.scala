@@ -112,10 +112,7 @@ object LiftStations {
         |  SELECT o_orderkey AS lift_id,
         |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
         |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat,
-        |    CAST((o_orderkey % 4 + 1) AS DOUBLE) * 0.0012 AS ldx,
-        |    CAST((o_orderkey % 3 + 1) AS DOUBLE) * 0.0004 AS ldy,
-        |    CAST(o_orderkey % 2500 AS DOUBLE) AS z0,
-        |    CAST(o_custkey % 400 + 50 AS DOUBLE) AS rise,
+        |    ${SkiFeatures.sql.liftLine("o_orderkey", "o_custkey")},
         |    o_custkey AS ck
         |  FROM orders WHERE o_orderkey % 3 = 0),
         |stations AS (
@@ -141,11 +138,10 @@ object LiftStations {
         |    CAST(floor(slat / $CellDeg) AS BIGINT) AS cy
         |  FROM st),
         |lvert AS (
-        |  SELECT DISTINCT lift_id,
-        |    CAST(floor((alon + CAST(v AS DOUBLE) * ldx) / $CellDeg) AS BIGINT) + i AS cx,
-        |    CAST(floor((alat + CAST(least(v, 1) AS DOUBLE) * ldy) / $CellDeg) AS BIGINT) + j AS cy
-        |  FROM lifts, unnest([0, 1, 2]) AS uv(v),
-        |    unnest([-1, 0, 1]) AS ui(i), unnest([-1, 0, 1]) AS uj(j)),
+        |  ${GridJoin.sqlWalk("DISTINCT lift_id", "(alon + CAST(v AS DOUBLE) * ldx)",
+              "(alat + CAST(least(v, 1) AS DOUBLE) * ldy)",
+              "lifts, unnest([0, 1, 2]) AS uv(v)", CellDeg,
+              GridJoin.Within(ThresholdM))}),
         |cand AS (
         |  SELECT DISTINCT s.sid, l.lift_id
         |  FROM scell s JOIN lvert l ON s.cx = l.cx AND s.cy = l.cy),
@@ -200,18 +196,14 @@ object LiftStations {
         |  (floor((snap_lon) * 1e6 + 0.5) / 1e6) AS snap_lon, (floor((snap_lat) * 1e6 + 0.5) / 1e6) AS snap_lat
         |FROM best ORDER BY sid""".stripMargin
     }) { (s, d) =>
-    val o = graft.Tables.orders(s, d)
-    val lifts = o.filter(pmod(col("o_orderkey"), lit(3)) === 0)
-      .select(col("o_orderkey").as("lift_id"),
-        SkiFeatures.anchorLon(col("o_orderkey")).as("alon"),
-        SkiFeatures.anchorLat(col("o_orderkey")).as("alat"),
-        (pmod(col("o_orderkey"), lit(4)) + 1).cast("double")
-          .*(0.0012).as("ldx"),
-        (pmod(col("o_orderkey"), lit(3)) + 1).cast("double")
-          .*(0.0004).as("ldy"),
-        pmod(col("o_orderkey"), lit(2500)).cast("double").as("z0"),
-        (pmod(col("o_custkey"), lit(400)) + 50).cast("double").as("rise"),
-        col("o_custkey").as("ck"))
+    // the station fixture's own lift selection (every 3rd order, not
+    // SkiFeatures.isLift); only the line comes from SkiFeatures
+    val k = col("o_orderkey")
+    val lifts = graft.Tables.orders(s, d).filter(pmod(k, lit(3)) === 0)
+      .select(Seq(k.as("lift_id"), SkiFeatures.anchorLon(k).as("alon"),
+        SkiFeatures.anchorLat(k).as("alat"))
+        ++ SkiFeatures.liftLine(k, col("o_custkey"))
+        :+ col("o_custkey").as("ck"): _*)
       .withColumn("coords", array(
         array(col("alon"), col("alat"), col("z0")),
         array(col("alon") + col("ldx"), col("alat") + col("ldy"),

@@ -52,11 +52,7 @@ object MultiPart {
       }.mkString(",\n        |      ")
       val lenSqlLocal = SkiQueries.lenSql
       s"""WITH ${SkiQueries.oraclePrelude},
-        |areas AS (
-        |  SELECT o_orderkey AS area_id,
-        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
-        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
-        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
+        |areas AS (${SkiFeatures.sql.areas()}),
         |verts AS (
         |  SELECT area_id, (p).rn AS rn, (p).k AS k,
         |    alon + (p).vx * $U AS x, alat + (p).vy * $U AS y
@@ -67,10 +63,8 @@ object MultiPart {
         |  FROM verts a JOIN verts b
         |    ON a.area_id = b.area_id AND a.rn = b.rn AND b.k = (a.k + 1) % 4),
         |acells AS (
-        |  SELECT area_id, alon, alat,
-        |    CAST(floor(alon / $CellDeg) AS BIGINT) + i AS cx,
-        |    CAST(floor(alat / $CellDeg) AS BIGINT) + j AS cy
-        |  FROM areas, unnest([-1, 0, 1]) AS ui(i), unnest([-1, 0, 1]) AS uj(j)),
+        |  ${GridJoin.sqlWalk("area_id, alon, alat", "alon", "alat", "areas",
+              CellDeg, GridJoin.Cells(1))}),
         |runs AS (
         |  SELECT DISTINCT way_id, ($lenSqlLocal) AS len_m, lon0, lat0, dx, dy,
         |    CAST(floor(lon0 / $CellDeg) AS BIGINT) AS cx,

@@ -43,18 +43,23 @@ import org.apache.spark.sql.functions._
   *     kernel walk per row emits the feature's final packed geometry
   *     command bytes AND its stats (n_parts, n_points, checksum), so
   *     per-point data never crosses an exchange as nested arrays;
-  *  4. encoding — [[graft.functions.MvtKernel]] frames the pre-encoded
-  *     feature bytes into each layer's protobuf frame after a per-tile
-  *     collect; a tile is the concatenation of its layer frames — no
-  *     per-point work after the shuffle, no driver round-trip, no
-  *     external binary.
+  *  4. encoding — [[tileBytes]] / [[encodeStatsOf]]: one hash
+  *     exchange on (z, tx, ty), a spillable local sort by tile, layer
+  *     and fid, then [[graft.plans.TileStreamEncodeExec]] walks each
+  *     tile's sorted rows once, framing the pre-encoded feature bytes
+  *     into each layer's protobuf frame (a tile is the concatenation
+  *     of its layer frames) and summing the per-feature stats — no
+  *     per-tile array, no per-point work after the shuffle, no driver
+  *     round-trip, no external binary. [[encodeOf]] (a per-tile
+  *     collect_list, byte-identical) is the streaming tile-refresh's
+  *     and the probes' encode.
   *
   * Scale shape: steps 1-3 are per-row expressions over the feature
   * tables; the only wide exchanges are the two bounded cap windows
-  * over the z≤8 slice and one shuffle on (z, tx, ty, layer) — the
-  * partition key a tile server wants, so a 1000-executor run writes
-  * tiles straight out of the agg, and the cap guarantees every
-  * low-zoom group is bounded by K(z) before any collect happens.
+  * over the z≤8 slice and the one (z, tx, ty) exchange of the encode —
+  * the partition key a tile server wants. The encode's memory per task
+  * is one tile's bytes, and the cap bounds every low-zoom tile by K(z)
+  * features per layer.
   *
   * Correctness: `q_tiles_mvt` is the DuckDB-oracled stats row
   * (per-tile/zoom/layer feature/part/point counts + an order-weighted
@@ -143,7 +148,7 @@ object MvtTiles {
     val o = graft.Tables.orders(s, d)
     // the tiles' own lift layout, not SkiFeatures.anchorLon/Lat: the two
     // multipliers swap (104729 for lon, 7919 for lat), here and in the oracle
-    val lifts = o.filter(pmod(col("o_orderkey"), lit(23)) === 0)
+    val lifts = o.filter(SkiFeatures.isLift(col("o_orderkey")))
       .select(col("o_orderkey").as("fid"),
         (pmod(col("o_orderkey") * 104729, lit(360000)).cast("double")
           / 1000.0 - 180.0).as("llon"),
@@ -216,7 +221,7 @@ object MvtTiles {
       |      + CAST(k AS DOUBLE)
       |        * (CAST(o_orderkey % 2 + 1 AS DOUBLE) * 0.001)
       |  FROM orders, unnest([0, 1]) AS uk(k)
-      |  WHERE o_orderkey % 23 = 0
+      |  WHERE ${SkiFeatures.sql.isLift("o_orderkey")}
       |  UNION ALL
       |  SELECT 'skiareas', o_orderkey, 3, 0, k,
       |    $hexLon,
@@ -845,11 +850,10 @@ object MvtTiles {
   }
 
   // The SERVING-PATH figure (VERDICT r16 #3): same prep → cap → clip →
-  // collect → whole-tile protobuf encode as q_tiles_mvt_bytes, but
+  // sorted-stream whole-tile protobuf encode as q_tiles_mvt_bytes, but
   // WITHOUT the decode round-trip — MvtDecodeExpr re-decoding the
-  // engine's own bytes is pure correctness-gate cost (~⅓ of the sf1
-  // MVT solo figure, SCALING.md) that production tile serving never
-  // pays. The encode stays load-bearing under the oracle through
+  // engine's own bytes is pure correctness-gate cost that production
+  // tile serving never pays. The encode stays load-bearing under the oracle through
   // `n_layers`, which only the encoder's layer-run walk produces; the
   // per-tile feature/part/point/checksum stats are summed by the SAME
   // walk that frames the features, so nothing is computed twice. This

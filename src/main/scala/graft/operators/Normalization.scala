@@ -49,6 +49,19 @@ object Normalization {
 
   private val Q = 1e7
 
+  /** A coordinate as an integer on the 1e-7° grid, rounded half away
+    * from zero: how the queries key and compare normalized output.
+    */
+  def quantized(c: Column): Column =
+    (c * Q + when(c >= 0, 0.5).otherwise(-0.5)).cast("long")
+
+  /** The oracles' twin of [[quantized]] (it rounds half up), and its
+    * inverse.
+    */
+  def sqlQuantized(x: String): String =
+    s"CAST(floor(($x * 10000000) + 0.5) AS BIGINT)"
+  def sqlUnquantized(x: String): String = s"(CAST($x AS DOUBLE) / 10000000.0)"
+
   /** (x, y) quantized coordinates → one long. x, y must fit in int. */
   private def pack(x: Column, y: Column): Column =
     shiftleft(x, 32).bitwiseOR(y.bitwiseAND(lit(0xFFFFFFFFL)))

@@ -35,16 +35,13 @@ import SkiFeatures.{CellDeg, RadiusM}
   */
 object PipelineE2E {
 
-  private def qix(c: Column): Column =
-    (c * 1e7 + when(c >= 0, 0.5).otherwise(-0.5)).cast("long")
-
   // Each stage is a def the profiler's `pipeline.*` phases call too
   // (graft.Profile), so a stage timing is the query's own code.
 
   /** Stages 1-2: formatted kept runs (P1/P7-P10) plus partial-overlap
-    * duplicates with conflicting props — same construction as
-    * q_ski_normalize_props, so N2 re-segmentation and the N4 lattice
-    * both fire inside the chain — normalized (N1-N4).
+    * duplicates with conflicting props — q_ski_normalize_props' input
+    * ([[SkiQueries.normalizePropsInput]]), so N2 re-segmentation and
+    * the N4 lattice both fire inside the chain — normalized (N1-N4).
     *
     * Persisted per dataset fingerprint as a [[graft.Scaffold]] parquet
     * artifact: the reference's prepare() MATERIALIZES each phase to a
@@ -60,27 +57,7 @@ object PipelineE2E {
     */
   private[graft] def normalized(s: SparkSession, d: String): DataFrame =
     graft.Scaffold.table(s, "pipeline-norm", SkiFeatures.memoKey(s, d)) {
-      val fk = SkiQueries.formatted(s, d).filter(col("kept"))
-      val propsCol = struct(
-        col("uses"), col("name"), col("ref"), col("difficulty"),
-        col("grooming"), col("status"), col("oneway"), col("gladed"),
-        col("patrolled"), col("snowmaking"), col("snowfarming"),
-        col("tunnel"), col("lit"), col("wikidata_id"))
-      val base = fk.select(col("way_id").as("run_id"), propsCol.as("props"),
-        col("coords"))
-      val dupProps = struct(
-        array(lit("skitour")).as("uses"), lit("ZDUP").as("name"),
-        lit(null).cast("string").as("ref"), lit("novice").as("difficulty"),
-        lit(null).cast("string").as("grooming"), lit("operating").as("status"),
-        lit(false).as("oneway"), lit(null).cast("boolean").as("gladed"),
-        lit(true).as("patrolled"), lit(null).cast("boolean").as("snowmaking"),
-        lit(null).cast("boolean").as("snowfarming"),
-        lit(null).cast("boolean").as("tunnel"),
-        lit(null).cast("boolean").as("lit"), lit("Q1").as("wikidata_id"))
-      val overlap = fk.filter(pmod(col("way_id"), lit(10)) === 4)
-        .select((col("way_id") + 1000000000L).as("run_id"),
-          dupProps.as("props"), slice(col("coords"), 2, 2).as("coords"))
-      Normalization.normalizeRuns(base.unionByName(overlap),
+      Normalization.normalizeRuns(SkiQueries.normalizePropsInput(s, d),
         Normalization.RunPropsLattice)
     }
 
@@ -98,10 +75,10 @@ object PipelineE2E {
       col("props.uses").as("uses"),
       coalesce(col("props.difficulty"), lit("other")).as("difficulty"),
       col("coords"),
-      qix(element_at(element_at(col("coords"), 1), 1)).as("x0"),
-      qix(element_at(element_at(col("coords"), 1), 2)).as("y0"),
-      qix(element_at(element_at(col("coords"), -1), 1)).as("xn"),
-      qix(element_at(element_at(col("coords"), -1), 2)).as("yn"))
+      Normalization.quantized(element_at(element_at(col("coords"), 1), 1)).as("x0"),
+      Normalization.quantized(element_at(element_at(col("coords"), 1), 2)).as("y0"),
+      Normalization.quantized(element_at(element_at(col("coords"), -1), 1)).as("xn"),
+      Normalization.quantized(element_at(element_at(col("coords"), -1), 2)).as("yn"))
 
   // ---- stage 3: elevation enrichment (E1 cache-aside, stub) ----
   // EVERY coordinate gets a z — the reference appends z to every
@@ -119,8 +96,8 @@ object PipelineE2E {
     norm.select(col("run_id").as("okey"),
         posexplode(col("coords")).as(Seq("pidx", "pt")))
       .select(col("okey"), col("pidx"),
-        packKey(qix(element_at(col("pt"), 1)),
-          qix(element_at(col("pt"), 2))).as("key"))
+        packKey(Normalization.quantized(element_at(col("pt"), 1)),
+          Normalization.quantized(element_at(col("pt"), 2))).as("key"))
 
   private[graft] def elevationCache(s: SparkSession,
       pts: DataFrame): DataFrame = {
@@ -207,7 +184,7 @@ object PipelineE2E {
 
   private val qPipeline = QuerySpec.of(
     "q_pipeline_e2e", {
-      val D = (x: String) => s"(CAST($x AS DOUBLE) / 10000000.0)"
+      val D = Normalization.sqlUnquantized _
       val hav = GeoFunctions.sqlHaversineM _
       val zStart = Enrichment.sqlStubElevation(
         "(CAST(x0 AS VARCHAR) || '_' || CAST(y0 AS VARCHAR))")
@@ -220,11 +197,7 @@ object PipelineE2E {
       val len2 = hav(D("e.x0"), D("e.y0"), D("e.xn"), D("e.yn"))
       s"""WITH RECURSIVE ${SkiQueries.oraclePrelude},
         |g AS (
-        |  SELECT CAST(floor((lon0 * 10000000) + 0.5) AS BIGINT) AS x0,
-        |    CAST(floor((lat0 * 10000000) + 0.5) AS BIGINT) AS y0,
-        |    CAST(floor(((lon0 + dx) * 10000000) + 0.5) AS BIGINT) AS x1,
-        |    CAST(floor(((lat0 + dy) * 10000000) + 0.5) AS BIGINT) AS y1,
-        |    CAST(floor(((lon0 + dx * 2) * 10000000) + 0.5) AS BIGINT) AS x2,
+        |  SELECT ${SkiQueries.keptGridSql},
         |    way_id, uses, difficulty
         |  FROM kept),
         |grp AS (
@@ -265,17 +238,10 @@ object PipelineE2E {
         |    CAST(floor(lon / $CellDeg) AS BIGINT) AS cx,
         |    CAST(floor(lat / $CellDeg) AS BIGINT) AS cy
         |  FROM elev),
-        |areas AS (
-        |  SELECT o_orderkey AS area_id,
-        |    CASE WHEN o_orderkey % 2 = 0 THEN 'downhill' ELSE 'nordic' END AS act,
-        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
-        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
-        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
+        |areas AS (${SkiFeatures.sql.areas(withAct = true)}),
         |acell AS (
-        |  SELECT area_id, act, alon, alat,
-        |    CAST(floor(alon / $CellDeg) AS BIGINT) + i AS cx,
-        |    CAST(floor(alat / $CellDeg) AS BIGINT) + j AS cy
-        |  FROM areas, unnest([-1, 0, 1]) AS ui(i), unnest([-1, 0, 1]) AS uj(j)),
+        |  ${GridJoin.sqlWalk("area_id, act, alon, alat", "alon", "alat",
+              "areas", CellDeg, GridJoin.Within(RadiusM))}),
         |reach AS (
         |  SELECT a.area_id, a.act, o.x0, o.y0, o.xn, o.yn, o.npts,
         |    o.lon, o.lat, o.cx, o.cy
@@ -286,8 +252,7 @@ object PipelineE2E {
         |  SELECT r.area_id, r.act, o.x0, o.y0, o.xn, o.yn, o.npts,
         |    o.lon, o.lat, o.cx, o.cy
         |  FROM reach r JOIN oc o
-        |    ON o.cx BETWEEN r.cx - 1 AND r.cx + 1
-        |    AND o.cy BETWEEN r.cy - 1 AND r.cy + 1
+        |    ON ${GridJoin.sqlNear("r", "o", CellDeg, GridJoin.Within(RadiusM))}
         |  WHERE ${hav("r.lon", "r.lat", "o.lon", "o.lat")} <= $RadiusM
         |    AND list_contains(o.uses, r.act)),
         |asg AS (

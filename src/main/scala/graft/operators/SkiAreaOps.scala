@@ -62,10 +62,8 @@ object SkiAreaOps {
         |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS lat
         |  FROM orders WHERE o_orderkey % 41 = 0),
         |ocell AS (
-        |  SELECT area_id, lon, lat, acts,
-        |    CAST(floor(lon / $CellDeg) AS BIGINT) + i AS cx,
-        |    CAST(floor(lat / $CellDeg) AS BIGINT) + j AS cy
-        |  FROM osm, unnest([-1, 0, 1]) AS ui(i), unnest([-1, 0, 1]) AS uj(j)),
+        |  ${GridJoin.sqlWalk("area_id, lon, lat, acts", "lon", "lat", "osm",
+              CellDeg, GridJoin.Within(RadiusM))}),
         |kcell AS (
         |  SELECT sk_id, lon, lat, acts,
         |    CAST(floor(lon / $CellDeg) AS BIGINT) AS cx,
@@ -404,16 +402,10 @@ object SkiAreaOps {
       val havAssign = GeoFunctions.sqlHaversineM("a.alon", "a.alat", "r.lon0", "r.lat0")
       val havC = GeoFunctions.sqlHaversineM("cx0", "cy0", "px", "py")
       s"""WITH ${SkiQueries.oraclePrelude},
-        |areas AS (
-        |  SELECT o_orderkey AS area_id,
-        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
-        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
-        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
+        |areas AS (${SkiFeatures.sql.areas()}),
         |acells AS (
-        |  SELECT area_id, alon, alat,
-        |    CAST(floor(alon / $CellDeg) AS BIGINT) + i AS cx,
-        |    CAST(floor(alat / $CellDeg) AS BIGINT) + j AS cy
-        |  FROM areas, unnest([-1, 0, 1]) AS ui(i), unnest([-1, 0, 1]) AS uj(j)),
+        |  ${GridJoin.sqlWalk("area_id, alon, alat", "alon", "alat", "areas",
+              CellDeg, GridJoin.Within(RadiusM))}),
         |rr AS (
         |  SELECT way_id, lon0, lat0, dx, dy,
         |    CAST(floor(lon0 / $CellDeg) AS BIGINT) AS cx,
@@ -553,10 +545,8 @@ object SkiAreaOps {
         |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
         |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
         |acells AS (
-        |  SELECT area_id, alon, alat,
-        |    CAST(floor(alon / $CellDeg) AS BIGINT) + i AS cx,
-        |    CAST(floor(alat / $CellDeg) AS BIGINT) + j AS cy
-        |  FROM areas, unnest([-1, 0, 1]) AS ui(i), unnest([-1, 0, 1]) AS uj(j)),
+        |  ${GridJoin.sqlWalk("area_id, alon, alat", "alon", "alat", "areas",
+              CellDeg, GridJoin.Within(RadiusM))}),
         |rr AS (
         |  SELECT way_id, lon0, lat0, dx, dy,
         |    CAST(floor(lon0 / $CellDeg) AS BIGINT) AS cx,

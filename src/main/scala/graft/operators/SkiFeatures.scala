@@ -25,15 +25,19 @@ import org.apache.spark.sql.functions._
   *                 rootKey piste:name with fallback name + ref-prefix
   *                 strip (P9), ref selection (P8), website/wikidata
   *  - `coords`   = 3-point LineString near the order's [[anchorLon]] /
-  *                 [[anchorLat]] anchor (lat clamped to ±60 so the
-  *                 0.01° grid join's 3×3 neighborhood always covers a
-  *                 500 m radius), with z from the part/quantity columns
+  *                 [[anchorLat]] anchor, with z from the part/quantity
+  *                 columns. The anchor latitude lies in [-60, 60) by
+  *                 construction; GridJoin's walk widens with latitude,
+  *                 while the oracles' fixed ±1 walk
+  *                 ([[GridJoin.sqlWalk]]) is exact at 500 m on the 0.01°
+  *                 grid only up to about |lat| 63°
   *
   * This object also owns the rest of the synthesized ski world, so
   * every query reads one copy of it: the per-key anchor, the ski areas
-  * ([[areas]], every 37th order), their hexagon outlines ([[hexRing]])
-  * and the grid join's [[CellDeg]] / [[RadiusM]]; [[sql]] is the DuckDB
-  * twin the oracles interpolate.
+  * ([[areas]], every 37th order), their hexagon outlines ([[hexRing]]),
+  * the lifts ([[isLift]], every 23rd order; [[liftLine]],
+  * [[liftNodes]]) and the grid join's [[CellDeg]] / [[RadiusM]]; [[sql]]
+  * is the DuckDB twin the oracles interpolate.
   *
   * Lifecycle encoding (lifecycle = l_linenumber % 7):
   *  0  piste:type=uses + piste:abandoned=yes        → abandoned
@@ -85,6 +89,32 @@ object SkiFeatures {
       .select(k.as("area_id"),
         when(pmod(k, lit(2)) === 0, "downhill").otherwise("nordic").as("act"),
         anchorLon(k).as("lon"), anchorLat(k).as("lat"))
+  }
+
+  /** Whether an orders key is a lift: every 23rd order. */
+  def isLift(key: Column): Column = pmod(key, lit(23)) === 0
+
+  /** A lift's line over an orders row (`key`, `custKey`), from its
+    * anchor: two steps of (ldx, ldy) (the second flat), climbing from
+    * `z0` by `rise` per step. The columns ldx, ldy, `z0` (named by the
+    * caller) and rise, in that order.
+    */
+  def liftLine(key: Column, custKey: Column, z0: String = "z0"): Seq[Column] =
+    Seq(((pmod(key, lit(4)) + 1).cast("double") * 0.0012).as("ldx"),
+      ((pmod(key, lit(3)) + 1).cast("double") * 0.0004).as("ldy"),
+      pmod(key, lit(2500)).cast("double").as(z0),
+      (pmod(custKey, lit(400)) + 50).cast("double").as("rise"))
+
+  /** The lifts as clustering nodes — (oid, act, lon, lat, is_lift):
+    * downhill at the anchor, the object id the key + 100000000, apart
+    * from the runs' way ids (order key·10 + line) below 10M orders.
+    */
+  def liftNodes(s: SparkSession, d: String): DataFrame = {
+    val k = col("o_orderkey")
+    Tables.orders(s, d).filter(isLift(k))
+      .select((k + 100000000L).as("oid"), lit("downhill").as("act"),
+        anchorLon(k).as("lon"), anchorLat(k).as("lat"))
+      .withColumn("is_lift", lit(true))
   }
 
   /** An area's hexagon outline around (lon, lat): six (lon, lat)
@@ -183,6 +213,33 @@ object SkiFeatures {
       s"(CAST(($k * 104729) % 120000 AS DOUBLE) / 1000.0 - 60.0)"
     /** The area filter over an orders key. */
     def isArea(k: String): String = s"$k % 37 = 0"
+    /** [[SkiFeatures.areas]] as the oracles select it: (area_id, alon,
+      * alat), with the activity `act` after area_id if `withAct`.
+      */
+    def areas(withAct: Boolean = false): String = {
+      val act = if (withAct) "\n    CASE WHEN o_orderkey % 2 = 0 THEN " +
+        "'downhill' ELSE 'nordic' END AS act," else ""
+      s"""SELECT o_orderkey AS area_id,$act
+         |    ${anchorLon("o_orderkey")} AS alon,
+         |    ${anchorLat("o_orderkey")} AS alat
+         |  FROM orders WHERE ${isArea("o_orderkey")}""".stripMargin
+    }
+    /** The lift filter over an orders key. */
+    def isLift(k: String): String = s"$k % 23 = 0"
+
+    /** The select items of [[SkiFeatures.liftLine]]. */
+    def liftLine(k: String, custKey: String, z0: String = "z0"): String =
+      s"""CAST(($k % 4 + 1) AS DOUBLE) * 0.0012 AS ldx,
+         |    CAST(($k % 3 + 1) AS DOUBLE) * 0.0004 AS ldy,
+         |    CAST($k % 2500 AS DOUBLE) AS $z0,
+         |    CAST($custKey % 400 + 50 AS DOUBLE) AS rise""".stripMargin
+
+    /** [[SkiFeatures.liftNodes]]: a SELECT of (oid, act, lon, lat, is_lift). */
+    val liftNodes: String =
+      s"""SELECT o_orderkey + 100000000 AS oid, 'downhill' AS act,
+         |    ${anchorLon("o_orderkey")} AS lon,
+         |    ${anchorLat("o_orderkey")} AS lat, true AS is_lift
+         |  FROM orders WHERE ${isLift("o_orderkey")}""".stripMargin
 
     /** Vertex `k` of [[hexRing]] as (lon, lat), `k` (0..5) being a
       * column of the query.

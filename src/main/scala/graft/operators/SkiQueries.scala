@@ -188,16 +188,10 @@ object SkiQueries {
   private val qGridJoin = QuerySpec.of(
     "q_ski_grid_join",
     s"""WITH $oraclePrelude,
-      |areas AS (
-      |  SELECT o_orderkey AS area_id,
-      |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
-      |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
-      |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
+      |areas AS (${SkiFeatures.sql.areas()}),
       |acells AS (
-      |  SELECT area_id, alon, alat,
-      |    CAST(floor(alon / $CellDeg) AS BIGINT) + i AS cx,
-      |    CAST(floor(alat / $CellDeg) AS BIGINT) + j AS cy
-      |  FROM areas, unnest([-1, 0, 1]) AS ui(i), unnest([-1, 0, 1]) AS uj(j)),
+      |  ${GridJoin.sqlWalk("area_id, alon, alat", "alon", "alat", "areas",
+            CellDeg, GridJoin.Within(RadiusM))}),
       |rcells AS (
       |  SELECT way_id, lon0, lat0,
       |    CAST(floor(lon0 / $CellDeg) AS BIGINT) AS cx,
@@ -237,16 +231,10 @@ object SkiQueries {
       val hav = GeoFunctions.sqlHaversineM("a.alon", "a.alat",
         "r.lon0", "r.lat0")
       s"""WITH $oraclePrelude,
-        |areas AS (
-        |  SELECT o_orderkey AS area_id,
-        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
-        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
-        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
+        |areas AS (${SkiFeatures.sql.areas()}),
         |acells AS (
-        |  SELECT area_id, alon, alat,
-        |    CAST(floor(alon / $CellDeg) AS BIGINT) + i AS cx,
-        |    CAST(floor(alat / $CellDeg) AS BIGINT) + j AS cy
-        |  FROM areas, unnest([-1, 0, 1]) AS ui(i), unnest([-1, 0, 1]) AS uj(j)),
+        |  ${GridJoin.sqlWalk("area_id, alon, alat", "alon", "alat", "areas",
+              CellDeg, GridJoin.Within(RadiusM))}),
         |rcells AS (
         |  SELECT way_id, lon0, lat0,
         |    CAST(floor(lon0 / $CellDeg) AS BIGINT) AS cx,
@@ -292,16 +280,10 @@ object SkiQueries {
     "q_ski_line_distance_join", {
       val hav = GeoFunctions.sqlHaversineM("alon", "alat", "snap_lon", "snap_lat")
       s"""WITH $oraclePrelude,
-        |areas AS (
-        |  SELECT o_orderkey AS area_id,
-        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
-        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
-        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
+        |areas AS (${SkiFeatures.sql.areas()}),
         |acells AS (
-        |  SELECT area_id, alon, alat,
-        |    CAST(floor(alon / $CellDeg) AS BIGINT) + i AS cx,
-        |    CAST(floor(alat / $CellDeg) AS BIGINT) + j AS cy
-        |  FROM areas, unnest([-1, 0, 1]) AS ui(i), unnest([-1, 0, 1]) AS uj(j)),
+        |  ${GridJoin.sqlWalk("area_id, alon, alat", "alon", "alat", "areas",
+              CellDeg, GridJoin.Within(RadiusM))}),
         |rverts AS (
         |  SELECT DISTINCT way_id,
         |    CAST(floor((CASE v WHEN 0 THEN lon0 WHEN 1 THEN lon0 + dx
@@ -422,19 +404,24 @@ object SkiQueries {
         .withColumn("run_id", col("run_id") + 1000000000L))
   }
 
+  /** The oracles' kept-run geometry on the 1e-7° grid: select items
+    * x0, y0, x1, y1, x2 over `kept` (the third vertex shares y1).
+    */
+  private[operators] val keptGridSql: String = {
+    val q = Normalization.sqlQuantized _
+    s"""${q("lon0")} AS x0,
+      |    ${q("lat0")} AS y0,
+      |    ${q("(lon0 + dx)")} AS x1,
+      |    ${q("(lat0 + dy)")} AS y1,
+      |    ${q("(lon0 + dx * 2)")} AS x2""".stripMargin
+  }
+
   private val qNormalize = QuerySpec.of(
     "q_ski_normalize", {
       val h = graft.functions.HashFunctions.sqlHash64(
         "least(gs, grev)")
       s"""WITH $oraclePrelude,
-        |dup AS (
-        |  SELECT DISTINCT
-        |    CAST(floor((lon0 * 10000000) + 0.5) AS BIGINT) AS x0,
-        |    CAST(floor((lat0 * 10000000) + 0.5) AS BIGINT) AS y0,
-        |    CAST(floor(((lon0 + dx) * 10000000) + 0.5) AS BIGINT) AS x1,
-        |    CAST(floor(((lat0 + dy) * 10000000) + 0.5) AS BIGINT) AS y1,
-        |    CAST(floor(((lon0 + dx * 2) * 10000000) + 0.5) AS BIGINT) AS x2
-        |  FROM kept),
+        |dup AS (SELECT DISTINCT $keptGridSql FROM kept),
         |n AS (
         |  SELECT count(*) AS n_in FROM (
         |    SELECT 1 FROM kept
@@ -455,11 +442,10 @@ object SkiQueries {
     },
     headline = true) { (s, d) =>
     val dup = normalizeInput(s, d)
-    def qi(c: org.apache.spark.sql.Column) =
-      (c * 1e7 + when(c >= 0, 0.5).otherwise(-0.5)).cast("long")
+    val q = Normalization.quantized _
     val rendered = Normalization.normalizeRuns(dup)
       .withColumn("qs", transform(col("coords"), p =>
-        concat(qi(element_at(p, 1)), lit("_"), qi(element_at(p, 2)))))
+        concat(q(element_at(p, 1)), lit("_"), q(element_at(p, 2)))))
       .withColumn("gs", array_join(col("qs"), ";"))
       .withColumn("grev", array_join(reverse(col("qs")), ";"))
       .select(graft.functions.HashFunctions
@@ -473,24 +459,48 @@ object SkiQueries {
   }
 
   // ---- N4: field-wise property merge lattice over partial overlaps ------
-  // Every kept run with way_id % 10 = 4 gains a PARTIAL-overlap
-  // duplicate covering only its middle edge [p1,p2], with deliberately
-  // conflicting props (novice difficulty, oneway=false, patrolled=true,
-  // name 'ZDUP', uses ['skitour'], wikidata 'Q1'). The run re-segments
-  // into [p0,p1] (own props) + [p1,p2] (lattice-merged props); the two
-  // segments have different merged props, so chain-merge must NOT
-  // re-join them. The oracle groups kept runs by full quantized
-  // geometry (way_id collisions merge too) and replays the
-  // RunJoining.ts reducers per segment field-by-field.
+  /** q_ski_normalize_props' input (and q_pipeline_e2e's): kept runs
+    * with their props struct, plus for every way with way_id % 10 = 4
+    * a PARTIAL-overlap duplicate covering only its middle edge [p1,p2],
+    * with deliberately conflicting props (novice difficulty,
+    * oneway=false, patrolled=true, name 'ZDUP', uses ['skitour'],
+    * wikidata 'Q1').
+    */
+  private[graft] def normalizePropsInput(s: org.apache.spark.sql.SparkSession,
+      d: String): DataFrame = {
+    val fk = formatted(s, d).filter(col("kept"))
+    val propsCol = struct(
+      col("uses"), col("name"), col("ref"), col("difficulty"),
+      col("grooming"), col("status"), col("oneway"), col("gladed"),
+      col("patrolled"), col("snowmaking"), col("snowfarming"),
+      col("tunnel"), col("lit"), col("wikidata_id"))
+    val base = fk.select(col("way_id").as("run_id"), propsCol.as("props"),
+      col("coords"))
+    val dupProps = struct(
+      array(lit("skitour")).as("uses"), lit("ZDUP").as("name"),
+      lit(null).cast("string").as("ref"), lit("novice").as("difficulty"),
+      lit(null).cast("string").as("grooming"), lit("operating").as("status"),
+      lit(false).as("oneway"), lit(null).cast("boolean").as("gladed"),
+      lit(true).as("patrolled"), lit(null).cast("boolean").as("snowmaking"),
+      lit(null).cast("boolean").as("snowfarming"),
+      lit(null).cast("boolean").as("tunnel"),
+      lit(null).cast("boolean").as("lit"), lit("Q1").as("wikidata_id"))
+    val overlap = fk.filter(pmod(col("way_id"), lit(10)) === 4)
+      .select((col("way_id") + 1000000000L).as("run_id"),
+        dupProps.as("props"), slice(col("coords"), 2, 2).as("coords"))
+    base.unionByName(overlap)
+  }
+
+  // The run re-segments into [p0,p1] (own props) + [p1,p2]
+  // (lattice-merged props); the two segments have different merged
+  // props, so chain-merge must NOT re-join them. The oracle groups kept
+  // runs by full quantized geometry (way_id collisions merge too) and
+  // replays the RunJoining.ts reducers per segment field-by-field.
   private val qNormalizeProps = QuerySpec.of(
     "q_ski_normalize_props",
     s"""WITH $oraclePrelude,
       |g AS (
-      |  SELECT CAST(floor((lon0 * 10000000) + 0.5) AS BIGINT) AS x0,
-      |    CAST(floor((lat0 * 10000000) + 0.5) AS BIGINT) AS y0,
-      |    CAST(floor(((lon0 + dx) * 10000000) + 0.5) AS BIGINT) AS x1,
-      |    CAST(floor(((lat0 + dy) * 10000000) + 0.5) AS BIGINT) AS y1,
-      |    CAST(floor(((lon0 + dx * 2) * 10000000) + 0.5) AS BIGINT) AS x2,
+      |  SELECT $keptGridSql,
       |    way_id, uses, difficulty, grooming, oneway, gladed, patrolled,
       |    snowmaking, snowfarming, tunnel, lit, name, ref, wikidata_id
       |  FROM kept),
@@ -542,35 +552,14 @@ object SkiQueries {
       |  snowfarming, tunnel, lit, wikidata_id
       |FROM segs
       |ORDER BY x0, y0, xn, yn, npts""".stripMargin) { (s, d) =>
-    val fk = formatted(s, d).filter(col("kept"))
-    val propsCol = struct(
-      col("uses"), col("name"), col("ref"), col("difficulty"),
-      col("grooming"), col("status"), col("oneway"), col("gladed"),
-      col("patrolled"), col("snowmaking"), col("snowfarming"),
-      col("tunnel"), col("lit"), col("wikidata_id"))
-    val base = fk.select(col("way_id").as("run_id"), propsCol.as("props"),
-      col("coords"))
-    val dupProps = struct(
-      array(lit("skitour")).as("uses"), lit("ZDUP").as("name"),
-      lit(null).cast("string").as("ref"), lit("novice").as("difficulty"),
-      lit(null).cast("string").as("grooming"), lit("operating").as("status"),
-      lit(false).as("oneway"), lit(null).cast("boolean").as("gladed"),
-      lit(true).as("patrolled"), lit(null).cast("boolean").as("snowmaking"),
-      lit(null).cast("boolean").as("snowfarming"),
-      lit(null).cast("boolean").as("tunnel"),
-      lit(null).cast("boolean").as("lit"), lit("Q1").as("wikidata_id"))
-    val overlap = fk.filter(pmod(col("way_id"), lit(10)) === 4)
-      .select((col("way_id") + 1000000000L).as("run_id"),
-        dupProps.as("props"), slice(col("coords"), 2, 2).as("coords"))
-    def qi(c: org.apache.spark.sql.Column) =
-      (c * 1e7 + when(c >= 0, 0.5).otherwise(-0.5)).cast("long")
+    val q = Normalization.quantized _
     Normalization
-      .normalizeRuns(base.unionByName(overlap), Normalization.RunPropsLattice)
+      .normalizeRuns(normalizePropsInput(s, d), Normalization.RunPropsLattice)
       .select(
-        qi(element_at(element_at(col("coords"), 1), 1)).as("x0"),
-        qi(element_at(element_at(col("coords"), 1), 2)).as("y0"),
-        qi(element_at(element_at(col("coords"), -1), 1)).as("xn"),
-        qi(element_at(element_at(col("coords"), -1), 2)).as("yn"),
+        q(element_at(element_at(col("coords"), 1), 1)).as("x0"),
+        q(element_at(element_at(col("coords"), 1), 2)).as("y0"),
+        q(element_at(element_at(col("coords"), -1), 1)).as("xn"),
+        q(element_at(element_at(col("coords"), -1), 2)).as("yn"),
         size(col("coords")).as("npts"),
         concat_ws(";", col("props.uses")).as("uses"),
         col("props.name").as("name"), col("props.ref").as("ref"),
@@ -603,11 +592,7 @@ object SkiQueries {
       val (hexLon, hexLat) =
         SkiFeatures.sql.hexVertex("area_id", "alon", "alat", 0.012)
       s"""WITH $oraclePrelude,
-        |areas AS (
-        |  SELECT o_orderkey AS area_id,
-        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
-        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
-        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
+        |areas AS (${SkiFeatures.sql.areas()}),
         |verts AS (
         |  SELECT area_id, alon, alat, k,
         |    $hexLon AS vx,
@@ -618,11 +603,8 @@ object SkiQueries {
         |  FROM verts a JOIN verts b
         |    ON a.area_id = b.area_id AND b.k = (a.k + 1) % 6),
         |acells AS (
-        |  SELECT area_id, alon, alat,
-        |    CAST(floor(alon / $CellDeg) AS BIGINT) + i AS cx,
-        |    CAST(floor(alat / $CellDeg) AS BIGINT) + j AS cy
-        |  FROM areas, unnest([-2, -1, 0, 1, 2]) AS ui(i),
-        |    unnest([-2, -1, 0, 1, 2]) AS uj(j)),
+        |  ${GridJoin.sqlWalk("area_id, alon, alat", "alon", "alat", "areas",
+              CellDeg, GridJoin.Cells(2))}),
         |runs AS (
         |  SELECT DISTINCT way_id, (way_id % 8 = 3) AS in_site,
         |    ($lenSqlLocal) AS len_m, lon0, lat0, dx, dy,
@@ -712,24 +694,18 @@ object SkiQueries {
         |    false AS is_lift
         |  FROM kept, unnest(list_filter(uses,
         |    x -> x IN ('downhill', 'nordic'))) AS u(act)),
-        |lf AS (
-        |  SELECT o_orderkey + 100000000 AS oid, 'downhill' AS act,
-        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS lon,
-        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS lat,
-        |    true AS is_lift
-        |  FROM orders WHERE o_orderkey % 23 = 0),
         |nodes AS (
         |  SELECT oid * 2 + CASE WHEN act = 'nordic' THEN 1 ELSE 0 END AS nid,
         |    act, lon, lat, is_lift
-        |  FROM (SELECT * FROM rn UNION ALL SELECT * FROM lf)),
+        |  FROM (SELECT * FROM rn UNION ALL ${SkiFeatures.sql.liftNodes})),
         |cells AS (
         |  SELECT nid, act, lon, lat,
         |    CAST(floor(lon / $CellDeg) AS BIGINT) AS cx,
         |    CAST(floor(lat / $CellDeg) AS BIGINT) AS cy
         |  FROM nodes),
         |lcells AS (
-        |  SELECT nid, act, lon, lat, cx + i AS cx2, cy + j AS cy2
-        |  FROM cells, unnest([-1, 0, 1]) AS ui(i), unnest([-1, 0, 1]) AS uj(j)),
+        |  ${GridJoin.sqlWalk("nid, act, lon, lat", "lon", "lat", "cells",
+              CellDeg, GridJoin.Within(RadiusM), ("cx2", "cy2"))}),
         |pairs AS (
         |  SELECT l.nid AS a, r.nid AS b
         |  FROM lcells l JOIN cells r
@@ -760,15 +736,8 @@ object SkiQueries {
         element_at(element_at(col("coords"), 1), 1).as("lon"),
         element_at(element_at(col("coords"), 1), 2).as("lat"))
       .withColumn("is_lift", lit(false))
-    val liftNodes = graft.Tables.orders(s, d)
-      .filter(pmod(col("o_orderkey"), lit(23)) === 0)
-      .select((col("o_orderkey") + 100000000L).as("oid"),
-        lit("downhill").as("act"),
-        SkiFeatures.anchorLon(col("o_orderkey")).as("lon"),
-        SkiFeatures.anchorLat(col("o_orderkey")).as("lat"))
-      .withColumn("is_lift", lit(true))
-    Clustering.generateSkiAreas(runNodes.unionByName(liftNodes),
-        RadiusM, CellDeg)
+    Clustering.generateSkiAreas(
+        runNodes.unionByName(SkiFeatures.liftNodes(s, d)), RadiusM, CellDeg)
       .groupBy("act", "area_id")
       .agg(count(when(!col("is_lift"), 1)).as("n_runs"),
         count(when(col("is_lift"), 1)).as("n_lifts"))
@@ -786,22 +755,15 @@ object SkiQueries {
     "q_ski_cluster", {
       val hav = GeoFunctions.sqlHaversineM _
       s"""WITH RECURSIVE $oraclePrelude,
-        |areas AS (
-        |  SELECT o_orderkey AS area_id,
-        |    CASE WHEN o_orderkey % 2 = 0 THEN 'downhill' ELSE 'nordic' END AS act,
-        |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
-        |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
-        |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
+        |areas AS (${SkiFeatures.sql.areas(withAct = true)}),
         |rc AS (
         |  SELECT way_id AS okey, uses, lon0 AS lon, lat0 AS lat,
         |    CAST(floor(lon0 / $CellDeg) AS BIGINT) AS cx,
         |    CAST(floor(lat0 / $CellDeg) AS BIGINT) AS cy
         |  FROM kept),
         |acell AS (
-        |  SELECT area_id, act, alon, alat,
-        |    CAST(floor(alon / $CellDeg) AS BIGINT) + i AS cx,
-        |    CAST(floor(alat / $CellDeg) AS BIGINT) + j AS cy
-        |  FROM areas, unnest([-1, 0, 1]) AS ui(i), unnest([-1, 0, 1]) AS uj(j)),
+        |  ${GridJoin.sqlWalk("area_id, act, alon, alat", "alon", "alat",
+              "areas", CellDeg, GridJoin.Within(RadiusM))}),
         |reach AS (
         |  SELECT a.area_id, a.act, o.okey, o.lon, o.lat, o.cx, o.cy
         |  FROM acell a JOIN rc o ON a.cx = o.cx AND a.cy = o.cy
@@ -810,8 +772,7 @@ object SkiQueries {
         |  UNION
         |  SELECT r.area_id, r.act, o.okey, o.lon, o.lat, o.cx, o.cy
         |  FROM reach r JOIN rc o
-        |    ON o.cx BETWEEN r.cx - 1 AND r.cx + 1
-        |    AND o.cy BETWEEN r.cy - 1 AND r.cy + 1
+        |    ON ${GridJoin.sqlNear("r", "o", CellDeg, GridJoin.Within(RadiusM))}
         |  WHERE ${hav("r.lon", "r.lat", "o.lon", "o.lat")} <= $RadiusM
         |    AND list_contains(o.uses, r.act))
         |SELECT area_id, count(*) AS n_objects

@@ -42,16 +42,10 @@ object Statistics {
       "(llon + ldx)", "(llat + ldy)") + " + " +
       GeoFunctions.sqlHaversineM("(llon + ldx)", "(llat + ldy)",
         "(llon + ldx * 2)", "(llat + ldy)")
-    s"""areas AS (
-      |  SELECT o_orderkey AS area_id,
-      |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS alon,
-      |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS alat
-      |  FROM orders WHERE ${SkiFeatures.sql.isArea("o_orderkey")}),
+    s"""areas AS (${SkiFeatures.sql.areas()}),
       |acells AS (
-      |  SELECT area_id, alon, alat,
-      |    CAST(floor(alon / $CellDeg) AS BIGINT) + i AS cx,
-      |    CAST(floor(alat / $CellDeg) AS BIGINT) + j AS cy
-      |  FROM areas, unnest([-1, 0, 1]) AS ui(i), unnest([-1, 0, 1]) AS uj(j)),
+      |  ${GridJoin.sqlWalk("area_id, alon, alat", "alon", "alat", "areas",
+            CellDeg, GridJoin.Within(RadiusM))}),
       |rr AS (
       |  SELECT way_id, uses, coalesce(difficulty, 'other') AS difficulty,
       |    snowmaking, snowfarming, ($lenRun) / 1000.0 AS km,
@@ -80,11 +74,8 @@ object Statistics {
       |      WHEN 4 THEN 'drag_lift' ELSE NULL END AS lift_type,
       |    ${SkiFeatures.sql.anchorLon("o_orderkey")} AS llon,
       |    ${SkiFeatures.sql.anchorLat("o_orderkey")} AS llat,
-      |    CAST((o_orderkey % 4 + 1) AS DOUBLE) * 0.0012 AS ldx,
-      |    CAST((o_orderkey % 3 + 1) AS DOUBLE) * 0.0004 AS ldy,
-      |    CAST(o_orderkey % 2500 AS DOUBLE) AS lz0,
-      |    CAST(o_custkey % 400 + 50 AS DOUBLE) AS rise
-      |  FROM orders WHERE o_orderkey % 23 = 0),
+      |    ${SkiFeatures.sql.liftLine("o_orderkey", "o_custkey", "lz0")}
+      |  FROM orders WHERE ${SkiFeatures.sql.isLift("o_orderkey")}),
       |ll AS (
       |  SELECT lift_id, coalesce(lift_type, 'other') AS lift_type,
       |    ($lenLift) / 1000.0 AS km, 2.0 * rise AS dz,
@@ -137,19 +128,15 @@ object Statistics {
     val rroot = runs.groupBy("area_id")
       .agg(nzMin(col("minz")).as("run_min"), nzMax(col("maxz")).as("run_max"))
 
-    val o = graft.Tables.orders(s, d)
+    val k = col("o_orderkey")
     val tsel = pmod(col("o_custkey"), lit(6))
-    val ll = o.filter(pmod(col("o_orderkey"), lit(23)) === 0)
-      .select(col("o_orderkey").as("lift_id"),
+    val ll = graft.Tables.orders(s, d).filter(SkiFeatures.isLift(k))
+      .select(Seq(k.as("lift_id"),
         coalesce(when(tsel === 0, "chair_lift").when(tsel === 1, "gondola")
           .when(tsel === 2, "t-bar").when(tsel === 3, "platter")
           .when(tsel === 4, "drag_lift"), lit("other")).as("lift_type"),
-        SkiFeatures.anchorLon(col("o_orderkey")).as("llon"),
-        SkiFeatures.anchorLat(col("o_orderkey")).as("llat"),
-        (pmod(col("o_orderkey"), lit(4)) + 1).cast("double").*(0.0012).as("ldx"),
-        (pmod(col("o_orderkey"), lit(3)) + 1).cast("double").*(0.0004).as("ldy"),
-        pmod(col("o_orderkey"), lit(2500)).cast("double").as("lz0"),
-        (pmod(col("o_custkey"), lit(400)) + 50).cast("double").as("rise"))
+        SkiFeatures.anchorLon(k).as("llon"), SkiFeatures.anchorLat(k).as("llat"))
+        ++ SkiFeatures.liftLine(k, col("o_custkey"), "lz0"): _*)
       .withColumn("km",
         (haversineM(col("llon"), col("llat"), col("llon") + col("ldx"),
           col("llat") + col("ldy"))

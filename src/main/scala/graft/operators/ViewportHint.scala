@@ -89,16 +89,9 @@ object ViewportHint {
   private val qHintNorm = QuerySpec.of(
     "q_ski_viewport_norm", {
       val m = GeoFunctions.ViewportMPerDegLat
-      val D = (x: String) => s"(CAST($x AS DOUBLE) / 10000000.0)"
+      val D = Normalization.sqlUnquantized _
       s"""WITH ${SkiQueries.oraclePrelude},
-        |dup AS (
-        |  SELECT DISTINCT
-        |    CAST(floor((lon0 * 10000000) + 0.5) AS BIGINT) AS x0,
-        |    CAST(floor((lat0 * 10000000) + 0.5) AS BIGINT) AS y0,
-        |    CAST(floor(((lon0 + dx) * 10000000) + 0.5) AS BIGINT) AS x1,
-        |    CAST(floor(((lat0 + dy) * 10000000) + 0.5) AS BIGINT) AS y1,
-        |    CAST(floor(((lon0 + dx * 2) * 10000000) + 0.5) AS BIGINT) AS x2
-        |  FROM kept),
+        |dup AS (SELECT DISTINCT ${SkiQueries.keptGridSql} FROM kept),
         |pts AS (
         |  SELECT ${D("x0")} AS ax0, ${D("y0")} AS ay0,
         |    ${D("x1")} AS ax1, ${D("y1")} AS ay1,
@@ -121,14 +114,7 @@ object ViewportHint {
         |ORDER BY center_lon, center_lat, rotated_width_m,
         |  rotated_height_m, min_camera_y""".stripMargin
     }) { (s, d) =>
-    val kept = SkiQueries.formatted(s, d).filter(col("kept"))
-      .select(col("way_id").as("run_id"),
-        coalesce(col("difficulty"), lit("other")).as("props"),
-        col("coords"))
-    val dup = kept.unionByName(
-      kept.filter(pmod(col("run_id"), lit(10)) === 4)
-        .withColumn("run_id", col("run_id") + 1000000000L))
-    Normalization.normalizeRuns(dup)
+    Normalization.normalizeRuns(SkiQueries.normalizeInput(s, d))
       .withColumn("h", GeoFunctions.viewportHint(col("coords")))
       .select(col("h.bearing").as("bearing"),
         (floor((col("h.center_lon")) * 1e9 + 0.5) / 1e9).as("center_lon"),

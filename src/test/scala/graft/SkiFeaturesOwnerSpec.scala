@@ -2,53 +2,108 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The synthesized ski world (anchors, the every-37th-order areas, the
-  * hexagon rings, the grid join's cell size and radius) has one owner,
-  * `SkiFeatures`: a query that needs it calls `SkiFeatures` (or its
-  * `sql` twin in an oracle) instead of copying the formula.
+/** Each fixture formula of the synthesized ski world has one owner: a
+  * query that needs it calls the owner (or its SQL twin in an oracle)
+  * instead of copying the formula. `SkiFeatures` owns the anchors, the
+  * every-37th-order areas, the hexagon rings, the grid join's cell size
+  * and radius, and the every-23rd-order lifts (their line and their
+  * clustering nodes); `SkiQueries` the partial-overlap duplicate runs;
+  * `Normalization` the 1e-7° quantizer; `GridJoin` the oracles' cell
+  * walk.
   */
 class SkiFeaturesOwnerSpec extends AnyFunSuite {
 
-  private val Owner = "SkiFeatures.scala"
-
-  /** What only the owner may spell out, by name. */
+  /** What only its owner may spell out: (what, pattern, owner file). */
   private val OwnedForms = Seq(
-    "area-anchor Column formula" -> """\*\s*(7919\s*,\s*lit\(\s*360000|104729\s*,\s*lit\(\s*120000)""",
-    "area-anchor SQL formula" -> """\*\s*(7919\)\s*%\s*360000|104729\)\s*%\s*120000)""",
-    "area filter (% 37)" -> """lit\(\s*37\s*\)|%\s*37\s*=\s*0""",
-    "hexagon cos/sin table" -> """sqrt\(\s*lit\(\s*3\.0\s*\)\s*\)|lit\(1\.0\),\s*lit\(0\.5\),\s*lit\(-0\.5\)|sqrt\(CAST\(3 AS DOUBLE\)\)""",
-    "CellDeg/RadiusM declaration" -> """\bval\s+(CellDeg|RadiusM)\b""")
+    ("area-anchor Column formula",
+      """\*\s*(7919\s*,\s*lit\(\s*360000|104729\s*,\s*lit\(\s*120000)""",
+      "SkiFeatures.scala"),
+    ("area-anchor SQL formula",
+      """\*\s*(7919\)\s*%\s*360000|104729\)\s*%\s*120000)""",
+      "SkiFeatures.scala"),
+    ("area filter (% 37)", """lit\(\s*37\s*\)|%\s*37\s*=\s*0""",
+      "SkiFeatures.scala"),
+    ("hexagon cos/sin table",
+      """sqrt\(\s*lit\(\s*3\.0\s*\)\s*\)|lit\(1\.0\),\s*lit\(0\.5\),\s*lit\(-0\.5\)|sqrt\(CAST\(3 AS DOUBLE\)\)""",
+      "SkiFeatures.scala"),
+    ("CellDeg/RadiusM declaration", """\bval\s+(CellDeg|RadiusM)\b""",
+      "SkiFeatures.scala"),
+    ("lift filter (% 23)", """lit\(\s*23\s*\)|%\s*23\s*=\s*0""",
+      "SkiFeatures.scala"),
+    // not Pii's `* 37 + 100000000` account numbers
+    ("lift-node offset (+ 100000000)",
+      """(?<!37\s)\+\s*100000000L?(?![\d.])""", "SkiFeatures.scala"),
+    ("lift line steps (0.0012 / 0.0004)", """(?<![\d.])0\.00(12|04)(?!\d)""",
+      "SkiFeatures.scala"),
+    ("partial-overlap duplicate props (\"ZDUP\")", "\"ZDUP\"",
+      "SkiQueries.scala"),
+    ("1e7 quantizer, Column form", """\*\s*1e7\s*\+\s*when\(""",
+      "Normalization.scala"),
+    ("1e7 quantizer, SQL form", """\*\s*10000000\)\s*\+\s*0\.5""",
+      "Normalization.scala"),
+    ("oracle cell walk (unnest([-1, 0, 1]))", """unnest\(\s*\[\s*-\d""",
+      "GridJoin.scala"),
+    ("oracle closure walk (cx BETWEEN cx - 1)",
+      """BETWEEN\s+\S*c[xy]\s*-\s*\d""", "GridJoin.scala"))
 
-  /** The one fixture that keeps its own formula: MvtTiles' lift layout
-    * swaps the two multipliers (104729 for lon, 7919 for lat), so it is
-    * a different fixture, not a copy of the anchor.
-    */
-  private val MvtLiftFile = "MvtTiles.scala"
-  private val MvtLiftForm =
-    """\*\s*(104729\s*,\s*lit\(\s*360000|7919\s*,\s*lit\(\s*120000|104729\)\s*%\s*360000|7919\)\s*%\s*120000)""".r
+  /** The offending lines: a form outside its owner. */
+  private def copies(forms: Seq[(String, String, String)]): Seq[String] = {
+    for ((_, _, owner) <- forms)
+      assert(MainSources.files.exists(_.getName == owner),
+        s"no $owner under ${MainSources.root}")
+    for {
+      (path, n, line) <- MainSources.lines()
+      (what, re, owner) <- forms
+      if new java.io.File(path).getName != owner
+      if re.r.findFirstIn(line).nonEmpty
+    } yield s"$path:$n ($what, owned by $owner): ${line.trim}"
+  }
 
   test("only SkiFeatures spells out the synthesized ski world") {
-    assert(MainSources.files.exists(_.getName == Owner),
-      s"no $Owner under ${MainSources.root}")
-    val offenders = for {
-      (path, n, line) <- MainSources.lines(
-        MainSources.files.filter(_.getName != Owner))
-      (what, re) <- OwnedForms
-      if re.r.findFirstIn(line).nonEmpty
-    } yield s"$path:$n ($what): ${line.trim}"
+    val offenders = copies(OwnedForms.filter(_._3 == "SkiFeatures.scala"))
     assert(offenders.isEmpty,
-      s"copies of the synthesized ski world outside $Owner; call " +
+      "copies of the synthesized ski world outside SkiFeatures; call " +
         "SkiFeatures (or SkiFeatures.sql in an oracle) instead:\n" +
         offenders.mkString("\n"))
   }
 
-  test("the swapped lift layout stays MvtTiles' own exception") {
+  test("the duplicate-run input, the quantizer and the oracle walk each have one owner") {
+    val offenders = copies(OwnedForms.filter(_._3 != "SkiFeatures.scala"))
+    assert(offenders.isEmpty,
+      "copies outside their owner; call the owner (or its SQL twin in an " +
+        "oracle) instead:\n" + offenders.mkString("\n"))
+  }
+
+  /** The files whose lines match `form`. */
+  private def filesWith(form: String): (Set[String], Seq[String]) = {
     val hits = for {
       (path, n, line) <- MainSources.lines()
-      if MvtLiftForm.findFirstIn(line).nonEmpty
+      if form.r.findFirstIn(line).nonEmpty
     } yield (new java.io.File(path).getName, s"$path:$n: ${line.trim}")
-    assert(hits.map(_._1).toSet == Set(MvtLiftFile),
-      s"the swapped-multiplier lift formula belongs to $MvtLiftFile only:\n" +
-        hits.map(_._2).mkString("\n"))
+    (hits.map(_._1).toSet, hits.map(_._2))
+  }
+
+  /** MvtTiles' lift layout swaps the two anchor multipliers (104729 for
+    * lon, 7919 for lat), so it is a different fixture, not a copy of the
+    * anchor.
+    */
+  test("the swapped lift layout stays MvtTiles' own exception") {
+    val (files, hits) = filesWith(
+      """\*\s*(104729\s*,\s*lit\(\s*360000|7919\s*,\s*lit\(\s*120000|104729\)\s*%\s*360000|7919\)\s*%\s*120000)""")
+    assert(files == Set("MvtTiles.scala"),
+      "the swapped-multiplier lift formula belongs to MvtTiles.scala " +
+        "only:\n" + hits.mkString("\n"))
+  }
+
+  /** LiftStations picks its lifts from every 3rd order, not every 23rd
+    * ([[graft.operators.SkiFeatures.isLift]]); only their line comes from
+    * SkiFeatures.
+    */
+  test("the every-3rd-order lift selection stays LiftStations' own exception") {
+    val (files, hits) = filesWith(
+      """WHERE\s+o_orderkey\s*%\s*3\s*=\s*0|filter\(\s*pmod\(\s*(k|col\("o_orderkey"\))\s*,\s*lit\(3\)\)\s*===\s*0""")
+    assert(files == Set("LiftStations.scala") && hits.size == 2,
+      "the every-3rd-order lift selection belongs to LiftStations.scala " +
+        "only, once per engine:\n" + hits.mkString("\n"))
   }
 }
