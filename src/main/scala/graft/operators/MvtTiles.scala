@@ -853,12 +853,12 @@ object MvtTiles {
   // sorted-stream whole-tile protobuf encode as q_tiles_mvt_bytes, but
   // WITHOUT the decode round-trip — MvtDecodeExpr re-decoding the
   // engine's own bytes is pure correctness-gate cost that production
-  // tile serving never pays. The encode stays load-bearing under the oracle through
-  // `n_layers`, which only the encoder's layer-run walk produces; the
-  // per-tile feature/part/point/checksum stats are summed by the SAME
-  // walk that frames the features, so nothing is computed twice. This
-  // is the bench headline; q_tiles_mvt_bytes (decode round-trip,
-  // hash-equal to the same oracle) stays the gate.
+  // tile serving never pays. The encode stays load-bearing under the
+  // oracle through `n_layers`, which only the encoder's layer-run walk
+  // produces; the per-tile feature/part/point/checksum stats are summed
+  // by the SAME walk that frames the features, so nothing is computed
+  // twice. This is the bench headline; q_tiles_mvt_bytes (decode
+  // round-trip, hash-equal to the same oracle) stays the gate.
   private val qEncode = QuerySpec.of(
     "q_tiles_mvt_encode", {
       s"""WITH ${SkiQueries.oraclePrelude},

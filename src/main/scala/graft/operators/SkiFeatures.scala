@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
   *  - `coords`   = 3-point LineString near the order's [[anchorLon]] /
   *                 [[anchorLat]] anchor, with z from the part/quantity
   *                 columns. The anchor latitude lies in [-60, 60) by
-  *                 construction; GridJoin's walk widens with latitude,
+  *                 construction (a run's points at most 0.0015° north
+  *                 of it); GridJoin's walk widens with latitude,
   *                 while the oracles' fixed ±1 walk
   *                 ([[GridJoin.sqlWalk]]) is exact at 500 m on the 0.01°
   *                 grid only up to about |lat| 63°
