@@ -26,11 +26,4 @@ object QuerySpec {
   def of(name: String, oracle: String, headline: Boolean = false)(
       fn: (SparkSession, String) => DataFrame): QuerySpec =
     QuerySpec(name, fn, Some(oracle), headline)
-
-  /** For operators whose semantics aren't SQL-expressible in DuckDB —
-    * the driver falls back to a rows-only check.
-    */
-  def noOracle(name: String, headline: Boolean = false)(
-      fn: (SparkSession, String) => DataFrame): QuerySpec =
-    QuerySpec(name, fn, None, headline)
 }

@@ -31,12 +31,6 @@ object HashFunctions {
   def hash64(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast(LongType)
 
-  /** Seeded variant: h_seed(s) = hash64(seed || ':' || s). Used to build
-    * the k independent hash functions of a MinHash signature family.
-    */
-  def hash64Seeded(seed: Int, c: Column): Column =
-    hash64(concat(lit(seed.toString), lit(":"), c.cast("string")))
-
   /** Stable content id for a record: md5 hex of a canonical '|'-joined
     * rendering of the key columns (analog of the reference's object-hash
     * feature ids).
@@ -49,6 +43,4 @@ object HashFunctions {
     s"CAST(('0x' || substr(md5(CAST($expr AS VARCHAR)), 1, 8)) AS BIGINT)"
   def sqlHash64(expr: String): String =
     s"CAST(('0x' || substr(md5(CAST($expr AS VARCHAR)), 1, 15)) AS BIGINT)"
-  def sqlHash64Seeded(seed: Int, expr: String): String =
-    sqlHash64(s"'$seed' || ':' || ($expr)")
 }

@@ -1,58 +1,27 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 
-/** Mapbox Vector Tile (MVT) encoder — the in-engine replacement for
-  * the reference's tippecanoe shell-out
-  * (`/root/reference/src/transforms/TilesGenerator.ts:15-97`), as a
-  * native kernel over per-tile grouped features.
-  *
-  * Input: ONE tile's features across all layers as
-  * `array<struct<layer string, fid bigint, gtype int,
-  *               geom binary, pkeys array<string>,
-  *               pvals array<string>>>`
-  * sorted by (layer, fid) — `sort_array(collect_list(...))` upstream
-  * makes the bytes deterministic under any shuffle order. `geom` is
-  * the feature's FINAL packed geometry command body, pre-encoded by
+/** Mapbox Vector Tile (MVT) encoding — the in-engine replacement for
+  * the reference's tippecanoe shell-out (its
+  * `src/transforms/TilesGenerator.ts:15-97`). The tile encode itself
+  * is [[graft.plans.TileStreamEncodeExec]], which walks one tile's
+  * features sorted by (layer, fid) and frames each layer run through
+  * [[MvtKernel.LayerStream]]. A feature's `geom` is
+  * its FINAL packed geometry command body, pre-encoded by
   * MvtPrepKernel.prepEncoded on the map side (quantize/simplify/clip
-  * + varint packing fused into one pre-shuffle walk), so this kernel
+  * + varint packing fused into one pre-shuffle walk), so the encode
   * only frames and concatenates bytes — the per-point work never
   * crosses the exchange and is never done twice.
   *
-  * Output: `struct<tile binary, n_layers int>` — the complete tile
-  * blob, a length-delimited `Tile.layers` frame (field 3) per layer
-  * run, concatenated in layer-name order, per the public
+  * A tile is a length-delimited `Tile.layers` frame (field 3) per
+  * layer run, concatenated in layer-name order, per the public
   * vector-tile-spec 2.1 wire format: name(1), features(2), keys(3),
   * values(4), extent(5), version(15)=2; `Feature` = id(1), packed
   * tags(2), type(3), packed command-encoded geometry(4); params
   * zigzag-encoded, MoveTo/LineTo/ClosePath command integers, cursor
-  * carried across commands. n_layers falls out of the same layer-run
-  * walk. Encoding the whole tile in one call means ONE wide exchange
-  * on (z, tx, ty) builds final tiles — no second shuffle of per-layer
-  * frames.
+  * carried across commands.
   */
-object MvtTileEncodeExpr {
-  /** The feature struct the encoder reads by position; any other
-    * element type is cast to it or refused at analysis.
-    */
-  val featureType: StructType = StructType(Seq(
-    StructField("layer", StringType), StructField("fid", LongType),
-    StructField("gtype", IntegerType), StructField("geom", BinaryType),
-    StructField("pkeys", ArrayType(StringType)),
-    StructField("pvals", ArrayType(StringType))))
-
-  def mvtTile(features: Column): Column =
-    column(StaticInvoke(MvtKernel.getClass, MvtKernel.outType,
-      "encodeTile", Seq(expression(features)), Seq(ArrayType(featureType)),
-      returnNullable = false))
-}
-
-/** Protobuf wire-format byte building for the MVT layer frame. */
 object MvtKernel {
 
   val Extent = 4096
@@ -155,61 +124,11 @@ object MvtKernel {
     out.toByteArray
   }
 
-  val outType: StructType = StructType(Seq(
-    StructField("tile", BinaryType, nullable = false),
-    StructField("n_layers", IntegerType, nullable = false)))
-
-  // UnsafeRow struct reads need the exact writer arity
-  private val Arity = MvtTileEncodeExpr.featureType.length
-
-  /** Encode one whole tile: `feats` rows sorted by (layer, fid), each
-    * (layer string, fid long, gtype int, geom binary,
-    *  pkeys array<string>, pvals array<string>).
-    * Consecutive same-layer runs become one layer frame each; the tile
-    * is their concatenation (layer-name order follows from the sort).
-    * Returns (tile bytes, n_layers).
-    */
-  def encodeTile(feats: ArrayData): InternalRow = {
-    val out = new java.io.ByteArrayOutputStream()
-    val n = feats.numElements()
-    var from = 0
-    var nLayers = 0
-    while (from < n) {
-      // compare UTF8String directly — converting every row's layer to
-      // a java String would allocate per feature in the tile kernel
-      val name = feats.getStruct(from, Arity).getUTF8String(0)
-      var until = from + 1
-      while (until < n &&
-        feats.getStruct(until, Arity).getUTF8String(0).equals(name))
-        until += 1
-      out.write(encodeLayerSlice(name.toString, feats, from, until))
-      nLayers += 1
-      from = until
-    }
-    InternalRow(out.toByteArray, nLayers)
-  }
-
-  /** One layer frame from the [from, until) slice of tile features. */
-  private def encodeLayerSlice(name: String, feats: ArrayData,
-      from: Int, until: Int): Array[Byte] = {
-    val ls = new LayerStream(name)
-    var i = from
-    while (i < until) {
-      val f = feats.getStruct(i, Arity)
-      ls.feature(f.getLong(1), f.getInt(2), f.getBinary(3),
-        f.getArray(4), f.getArray(5))
-      i += 1
-    }
-    ls.frame()
-  }
-
   /** Incremental single-layer frame builder — THE layer framing
-    * implementation, shared between the per-tile array path
-    * (encodeLayerSlice, fed by the collect_list aggregation) and the
-    * sorted-stream path ([[graft.plans.TileStreamEncodeExec]], which
-    * consumes features one at a time off a sorted shuffle and never
-    * materializes a per-tile array). One implementation means the two
-    * paths are byte-identical by construction.
+    * implementation: [[graft.plans.TileStreamEncodeExec]] consumes a
+    * tile's features one at a time off a sorted shuffle, feeds each
+    * layer run to one builder and concatenates the frames, so no
+    * per-tile array ever materializes.
     */
   final class LayerStream(name: String) {
     private val keyIdx = new java.util.LinkedHashMap[String, Integer]()

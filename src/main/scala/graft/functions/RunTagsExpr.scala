@@ -140,7 +140,6 @@ object RunTagsKernel {
   private val BackcountryS = UTF8String.fromString("backcountry")
   private val ClassicSkatingS = UTF8String.fromString("classic+skating")
   private val ClassicS = UTF8String.fromString("classic")
-  private val SkatingS = UTF8String.fromString("skating")
   private val Downhill = UTF8String.fromString("downhill")
   private val CommaSpace = ", "
   private val statesU: Array[UTF8String] =

@@ -32,8 +32,6 @@ object ClusterPipeline {
   private val qPriority = QuerySpec.of(
     "q_ski_cluster_priority", {
       val lenSqlLocal = SkiQueries.lenSql
-      val havA = GeoFunctions.sqlHaversineM("a.alon", "a.alat", "r.lon", "r.lat")
-      val havR = GeoFunctions.sqlHaversineM("r.lon", "r.lat", "o.lon", "o.lat")
       val havG = GeoFunctions.sqlHaversineM("l.lon", "l.lat", "r2.lon", "r2.lat")
       val (hexLon, hexLat) =
         SkiFeatures.sql.hexVertex("area_id", "alon", "alat", 0.004)

@@ -548,8 +548,6 @@ object Corpus {
   // membership is a pure function of the score — deterministic under
   // any partitioning, which is what makes the curriculum reproducible
   // across reruns. Per phase: doc/token mass and exact share.
-  private val CurrPhases = 3
-
   private val qCurriculum = QuerySpec.of(
     "q_pack_curriculum", {
       val toks = graft.functions.TextFunctions.sql.toks

@@ -135,8 +135,9 @@ object GridJoin {
     * (`reach`) on one side against each point's cell on the other,
     * plus the extra equi-join `keys`. `leftPt`/`rightPt` are (lon, lat)
     * columns over their own side; the refine reads both after the
-    * join, so their names must not clash. A null coordinate never
-    * matches. Returns every column of both sides, keys once.
+    * join, so their names must not clash. A coordinate that is null,
+    * not finite or beyond ±360° never matches. Returns every column of
+    * both sides, keys once.
     *
     * `build` is the side to broadcast if it fits. A broadcast join
     * walks the left side; a partitioned one walks the build side, so
@@ -162,12 +163,15 @@ object GridJoin {
       cellDeg: Double, reach: Reach, keys: Seq[String] = Nil,
       build: Build = BuildLeft, buildRows: Option[Long] = None,
       distinctRight: Seq[String] = Nil): DataFrame = {
+    // NaN, ±Inf and |c| > 360 get no cell: floor(c / cellDeg) would
+    // saturate and the walk's cx ± xr overflow under ANSI
+    def cell(c: Column) = when(abs(c) <= 360.0, floor(c / cellDeg))
     def celled(df: DataFrame, pt: (Column, Column)) = df
-      .withColumn(CellX, floor(pt._1 / cellDeg))
-      .withColumn(CellY, floor(pt._2 / cellDeg))
+      .withColumn(CellX, cell(pt._1))
+      .withColumn(CellY, cell(pt._2))
     def walked(df: DataFrame, pt: (Column, Column)) = {
       val (xr, yr) = halfWidths(pt._2, cellDeg, reach)
-      val (cx, cy) = (floor(pt._1 / cellDeg), floor(pt._2 / cellDeg))
+      val (cx, cy) = (cell(pt._1), cell(pt._2))
       df.withColumn(CellX, explode(sequence(cx - xr, cx + xr)))
         .withColumn(CellY, explode(sequence(cy - yr, cy + yr)))
     }

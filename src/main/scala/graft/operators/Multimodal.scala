@@ -26,14 +26,6 @@ object Multimodal {
 
   val FeatureDim = 8
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType),
-    StructField("kind", StringType),
-    StructField("bytes", BinaryType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("duration_ms", IntegerType)))
-
   /** Media table synthesized from `documents`: text bytes as the
     * opaque payload, typed metadata from the flat columns.
     */

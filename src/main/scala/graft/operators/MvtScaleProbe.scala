@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** Dev-only one-decade-up probe for the MVT core: generates an
   * sf1-scale spots workload (1M events — 10x the sf0.1 table, ~9M
   * exploded feature-tile rows) and times the
-  * spotFeatures→tilesOf→prepOf→encodeOf pipeline, so the scaling
+  * spotFeatures→tilesOf→prepOf→encodeOfStreamed pipeline, so the scaling
   * claim for the engine's heaviest fan-out rests on a measured point
   * one decade past the bench, not on extrapolation. Run with
   * `sbt "runMain graft.operators.MvtScaleProbe [nEvents]"`.
@@ -31,7 +31,7 @@ object MvtScaleProbe {
       .localCheckpoint()
 
     def pipeline() =
-      MvtTiles.encodeOf(MvtTiles.prepOf(MvtTiles.tilesOf(
+      MvtTiles.encodeOfStreamed(MvtTiles.prepOf(MvtTiles.tilesOf(
         MvtTiles.spotFeatures(events))))
 
     pipeline().write.format("noop").mode("overwrite").save() // warm

@@ -65,7 +65,7 @@ object MvtSoakProbe {
     // build would measure the 32-thread encode workspace, not the
     // sink; with the build already in block storage, the high-water
     // delta isolates what the page-streaming SINK itself adds
-    val tiles = MvtTiles.encodeOf(MvtTiles.prepOf(MvtTiles.tilesOf(feats)))
+    val tiles = MvtTiles.encodeOfStreamed(MvtTiles.prepOf(MvtTiles.tilesOf(feats)))
       .localCheckpoint()
 
     val (maxRaw, over100kGz) =

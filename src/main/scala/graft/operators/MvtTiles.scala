@@ -50,9 +50,9 @@ import org.apache.spark.sql.functions._
   *     into each layer's protobuf frame (a tile is the concatenation
   *     of its layer frames) and summing the per-feature stats — no
   *     per-tile array, no per-point work after the shuffle, no driver
-  *     round-trip, no external binary. [[encodeOf]] (a per-tile
-  *     collect_list, byte-identical) is the streaming tile-refresh's
-  *     and the probes' encode.
+  *     round-trip, no external binary. The streaming tile-refresh
+  *     and the probes encode through the same exec
+  *     ([[encodeOfStreamed]]).
   *
   * Scale shape: steps 1-3 are per-row expressions over the feature
   * tables; the only wide exchanges are the two bounded cap windows
@@ -772,25 +772,6 @@ object MvtTiles {
   def tileBytes(s: SparkSession, d: String): DataFrame =
     encodeOfStreamed(prepped(s, d))
 
-  /** Per-tile collect + whole-tile protobuf encode of any prepped
-    * frame: (zoom, tile_x, tile_y, n_layers, tile). The streaming
-    * tile-refresh and the scale probes encode through it; the batch
-    * paths use [[encodeOfStreamed]], whose bytes are identical
-    * (MvtStreamEncodeSpec).
-    */
-  private[graft] def encodeOf(prep: DataFrame): DataFrame =
-    prep
-      .select(col("z"), col("tx"), col("ty"),
-        struct(col("layer"), col("fid"), col("gtype"), col("geom"),
-          col("pk").as("pkeys"), col("pv").as("pvals")).as("feat"))
-      .groupBy("z", "tx", "ty")
-      .agg(sort_array(collect_list(col("feat"))).as("feats"))
-      .select(col("z").cast("int").as("zoom"), col("tx").as("tile_x"),
-        col("ty").as("tile_y"),
-        graft.functions.MvtTileEncodeExpr.mvtTile(col("feats")).as("enc"))
-      .select(col("zoom"), col("tile_x"), col("tile_y"),
-        col("enc.n_layers").as("n_layers"), col("enc.tile").as("tile"))
-
   /** The sorted-stream whole-tile encode of a prepped frame: one hash
     * exchange on (z, tx, ty) + a spillable local sort + a streaming
     * walk ([[graft.plans.TileStreamEncodeExec]]), so memory per task is
@@ -809,7 +790,10 @@ object MvtTiles {
       graft.plans.TileStreamEncodePlan(analyzed, analyzed.output))
   }
 
-  /** [[encodeOf]]'s columns from the sorted-stream encode. */
+  /** The sorted-stream encode of any prepped frame: (zoom, tile_x,
+    * tile_y, n_layers, tile). The batch tiles, the streaming
+    * tile-refresh and the scale probes all encode through it.
+    */
   private[graft] def encodeOfStreamed(prep: DataFrame): DataFrame =
     streamedTiles(prep).select(col("zoom"), col("tile_x"), col("tile_y"),
       col("n_layers"), col("tile"))

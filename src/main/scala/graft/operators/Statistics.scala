@@ -165,8 +165,10 @@ object Statistics {
     * byDifficulty and byType blocks plus the LIFT-SERVICED top-level
     * elevations: max = min(runMax, liftMax), min = max(runMin, liftMin)
     * (`SkiAreaStatistics.ts:71-91`). Elevation 0 counts as missing (JS
-    * truthiness mirrored). Two partial-agg passes per side; the final
-    * per-area joins are on the (small) area key space.
+    * truthiness mirrored). Two partial-agg passes per side carry the
+    * elevation extremes up (a null-skipping min of per-group mins is
+    * the min over all rows); the sides meet in one full outer join on
+    * the (small) area key space.
     */
   def fullStatistics(runs: DataFrame, lifts: DataFrame): DataFrame = {
     def nzMin(c: Column) = min(when(c =!= 0.0, c))
@@ -189,15 +191,14 @@ object Statistics {
       lit("}"))
     val ra = rd.withColumn("entry", diffEntry)
       .groupBy("area_id", "activity")
-      .agg(array_join(array_sort(collect_list(col("entry"))), ";").as("diffs"))
+      .agg(array_join(array_sort(collect_list(col("entry"))), ";").as("diffs"),
+        min("mn").as("mn"), max("mx").as("mx"))
     val rstr = ra
       .withColumn("ablock", concat(col("activity"), lit(":{"),
         col("diffs"), lit("}")))
       .groupBy("area_id")
       .agg(array_join(array_sort(collect_list(col("ablock"))), "|")
-        .as("runs_stats"))
-    val rroot = runs.groupBy("area_id")
-      .agg(nzMin(col("minz")).as("run_min"), nzMax(col("maxz")).as("run_max"))
+        .as("runs_stats"), min("mn").as("run_min"), max("mx").as("run_max"))
 
     val lt = lifts.groupBy("area_id", "lift_type")
       .agg(count(lit(1)).as("n"), sum("km").as("km"),
@@ -214,13 +215,9 @@ object Statistics {
     val lstr = lt.withColumn("entry", typeEntry)
       .groupBy("area_id")
       .agg(array_join(array_sort(collect_list(col("entry"))), "|")
-        .as("lifts_stats"))
-    val lroot = lifts.groupBy("area_id")
-      .agg(nzMin(col("minz")).as("lift_min"), nzMax(col("maxz")).as("lift_max"))
+        .as("lifts_stats"), min("mn").as("lift_min"), max("mx").as("lift_max"))
 
-    rroot.join(lroot, Seq("area_id"), "full_outer")
-      .join(rstr, Seq("area_id"), "left")
-      .join(lstr, Seq("area_id"), "left")
+    rstr.join(lstr, Seq("area_id"), "full_outer")
       .select(col("area_id"),
         coalesce(col("runs_stats"), lit("")).as("runs_stats"),
         coalesce(col("lifts_stats"), lit("")).as("lifts_stats"),

@@ -12,34 +12,23 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Sorted-stream whole-tile MVT encode: the batch tile encode
-  * ([[graft.operators.MvtTiles]]' `tileBytes` and the
-  * `q_tiles_mvt_encode` stats), with no per-tile aggregation.
+/** Sorted-stream whole-tile MVT encode: THE tile encode — the batch
+  * tiles ([[graft.operators.MvtTiles]]' `tileBytes` and the
+  * `q_tiles_mvt_encode` stats), the streaming tile-refresh and the
+  * scale probes — with no per-tile aggregation.
   *
-  * A `groupBy(z,tx,ty).agg(sort_array(collect_list(…)))` feeding
-  * [[graft.functions.MvtTileEncodeExpr]] pays, per feature: an
-  * ObjectHashAggregate per-row update (UnsafeRow copy into a growing
-  * per-tile buffer, partial-merge serialization across the exchange),
-  * then a per-group interpreted `sort_array` over the collected
-  * structs, then the encoder's walk. SCALING.md's round-17 shape study
-  * measured that update path as the hot loop at 26.85M features
-  * (sf1). This node replaces all of it with Spark's own sort
-  * machinery: EnsureRequirements plans ONE hash exchange on
-  * (z, tx, ty) plus a spillable local sort on
-  * (z, tx, ty, layer, fid, …), and the operator streams the sorted
-  * run — each feature is framed the moment it is read
-  * ([[graft.functions.MvtKernel.LayerStream]], the same builder the
-  * per-tile array encoder uses, so bytes are identical by
-  * construction), a layer frame closes when the layer changes, a tile
-  * row emits when the tile changes, and the prep kernel's per-feature
-  * stats are summed on the way. No per-tile array ever materializes,
-  * so memory per task is O(one tile's bytes) regardless of how dense
-  * a tile gets.
+  * EnsureRequirements plans ONE hash exchange on (z, tx, ty) plus a
+  * spillable local sort on (z, tx, ty, layer, fid, …), and the
+  * operator streams the sorted run: each feature is framed the moment
+  * it is read ([[graft.functions.MvtKernel.LayerStream]]), a layer
+  * frame closes when the layer changes, a tile row emits when the
+  * tile changes, and the prep kernel's per-feature stats are summed on
+  * the way. No per-tile array ever materializes, so memory per task is
+  * O(one tile's bytes) regardless of how dense a tile gets.
   *
   * The sort order extends past (layer, fid) to (gtype, geom, pkeys,
-  * pvals) — the full struct prefix `sort_array` compares — so the
-  * byte stream stays shuffle-order-independent even under duplicate
-  * (layer, fid) pairs, exactly like the array encoder.
+  * pvals), so the byte stream stays shuffle-order-independent even
+  * under duplicate (layer, fid) pairs.
   *
   * Child contract (by position; [[graft.operators.MvtTiles]] builds
   * the projection): z bigint, tx bigint, ty bigint, layer string,
@@ -108,11 +97,11 @@ case class TileStreamEncodeExec(output: Seq[Attribute], child: SparkPlan)
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(child.output.take(3)) :: Nil
 
-  // (z, tx, ty, layer, fid, gtype, geom, pkeys, pvals): everything
-  // sort_array orders by in the array encoder (the trailing stat
-  // fields only tie-break rows identical through pvals, which are
-  // then bit-equal anyway) — EnsureRequirements plans this as the
-  // exchange's spillable local sort
+  // (z, tx, ty, layer, fid, gtype, geom, pkeys, pvals): every column
+  // that reaches the bytes, so they do not depend on shuffle order (the
+  // trailing stat fields only tie-break rows identical through pvals,
+  // which are then bit-equal anyway) — EnsureRequirements plans this
+  // as the exchange's spillable local sort
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
     Seq(child.output.take(9).map(SortOrder(_, Ascending)))
 

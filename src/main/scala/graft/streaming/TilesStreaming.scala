@@ -60,7 +60,7 @@ object TilesStreaming {
     // 3. re-encode ONLY dirty tiles, from ALL features seen so far
     //    (the semi-join prunes before quantize/prep/encode)
     val allSpots = batch.sparkSession.read.parquet(s"$spotsDir/b*")
-    val fresh = MvtTiles.encodeOf(MvtTiles.prepOf(
+    val fresh = MvtTiles.encodeOfStreamed(MvtTiles.prepOf(
       MvtTiles.tilesOf(allSpots)
         .join(broadcast(dirty), Seq("z", "tx", "ty"), "left_semi")))
     // 4. LSM-style upsert: this batch's version of each dirty tile

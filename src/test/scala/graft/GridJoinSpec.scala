@@ -72,15 +72,24 @@ class GridJoinSpec extends SparkSpec {
   }
 
   test("grid join == brute force in both broadcast strategies") {
+    // rows whose coordinate is not finite or beyond ±360° ride along on
+    // both sides and never match (a saturated cell would overflow the
+    // walk's cx ± xr under ANSI)
+    val bad = Seq((5.0, Double.PositiveInfinity), (5.0, Double.NegativeInfinity),
+      (Double.PositiveInfinity, 40.0), (1e300, 40.0), (-1e300, 40.0),
+      (Double.NaN, 40.0), (5.0, Double.NaN), (5.0, 1e300))
+      .zipWithIndex.map { case ((x, y), i) => (1000L + i, "bad", x, y) }
+      .toDF("id", "kind", "lon", "lat")
+    val mixed = pts.unionByName(bad)
     // a partitioned join with the right as build side walks the right
     for (threshold <- Seq(None, Some("1"));
          build <- Seq(GridJoin.BuildLeft, GridJoin.BuildRight)) {
       threshold.foreach(spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
       try {
         val got = GridJoin(
-          pts.select(col("id").as("a"), col("lon").as("alon"),
+          mixed.select(col("id").as("a"), col("lon").as("alon"),
             col("lat").as("alat")),
-          pts.select(col("id").as("b"), col("lon"), col("lat")),
+          mixed.select(col("id").as("b"), col("lon"), col("lat")),
           (col("alon"), col("alat")), (col("lon"), col("lat")), Cell,
           GridJoin.Within(R), build = build)
           .select("a", "b").as[(Long, Long)].collect()

@@ -7,7 +7,9 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
   InterpretedUnsafeProjection, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
@@ -144,13 +146,9 @@ class KernelParitySpec extends AnyFunSuite {
     out.toByteArray
   }
 
-  private val featureType = StructType(Seq(
-    StructField("layer", StringType), StructField("fid", LongType),
-    StructField("gtype", IntegerType), StructField("geom", BinaryType),
-    StructField("pkeys", ArrayType(StringType)),
-    StructField("pvals", ArrayType(StringType))))
-
-  /** One tile's features, sorted by (layer, fid) as the encoder wants. */
+  /** One tile's features (layer, fid, gtype, geom, pkeys, pvals),
+    * sorted by (layer, fid) as the encoder wants.
+    */
   private val features: Gen[Seq[Row]] = Gen.listOf(for {
     layer <- Gen.oneOf("runs", "lifts", "spots", "ÉTÉ")
     fid <- Gen.chooseNum(0L, 1000L)
@@ -163,15 +161,19 @@ class KernelParitySpec extends AnyFunSuite {
   } yield Row(layer, fid, gtype, geomCmds(pts), keys, vals))
     .map(_.take(10).sortBy(r => (r.getString(0), r.getLong(1))))
 
-  private val toFeatures =
-    CatalystTypeConverters.createToCatalystConverter(ArrayType(featureType))
-
-  /** Tile bytes from the encode kernel, or random bytes. */
+  /** Tile bytes as the encode frames them — one `LayerStream` frame
+    * per layer run, concatenated — or random bytes.
+    */
   private val tile: Gen[Array[Byte]] = Gen.frequency(
     1 -> bytes,
-    4 -> features.map(fs => MvtKernel.encodeTile(
-      toFeatures(fs).asInstanceOf[
-        org.apache.spark.sql.catalyst.util.ArrayData]).getBinary(0)))
+    4 -> features.map(fs => fs.map(_.getString(0)).distinct.flatMap { name =>
+      val ls = new MvtKernel.LayerStream(name)
+      def strs(r: Row, i: Int) = new GenericArrayData(
+        r.getSeq[String](i).map(UTF8String.fromString))
+      fs.filter(_.getString(0) == name).foreach(r => ls.feature(r.getLong(1),
+        r.getInt(2), r.getAs[Array[Byte]](3), strs(r, 4), strs(r, 5)))
+      ls.frame()
+    }.toArray))
 
   private val lonLat = StructType(Seq(
     StructField("lon", DoubleType), StructField("lat", DoubleType)))
@@ -271,8 +273,6 @@ class KernelParitySpec extends AnyFunSuite {
           .map(t => Seq(t._1, t._2)),
         4 -> wellFormedGeom))(c =>
       GpkgGeomExpr.gpkgGeom(c(0), c(1))),
-    dsl("mvtTile", Seq(ArrayType(featureType)), one(orNull(features)))(c =>
-      MvtTileEncodeExpr.mvtTile(c(0))),
     // ---- the hand-written kernels ----
     dsl("RunTagsExpr", Seq(MapType(StringType, StringType)),
       one(orNull(Gen.listOf(Gen.zip(Gen.oneOf(tagKeys), tagVals))

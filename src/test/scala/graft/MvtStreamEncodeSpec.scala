@@ -1,64 +1,102 @@
 package graft
 
+import graft.functions.MvtKernel
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.aggregate.{
   HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
+import org.apache.spark.unsafe.types.UTF8String
 
-/** The sorted-stream tile encode (TileStreamEncodeExec) must be
-  * indistinguishable from the collect_list aggregate encoder
-  * ([[operators.MvtTiles.encodeOf]]): same per-tile stats, same tile
-  * BYTES per tile — the two encoders share MvtKernel.LayerStream, so
-  * this pins the
-  * exec's run-boundary logic (tile change, layer change, final flush),
-  * its sort contract, and the plan shape (one exchange, zero
-  * aggregates).
+/** The one tile encode, the sorted-stream TileStreamEncodeExec
+  * ([[operators.MvtTiles.encodeOfStreamed]]): its bytes equal the
+  * frozen output of the collect_list encoder it replaced, a tile is
+  * the concatenation of [[MvtKernel.LayerStream]] frames in layer-name
+  * order whatever order the features arrive in, the stats it sums in
+  * the walk equal the ones its bytes decode to, and the plan has one
+  * (z, tx, ty) exchange and no aggregate.
   */
 class MvtStreamEncodeSpec extends SparkSpec {
+  import spark.implicits._
 
   private def prep = operators.MvtTiles.prepped(spark, sf)
 
-  test("streamed stats equal the aggregate path's stats") {
-    // The aggregate path's stats: n_layers from the collect_list
-    // encoder, and the feature/part/point/checksum sums decoded back
-    // out of its tile bytes — so the exec's in-walk sums are checked
-    // against what the other encoder actually wrote. (MvtTilesSpec
-    // checks the same sums against q_tiles_mvt's relational rollup.)
-    def byTile(df: org.apache.spark.sql.DataFrame) = df.collect()
+  /** One `zoom<TAB>tile_x<TAB>tile_y<TAB>hex(tile)` line per tile,
+    * sorted by tile: the form `mvt_tile_bytes.txt` froze.
+    */
+  private def canon(tiles: DataFrame): Seq[String] =
+    tiles.select("zoom", "tile_x", "tile_y", "tile").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
+        r.getAs[Array[Byte]](3)))
+      .sortBy(t => (t._1, t._2, t._3))
+      .map { case (z, x, y, b) =>
+        s"$z\t$x\t$y\t${b.map(v => f"$v%02x").mkString}" }.toSeq
+
+  test("streamed stats equal the stats decoded from its tile bytes") {
+    // the exec's in-walk sums against what it actually framed:
+    // n_layers is the number of layer frames, the rest the per-layer
+    // sums decoded back out of the bytes. (MvtTilesSpec checks the same
+    // sums against q_tiles_mvt's relational rollup.)
+    def byTile(df: DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)) ->
         (r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
           r.getLong(7))).toMap
-    val enc = operators.MvtTiles.encodeOf(prep).cache()
-    try {
-      val decoded = operators.MvtTiles.decodedStats(enc)
-        .groupBy("zoom", "tile_x", "tile_y")
-        .agg(sum("n_features").as("n_features"), sum("n_parts").as("n_parts"),
-          sum("n_points").as("n_points"),
-          sum("coord_checksum").as("coord_checksum"))
-      val agg = byTile(enc.select(col("zoom"), col("tile_x"), col("tile_y"),
-          col("n_layers").cast("long").as("n_layers"))
-        .join(decoded, Seq("zoom", "tile_x", "tile_y"))
-        .select(col("zoom"), col("tile_x"), col("tile_y"), col("n_layers"),
-          col("n_features").cast("long"), col("n_parts").cast("long"),
-          col("n_points").cast("long"), col("coord_checksum").cast("long")))
-      val streamed = byTile(operators.MvtTiles.encodeStatsOf(prep))
-      assert(streamed.nonEmpty)
-      assert(streamed === agg)
-      // the carried sums are live data, not defaulted zeros
-      assert(streamed.values.exists(v => v._3 > 0 && v._4 > 0))
-    } finally enc.unpersist()
+    val decoded = byTile(operators.MvtTiles.decodedStats(
+        operators.MvtTiles.encodeOfStreamed(prep))
+      .groupBy("zoom", "tile_x", "tile_y")
+      .agg(count(lit(1)), sum("n_features").cast("long"),
+        sum("n_parts").cast("long"), sum("n_points").cast("long"),
+        sum("coord_checksum").cast("long")))
+    val streamed = byTile(operators.MvtTiles.encodeStatsOf(prep))
+    assert(streamed.nonEmpty)
+    assert(streamed === decoded)
+    // the carried sums are live data, not defaulted zeros
+    assert(streamed.values.exists(v => v._3 > 0 && v._4 > 0))
   }
 
-  test("streamed tile bytes are bit-identical to the aggregate path") {
-    val agg = operators.MvtTiles.encodeOf(prep).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)) ->
-        r.getAs[Array[Byte]]("tile").toSeq).toMap
-    val streamed = operators.MvtTiles.encodeOfStreamed(prep).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)) ->
-        r.getAs[Array[Byte]]("tile").toSeq).toMap
-    assert(streamed.keySet === agg.keySet)
-    val bad = agg.keysIterator.filter(k => streamed(k) != agg(k)).toSeq
-    assert(bad.isEmpty, s"byte-divergent tiles: ${bad.take(5)}")
+  test("streamed tile bytes equal the frozen collect_list encoder's") {
+    val want = Golden.header(Golden.lines("mvt_tile_bytes.txt"))
+    val rows = canon(operators.MvtTiles.encodeOfStreamed(prep))
+    assert(rows.size.toString == want("rows"),
+      s"${rows.size} tiles, ${want("rows")} frozen")
+    assert(Golden.sha256(rows) == want("sha256"))
+  }
+
+  test("an empty prepped frame encodes to zero tiles") {
+    assert(operators.MvtTiles.encodeOfStreamed(prep.limit(0)).count() == 0)
+  }
+
+  test("a tile is its LayerStream frames in layer-name order") {
+    // one tile, three layers, features arriving interleaved across
+    // partitions; the last feature has a null tag value
+    val feats = Seq(("spots", 7L, 1, Seq(3 -> 5)),
+      ("runs", 4L, 2, Seq(10 -> 10, 40 -> 12)), ("lifts", 9L, 2,
+        Seq(0 -> 0, 7 -> 7)), ("spots", 2L, 1, Seq(4095 -> 0)),
+      ("runs", 1L, 3, Seq(0 -> 0, 8 -> 0, 8 -> 8)), ("lifts", 3L, 1,
+        Seq(1 -> 1)))
+      .zipWithIndex.map { case ((layer, fid, gtype, pts), i) =>
+        (layer, fid, gtype, MvtKernel.packedBody(MvtKernel.geometryCmds(
+          gtype, Array(pts.map(p => (p._1.toLong, p._2.toLong)).toArray))),
+          Seq("name", "kind"), Seq(s"f$i", if (i == 5) null else layer))
+      }
+    val df = feats.toDF("layer", "fid", "gtype", "geom", "pk", "pv")
+      .repartition(3)
+      .select(lit(12L).as("z"), lit(2140L).as("tx"), lit(1436L).as("ty"),
+        col("*"), lit(1L).as("n_parts"), lit(1L).as("n_points"),
+        lit(0L).as("chk"))
+    val got = operators.MvtTiles.encodeOfStreamed(df).collect()
+    assert(got.length == 1)
+    assert(got.head.getAs[Int]("n_layers") == 3)
+    def strs(s: Seq[String]) = new GenericArrayData(s.map(UTF8String.fromString))
+    val want = feats.sortBy(f => (f._1, f._2)).groupBy(_._1).toSeq.sortBy(_._1)
+      .flatMap { case (layer, fs) =>
+        val ls = new MvtKernel.LayerStream(layer)
+        fs.sortBy(_._2).foreach(f =>
+          ls.feature(f._2, f._3, f._4, strs(f._5), strs(f._6)))
+        ls.frame()
+      }
+    assert(got.head.getAs[Array[Byte]]("tile").toSeq == want)
   }
 
   test("streamed plan: one exchange, no aggregate, the exec present") {

@@ -43,7 +43,7 @@ class TilesStreamingSpec extends SparkSpec {
     val shared = streamed.filter(col("n_features") >= 2).count()
     assert(shared > 0, "no tile holds spots from two micro-batches")
     // and the full streamed state equals the batch rebuild
-    val batch = operators.MvtTiles.decodedStats(operators.MvtTiles.encodeOf(
+    val batch = operators.MvtTiles.decodedStats(operators.MvtTiles.encodeOfStreamed(
       operators.MvtTiles.prepOf(operators.MvtTiles.tilesOf(
         operators.MvtTiles.spotFeatures(
           spark.read.parquet(s"$dir/events.parquet"))))))
