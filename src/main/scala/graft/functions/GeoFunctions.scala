@@ -246,6 +246,25 @@ object GeoFunctions {
       })
   }
 
+  /** DuckDB twin of [[nearestPointOnLine]]'s per-segment projection, in
+    * its operation order: the CTEs proj1..proj4 over `src`, one row per
+    * segment (x1, y1)-(x2, y2) with the point (`lon`, `lat`) and `kx` =
+    * cos(radians(lat)). They add the local-frame ax, ay, bx, "by", ddx,
+    * ddy, the clamped `t`, and `snap_lon` / `snap_lat`.
+    */
+  def sqlSnapCtes(src: String, lon: String, lat: String): String =
+    s"""proj1 AS (
+       |  SELECT *, (x1 - $lon) * kx AS ax, y1 - $lat AS ay,
+       |    (x2 - $lon) * kx AS bx, y2 - $lat AS "by" FROM $src),
+       |proj2 AS (SELECT *, bx - ax AS ddx, "by" - ay AS ddy FROM proj1),
+       |proj3 AS (
+       |  SELECT *, least(greatest(
+       |    (-(ax * ddx + ay * ddy)) / (ddx * ddx + ddy * ddy),
+       |    CAST(0 AS DOUBLE)), CAST(1 AS DOUBLE)) AS t FROM proj2),
+       |proj4 AS (
+       |  SELECT *, $lon + (ax + ddx * t) / kx AS snap_lon,
+       |    $lat + (ay + ddy * t) AS snap_lat FROM proj3)""".stripMargin
+
   /** Even-odd ray-cast point-in-polygon (J2 refine; the columnar
     * analog of the reference's ST_CoveredBy refine,
     * `/root/reference/src/clustering/database/PostgreSQLClusteringDatabase.ts:680-711`).

@@ -38,6 +38,10 @@ object HashFunctions {
   def contentId(cols: Column*): Column =
     md5(concat_ws("|", cols.map(_.cast("string")): _*))
 
+  /** DuckDB twin of [[contentId]]: `parts` are SQL expressions. */
+  def sqlContentId(parts: String*): String =
+    s"md5(concat_ws('|', ${parts.map(p => s"CAST($p AS VARCHAR)").mkString(", ")}))"
+
   /** DuckDB SQL fragment equivalents, used when composing oracle SQL. */
   def sqlHash32(expr: String): String =
     s"CAST(('0x' || substr(md5(CAST($expr AS VARCHAR)), 1, 8)) AS BIGINT)"

@@ -291,4 +291,30 @@ object Formatters {
         col("name")))
       .drop("__rt", "tags")
   }
+
+  /** A synthesized ski area's id (P11): the hash of its key alone. */
+  def synthAreaId(areaId: Column): Column =
+    HashFunctions.contentId(lit("skiArea"), areaId)
+
+  /** A spot's id: one per (node, spot type) [[formatSpots]] emits. */
+  def spotId(nodeId: Column, spotType: Column): Column =
+    HashFunctions.contentId(lit("spot"), nodeId, spotType)
+
+  /** DuckDB twins of the `id` columns: the content-id parts of a run
+    * ([[formatRuns]]), a lift ([[formatLifts]]), a formatted ski area
+    * ([[formatSkiAreas]]), a synthesized one ([[synthAreaId]]) and a
+    * spot ([[spotId]]), over the oracles' formatted columns.
+    */
+  object sql {
+    val runId: String = HashFunctions.sqlContentId("'run'", "way_id",
+      "status", "array_to_string(uses, ';')", "difficulty", "name")
+    val liftId: String = HashFunctions.sqlContentId("'lift'", "lift_id",
+      "status", "lift_type", "name")
+    val skiAreaId: String = HashFunctions.sqlContentId("'skiArea'", "source",
+      "src_id", "status", "name")
+    def synthAreaId(areaId: String): String =
+      HashFunctions.sqlContentId("'skiArea'", areaId)
+    def spotId(nodeId: String, spotType: String): String =
+      HashFunctions.sqlContentId("'spot'", nodeId, spotType)
+  }
 }

@@ -38,17 +38,13 @@ object GeoPackage {
   // ---- S7: the four typed layer projections -------------------------------
   private val qLayers = QuerySpec.of(
     "q_gpkg_layers", {
-      val conv = OutputFormats.sqlDifficultyConvention.replaceAll("\n", " ")
-      val aconv = OutputFormats.sqlDifficultyConvention
-        .replace("lon0", "alon").replace("lat0", "alat")
-        .replaceAll("\n", " ")
+      val conv = OutputFormats.sqlDifficultyConvention("lon0", "lat0")
+      val aconv = OutputFormats.sqlDifficultyConvention("alon", "alat")
       s"""WITH ${SkiQueries.oraclePrelude},
         |${Statistics.statsOracleCtes},
         |${SkiQueries.liftOracleCtes},
         |run_rows AS (
-        |  SELECT 'runs' AS layer,
-        |    md5(concat_ws('|', 'run', CAST(way_id AS VARCHAR), status,
-        |      array_to_string(uses, ';'), difficulty, name)) AS fid,
+        |  SELECT 'runs' AS layer, ${Formatters.sql.runId} AS fid,
         |    concat_ws('|', name, status, array_to_string(uses, ','),
         |      coalesce(ref, ''), coalesce(difficulty, ''), ($conv),
         |      ${sqlB01("oneway")}, ${sqlB01("lit")}, ${sqlB01("gladed")},
@@ -56,9 +52,7 @@ object GeoPackage {
         |      ${sqlB01("snowfarming")}, coalesce(grooming, '')) AS line
         |  FROM kept),
         |lift_rows AS (
-        |  SELECT 'lifts' AS layer,
-        |    md5(concat_ws('|', 'lift', CAST(lift_id AS VARCHAR), status,
-        |      lift_type, name)) AS fid,
+        |  SELECT 'lifts' AS layer, ${Formatters.sql.liftId} AS fid,
         |    concat_ws('|', name, status, coalesce(lift_type, ''),
         |      coalesce(access, ''), coalesce(ref, ''), ${sqlB01("oneway")},
         |      coalesce(CAST(occupancy AS VARCHAR), ''),
@@ -67,21 +61,10 @@ object GeoPackage {
         |      ${sqlB01("detachable")}, ${sqlB01("bubble")},
         |      ${sqlB01("heating")}) AS line
         |  FROM lfmt),
-        |el AS (
-        |  SELECT coalesce(r.area_id, l.area_id) AS area_id,
-        |    CASE WHEN run_min IS NULL THEN lift_min
-        |      WHEN lift_min IS NULL THEN run_min
-        |      ELSE greatest(run_min, lift_min) END AS mn,
-        |    CASE WHEN run_max IS NULL THEN lift_max
-        |      WHEN lift_max IS NULL THEN run_max
-        |      ELSE least(run_max, lift_max) END AS mx
-        |  FROM rroot r FULL OUTER JOIN lroot l ON r.area_id = l.area_id),
         |area_rows AS (
-        |  SELECT 'ski_areas_point' AS layer,
-        |    md5('skiArea|' || CAST(a.area_id AS VARCHAR)) AS fid,
+        |  SELECT 'ski_areas_point' AS layer, a.fid,
         |    concat_ws('|', 'Area #' || CAST(a.area_id AS VARCHAR),
-        |      'operating',
-        |      CASE WHEN a.area_id % 2 = 0 THEN 'downhill' ELSE 'nordic' END,
+        |      'operating', a.act,
         |      coalesce(CAST((floor((mn) * 1e2 + 0.5) / 1e2) AS VARCHAR), ''),
         |      coalesce(CAST((floor((mx) * 1e2 + 0.5) / 1e2) AS VARCHAR), ''),
         |      ($aconv), printf('%.6f', alon), printf('%.6f', alat)) AS line
@@ -101,8 +84,7 @@ object GeoPackage {
         |      ELSE ['lift_station', 'crossing'] END) AS u(spot_type)),
         |spot_rows AS (
         |  SELECT 'spots' AS layer,
-        |    md5('spot|' || CAST(event_id AS VARCHAR) || '|' || spot_type)
-        |      AS fid,
+        |    ${Formatters.sql.spotId("event_id", "spot_type")} AS fid,
         |    concat_ws('|', spot_type,
         |      CASE WHEN spot_type = 'crossing' THEN
         |        CASE event_id % 3 WHEN 0 THEN 'yes' WHEN 1 THEN 'no'
@@ -141,9 +123,7 @@ object GeoPackage {
           b01(col("snowfarming")),
           coalesce(col("grooming"), lit(""))).as("line"))
     val liftRows = SkiQueries.formattedLifts(s, d)
-      .select(lit("lifts").as("layer"),
-        md5(concat_ws("|", lit("lift"), col("lift_id"), col("status"),
-          col("lift_type"), col("name"))).as("fid"),
+      .select(lit("lifts").as("layer"), col("id").as("fid"),
         concat_ws("|", col("name"), col("status"),
           coalesce(col("lift_type"), lit("")),
           coalesce(col("access"), lit("")), coalesce(col("ref"), lit("")),
@@ -154,21 +134,10 @@ object GeoPackage {
           b01(col("detachable")), b01(col("bubble")),
           b01(col("heating"))).as("line"))
     val af = Statistics.areaFrames(s, d)
-    val el = af.rroot.join(af.lroot, Seq("area_id"), "full_outer")
-      .select(col("area_id"),
-        when(col("run_min").isNull, col("lift_min"))
-          .when(col("lift_min").isNull, col("run_min"))
-          .otherwise(greatest(col("run_min"), col("lift_min"))).as("mn"),
-        when(col("run_max").isNull, col("lift_max"))
-          .when(col("lift_max").isNull, col("run_max"))
-          .otherwise(least(col("run_max"), col("lift_max"))).as("mx"))
-    val areaRows = af.areas.join(el, Seq("area_id"), "left")
-      .select(lit("ski_areas_point").as("layer"),
-        md5(concat_ws("|", lit("skiArea"), col("area_id"))).as("fid"),
+    val areaRows = af.areas.join(af.elevation, Seq("area_id"), "left")
+      .select(lit("ski_areas_point").as("layer"), col("fid"),
         concat_ws("|", concat(lit("Area #"), col("area_id")),
-          lit("operating"),
-          when(pmod(col("area_id"), lit(2)) === 0, "downhill")
-            .otherwise("nordic"),
+          lit("operating"), col("act"),
           coalesce((floor((col("mn")) * 1e2 + 0.5) / 1e2).cast("string"), lit("")),
           coalesce((floor((col("mx")) * 1e2 + 0.5) / 1e2).cast("string"), lit("")),
           difficultyConvention(col("alon"), col("alat")),
@@ -190,8 +159,7 @@ object GeoPackage {
           .otherwise(array(lit("lift_station"), lit("crossing"))))
           .as("spot_type"))
       .select(lit("spots").as("layer"),
-        md5(concat_ws("|", lit("spot"), col("event_id"), col("spot_type")))
-          .as("fid"),
+        Formatters.spotId(col("event_id"), col("spot_type")).as("fid"),
         concat_ws("|", col("spot_type"),
           when(col("spot_type") === "crossing",
             when(pmod(col("event_id"), lit(3)) === 0, "yes")
@@ -286,14 +254,10 @@ object GeoPackage {
       s"""WITH ${SkiQueries.oraclePrelude},
         |${SkiQueries.liftOracleCtes},
         |run_rows AS (
-        |  SELECT 'runs' AS layer, way_id AS k,
-        |    md5(concat_ws('|', 'run', CAST(way_id AS VARCHAR), status,
-        |      array_to_string(uses, ';'), difficulty, name)) AS fid
+        |  SELECT 'runs' AS layer, way_id AS k, ${Formatters.sql.runId} AS fid
         |  FROM kept),
         |lift_rows AS (
-        |  SELECT 'lifts' AS layer, lift_id AS k,
-        |    md5(concat_ws('|', 'lift', CAST(lift_id AS VARCHAR), status,
-        |      lift_type, name)) AS fid
+        |  SELECT 'lifts' AS layer, lift_id AS k, ${Formatters.sql.liftId} AS fid
         |  FROM lfmt),
         |rows_all AS (
         |  SELECT * FROM run_rows UNION ALL SELECT * FROM lift_rows),
@@ -321,8 +285,7 @@ object GeoPackage {
         col("id").as("fid"))
     val liftRows = SkiQueries.formattedLifts(s, d)
       .select(lit("lifts").as("layer"), col("lift_id").as("k"),
-        md5(concat_ws("|", lit("lift"), col("lift_id"), col("status"),
-          col("lift_type"), col("name"))).as("fid"))
+        col("id").as("fid"))
     val all = runRows.unionByName(liftRows)
     val isShared = pmod(col("k"), lit(7)) === 0
     val target = all.filter(pmod(col("k"), lit(2)) === 0 || isShared)
@@ -363,15 +326,11 @@ object GeoPackage {
         |runsrc AS (
         |  SELECT way_id AS k,
         |    CASE WHEN way_id % 97 = 0 THEN NULL
-        |      ELSE md5(concat_ws('|', 'run', CAST(way_id AS VARCHAR),
-        |        status, array_to_string(uses, ';'), difficulty, name))
-        |      END AS fid,
+        |      ELSE ${Formatters.sql.runId} END AS fid,
         |    lon0 AS lon, lat0 AS lat
         |  FROM kept),
         |liftsrc AS (
-        |  SELECT lift_id AS k,
-        |    md5(concat_ws('|', 'lift', CAST(lift_id AS VARCHAR), status,
-        |      lift_type, name)) AS fid,
+        |  SELECT lift_id AS k, ${Formatters.sql.liftId} AS fid,
         |    ${SkiFeatures.sql.anchorLon("lift_id")}
         |      AS lon,
         |    ${SkiFeatures.sql.anchorLat("lift_id")}
@@ -449,9 +408,7 @@ object GeoPackage {
           .otherwise(col("id")).as("fid"),
         p1(1).as("lon"), p1(2).as("lat"))
     val lifts = SkiQueries.formattedLifts(s, d)
-      .select(col("lift_id").cast("long").as("k"),
-        md5(concat_ws("|", lit("lift"), col("lift_id"), col("status"),
-          col("lift_type"), col("name"))).as("fid"),
+      .select(col("lift_id").cast("long").as("k"), col("id").as("fid"),
         SkiFeatures.anchorLon(col("lift_id")).as("lon"),
         SkiFeatures.anchorLat(col("lift_id")).as("lat"))
     def part(df: DataFrame, dir: Int, kind: String, file: String,

@@ -160,21 +160,7 @@ object LiftStations {
         |  unnest([1, 2]) AS sg(k)),
         |proj0 AS (
         |  SELECT *, cos(radians(slat)) AS kx FROM seg),
-        |proj1 AS (
-        |  SELECT *, (x1 - slon) * kx AS ax, y1 - slat AS ay,
-        |    (x2 - slon) * kx AS bx, y2 - slat AS "by"
-        |  FROM proj0),
-        |proj2 AS (
-        |  SELECT *, bx - ax AS ddx, "by" - ay AS ddy FROM proj1),
-        |proj3 AS (
-        |  SELECT *, least(greatest(
-        |      (-(ax * ddx + ay * ddy)) / (ddx * ddx + ddy * ddy),
-        |      CAST(0 AS DOUBLE)), CAST(1 AS DOUBLE)) AS t
-        |  FROM proj2),
-        |proj4 AS (
-        |  SELECT *, slon + (ax + ddx * t) / kx AS snap_lon,
-        |    slat + (ay + ddy * t) AS snap_lat
-        |  FROM proj3),
+        |${GeoFunctions.sqlSnapCtes("proj0", "slon", "slat")},
         |proj5 AS (
         |  SELECT *, ($hav) AS dist_m FROM proj4),
         |bestseg AS (

@@ -206,17 +206,7 @@ object MultiPart {
         |    ON e.area_id = c.area_id AND e.part = c.part
         |  LEFT JOIN inside i ON e.area_id = i.area_id AND e.part = i.part
         |  WHERE i.area_id IS NULL),
-        |proj1 AS (
-        |  SELECT *, (x1 - cx0) * kx AS ax, y1 - cy0 AS ay,
-        |    (x2 - cx0) * kx AS bx, y2 - cy0 AS "by" FROM proj0),
-        |proj2 AS (SELECT *, bx - ax AS ddx, "by" - ay AS ddy FROM proj1),
-        |proj3 AS (
-        |  SELECT *, least(greatest(
-        |    (-(ax * ddx + ay * ddy)) / (ddx * ddx + ddy * ddy),
-        |    CAST(0 AS DOUBLE)), CAST(1 AS DOUBLE)) AS t FROM proj2),
-        |proj4 AS (
-        |  SELECT *, cx0 + (ax + ddx * t) / kx AS snap_lon,
-        |    cy0 + (ay + ddy * t) AS snap_lat FROM proj3),
+        |${GeoFunctions.sqlSnapCtes("proj0", "cx0", "cy0")},
         |proj5 AS (SELECT *, ($hav) AS dist_m FROM proj4),
         |snapped AS (
         |  SELECT area_id, part, snap_lon, snap_lat FROM proj5

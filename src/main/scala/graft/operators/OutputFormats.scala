@@ -49,11 +49,17 @@ object OutputFormats {
       .when(lon >= -172.0 && lon <= -40.0, "north_america")
       .otherwise("europe")
 
-  val sqlDifficultyConvention: String =
-    """CASE WHEN lon0 >= 129.0 AND lon0 <= 146.0
-      |       AND lat0 >= 30.0 AND lat0 <= 45.0 THEN 'japan'
-      |     WHEN lon0 >= -172.0 AND lon0 <= -40.0 THEN 'north_america'
-      |     ELSE 'europe' END""".stripMargin
+  def sqlDifficultyConvention(lon: String, lat: String): String =
+    s"CASE WHEN $lon >= 129.0 AND $lon <= 146.0 AND $lat >= 30.0 " +
+      s"AND $lat <= 45.0 THEN 'japan' WHEN $lon >= -172.0 AND $lon <= -40.0 " +
+      "THEN 'north_america' ELSE 'europe' END"
+
+  /** The lift types CSVFormatter counts as surface lifts
+    * (`CSVFormatter.ts:379-408`), and their SQL list.
+    */
+  val SurfaceLiftTypes: Seq[String] = Seq("t-bar", "j-bar", "platter",
+    "rope_tow", "magic_carpet", "drag_lift")
+  val sqlSurfaceLiftTypes: String = SurfaceLiftTypes.map(t => s"'$t'").mkString(", ")
 
   /** Convention-aware difficulty → color name. */
   def runColorName(convention: Column, difficulty: Column): Column =
@@ -107,7 +113,7 @@ object OutputFormats {
   // ---- P5: MapboxGL run properties ---------------------------------------
   private val qGlRuns = QuerySpec.of(
     "q_mapbox_runs", {
-      val conv = sqlDifficultyConvention.replaceAll("\n", " ")
+      val conv = sqlDifficultyConvention("lon0", "lat0")
       val color = sqlRunColorName("conv", "difficulty").replaceAll("\n", " ")
       val hex = sqlMapCase("color_name", OutputFormats.ColorValues)
       s"""WITH ${SkiQueries.oraclePrelude},
@@ -213,7 +219,7 @@ object OutputFormats {
   // are not modeled here and render as the reference's empty strings.
   private val qCsvRuns = QuerySpec.of(
     "q_csv_runs", {
-      val conv = sqlDifficultyConvention.replaceAll("\n", " ")
+      val conv = sqlDifficultyConvention("lon0", "lat0")
       val color = sqlRunColorName(s"($conv)", "difficulty").replaceAll("\n", " ")
       val h1 = GeoFunctions.sqlHaversineM("lon0", "lat0",
         "(lon0 + dx)", "(lat0 + dy)")
@@ -229,8 +235,7 @@ object OutputFormats {
         |    z0, (z0 + l_quantity * 2) AS z2,
         |    (0.0 + lat0 + (lat0 + dy) + (lat0 + dy)) / 3 AS clat,
         |    (0.0 + lon0 + (lon0 + dx) + (lon0 + dx * 2)) / 3 AS clon,
-        |    md5(concat_ws('|', 'run', CAST(way_id AS VARCHAR), status,
-        |      array_to_string(uses, ';'), difficulty, name)) AS id
+        |    ${Formatters.sql.runId} AS id
         |  FROM kept),
         |x AS (
         |  SELECT way_id, id,
@@ -336,8 +341,7 @@ object OutputFormats {
       |x AS (
       |  SELECT lift_id, status, lift_type, duration_s, occupancy, capacity,
       |    bubble, heating, detachable, oneway, access, name, ref,
-      |    md5(concat_ws('|', 'lift', CAST(lift_id AS VARCHAR), status,
-      |      lift_type, name)) AS id
+      |    ${Formatters.sql.liftId} AS id
       |  FROM lfmt)
       |SELECT lift_id,
       |  concat_ws(',', name, ref, '', lift_type, status,
@@ -362,8 +366,6 @@ object OutputFormats {
       |    'LineString', '', '', '', '', '') AS line
       |FROM x ORDER BY lift_id""".stripMargin) { (s, d) =>
     SkiQueries.formattedLifts(s, d)
-      .withColumn("id", md5(concat_ws("|", lit("lift"), col("lift_id"),
-        col("status"), col("lift_type"), col("name"))))
       .select(col("lift_id"), concat_ws(",",
         esc(col("name")), esc(col("ref")), lit(""),
         coalesce(col("lift_type"), lit("")), col("status"),
@@ -387,48 +389,30 @@ object OutputFormats {
 
   // ---- P6: CSV ski-area export rows ---------------------------------------
   // CSVFormatter.formatSkiArea (CSVFormatter.ts:250-292) incl. the
-  // surface-lift subtotal set (:379-408, restricted to the lift types
-  // the synthesis produces) and the JS-truthy "render '' for 0 or
-  // missing" counts/elevations. Statistics come from the shared
-  // per-area machinery (Statistics.areaFrames), activities from the
-  // q_ski_cluster parity convention.
+  // surface-lift subtotal ([[SurfaceLiftTypes]]) and the JS-truthy
+  // "render '' for 0 or missing" counts/elevations. Statistics,
+  // activity and id come from the shared per-area machinery
+  // (Statistics.areaFrames).
   private val qCsvSkiAreas = QuerySpec.of(
     "q_csv_ski_areas", {
-      val conv = sqlDifficultyConvention
-        .replace("lon0", "alon").replace("lat0", "alat")
-        .replaceAll("\n", " ")
+      val conv = sqlDifficultyConvention("alon", "alat")
       s"""WITH ${SkiQueries.oraclePrelude},
         |${Statistics.statsOracleCtes},
-        |adp AS (
-        |  SELECT area_id,
-        |    sum(CASE WHEN activity = 'downhill' THEN km END) AS dkm,
-        |    sum(CASE WHEN activity = 'nordic' THEN km END) AS nkm
-        |  FROM runs GROUP BY 1),
         |lc AS (
         |  SELECT area_id, count(*) AS n_lifts,
-        |    sum(CASE WHEN lift_type IN ('t-bar', 'platter', 'drag_lift')
+        |    sum(CASE WHEN lift_type IN ($sqlSurfaceLiftTypes)
         |      THEN 1 ELSE 0 END) AS n_surface
         |  FROM lj GROUP BY 1),
-        |el AS (
-        |  SELECT coalesce(r.area_id, l.area_id) AS area_id,
-        |    CASE WHEN run_min IS NULL THEN lift_min
-        |      WHEN lift_min IS NULL THEN run_min
-        |      ELSE greatest(run_min, lift_min) END AS mn,
-        |    CASE WHEN run_max IS NULL THEN lift_max
-        |      WHEN lift_max IS NULL THEN run_max
-        |      ELSE least(run_max, lift_max) END AS mx
-        |  FROM rroot r FULL OUTER JOIN lroot l ON r.area_id = l.area_id),
         |x AS (
-        |  SELECT a.area_id, a.alon, a.alat, adp.dkm, adp.nkm,
-        |    lc.n_lifts, lc.n_surface, el.mn, el.mx,
-        |    md5('skiArea|' || CAST(a.area_id AS VARCHAR)) AS id
+        |  SELECT a.area_id, a.act, a.alon, a.alat, adp.dkm, adp.nkm,
+        |    lc.n_lifts, lc.n_surface, el.mn, el.mx, a.fid AS id
         |  FROM areas a LEFT JOIN adp USING (area_id)
         |  LEFT JOIN lc USING (area_id) LEFT JOIN el USING (area_id))
         |SELECT area_id,
         |  concat_ws(',',
         |    'Area #' || CAST(area_id AS VARCHAR), '', '', '', 'operating',
-        |    CASE WHEN area_id % 2 = 0 THEN 'yes' ELSE 'no' END,
-        |    CASE WHEN area_id % 2 = 0 THEN 'no' ELSE 'yes' END,
+        |    CASE WHEN act = 'downhill' THEN 'yes' ELSE 'no' END,
+        |    CASE WHEN act = 'nordic' THEN 'yes' ELSE 'no' END,
         |    CASE WHEN dkm IS NOT NULL THEN ${sqlFixed0("dkm")} ELSE '' END,
         |    CASE WHEN nkm IS NOT NULL THEN ${sqlFixed0("nkm")} ELSE '' END,
         |    CASE WHEN mn IS NOT NULL AND mx IS NOT NULL
@@ -443,33 +427,19 @@ object OutputFormats {
         |FROM x ORDER BY area_id""".stripMargin
     }) { (s, d) =>
     val af = Statistics.areaFrames(s, d)
-    val adp = af.runs.groupBy("area_id").agg(
-      sum(when(col("activity") === "downhill", col("km"))).as("dkm"),
-      sum(when(col("activity") === "nordic", col("km"))).as("nkm"))
     val lc = af.lj.groupBy("area_id").agg(
       count(lit(1)).as("n_lifts"),
-      sum(when(col("lift_type").isin("t-bar", "platter", "drag_lift"), 1)
+      sum(when(col("lift_type").isin(SurfaceLiftTypes: _*), 1)
         .otherwise(0)).as("n_surface"))
-    val el = af.rroot.join(af.lroot, Seq("area_id"), "full_outer")
-      .select(col("area_id"),
-        when(col("run_min").isNull, col("lift_min"))
-          .when(col("lift_min").isNull, col("run_min"))
-          .otherwise(greatest(col("run_min"), col("lift_min"))).as("mn"),
-        when(col("run_max").isNull, col("lift_max"))
-          .when(col("lift_max").isNull, col("run_max"))
-          .otherwise(least(col("run_max"), col("lift_max"))).as("mx"))
-    val hasDownhill = pmod(col("area_id"), lit(2)) === 0
     af.areas
-      .join(adp, Seq("area_id"), "left")
+      .join(af.activityKm, Seq("area_id"), "left")
       .join(lc, Seq("area_id"), "left")
-      .join(el, Seq("area_id"), "left")
-      .withColumn("id",
-        md5(concat_ws("|", lit("skiArea"), col("area_id"))))
+      .join(af.elevation, Seq("area_id"), "left")
       .select(col("area_id"), concat_ws(",",
         concat(lit("Area #"), col("area_id")),
         lit(""), lit(""), lit(""), lit("operating"),
-        when(hasDownhill, "yes").otherwise("no"),
-        when(hasDownhill, "no").otherwise("yes"),
+        when(col("act") === "downhill", "yes").otherwise("no"),
+        when(col("act") === "nordic", "yes").otherwise("no"),
         when(col("dkm").isNotNull, fixed0(col("dkm"))).otherwise(""),
         when(col("nkm").isNotNull, fixed0(col("nkm"))).otherwise(""),
         when(col("mn").isNotNull && col("mx").isNotNull,
@@ -481,7 +451,7 @@ object OutputFormats {
           .otherwise(""),
         difficultyConvention(col("alon"), col("alat")),
         lit(""), lit(""),
-        concat(lit("https://openskimap.org/?obj="), col("id")), col("id"),
+        concat(lit("https://openskimap.org/?obj="), col("fid")), col("fid"),
         lit("Point"),
         format_string("%.6f", col("alat")),
         format_string("%.6f", col("alon")),
@@ -518,7 +488,7 @@ object OutputFormats {
       |  SELECT event_id AS node_id, spot_type, position,
       |    ${SkiFeatures.sql.anchorLon("event_id")} AS lon,
       |    ${SkiFeatures.sql.anchorLat("event_id")} AS lat,
-      |    md5('spot|' || CAST(event_id AS VARCHAR) || '|' || spot_type) AS id
+      |    ${Formatters.sql.spotId("event_id", "spot_type")} AS id
       |  FROM s)
       |SELECT node_id, spot_type,
       |  concat_ws(',', id, spot_type,
@@ -559,8 +529,7 @@ object OutputFormats {
         SkiFeatures.anchorLon(col("node_id")))
       .withColumn("lat",
         SkiFeatures.anchorLat(col("node_id")))
-      .withColumn("id", md5(concat_ws("|", lit("spot"), col("node_id"),
-        col("spot_type"))))
+      .withColumn("id", Formatters.spotId(col("node_id"), col("spot_type")))
       .select(col("node_id"), col("spot_type"), concat_ws(",",
         col("id"), col("spot_type"),
         format_string("%.6f", col("lon")),
@@ -595,30 +564,16 @@ object OutputFormats {
     "q_mapbox_ski_areas", {
       s"""WITH ${SkiQueries.oraclePrelude},
         |${Statistics.statsOracleCtes},
-        |adp AS (
-        |  SELECT area_id,
-        |    sum(CASE WHEN activity = 'downhill' THEN km END) AS dkm,
-        |    sum(CASE WHEN activity = 'nordic' THEN km END) AS nkm
-        |  FROM runs GROUP BY 1),
-        |el AS (
-        |  SELECT coalesce(r.area_id, l.area_id) AS area_id,
-        |    CASE WHEN run_min IS NULL THEN lift_min
-        |      WHEN lift_min IS NULL THEN run_min
-        |      ELSE greatest(run_min, lift_min) END AS mn,
-        |    CASE WHEN run_max IS NULL THEN lift_max
-        |      WHEN lift_max IS NULL THEN run_max
-        |      ELSE least(run_max, lift_max) END AS mx
-        |  FROM rroot r FULL OUTER JOIN lroot l ON r.area_id = l.area_id),
         |nm AS (
-        |  SELECT a.area_id, a.alon, a.alat, adp.dkm, adp.nkm, el.mn, el.mx,
+        |  SELECT a.area_id, a.act, a.fid, a.alon, a.alat, adp.dkm, adp.nkm,
+        |    el.mn, el.mx,
         |    CASE WHEN a.area_id % 3 = 0
         |      THEN 'Area #' || CAST(a.area_id AS VARCHAR)
         |        || ' Grand Resort (Main Sector)'
         |      ELSE 'Area #' || CAST(a.area_id AS VARCHAR) END AS raw_name
         |  FROM areas a LEFT JOIN adp USING (area_id)
         |  LEFT JOIN el USING (area_id))
-        |SELECT area_id,
-        |  md5('skiArea|' || CAST(area_id AS VARCHAR)) AS id,
+        |SELECT area_id, fid AS id,
         |  CASE WHEN len(raw_name) > 20
         |    THEN trim(string_split(raw_name, '(')[1])
         |    ELSE raw_name END AS name,
@@ -631,34 +586,22 @@ object OutputFormats {
         |    THEN CAST(floor(mx + 0.5) AS BIGINT) END AS max_elevation,
         |  CASE WHEN mn IS NOT NULL AND mx IS NOT NULL
         |    THEN CAST(floor(mx - mn + 0.5) AS BIGINT) END AS vertical,
-        |  CASE WHEN area_id % 2 = 0 THEN true END AS has_downhill,
-        |  CASE WHEN area_id % 2 <> 0 THEN true END AS has_nordic,
+        |  CASE WHEN act = 'downhill' THEN true END AS has_downhill,
+        |  CASE WHEN act = 'nordic' THEN true END AS has_nordic,
         |  (floor((alon) * 1e6 + 0.5) / 1e6) AS lon, (floor((alat) * 1e6 + 0.5) / 1e6) AS lat
         |FROM nm ORDER BY area_id""".stripMargin
     }) { (s, d) =>
     val af = Statistics.areaFrames(s, d)
-    val adp = af.runs.groupBy("area_id").agg(
-      sum(when(col("activity") === "downhill", col("km"))).as("dkm"),
-      sum(when(col("activity") === "nordic", col("km"))).as("nkm"))
-    val el = af.rroot.join(af.lroot, Seq("area_id"), "full_outer")
-      .select(col("area_id"),
-        when(col("run_min").isNull, col("lift_min"))
-          .when(col("lift_min").isNull, col("run_min"))
-          .otherwise(greatest(col("run_min"), col("lift_min"))).as("mn"),
-        when(col("run_max").isNull, col("lift_max"))
-          .when(col("lift_max").isNull, col("run_max"))
-          .otherwise(least(col("run_max"), col("lift_max"))).as("mx"))
     def jsRound(c: Column) = floor(c + 0.5).cast("long")
     val rawName = when(pmod(col("area_id"), lit(3)) === 0,
         concat(lit("Area #"), col("area_id"),
           lit(" Grand Resort (Main Sector)")))
       .otherwise(concat(lit("Area #"), col("area_id")))
     af.areas
-      .join(adp, Seq("area_id"), "left")
-      .join(el, Seq("area_id"), "left")
+      .join(af.activityKm, Seq("area_id"), "left")
+      .join(af.elevation, Seq("area_id"), "left")
       .withColumn("raw_name", rawName)
-      .select(col("area_id"),
-        md5(concat_ws("|", lit("skiArea"), col("area_id"))).as("id"),
+      .select(col("area_id"), col("fid").as("id"),
         shortenedName(col("raw_name")).as("name"),
         lit("operating").as("status"),
         when(col("dkm").isNotNull, jsRound(col("dkm")))
@@ -667,8 +610,8 @@ object OutputFormats {
         when(col("mx").isNotNull, jsRound(col("mx"))).as("max_elevation"),
         when(col("mn").isNotNull && col("mx").isNotNull,
           jsRound(col("mx") - col("mn"))).as("vertical"),
-        when(pmod(col("area_id"), lit(2)) === 0, true).as("has_downhill"),
-        when(pmod(col("area_id"), lit(2)) =!= 0, true).as("has_nordic"),
+        when(col("act") === "downhill", true).as("has_downhill"),
+        when(col("act") === "nordic", true).as("has_nordic"),
         (floor((col("alon")) * 1e6 + 0.5) / 1e6).as("lon"), (floor((col("alat")) * 1e6 + 0.5) / 1e6).as("lat"))
       .orderBy("area_id")
   }
@@ -698,7 +641,7 @@ object OutputFormats {
       |      WHEN 'view' THEN ['avalanche_transceiver_checkpoint']
       |      ELSE ['lift_station', 'crossing'] END) AS u(spot_type))
       |SELECT event_id AS node_id, spot_type,
-      |  md5('spot|' || CAST(event_id AS VARCHAR) || '|' || spot_type) AS id,
+      |  ${Formatters.sql.spotId("event_id", "spot_type")} AS id,
       |  CASE WHEN spot_type = 'lift_station'
       |    THEN 'Station ' || CAST(event_id AS VARCHAR) END AS name,
       |  CASE WHEN spot_type = 'lift_station'
@@ -735,8 +678,7 @@ object OutputFormats {
     val isStation = col("spot_type") === "lift_station"
     Formatters.formatSpots(features)
       .select(col("node_id"), col("spot_type"),
-        md5(concat_ws("|", lit("spot"), col("node_id"), col("spot_type")))
-          .as("id"),
+        Formatters.spotId(col("node_id"), col("spot_type")).as("id"),
         when(isStation, concat(lit("Station "), col("node_id"))).as("name"),
         when(isStation, concat(lit("lift_"),
           pmod(col("node_id"), lit(97)))).as("lift_id"),

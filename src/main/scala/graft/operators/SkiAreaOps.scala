@@ -334,17 +334,7 @@ object SkiAreaOps {
         |    e.x1, e.y1, e.x2, e.y2
         |  FROM edges e JOIN cent c ON e.area_id = c.area_id
         |  WHERE e.area_id NOT IN (SELECT area_id FROM inside)),
-        |proj1 AS (
-        |  SELECT *, (x1 - cx0) * kx AS ax, y1 - cy0 AS ay,
-        |    (x2 - cx0) * kx AS bx, y2 - cy0 AS "by" FROM proj0),
-        |proj2 AS (SELECT *, bx - ax AS ddx, "by" - ay AS ddy FROM proj1),
-        |proj3 AS (
-        |  SELECT *, least(greatest(
-        |    (-(ax * ddx + ay * ddy)) / (ddx * ddx + ddy * ddy),
-        |    CAST(0 AS DOUBLE)), CAST(1 AS DOUBLE)) AS t FROM proj2),
-        |proj4 AS (
-        |  SELECT *, cx0 + (ax + ddx * t) / kx AS snap_lon,
-        |    cy0 + (ay + ddy * t) AS snap_lat FROM proj3),
+        |${GeoFunctions.sqlSnapCtes("proj0", "cx0", "cy0")},
         |proj5 AS (SELECT *, ($hav) AS dist_m FROM proj4),
         |snapped AS (
         |  SELECT area_id, snap_lon, snap_lat FROM proj5
@@ -533,9 +523,7 @@ object SkiAreaOps {
     "q_ski_area_augment", {
       val havAssign = GeoFunctions.sqlHaversineM("a.alon", "a.alat", "r.lon0", "r.lat0")
       val (lonN, latN, iv, gh) = GeoFunctions.sqlGeohash6("plon", "plat")
-      val conv = OutputFormats.sqlDifficultyConvention
-        .replaceAll("lon0", "alon").replaceAll("lat0", "alat")
-        .replaceAll("\n", " ")
+      val conv = OutputFormats.sqlDifficultyConvention("alon", "alat")
       s"""WITH ${SkiQueries.oraclePrelude},
         |areas AS (
         |  SELECT o_orderkey AS area_id,
@@ -641,9 +629,7 @@ object SkiAreaOps {
   // replays every gate from the flat columns.
   private val qFormatUnion = QuerySpec.of(
     "q_ski_area_format_union", {
-      val conv = (lon: String, lat: String) =>
-        OutputFormats.sqlDifficultyConvention
-          .replace("lon0", lon).replace("lat0", lat).replaceAll("\n", " ")
+      val conv = OutputFormats.sqlDifficultyConvention("lon", "lat")
       s"""WITH lu AS (
         |  SELECT 'openstreetmap' AS source,
         |    'way/' || CAST(p_partkey AS VARCHAR) AS src_id,
@@ -666,7 +652,7 @@ object SkiAreaOps {
         |    AND p_partkey % 5 <> 2),
         |lu2 AS (
         |  SELECT source, src_id, status, name, website, wikidata_id,
-        |    (${conv("lon", "lat")}) AS run_convention, activities, lon, lat
+        |    ($conv) AS run_convention, activities, lon, lat
         |  FROM lu),
         |si AS (
         |  SELECT 'openstreetmap' AS source,
@@ -701,13 +687,13 @@ object SkiAreaOps {
         |  FROM customer),
         |sm2 AS (
         |  SELECT source, src_id, status, name, website, wikidata_id,
-        |    (${conv("lon", "lat")}) AS run_convention, activities, lon, lat
+        |    ($conv) AS run_convention, activities, lon, lat
         |  FROM sm),
         |u AS (
         |  SELECT * FROM lu2 UNION ALL SELECT * FROM si
         |  UNION ALL SELECT * FROM sm2)
         |SELECT source, src_id,
-        |  md5(concat_ws('|', 'skiArea', source, src_id, status, name)) AS id,
+        |  ${Formatters.sql.skiAreaId} AS id,
         |  status, name, website, wikidata_id, run_convention, activities,
         |  (floor((lon) * 1e6 + 0.5) / 1e6) AS lon, (floor((lat) * 1e6 + 0.5) / 1e6) AS lat
         |FROM u ORDER BY source, src_id""".stripMargin

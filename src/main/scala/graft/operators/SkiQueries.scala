@@ -97,8 +97,7 @@ object SkiQueries {
       |SELECT way_id, status, array_to_string(uses, ';') AS uses,
       |  difficulty, grooming, gladed, oneway, patrolled, snowmaking,
       |  snowfarming, tunnel, lit, name, ref, website, wikidata_id,
-      |  md5(concat_ws('|', 'run', CAST(way_id AS VARCHAR), status,
-      |    array_to_string(uses, ';'), difficulty, name)) AS id,
+      |  ${Formatters.sql.runId} AS id,
       |  (status = 'operating' AND len(uses) > 0) AS kept
       |FROM fmt ORDER BY way_id""".stripMargin) { (s, d) =>
     formatted(s, d)
@@ -303,17 +302,7 @@ object SkiQueries {
         |  FROM cand c JOIN kept f ON c.way_id = f.way_id,
         |  unnest([1, 2]) AS sg(k)),
         |proj0 AS (SELECT *, cos(radians(alat)) AS kx FROM seg),
-        |proj1 AS (
-        |  SELECT *, (x1 - alon) * kx AS ax, y1 - alat AS ay,
-        |    (x2 - alon) * kx AS bx, y2 - alat AS "by" FROM proj0),
-        |proj2 AS (SELECT *, bx - ax AS ddx, "by" - ay AS ddy FROM proj1),
-        |proj3 AS (
-        |  SELECT *, least(greatest(
-        |    (-(ax * ddx + ay * ddy)) / (ddx * ddx + ddy * ddy),
-        |    CAST(0 AS DOUBLE)), CAST(1 AS DOUBLE)) AS t FROM proj2),
-        |proj4 AS (
-        |  SELECT *, alon + (ax + ddx * t) / kx AS snap_lon,
-        |    alat + (ay + ddy * t) AS snap_lat FROM proj3),
+        |${GeoFunctions.sqlSnapCtes("proj0", "alon", "alat")},
         |proj5 AS (SELECT area_id, way_id, ($hav) AS dist_m FROM proj4),
         |best AS (
         |  SELECT area_id, way_id, min(dist_m) AS dist_m

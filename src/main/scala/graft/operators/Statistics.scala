@@ -28,11 +28,12 @@ import SkiFeatures.{CellDeg, RadiusM}
   */
 object Statistics {
 
-  /** Shared oracle CTE block for the per-area machinery (areas, grid
-    * assignment, per-activity run rows, lift rows, root elevations) —
-    * prefixed by `SkiQueries.oraclePrelude` at each use site. Reused by
-    * the full-statistics oracle and the ski-area CSV oracle so both
-    * replay identical assignment semantics.
+  /** Shared oracle CTE block for the per-area machinery (areas with
+    * their activity and id, grid assignment, per-activity run rows, lift
+    * rows, the lift-serviced elevations `el` and the per-activity km
+    * `adp`) — prefixed by `SkiQueries.oraclePrelude` at each use site.
+    * Reused by the full-statistics oracle and the ski-area sink oracles
+    * so all replay identical assignment semantics.
     */
   private[operators] val statsOracleCtes: String = {
     val havRun = GeoFunctions.sqlHaversineM("a.alon", "a.alat", "r.lon0", "r.lat0")
@@ -42,7 +43,10 @@ object Statistics {
       "(llon + ldx)", "(llat + ldy)") + " + " +
       GeoFunctions.sqlHaversineM("(llon + ldx)", "(llat + ldy)",
         "(llon + ldx * 2)", "(llat + ldy)")
-    s"""areas AS (${SkiFeatures.sql.areas()}),
+    val (mn, mx) = sql.servicedElevation
+    s"""areas AS (
+      |  SELECT *, ${Formatters.sql.synthAreaId("area_id")} AS fid
+      |  FROM (${SkiFeatures.sql.areas(withAct = true)})),
       |acells AS (
       |  ${GridJoin.sqlWalk("area_id, alon, alat", "alon", "alat", "areas",
             CellDeg, GridJoin.Within(RadiusM))}),
@@ -62,11 +66,6 @@ object Statistics {
       |  SELECT g.area_id, u.activity, r.*
       |  FROM rr r JOIN rasg g ON r.way_id = g.way_id,
       |    unnest(list_filter(r.uses, x -> x IN ('downhill', 'nordic'))) AS u(activity)),
-      |rroot AS (
-      |  SELECT area_id,
-      |    min(CASE WHEN minz <> 0 THEN minz END) AS run_min,
-      |    max(CASE WHEN maxz <> 0 THEN maxz END) AS run_max
-      |  FROM runs GROUP BY 1),
       |lifts0 AS (
       |  SELECT o_orderkey AS lift_id,
       |    CASE o_custkey % 6 WHEN 0 THEN 'chair_lift' WHEN 1 THEN 'gondola'
@@ -89,28 +88,82 @@ object Statistics {
       |  WHERE ($havLift) <= $RadiusM GROUP BY l.lift_id),
       |lj AS (
       |  SELECT g.area_id, l.* FROM ll l JOIN lasg g ON l.lift_id = g.lift_id),
-      |lroot AS (
+      |el AS (
+      |  SELECT coalesce(r.area_id, l.area_id) AS area_id, $mn AS mn, $mx AS mx
+      |  FROM (
+      |    SELECT area_id,
+      |      min(CASE WHEN minz <> 0 THEN minz END) AS run_min,
+      |      max(CASE WHEN maxz <> 0 THEN maxz END) AS run_max
+      |    FROM runs GROUP BY 1) r
+      |  FULL OUTER JOIN (
+      |    SELECT area_id,
+      |      min(CASE WHEN minz <> 0 THEN minz END) AS lift_min,
+      |      max(CASE WHEN maxz <> 0 THEN maxz END) AS lift_max
+      |    FROM lj GROUP BY 1) l ON r.area_id = l.area_id),
+      |adp AS (
       |  SELECT area_id,
-      |    min(CASE WHEN minz <> 0 THEN minz END) AS lift_min,
-      |    max(CASE WHEN maxz <> 0 THEN maxz END) AS lift_max
-      |  FROM lj GROUP BY 1)""".stripMargin
+      |    sum(CASE WHEN activity = 'downhill' THEN km END) AS dkm,
+      |    sum(CASE WHEN activity = 'nordic' THEN km END) AS nkm
+      |  FROM runs GROUP BY 1)""".stripMargin
   }
 
+  /** The lift-serviced elevations (`SkiAreaStatistics.ts:71-91`) over
+    * a frame carrying run_min/run_max and lift_min/lift_max: (min, max),
+    * min = max(runMin, liftMin) and max = min(runMax, liftMax), a
+    * missing side falling back to the other.
+    */
+  def servicedElevation: (Column, Column) = (
+    when(col("run_min").isNull, col("lift_min"))
+      .when(col("lift_min").isNull, col("run_min"))
+      .otherwise(greatest(col("run_min"), col("lift_min"))),
+    when(col("run_max").isNull, col("lift_max"))
+      .when(col("lift_max").isNull, col("run_max"))
+      .otherwise(least(col("run_max"), col("lift_max"))))
+
+  /** DuckDB twin of [[servicedElevation]]. */
+  object sql {
+    val servicedElevation: (String, String) = (
+      """(CASE WHEN run_min IS NULL THEN lift_min
+        |    WHEN lift_min IS NULL THEN run_min
+        |    ELSE greatest(run_min, lift_min) END)""".stripMargin,
+      """(CASE WHEN run_max IS NULL THEN lift_max
+        |    WHEN lift_max IS NULL THEN run_max
+        |    ELSE least(run_max, lift_max) END)""".stripMargin)
+  }
+
+  // elevation 0 counts as missing ("JS truthiness")
+  private def nzMin(c: Column) = min(when(c =!= 0.0, c))
+  private def nzMax(c: Column) = max(when(c =!= 0.0, c))
+
   /** Spark twin of [[statsOracleCtes]]: the shared per-area dataflow.
-    * `areas` = (area_id, alon, alat); `runs` = per-(run, activity)
-    * rows with the min-area assignment; `rroot`/`lroot` = per-area
-    * non-zero elevation extremes ("JS truthiness" — elevation 0 counts
-    * as missing); `lj` = assigned lift rows.
+    * `areas` = (area_id, act, alon, alat, fid); `runs` = per-(run,
+    * activity) rows with the min-area assignment; `lj` = assigned lift
+    * rows. The sinks' per-area rollups are built on first use.
     */
   private[operators] final case class AreaFrames(
-      areas: DataFrame, runs: DataFrame, rroot: DataFrame,
-      lj: DataFrame, lroot: DataFrame)
+      areas: DataFrame, runs: DataFrame, lj: DataFrame) {
+    /** (area_id, mn, mx): the lift-serviced elevations. */
+    lazy val elevation: DataFrame = {
+      val (mn, mx) = servicedElevation
+      runs.groupBy("area_id")
+        .agg(nzMin(col("minz")).as("run_min"), nzMax(col("maxz")).as("run_max"))
+        .join(lj.groupBy("area_id").agg(nzMin(col("minz")).as("lift_min"),
+          nzMax(col("maxz")).as("lift_max")), Seq("area_id"), "full_outer")
+        .select(col("area_id"), mn.as("mn"), mx.as("mx"))
+    }
+
+    /** (area_id, dkm, nkm): run km per activity. */
+    lazy val activityKm: DataFrame = runs.groupBy("area_id").agg(
+      sum(when(col("activity") === "downhill", col("km"))).as("dkm"),
+      sum(when(col("activity") === "nordic", col("km"))).as("nkm"))
+  }
 
   private[operators] def areaFrames(s: SparkSession, d: String): AreaFrames = {
-    def nzMin(c: Column) = min(when(c =!= 0.0, c))
-    def nzMax(c: Column) = max(when(c =!= 0.0, c))
     val areas = SkiFeatures.areas(s, d)
-      .select(col("area_id"), col("lon").as("alon"), col("lat").as("alat"))
+      .select(col("area_id"), col("act"), col("lon").as("alon"),
+        col("lat").as("alat"), Formatters.synthAreaId(col("area_id")).as("fid"))
+    // the grid joins size their broadcast from the left frame's columns
+    val anchors = areas.select("area_id", "alon", "alat")
 
     def pt(i: Int, j: Int) = element_at(element_at(col("coords"), i), j)
     val rr = SkiQueries.formatted(s, d).filter(col("kept"))
@@ -121,12 +174,10 @@ object Statistics {
         (pt(3, 3) - pt(1, 3)).as("dz"),
         pt(1, 3).as("minz"), pt(3, 3).as("maxz"),
         pt(1, 1).as("lon"), pt(1, 2).as("lat"))
-    val rasg = SkiQueries.nearestArea(areas, rr, "way_id")
+    val rasg = SkiQueries.nearestArea(anchors, rr, "way_id")
     val runs = rr.join(rasg, "way_id")
       .select(col("*"), explode(filter(col("uses"),
         u => u.isin("downhill", "nordic"))).as("activity"))
-    val rroot = runs.groupBy("area_id")
-      .agg(nzMin(col("minz")).as("run_min"), nzMax(col("maxz")).as("run_max"))
 
     val k = col("o_orderkey")
     val tsel = pmod(col("o_custkey"), lit(6))
@@ -145,11 +196,8 @@ object Statistics {
       .withColumn("dz", lit(2.0) * col("rise"))
       .withColumn("minz", col("lz0"))
       .withColumn("maxz", col("lz0") + lit(2.0) * col("rise"))
-    val lasg = SkiQueries.nearestArea(areas, ll, "lift_id", "llon", "llat")
-    val lj = ll.join(lasg, "lift_id")
-    val lroot = lj.groupBy("area_id")
-      .agg(nzMin(col("minz")).as("lift_min"), nzMax(col("maxz")).as("lift_max"))
-    AreaFrames(areas, runs, rroot, lj, lroot)
+    val lasg = SkiQueries.nearestArea(anchors, ll, "lift_id", "llon", "llat")
+    AreaFrames(areas, runs, ll.join(lasg, "lift_id"))
   }
 
   // ---- A1 full shape -----------------------------------------------------
@@ -171,8 +219,6 @@ object Statistics {
     * the (small) area key space.
     */
   def fullStatistics(runs: DataFrame, lifts: DataFrame): DataFrame = {
-    def nzMin(c: Column) = min(when(c =!= 0.0, c))
-    def nzMax(c: Column) = max(when(c =!= 0.0, c))
     val rd = runs.groupBy("area_id", "activity", "difficulty")
       .agg(count(lit(1)).as("n"), sum("km").as("km"),
         sum(when(col("snowmaking"), col("km")).otherwise(0.0)).as("smk"),
@@ -217,18 +263,13 @@ object Statistics {
       .agg(array_join(array_sort(collect_list(col("entry"))), "|")
         .as("lifts_stats"), min("mn").as("lift_min"), max("mx").as("lift_max"))
 
+    val (mn, mx) = servicedElevation
     rstr.join(lstr, Seq("area_id"), "full_outer")
       .select(col("area_id"),
         coalesce(col("runs_stats"), lit("")).as("runs_stats"),
         coalesce(col("lifts_stats"), lit("")).as("lifts_stats"),
-        (floor((when(col("run_min").isNull, col("lift_min"))
-          .when(col("lift_min").isNull, col("run_min"))
-          .otherwise(greatest(col("run_min"), col("lift_min")))) * 1e1 + 0.5) / 1e1)
-          .as("min_elevation"),
-        (floor((when(col("run_max").isNull, col("lift_max"))
-          .when(col("lift_max").isNull, col("run_max"))
-          .otherwise(least(col("run_max"), col("lift_max")))) * 1e1 + 0.5) / 1e1)
-          .as("max_elevation"))
+        (floor(mn * 1e1 + 0.5) / 1e1).as("min_elevation"),
+        (floor(mx * 1e1 + 0.5) / 1e1).as("max_elevation"))
   }
 
   private val qFull = QuerySpec.of(
@@ -271,18 +312,12 @@ object Statistics {
         |      || ',max=' || coalesce(printf('%.1f', mx), '-') || '}',
         |      '|' ORDER BY lift_type) AS lifts_stats
         |  FROM lt GROUP BY 1)
-        |SELECT coalesce(r.area_id, l.area_id) AS area_id,
+        |SELECT area_id,
         |  coalesce(rstr.runs_stats, '') AS runs_stats,
         |  coalesce(lstr.lifts_stats, '') AS lifts_stats,
-        |  (floor((CASE WHEN run_min IS NULL THEN lift_min
-        |    WHEN lift_min IS NULL THEN run_min
-        |    ELSE greatest(run_min, lift_min) END) * 1e1 + 0.5) / 1e1) AS min_elevation,
-        |  (floor((CASE WHEN run_max IS NULL THEN lift_max
-        |    WHEN lift_max IS NULL THEN run_max
-        |    ELSE least(run_max, lift_max) END) * 1e1 + 0.5) / 1e1) AS max_elevation
-        |FROM rroot r FULL OUTER JOIN lroot l ON r.area_id = l.area_id
-        |LEFT JOIN rstr ON coalesce(r.area_id, l.area_id) = rstr.area_id
-        |LEFT JOIN lstr ON coalesce(r.area_id, l.area_id) = lstr.area_id
+        |  (floor(mn * 1e1 + 0.5) / 1e1) AS min_elevation,
+        |  (floor(mx * 1e1 + 0.5) / 1e1) AS max_elevation
+        |FROM el LEFT JOIN rstr USING (area_id) LEFT JOIN lstr USING (area_id)
         |ORDER BY area_id""".stripMargin
     }) { (s, d) =>
     val af = areaFrames(s, d)

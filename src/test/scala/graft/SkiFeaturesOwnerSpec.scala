@@ -9,7 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * and radius, and the every-23rd-order lifts (their line and their
   * clustering nodes); `SkiQueries` the partial-overlap duplicate runs;
   * `Normalization` the 1e-7° quantizer; `GridJoin` the oracles' cell
-  * walk.
+  * walk. The sinks' rules have one owner each too: `Statistics` the
+  * lift-serviced elevations, `Formatters` the id parts of runs, lifts,
+  * ski areas and spots, `HashFunctions` the content-id hash, and
+  * `GeoFunctions` the oracles' segment snap.
   */
 class SkiFeaturesOwnerSpec extends AnyFunSuite {
 
@@ -44,7 +47,22 @@ class SkiFeaturesOwnerSpec extends AnyFunSuite {
     ("oracle cell walk (unnest([-1, 0, 1]))", """unnest\(\s*\[\s*-\d""",
       "GridJoin.scala"),
     ("oracle closure walk (cx BETWEEN cx - 1)",
-      """BETWEEN\s+\S*c[xy]\s*-\s*\d""", "GridJoin.scala"))
+      """BETWEEN\s+\S*c[xy]\s*-\s*\d""", "GridJoin.scala"),
+    ("lift-serviced elevation rule", """greatest\(col\("run_min"\)|greatest\(run_min""",
+      "Statistics.scala"),
+    ("content-id hash, Column form", """md5\(concat_ws\(\s*"\|"""",
+      "HashFunctions.scala"),
+    ("content-id hash, SQL form", """md5\(concat_ws\(\s*'\|'""",
+      "HashFunctions.scala"),
+    ("run/lift/ski-area/spot id parts",
+      """contentId\(\s*lit\(\s*"(run|lift|skiArea|spot)"|md5\(\s*'(skiArea|spot)\||"'(run|lift|skiArea|spot)'"""",
+      "Formatters.scala"),
+    ("oracle segment snap clamp (ax * ddx + ay * ddy)",
+      """ax\s*\*\s*ddx\s*\+\s*ay\s*\*\s*ddy""", "GeoFunctions.scala"))
+
+  /** The owners of the sinks' per-area and per-feature rules. */
+  private val SinkOwners = Set("Statistics.scala", "Formatters.scala",
+    "HashFunctions.scala", "GeoFunctions.scala")
 
   /** The offending lines: a form outside its owner. */
   private def copies(forms: Seq[(String, String, String)]): Seq[String] = {
@@ -68,10 +86,18 @@ class SkiFeaturesOwnerSpec extends AnyFunSuite {
   }
 
   test("the duplicate-run input, the quantizer and the oracle walk each have one owner") {
-    val offenders = copies(OwnedForms.filter(_._3 != "SkiFeatures.scala"))
+    val offenders = copies(OwnedForms.filter(f =>
+      f._3 != "SkiFeatures.scala" && !SinkOwners(f._3)))
     assert(offenders.isEmpty,
       "copies outside their owner; call the owner (or its SQL twin in an " +
         "oracle) instead:\n" + offenders.mkString("\n"))
+  }
+
+  test("the elevation rule, the feature ids and the segment snap each have one owner") {
+    val offenders = copies(OwnedForms.filter(f => SinkOwners(f._3)))
+    assert(offenders.isEmpty,
+      "copies outside their owner; select the owner's column (or call its " +
+        "SQL twin in an oracle) instead:\n" + offenders.mkString("\n"))
   }
 
   /** The files whose lines match `form`. */
