@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided synthetic tables (TESTDATA.md).
   *
@@ -15,8 +16,35 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Each table's parquet schema, inferred once per file set: keyed by
+    * [[fingerprint]] and the session's parquet confs, which change what
+    * inference returns (`ts` is a long under
+    * `spark.sql.legacy.parquet.nanosAsLong`).
+    */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** Table `name` of `sfDir`. Only the first load of a file set runs
+    * the schema-inference job; later loads read with the schema it
+    * found, and a rewritten file (new size or mtime) is inferred again.
+    * A missing table fails as `spark.read.parquet` does.
+    */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    scala.util.Try(fingerprint(spark, sfDir, name)).toOption match {
+      case None => spark.read.parquet(path)
+      case Some(fp) =>
+        val key = fp + spark.conf.getAll
+          .filter(_._1.contains("parquet")).toSeq.sorted.mkString("|", "|", "")
+        Option(schemas.get(key)) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            schemas.put(key, df.schema)
+            df
+        }
+    }
+  }
 
   /** Round-robin fan-out to all cores. The test tables are single-
     * row-group parquet files (one input split), so heavy per-row work

@@ -62,10 +62,13 @@ object Clustering {
         .select(col("area_id"), col("act"), col("okey"),
           col("lon"), col("lat"))
         .distinct()
-      // LAZY checkpoint + one aggregate: ONE driver action per
-      // iteration both materializes the round's blocks (doCheckpoint
-      // completes every partition at job end) and answers the
-      // convergence question (no rows walked = no new pairs)
+      // LAZY checkpoint, then one aggregate: TWO SQL executions per
+      // round. With AQE the checkpoint plans its shuffle stages at
+      // once and runs them as their own execution (3-4 jobs under
+      // `localCheckpoint`); walkRows' `head` then materializes the
+      // round's blocks (doCheckpoint completes every partition at job
+      // end) and answers the convergence question (no rows walked =
+      // no new pairs)
       val newPairs = (if (reachedParts.isEmpty) cand
         else cand.join(reached.select("area_id", "okey"),
           Seq("area_id", "okey"), "left_anti"))

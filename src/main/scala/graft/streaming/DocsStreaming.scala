@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.streaming.StreamHarness._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming corpus ingest maintaining the dedup index incrementally —
   * the `foreachBatch` production-sink pattern: each micro-batch of
@@ -21,43 +21,34 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object DocsStreaming {
 
-  private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-
   def indexViaStream(spark: SparkSession, sfDir: String,
-      shingleN: Int, k: Int): DataFrame = {
-    import graft.functions.TextFunctions._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val outDir = graft.TempDirs.scoped(
-      s"graft-stream-index-${counter.incrementAndGet()}-").toString
-    val stream = spark.readStream
-      .schema(schema)
-      .parquet(s"$sfDir/documents*.parquet")
-    // checkpointLocation makes the drive restartable (offsets tracked
-    // per micro-batch); the parquet append itself is at-least-once —
-    // a production deployment would key an idempotent MERGE on
-    // (batchId, doc_id), same handle, different batch-side statement
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$outDir-ckpt")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch
-          .select(col("doc_id"), col("source"),
-            shingles(tokens(col("text")), shingleN).as("sh"))
-          .filter(size(col("sh")) > 0)
-          .select(col("doc_id"), col("source"),
-            minhashSignature(col("sh"), k).as("sig"))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    spark.read.parquet(outDir)
-      .select(col("source"), element_at(col("sig"), 1).as("s1"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"),
-        countDistinct(col("s1")).as("n_distinct_s1"),
-        sum(pmod(col("s1"), lit(1000000L))).as("checksum"))
-      .orderBy("source")
-  }
+      shingleN: Int, k: Int): DataFrame =
+    withScratch("graft-stream-index-") { s =>
+      import graft.functions.TextFunctions._
+      val index = s.dir("index")
+      // the checkpoint makes the drive restartable (offsets tracked
+      // per micro-batch); the parquet append itself is at-least-once —
+      // a production deployment would key an idempotent MERGE on
+      // (batchId, doc_id), same handle, different batch-side statement
+      runAvailableNow(fileStream(spark, sfDir, "documents").writeStream
+        .option("checkpointLocation", s.ckpt)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batch
+            .select(col("doc_id"), col("source"),
+              shingles(tokens(col("text")), shingleN).as("sh"))
+            .filter(size(col("sh")) > 0)
+            .select(col("doc_id"), col("source"),
+              minhashSignature(col("sh"), k).as("sig"))
+            .write.mode("append").parquet(index)
+          ()
+        })
+      spark.read.parquet(index)
+        .select(col("source"), element_at(col("sig"), 1).as("s1"))
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_docs"),
+          countDistinct(col("s1")).as("n_distinct_s1"),
+          sum(pmod(col("s1"), lit(1000000L))).as("checksum"))
+        .orderBy("source")
+        .localCheckpoint() // the scratch root is deleted on return
+    }
 }

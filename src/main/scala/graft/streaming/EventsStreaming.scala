@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.Tables
+import graft.streaming.StreamHarness._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Structured Streaming path for the events pipeline.
   *
@@ -12,11 +13,9 @@ import org.apache.spark.sql.streaming.Trigger
   * watermark → groupBy → memory sink, driven to completion with
   * AvailableNow so a static parquet file produces a deterministic,
   * batch-equivalent result. On a live source only the trigger and sink
-  * change.
+  * change. Every drive runs on [[StreamHarness]].
   */
 object EventsStreaming {
-
-  private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Typed rows for the stateful sessionizer (public so Catalyst's
     * generated encoders can instantiate them).
@@ -46,16 +45,10 @@ object EventsStreaming {
   def sessionizeViaStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val name = s"graft_stream_sessions_${counter.incrementAndGet()}"
-    val stream = spark.readStream
-      .schema(schema)
-      .parquet(s"$sfDir/events*.parquet")
+    val sessions = events(spark, sfDir, "")
       .select(col("user_id").cast("long").as("user_id"),
-        col("event_id").cast("long").as("event_id"),
-        graft.operators.Events.msFromTs(schema("ts").dataType).as("ms"))
+        col("event_id").cast("long").as("event_id"), col("ms"))
       .as[SessEvent]
-    val sessions = stream
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessState, SessOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -82,15 +75,7 @@ object EventsStreaming {
           flush()
           out.iterator
       }
-    val q = sessions.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    spark.table(name).orderBy("user_id", "session_id")
+    toMemory(sessions, "append").orderBy("user_id", "session_id")
   }
 
   /** Rows for the timeout sessionizer (event_time carries the
@@ -101,20 +86,20 @@ object EventsStreaming {
 
   /** Cross-batch stateful sessionization with EVENT-TIME TIMEOUT —
     * the production shape [[sessionizeViaStream]]'s single-batch
-    * contract sidesteps. Here the drive (restart-per-file, like
-    * [[lateViaStream]]) delivers even-id events, then odd-id events,
-    * then two watermark sentinels, so the operator actually
-    * exercises: (1) merging a micro-batch's arrivals into buffered
-    * per-user state, (2) emitting a session only once the watermark
-    * proves it can no longer grow (last event + gap ≤ watermark — a
-    * later event would have event time > watermark, hence > last +
-    * gap), (3) GroupState.setTimeoutTimestamp(last + gap) so users
-    * with no further traffic still flush when the watermark passes,
-    * and (4) an explicit late rule — arrivals with ms ≤ watermark
-    * are dropped, mirroring the ≤ eviction rule the aggregation path
-    * pins in LlmOpsSpec. Everything surviving is sessionized exactly
-    * like the batch twin, so the oracle is the batch sessionizer over
-    * the deterministic surviving set.
+    * contract sidesteps. Here the staged restart drive delivers
+    * even-id events, then odd-id events, then two watermark sentinels,
+    * so the operator actually exercises: (1) merging a micro-batch's
+    * arrivals into buffered per-user state, (2) emitting a session
+    * only once the watermark proves it can no longer grow (last event
+    * + gap ≤ watermark — a later event would have event time >
+    * watermark, hence > last + gap), (3)
+    * GroupState.setTimeoutTimestamp(last + gap) so users with no
+    * further traffic still flush when the watermark passes, and (4) an
+    * explicit late rule — arrivals with ms ≤ watermark are dropped,
+    * mirroring the ≤ eviction rule the aggregation path pins in
+    * LlmOpsSpec. Everything surviving is sessionized exactly like the
+    * batch twin, so the oracle is the batch sessionizer over the
+    * deterministic surviving set.
     *
     * Session NUMBERING is assigned after the fact, by start-time rank
     * in the final read — never from streaming state. A timeout flush
@@ -128,91 +113,58 @@ object EventsStreaming {
       : DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import java.nio.file.Files
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val batch = spark.read.parquet(s"$sfDir/events.parquet")
-    val maxMs = batch
-      .agg(max(graft.operators.Events.msFromTs(schema("ts").dataType)))
-      .head.getLong(0)
-    val dir = graft.TempDirs.scoped("graft_sesst_in_")
-    val outDir = graft.TempDirs.scoped("graft_sesst_out_")
-    val cpDir = graft.TempDirs.scoped("graft_sesst_cp_")
-    def runOnce(): Unit = {
-      val stream = spark.readStream
-        .schema(schema)
-        .parquet(s"$dir/*.parquet")
-        .select(col("user_id").cast("long").as("user_id"),
-          col("event_id").cast("long").as("event_id"),
-          graft.operators.Events.msFromTs(schema("ts").dataType).as("ms"))
-        .withColumn("event_time", timestamp_millis(col("ms")))
-        .withWatermark("event_time", "10 minutes")
-        .as[SessEventT]
-      val sessions = stream
-        .groupByKey(_.user_id)
-        .flatMapGroupsWithState[SessState, SessOut](
-          OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-          case (user, it, state) =>
-            val wm = state.getCurrentWatermarkMs()
-            val prior = state.getOption.map(_.events).getOrElse(Seq.empty)
-            // late rule: ms ≤ watermark drops (watermark is ms-epoch)
-            val incoming = it.filter(_.ms > wm)
-              .map(e => (e.ms, e.event_id)).toSeq
-            val merged = (prior ++ incoming).sorted
-            if (merged.isEmpty) { state.remove(); Iterator.empty }
-            else {
-              // cut into gap-delimited sessions
-              val sessions = scala.collection.mutable
-                .ArrayBuffer[Seq[(Long, Long)]]()
-              var cur = scala.collection.mutable.ArrayBuffer(merged.head)
-              merged.tail.foreach { e =>
-                if (e._1 - cur.last._1 > SessionGapMs) {
-                  sessions += cur.toSeq
-                  cur = scala.collection.mutable.ArrayBuffer(e)
-                } else cur += e
-              }
-              sessions += cur.toSeq
-              // a session is final once the watermark proves no
-              // arrival can extend it; on timeout everything is
-              val closed =
-                if (state.hasTimedOut) sessions.toSeq
-                else sessions.toSeq.takeWhile(_.last._1 + SessionGapMs <= wm)
-              val out = closed.map { ss =>
-                SessOut(user, 0L, ss.size.toLong, // sid assigned post-hoc
-                  ss.head._1, ss.last._1 - ss.head._1)
-              }
-              val rest = sessions.drop(closed.size).flatten.toSeq
-              if (rest.isEmpty) state.remove()
+    val maxMs = lastMs(spark, sfDir)
+    withScratch("graft_sesst_") { s =>
+      restarts(s, evenThenOdd(spark, sfDir) ++ sentinels(spark, sfDir, maxMs)) {
+        val sessions = events(spark, sfDir, "10 minutes", s.staged)
+          .select(col("user_id").cast("long").as("user_id"),
+            col("event_id").cast("long").as("event_id"), col("ms"),
+            col("event_time"))
+          .as[SessEventT]
+          .groupByKey(_.user_id)
+          .flatMapGroupsWithState[SessState, SessOut](
+            OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+            case (user, it, state) =>
+              val wm = state.getCurrentWatermarkMs()
+              val prior = state.getOption.map(_.events).getOrElse(Seq.empty)
+              // late rule: ms ≤ watermark drops (watermark is ms-epoch)
+              val incoming = it.filter(_.ms > wm)
+                .map(e => (e.ms, e.event_id)).toSeq
+              val merged = (prior ++ incoming).sorted
+              if (merged.isEmpty) { state.remove(); Iterator.empty }
               else {
-                state.update(SessState(rest))
-                state.setTimeoutTimestamp(rest.last._1 + SessionGapMs)
+                // cut into gap-delimited sessions
+                val sessions = scala.collection.mutable
+                  .ArrayBuffer[Seq[(Long, Long)]]()
+                var cur = scala.collection.mutable.ArrayBuffer(merged.head)
+                merged.tail.foreach { e =>
+                  if (e._1 - cur.last._1 > SessionGapMs) {
+                    sessions += cur.toSeq
+                    cur = scala.collection.mutable.ArrayBuffer(e)
+                  } else cur += e
+                }
+                sessions += cur.toSeq
+                // a session is final once the watermark proves no
+                // arrival can extend it; on timeout everything is
+                val closed =
+                  if (state.hasTimedOut) sessions.toSeq
+                  else sessions.toSeq.takeWhile(_.last._1 + SessionGapMs <= wm)
+                val out = closed.map { ss =>
+                  SessOut(user, 0L, ss.size.toLong, // sid assigned post-hoc
+                    ss.head._1, ss.last._1 - ss.head._1)
+                }
+                val rest = sessions.drop(closed.size).flatten.toSeq
+                if (rest.isEmpty) state.remove()
+                else {
+                  state.update(SessState(rest))
+                  state.setTimeoutTimestamp(rest.last._1 + SessionGapMs)
+                }
+                out.iterator
               }
-              out.iterator
-            }
-        }
-      val q = sessions.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir.toString)
-        .option("checkpointLocation", cpDir.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
-    }
-    try {
-      writeEventsFile(batch.filter(pmod(col("event_id"), lit(2)) === 0),
-        dir, "e0_even.parquet")
-      runOnce()
-      writeEventsFile(batch.filter(pmod(col("event_id"), lit(2)) === 1),
-        dir, "e1_odd.parquet")
-      runOnce()
-      writeEventsFile(sentinelDf(spark, schema, maxMs + 30L * 86400000L, 0),
-        dir, "e2_sentinel.parquet")
-      runOnce()
-      writeEventsFile(sentinelDf(spark, schema, maxMs + 31L * 86400000L, 1),
-        dir, "e3_sentinel.parquet")
-      runOnce()
-      spark.read.parquet(outDir.toString)
+          }
+        appendTo(s, sessions)
+      }
+      spark.read.parquet(s.out)
         .filter(col("user_id") >= 0) // sentinels advance time, never count
         .withColumn("session_id",
           row_number().over(org.apache.spark.sql.expressions.Window
@@ -220,9 +172,8 @@ object EventsStreaming {
         .select("user_id", "session_id", "n_events", "start_ms",
           "duration_ms")
         .orderBy("user_id", "session_id")
-        .localCheckpoint() // the scratch dirs are deleted on return
-    } finally Seq(dir, outDir, cpDir).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteDirectory(p.toFile))
+        .localCheckpoint() // the scratch root is deleted on return
+    }
   }
 
   /** Incrementally-maintained materialized view: `foreachBatch` MERGES
@@ -234,80 +185,62 @@ object EventsStreaming {
     * on the group key, write version v<batchId>, then flip a pointer
     * file; a `_last_batch` marker makes re-delivered batches no-ops
     * (foreachBatch is at-least-once — idempotence is the sink's job).
-    * The drive stages even-id then odd-id files as separate runs
-    * (same restart pattern as [[lateViaStream]]) so the merge path
-    * provably executes across micro-batches; the final view must
-    * equal the one-shot batch aggregate, which is the oracle.
+    * The staged restart drive delivers even-id then odd-id files as
+    * separate runs so the merge path provably executes across
+    * micro-batches; the final view must equal the one-shot batch
+    * aggregate, which is the oracle.
     */
-  def matviewViaStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val batch = spark.read.parquet(s"$sfDir/events.parquet")
-    val dir = graft.TempDirs.scoped("graft_mv_in_")
-    val viewDir = graft.TempDirs.scoped("graft_mv_view_")
-    val cpDir = graft.TempDirs.scoped("graft_mv_cp_")
-    val pointer = viewDir.resolve("_CURRENT")
-    val marker = viewDir.resolve("_last_batch")
-    def currentView(): Option[DataFrame] =
-      if (Files.exists(pointer))
-        Some(spark.read.parquet(
-          viewDir.resolve("v" + Files.readString(pointer)).toString))
-      else None
-    def runOnce(): Unit = {
+  def matviewViaStream(spark: SparkSession, sfDir: String): DataFrame =
+    withScratch("graft_mv_") { s =>
+      import java.nio.file.Files
+      val viewDir = s.root.resolve("view")
+      val pointer = viewDir.resolve("_CURRENT")
+      val marker = viewDir.resolve("_last_batch")
+      def currentView(): Option[DataFrame] =
+        if (Files.exists(pointer))
+          Some(spark.read.parquet(
+            viewDir.resolve("v" + Files.readString(pointer)).toString))
+        else None
       // explicit fn type — foreachBatch overloads on scala vs java fns
       val mergeBatch: (DataFrame, Long) => Unit = { (df, batchId) =>
-          val last =
-            if (Files.exists(marker)) Files.readString(marker).toLong
-            else -1L
-          if (batchId > last) {
-            val b = df.groupBy("event_type")
-              .agg(count(lit(1)).as("n"),
-                sum(expr("CAST(floor((value * 100) + 0.5) AS BIGINT)"))
-                  .as("cents"))
-            val merged = currentView() match {
-              case None => b
-              case Some(cur) =>
-                cur.select(col("event_type"), col("n").as("cn"),
-                    col("cents").as("cc"))
-                  .join(b, Seq("event_type"), "full_outer")
-                  .select(col("event_type"),
-                    (coalesce(col("cn"), lit(0L))
-                      + coalesce(col("n"), lit(0L))).as("n"),
-                    (coalesce(col("cc"), lit(0L))
-                      + coalesce(col("cents"), lit(0L))).as("cents"))
-            }
-            merged.coalesce(1).write.mode("overwrite")
-              .parquet(viewDir.resolve("v" + batchId).toString)
-            Files.writeString(pointer, batchId.toString)
-            Files.writeString(marker, batchId.toString)
+        val last =
+          if (Files.exists(marker)) Files.readString(marker).toLong
+          else -1L
+        if (batchId > last) {
+          val b = df.groupBy("event_type")
+            .agg(count(lit(1)).as("n"),
+              sum(expr("CAST(floor((value * 100) + 0.5) AS BIGINT)"))
+                .as("cents"))
+          val merged = currentView() match {
+            case None => b
+            case Some(cur) =>
+              cur.select(col("event_type"), col("n").as("cn"),
+                  col("cents").as("cc"))
+                .join(b, Seq("event_type"), "full_outer")
+                .select(col("event_type"),
+                  (coalesce(col("cn"), lit(0L))
+                    + coalesce(col("n"), lit(0L))).as("n"),
+                  (coalesce(col("cc"), lit(0L))
+                    + coalesce(col("cents"), lit(0L))).as("cents"))
           }
+          merged.coalesce(1).write.mode("overwrite")
+            .parquet(viewDir.resolve("v" + batchId).toString)
+          Files.writeString(pointer, batchId.toString)
+          Files.writeString(marker, batchId.toString)
+        }
       }
-      val q = spark.readStream
-        .schema(schema)
-        .parquet(s"$dir/*.parquet")
-        .writeStream
-        .foreachBatch(mergeBatch)
-        .option("checkpointLocation", cpDir.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
-    }
-    try {
-      writeEventsFile(batch.filter(pmod(col("event_id"), lit(2)) === 0),
-        dir, "e0_even.parquet")
-      runOnce() // view v0 = evens
-      writeEventsFile(batch.filter(pmod(col("event_id"), lit(2)) === 1),
-        dir, "e1_odd.parquet")
-      runOnce() // merge path: v1 = v0 ⊕ odds
+      // view v0 = evens, then the merge path: v1 = v0 ⊕ odds
+      restarts(s, evenThenOdd(spark, sfDir)) {
+        runAvailableNow(events(spark, sfDir, "", s.staged).writeStream
+          .foreachBatch(mergeBatch)
+          .option("checkpointLocation", s.ckpt))
+      }
       currentView().get
         .select(col("event_type"), col("n"),
           col("cents").as("total_cents"))
         .orderBy("event_type")
-        .localCheckpoint() // the scratch dirs are deleted on return
-    } finally Seq(dir, viewDir, cpDir).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteDirectory(p.toFile))
-  }
+        .localCheckpoint() // the scratch root is deleted on return
+    }
 
   /** Streaming duplicate collapse: `dropDuplicatesWithinWatermark` on
     * (user_id, event_type, minute) — the watermark bounds the dedupe
@@ -316,30 +249,12 @@ object EventsStreaming {
     * compares against the batch `countDistinct` twin.
     */
   def dedupViaStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val name = s"graft_stream_dedup_${counter.incrementAndGet()}"
-    val stream = spark.readStream
-      .schema(schema)
-      .parquet(s"$sfDir/events*.parquet")
-      .withColumn("ms",
-        graft.operators.Events.msFromTs(schema("ts").dataType))
-      .withColumn("event_time", timestamp_millis(col("ms")))
-      .withWatermark("event_time", "1 hour")
+    val stream = events(spark, sfDir, "1 hour")
       .select(col("user_id"), col("event_type"),
         expr("CAST(ms DIV 60000 AS BIGINT)").as("minute"),
         col("event_time"))
       .dropDuplicatesWithinWatermark("user_id", "event_type", "minute")
-    val q = stream.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    spark.table(name)
-      .agg(count(org.apache.spark.sql.functions.lit(1)).as("n_after_dedup"))
+    toMemory(stream, "append").agg(count(lit(1)).as("n_after_dedup"))
   }
 
   /** Declarative sessionization via Spark's native `session_window` —
@@ -355,30 +270,14 @@ object EventsStreaming {
     */
   def sessionWindowViaStream(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val name = s"graft_stream_sesswin_${counter.incrementAndGet()}"
-    val stream = spark.readStream
-      .schema(schema)
-      .parquet(s"$sfDir/events*.parquet")
-      .withColumn("ms",
-        graft.operators.Events.msFromTs(schema("ts").dataType))
-      .withColumn("event_time", timestamp_millis(col("ms")))
-      .withWatermark("event_time", "1 hour")
+    val stream = events(spark, sfDir, "1 hour")
       .groupBy(col("user_id"),
         session_window(col("event_time"), "30 minutes 1 milliseconds"))
       .agg(count(lit(1)).as("n_events"),
         min("ms").as("start_ms"),
         (max("ms") - min("ms")).as("duration_ms"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
     val byUser = Window.partitionBy("user_id").orderBy("start_ms")
-    spark.table(name)
+    toMemory(stream, "complete")
       .select(col("user_id"), col("n_events"), col("start_ms"),
         col("duration_ms"))
       .withColumn("session_id", row_number().over(byUser).cast("long"))
@@ -397,14 +296,10 @@ object EventsStreaming {
     * Delta/parquet-backed table, same plan).
     */
   def enrichViaStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val name = s"graft_stream_enrich_${counter.incrementAndGet()}"
-    val dim = broadcast(spark.read.parquet(s"$sfDir/customer.parquet")
+    val dim = broadcast(Tables.customer(spark, sfDir)
       .select(col("c_custkey").as("user_id"),
         col("c_mktsegment").as("segment")))
-    val stream = spark.readStream
-      .schema(schema)
-      .parquet(s"$sfDir/events*.parquet")
+    val stream = events(spark, sfDir, "")
       .select(col("user_id"), col("event_type"), col("value"))
       .join(dim, Seq("user_id"))
       .groupBy("segment", "event_type")
@@ -412,16 +307,20 @@ object EventsStreaming {
         // exact integer-cents sum (see Events.hourlyAggs note)
         expr("CAST(sum(CAST(floor((value * 100) + 0.5) AS BIGINT)) AS DOUBLE)" +
           " / 100.0").as("total_value"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    spark.table(name).orderBy("segment", "event_type")
+    toMemory(stream, "complete").orderBy("segment", "event_type")
   }
+
+  /** One side of the stream-stream joins: the `tpe` events, watermarked
+    * by `delay`, with `user_id`, `event_id`, `ms` and `event_time`
+    * renamed `<prefix>_user`, `_id`, `_ms` and `_time`.
+    */
+  private def joinSide(stream: DataFrame, tpe: String,
+      prefix: String): DataFrame =
+    stream.filter(col("event_type") === tpe)
+      .select(col("user_id").as(s"${prefix}_user"),
+        col("event_id").as(s"${prefix}_id"),
+        col("ms").as(s"${prefix}_ms"),
+        col("event_time").as(s"${prefix}_time"))
 
   /** Stream-stream INTERVAL join: view→purchase conversion pairs
     * within 30 minutes per user — the remaining Structured Streaming
@@ -445,34 +344,13 @@ object EventsStreaming {
     * `pms - vms <= 1800000` integer arithmetic.
     */
   def convertViaStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val name = s"graft_stream_convert_${counter.incrementAndGet()}"
-    def side(tpe: String, prefix: String) = spark.readStream
-      .schema(schema)
-      .parquet(s"$sfDir/events*.parquet")
-      .filter(col("event_type") === tpe)
-      .withColumn("ms",
-        graft.operators.Events.msFromTs(schema("ts").dataType))
-      .select(col("user_id").as(s"${prefix}_user"),
-        col("event_id").as(s"${prefix}_id"),
-        col("ms").as(s"${prefix}_ms"),
-        timestamp_millis(col("ms")).as(s"${prefix}_time"))
-      .withWatermark(s"${prefix}_time", "1 hour")
-    val views = side("view", "v")
-    val purchases = side("purchase", "p")
-    val pairs = purchases.join(views,
+    def side(tpe: String, prefix: String) =
+      joinSide(events(spark, sfDir, "1 hour"), tpe, prefix)
+    val pairs = side("purchase", "p").join(side("view", "v"),
       expr("""v_user = p_user
         AND v_time <= p_time
         AND p_time <= v_time + INTERVAL 30 MINUTES"""))
-    val q = pairs.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    spark.table(name)
+    toMemory(pairs, "append")
       .groupBy(col("p_user").as("user_id"))
       .agg(count(lit(1)).as("n_pairs"),
         countDistinct(col("v_id")).as("n_views"),
@@ -492,123 +370,35 @@ object EventsStreaming {
     * global watermark passes `v_time + 30 min + delay`, and the
     * watermark itself only advances between micro-batches. Driven
     * over a single static file everything lands in one batch and no
-    * outer row would ever emit. So the drive builds a scratch stream
-    * dir of the real file plus two far-future sentinel files (a
-    * view + purchase pair each, user_id −1), throttled to one file
-    * per micro-batch: sentinel 1 advances the watermark past every
-    * real view's eviction bound, and the batch reading sentinel 2
-    * flushes the evictions — no reliance on trailing no-data
-    * batches. Sentinels filter out of the result before the rollup.
-    * On an unbounded source the sentinels ARE the arriving traffic;
-    * only this harness needs them injected.
+    * outer row would ever emit. So the drive stages the events as one
+    * file plus two far-future sentinel files (a view + purchase pair
+    * each, user_id −1), throttled to one file per micro-batch:
+    * sentinel 1 advances the watermark past every real view's
+    * eviction bound, and the batch reading sentinel 2 flushes the
+    * evictions — no reliance on trailing no-data batches. Sentinels
+    * filter out of the result before the rollup. On an unbounded
+    * source the sentinels ARE the arriving traffic; only this drive
+    * needs them injected.
+    *
+    * ALL real rows ride in ONE micro-batch: the 10-minute join
+    * watermark advances between batches, so rows split across files
+    * that were not time-ordered would fall behind it and be silently
+    * dropped from the join. Staging one merged file makes the result
+    * independent of the source's part-file order.
     */
-  /** `ts` literal for epoch-ms `ms` matching the scanned dtype (raw
-    * nanos long under the legacy conf, or a timestamp cast).
-    */
-  private def tsLit(schema: org.apache.spark.sql.types.StructType,
-      ms: Long): Column = schema("ts").dataType match {
-    case org.apache.spark.sql.types.LongType => lit(ms * 1000000L)
-    case dt => timestamp_millis(lit(ms)).cast(dt)
-  }
-
-  /** Writes one events-schema parquet FILE into `dir` (Spark writes a
-    * directory; the single part-file is moved into place so the file
-    * stream source sees a flat file list with controllable mtimes).
-    */
-  private[streaming] def writeEventsFile(df: DataFrame, dir: java.nio.file.Path,
-      fileName: String): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val tmp = graft.TempDirs.scoped("graft_stage_w_")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = tmp.toFile.listFiles()
-      .filter(f => f.getName.endsWith(".parquet")).head
-    Files.move(part.toPath, dir.resolve(fileName),
-      StandardCopyOption.REPLACE_EXISTING)
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-  }
-
-  /** A far-future sentinel pair (view + purchase, user_id −1) whose
-    * event time advances the watermark past every real row.
-    */
-  private def sentinelDf(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType, ms: Long,
-      idOff: Long): DataFrame =
-    spark.range(2).select(
-      (lit(-1L) - lit(idOff) * 2 - col("id")).as("event_id"),
-      tsLit(schema, ms).as("ts"),
-      lit(-1L).as("user_id"),
-      when(col("id") === 0, "view").otherwise("purchase")
-        .as("event_type"),
-      lit(0.0).as("value"),
-      lit("{}").as("props"))
-
-  def abandonViaStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val name = s"graft_stream_abandon_${counter.incrementAndGet()}"
-    val maxMs = spark.read.parquet(s"$sfDir/events.parquet")
-      .agg(max(graft.operators.Events.msFromTs(schema("ts").dataType)))
-      .head.getLong(0)
-    val dir = graft.TempDirs.scoped("graft_abandon_")
-    def writeSentinel(fileName: String, ms: Long, idOff: Long): Unit =
-      writeEventsFile(sentinelDf(spark, schema, ms, idOff), dir, fileName)
-    try {
-      // the source table may be a bare file (driver testdata) or a
-      // Spark-written directory of part-files (specs). ALL real rows
-      // must land in ONE micro-batch: with maxFilesPerTrigger=1 each
-      // staged file is its own batch, and the 10-minute join watermark
-      // advances between batches — if parts were not time-ordered,
-      // rows behind the watermark would be silently dropped from the
-      // stream-stream join. Staging a single merged file makes the
-      // result independent of part-file time ordering; only the two
-      // sentinel files ride in later batches (to flush state).
-      val src = Paths.get(s"$sfDir/events.parquet")
-      if (Files.isDirectory(src) &&
-          src.toFile.listFiles().count(_.getName.endsWith(".parquet")) > 1)
-        writeEventsFile(spark.read.parquet(src.toString), dir,
-          "e0_events.parquet")
-      else {
-        val one =
-          if (Files.isDirectory(src))
-            src.toFile.listFiles().filter(_.getName.endsWith(".parquet"))
-              .headOption.getOrElse(sys.error(
-                s"no .parquet part files under $src — cannot stage events"))
-              .toPath
-          else src
-        Files.copy(one, dir.resolve("e0_events.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-      }
-      dir.resolve("e0_events.parquet").toFile.setLastModified(1000000L)
-      writeSentinel("e1_sentinel.parquet", maxMs + 30L * 86400000L, 0)
-      writeSentinel("e2_sentinel.parquet", maxMs + 31L * 86400000L, 1)
-      // one file per micro-batch, oldest mtime first — pin the order
-      dir.resolve("e1_sentinel.parquet").toFile.setLastModified(2000000L)
-      dir.resolve("e2_sentinel.parquet").toFile.setLastModified(3000000L)
-      def side(tpe: String, prefix: String) = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$dir/*.parquet")
-        .filter(col("event_type") === tpe)
-        .withColumn("ms",
-          graft.operators.Events.msFromTs(schema("ts").dataType))
-        .select(col("user_id").as(s"${prefix}_user"),
-          col("event_id").as(s"${prefix}_id"),
-          timestamp_millis(col("ms")).as(s"${prefix}_time"))
-        .withWatermark(s"${prefix}_time", "10 minutes")
+  def abandonViaStream(spark: SparkSession, sfDir: String): DataFrame =
+    withScratch("graft_abandon_") { s =>
+      stage(s, Tables.events(spark, sfDir) +:
+        sentinels(spark, sfDir, lastMs(spark, sfDir)).flatten)
+      def side(tpe: String, prefix: String) = joinSide(
+        events(spark, sfDir, "10 minutes", s.staged, oneFilePerTrigger = true),
+        tpe, prefix)
       val joined = side("view", "v").join(side("purchase", "p"),
         expr("""v_user = p_user
           AND p_time >= v_time
           AND p_time <= v_time + INTERVAL 30 MINUTES"""),
         "leftOuter")
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
-      spark.table(name)
+      toMemory(joined, "append")
         .filter(col("v_user") >= 0)
         .groupBy(col("v_user"), col("v_id"))
         .agg(max(when(col("p_id").isNotNull, 1).otherwise(0)).as("matched"))
@@ -618,149 +408,70 @@ object EventsStreaming {
           sum(when(col("matched") === 1, 1L).otherwise(0L))
             .as("n_converted"))
         .orderBy("user_id")
-        .localCheckpoint() // the scratch dir is deleted on return
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-  }
-
-  /** Late-data accounting: the hourly aggregation under a 10-minute
-    * watermark when HALF the corpus arrives late. The drive stages
-    * even-event_id rows as micro-batch 1 and odd rows as micro-batch
-    * 2 (plus the two sentinel flush files, one file per trigger), so
-    * batch 2 runs under watermark W = max(even event time) − 10 min
-    * and every odd row whose hour window has already closed
-    * (window.end ≤ W) is DROPPED by the aggregation — Spark's
-    * documented late-row rule, here made deterministic by pinning
-    * which rows are late. The result is the hourly count table
-    * MINUS exactly those dropped rows; the oracle recomputes the
-    * same inclusion predicate in SQL. Sentinels are excluded after
-    * the watermark node but before the aggregation, so they advance
-    * event time without ever counting.
-    */
-  def lateViaStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.Files
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val batch = spark.read.parquet(s"$sfDir/events.parquet")
-    val maxMs = batch
-      .agg(max(graft.operators.Events.msFromTs(schema("ts").dataType)))
-      .head.getLong(0)
-    val dir = graft.TempDirs.scoped("graft_late_in_")
-    val outDir = graft.TempDirs.scoped("graft_late_out_")
-    val cpDir = graft.TempDirs.scoped("graft_late_cp_")
-    // Each run ingests exactly the files added since the previous run
-    // (the checkpoint remembers the rest) and STARTS from the
-    // watermark the previous run committed — restart-driven batch
-    // boundaries, deterministic on any filesystem, no reliance on
-    // per-trigger file throttling or filter-pushdown placement.
-    // Sentinels flow through the watermark operator INTO far-future
-    // window state that is never emitted (the watermark never passes
-    // them), so they advance event time without polluting output.
-    def runOnce(): Unit = {
-      val stream = spark.readStream
-        .schema(schema)
-        .parquet(s"$dir/*.parquet")
-        .withColumn("ms",
-          graft.operators.Events.msFromTs(schema("ts").dataType))
-        .withColumn("event_time", timestamp_millis(col("ms")))
-        .withWatermark("event_time", "10 minutes")
-        .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").as("wstart"), col("event_type"),
-          col("n"))
-      val q = stream.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir.toString)
-        .option("checkpointLocation", cpDir.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+        .localCheckpoint() // the scratch root is deleted on return
     }
-    try {
-      writeEventsFile(batch.filter(pmod(col("event_id"), lit(2)) === 0),
-        dir, "e0_even.parquet")
-      runOnce() // watermark commits at max(even) − 10 min
-      writeEventsFile(batch.filter(pmod(col("event_id"), lit(2)) === 1),
-        dir, "e1_odd.parquet")
-      runOnce() // odd rows in closed windows are DROPPED here
-      writeEventsFile(sentinelDf(spark, schema, maxMs + 30L * 86400000L, 0),
-        dir, "e2_sentinel.parquet")
-      runOnce() // emits windows closed by the real-data watermark
-      writeEventsFile(sentinelDf(spark, schema, maxMs + 31L * 86400000L, 1),
-        dir, "e3_sentinel.parquet")
-      runOnce() // sentinel-advanced watermark flushes every real window
-      spark.read.parquet(outDir.toString)
+
+  /** The hourly windowed counts of the events staged by `files`, under
+    * a 10-minute watermark, through the staged restart drive and a
+    * checkpointed parquet sink. Sentinels flow through the watermark
+    * operator INTO far-future window state that is never emitted (the
+    * watermark never passes them), so they advance event time without
+    * polluting output.
+    */
+  private def windowedCounts(spark: SparkSession, sfDir: String,
+      prefix: String, maxMs: Long, files: Seq[Option[DataFrame]]): DataFrame =
+    withScratch(prefix) { s =>
+      restarts(s, files) {
+        appendTo(s, events(spark, sfDir, "10 minutes", s.staged)
+          .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
+          .agg(count(lit(1)).as("n"))
+          .select(col("window.start").as("wstart"), col("event_type"),
+            col("n")))
+      }
+      spark.read.parquet(s.out)
         .filter(col("wstart") <= timestamp_millis(lit(maxMs))) // belt+braces
         .select(date_format(col("wstart"), "yyyy-MM-dd HH:00").as("hour"),
           col("event_type"), col("n"))
         .orderBy("hour", "event_type")
-        .localCheckpoint() // the scratch dirs are deleted on return
-    } finally Seq(dir, outDir, cpDir).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteDirectory(p.toFile))
+        .localCheckpoint() // the scratch root is deleted on return
+    }
+
+  /** Late-data accounting: the hourly aggregation under a 10-minute
+    * watermark when HALF the corpus arrives late. The drive stages
+    * even-event_id rows as run 1, odd rows as run 2, then the two
+    * sentinel flush files, so run 2 starts under watermark
+    * W = max(even event time) − 10 min and every odd row whose hour
+    * window has already closed (window.end ≤ W) is DROPPED by the
+    * aggregation — Spark's documented late-row rule, here made
+    * deterministic by pinning which rows are late. Run 3 emits the
+    * windows the real-data watermark closed; run 4's sentinel-advanced
+    * watermark flushes every real window. The result is the hourly
+    * count table MINUS exactly the dropped rows; the oracle recomputes
+    * the same inclusion predicate in SQL.
+    */
+  def lateViaStream(spark: SparkSession, sfDir: String): DataFrame = {
+    val maxMs = lastMs(spark, sfDir)
+    windowedCounts(spark, sfDir, "graft_late_", maxMs,
+      evenThenOdd(spark, sfDir) ++ sentinels(spark, sfDir, maxMs))
   }
 
   /** Exactly-once resume proof: the hourly aggregation run as FIVE
-    * consecutive AvailableNow queries against one checkpoint — data,
-    * then an EMPTY restart (no new files), then the two sentinel
-    * flush files, then another empty restart after completion. A
-    * file-source + file-sink pipeline that re-ingested or re-emitted
-    * anything across those restarts would double its counts; the
-    * oracle is the plain batch aggregate, so the hash compare IS the
-    * exactly-once check. (The empty restarts are the interesting
-    * part: offsets come from the checkpoint's commit log, and the
-    * sink's _spark_metadata dedupes replayed batch ids.)
+    * consecutive AvailableNow queries against one checkpoint — data
+    * (the watermark is still 0, so nothing emits), then an EMPTY
+    * restart (no new files), then the two sentinel flush files, then
+    * another empty restart after completion. A file-source + file-sink
+    * pipeline that re-ingested or re-emitted anything across those
+    * restarts would double its counts; the oracle is the plain batch
+    * aggregate, so the hash compare IS the exactly-once check. (The
+    * empty restarts are the interesting part: offsets come from the
+    * checkpoint's commit log, and the sink's _spark_metadata dedupes
+    * replayed batch ids.)
     */
   def reprocessViaStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.Files
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val batch = spark.read.parquet(s"$sfDir/events.parquet")
-    val maxMs = batch
-      .agg(max(graft.operators.Events.msFromTs(schema("ts").dataType)))
-      .head.getLong(0)
-    val dir = graft.TempDirs.scoped("graft_rp_in_")
-    val outDir = graft.TempDirs.scoped("graft_rp_out_")
-    val cpDir = graft.TempDirs.scoped("graft_rp_cp_")
-    def runOnce(): Unit = {
-      val stream = spark.readStream
-        .schema(schema)
-        .parquet(s"$dir/*.parquet")
-        .withColumn("ms",
-          graft.operators.Events.msFromTs(schema("ts").dataType))
-        .withColumn("event_time", timestamp_millis(col("ms")))
-        .withWatermark("event_time", "10 minutes")
-        .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").as("wstart"), col("event_type"),
-          col("n"))
-      val q = stream.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir.toString)
-        .option("checkpointLocation", cpDir.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
-    }
-    try {
-      writeEventsFile(batch, dir, "e0_all.parquet")
-      runOnce() // ingest everything (watermark still 0 — nothing emits)
-      runOnce() // EMPTY restart: must be a no-op
-      writeEventsFile(sentinelDf(spark, schema, maxMs + 30L * 86400000L, 0),
-        dir, "e1_sentinel.parquet")
-      runOnce() // watermark jumps; windows flush on the next run
-      writeEventsFile(sentinelDf(spark, schema, maxMs + 31L * 86400000L, 1),
-        dir, "e2_sentinel.parquet")
-      runOnce() // flush every real window
-      runOnce() // EMPTY restart after completion: must emit nothing
-      spark.read.parquet(outDir.toString)
-        .filter(col("wstart") <= timestamp_millis(lit(maxMs)))
-        .select(date_format(col("wstart"), "yyyy-MM-dd HH:00").as("hour"),
-          col("event_type"), col("n"))
-        .orderBy("hour", "event_type")
-        .localCheckpoint() // the scratch dirs are deleted on return
-    } finally Seq(dir, outDir, cpDir).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteDirectory(p.toFile))
+    val maxMs = lastMs(spark, sfDir)
+    windowedCounts(spark, sfDir, "graft_rp_", maxMs,
+      Seq(Some(Tables.events(spark, sfDir)), None) ++
+        sentinels(spark, sfDir, maxMs) :+ None)
   }
 
   /** Batch-equivalent streaming run of the hourly aggregation.
@@ -768,15 +479,7 @@ object EventsStreaming {
     * projected to an event-time timestamp for the watermark.
     */
   def hourlyViaStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val name = s"graft_stream_hourly_${counter.incrementAndGet()}"
-    val stream = spark.readStream
-      .schema(schema)
-      .parquet(s"$sfDir/events*.parquet")
-      .withColumn("ms",
-        graft.operators.Events.msFromTs(schema("ts").dataType))
-      .withColumn("event_time", timestamp_millis(col("ms")))
-      .withWatermark("event_time", "1 hour")
+    val stream = events(spark, sfDir, "1 hour")
       .groupBy(
         date_format(timestamp_millis(col("ms") - col("ms") % 3600000L),
           "yyyy-MM-dd HH:00").as("hour"),
@@ -784,15 +487,7 @@ object EventsStreaming {
       // shared exact-cents aggregates (see Events.hourlyOracle note)
       .agg(graft.operators.Events.hourlyAggs.head,
         graft.operators.Events.hourlyAggs.tail: _*)
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    spark.table(name).orderBy("hour", "event_type")
+    toMemory(stream, "complete").orderBy("hour", "event_type")
   }
 
   /** Per-hour top-k trending event types from a stream: the windowed
@@ -807,31 +502,15 @@ object EventsStreaming {
   def topkViaStream(spark: SparkSession, sfDir: String,
       k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val name = s"graft_stream_topk_${counter.incrementAndGet()}"
-    val stream = spark.readStream
-      .schema(schema)
-      .parquet(s"$sfDir/events*.parquet")
-      .withColumn("ms",
-        graft.operators.Events.msFromTs(schema("ts").dataType))
-      .withColumn("event_time", timestamp_millis(col("ms")))
-      .withWatermark("event_time", "1 hour")
+    val stream = events(spark, sfDir, "1 hour")
       .groupBy(
         date_format(timestamp_millis(col("ms") - col("ms") % 3600000L),
           "yyyy-MM-dd HH:00").as("hour"),
         col("event_type"))
       .agg(count(lit(1)).as("n"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
     val w = Window.partitionBy("hour")
       .orderBy(col("n").desc, col("event_type"))
-    spark.table(name)
+    toMemory(stream, "complete")
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
       .orderBy("hour", "rk")
@@ -845,32 +524,16 @@ object EventsStreaming {
     * query.
     */
   def anomalyViaStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val name = s"graft_stream_anomaly_${counter.incrementAndGet()}"
-    val stream = spark.readStream
-      .schema(schema)
-      .parquet(s"$sfDir/events*.parquet")
-      .withColumn("ms",
-        graft.operators.Events.msFromTs(schema("ts").dataType))
-      .withColumn("event_time", timestamp_millis(col("ms")))
-      .withWatermark("event_time", "1 hour")
+    val stream = events(spark, sfDir, "1 hour")
       .groupBy(col("event_type"),
         date_format(timestamp_millis(col("ms") - col("ms") % 86400000L),
           "yyyy-MM-dd").as("day"))
       .agg(count(lit(1)).as("n"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
     // localCheckpoint: anomalyFromDaily self-joins its input (stats
     // branch), and two references to the memory-sink relation fail
     // attribute dedup — the materialized RDD plan dedups fine
     graft.operators.Events.anomalyFromDaily(
-      spark.table(name).localCheckpoint())
+      toMemory(stream, "complete").localCheckpoint())
   }
 
   /** Rows for the stream-stream as-of (side 0 = view/right, 1 =
@@ -899,113 +562,83 @@ object EventsStreaming {
     *    beyond the watermark, so older passed views can never win.
     *    State is O(in-flight window) per user, not O(history).
     *
-    * Driven restart-per-file in TIME order (first-half timeline, then
-    * second half, then two far-future sentinels), so nothing is ever
-    * late and the result must equal the batch as-of — the oracle is
-    * the exact q_asof_join SQL. Emission happens across MULTIPLE
-    * batches (mid-stream purchases flush on batch 2's watermark, the
-    * tail on the sentinels'), so the cross-batch state machinery is
-    * actually exercised, not just the single-batch degenerate case.
+    * Driven by the staged restart drive in TIME order (first-half
+    * timeline, then second half, then two far-future sentinels), so
+    * nothing is ever late and the result must equal the batch as-of —
+    * the oracle is the exact q_asof_join SQL. Emission happens across
+    * MULTIPLE batches (mid-stream purchases flush on batch 2's
+    * watermark, the tail on the sentinels'), so the cross-batch state
+    * machinery is actually exercised, not just the single-batch
+    * degenerate case. `event_time` is the millisecond floor of `us`.
     */
   def asofStreamStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.Files
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val batch = spark.read.parquet(s"$sfDir/events.parquet")
-      .filter(col("event_type").isin("view", "purchase"))
-    val usCol = graft.operators.AsofJoin.usFromTs(schema("ts").dataType)
-    val maxMs = spark.read.parquet(s"$sfDir/events.parquet")
-      .agg(max(graft.operators.Events.msFromTs(schema("ts").dataType)))
-      .head.getLong(0)
+    val ev = Tables.events(spark, sfDir)
+    val usCol = graft.operators.AsofJoin.usFromTs(ev.schema("ts").dataType)
+    val batch = ev.filter(col("event_type").isin("view", "purchase"))
+      .withColumn("us", usCol)
     // any time split works (semantics don't depend on the boundary);
     // the median just guarantees both batches carry real work
-    val midMs = batch.withColumn("us", usCol)
+    val midMs = batch
       .agg(expr("CAST(approx_percentile(us DIV 1000, 0.5) AS BIGINT)"))
       .head.getLong(0)
-    val dir = graft.TempDirs.scoped("graft_ssasof_in_")
-    val outDir = graft.TempDirs.scoped("graft_ssasof_out_")
-    val cpDir = graft.TempDirs.scoped("graft_ssasof_cp_")
-
-    def runOnce(): Unit = {
-      val evs = spark.readStream
-        .schema(schema)
-        .parquet(s"$dir/*.parquet")
-        .withColumn("us", graft.operators.AsofJoin
-          .usFromTs(schema("ts").dataType))
-        .withColumn("event_time", timestamp_millis(expr("us DIV 1000")))
-        .withWatermark("event_time", "30 minutes")
-        .select(col("user_id").cast("long").as("user_id"),
-          when(col("event_type") === "purchase", 1).otherwise(0)
-            .as("side"),
-          col("event_id").cast("long").as("event_id"),
-          col("us"), col("event_time"))
-        .as[AsofEv]
-      val hits = evs.groupByKey(_.user_id)
-        .flatMapGroupsWithState[AsofSt, AsofHit](
-          OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-          case (user, it, state) =>
-            val w = state.getCurrentWatermarkMs()
-            val arrivals = it.toSeq.filter(_.us / 1000 > w) // late rule
-            val st = state.getOption.getOrElse(AsofSt(Nil, Nil))
-            // views dedup per us (newest id wins — the operator's
-            // documented determinism contract)
-            val views = (st.views ++ arrivals.filter(_.side == 0)
-              .map(e => (e.us, e.event_id)))
-              .groupBy(_._1).map { case (us, vs) => (us, vs.map(_._2).max) }
-              .toSeq.sortBy(_._1)
-            val pend = (st.pending ++ arrivals.filter(_.side == 1)
-              .map(e => (e.us, e.event_id))).sortBy(p => (p._1, p._2))
-            val (emit, keep) = pend.partition(_._1 / 1000 <= w)
-            val out = emit.map { case (pus, pid) =>
-              val m = views.filter(_._1 <= pus).lastOption
-              AsofHit(pid, user, m.map(_._2), m.map(v => pus - v._1))
-            }
-            // prune passed views to the single newest at-or-before W
-            val (passed, live) = views.partition(_._1 / 1000 <= w)
-            val keptViews = passed.takeRight(1) ++ live
-            if (keep.isEmpty && keptViews.isEmpty) state.remove()
-            else {
-              state.update(AsofSt(keptViews, keep))
-              // a previously set timeout is cleared on every
-              // invocation; re-arm only while purchases are pending
-              if (keep.nonEmpty)
-                state.setTimeoutTimestamp(keep.map(_._1 / 1000).min + 1)
-            }
-            out.iterator
-        }
-      val q = hits.toDF().writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir.toString)
-        .option("checkpointLocation", cpDir.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
-    }
-    try {
-      val usBatch = batch.withColumn("us", usCol)
-      writeEventsFile(usBatch.filter(expr(s"us DIV 1000 <= $midMs"))
-        .drop("us"), dir, "e0_first_half.parquet")
-      runOnce() // early purchases flush at W = mid − 30 min
-      writeEventsFile(usBatch.filter(expr(s"us DIV 1000 > $midMs"))
-        .drop("us"), dir, "e1_second_half.parquet")
-      runOnce() // mid-stream purchases flush
-      writeEventsFile(sentinelDf(spark, schema, maxMs + 30L * 86400000L, 0),
-        dir, "e2_sentinel.parquet")
-      runOnce()
-      writeEventsFile(sentinelDf(spark, schema, maxMs + 31L * 86400000L, 1),
-        dir, "e3_sentinel.parquet")
-      runOnce() // watermark past every real row: tail flushes
-      spark.read.parquet(outDir.toString)
+    val halves = Seq(s"us DIV 1000 <= $midMs", s"us DIV 1000 > $midMs")
+      .map(p => Some(batch.filter(expr(p)).drop("us")))
+    withScratch("graft_ssasof_") { s =>
+      // early purchases flush at W = mid − 30 min, mid-stream ones on
+      // the second half, the tail once the sentinels pass every row
+      restarts(s, halves ++ sentinels(spark, sfDir, lastMs(spark, sfDir))) {
+        val evs = events(spark, sfDir, "30 minutes", s.staged)
+          .withColumn("us", usCol)
+          .select(col("user_id").cast("long").as("user_id"),
+            when(col("event_type") === "purchase", 1).otherwise(0)
+              .as("side"),
+            col("event_id").cast("long").as("event_id"),
+            col("us"), col("event_time"))
+          .as[AsofEv]
+        val hits = evs.groupByKey(_.user_id)
+          .flatMapGroupsWithState[AsofSt, AsofHit](
+            OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+            case (user, it, state) =>
+              val w = state.getCurrentWatermarkMs()
+              val arrivals = it.toSeq.filter(_.us / 1000 > w) // late rule
+              val st = state.getOption.getOrElse(AsofSt(Nil, Nil))
+              // views dedup per us (newest id wins — the operator's
+              // documented determinism contract)
+              val views = (st.views ++ arrivals.filter(_.side == 0)
+                .map(e => (e.us, e.event_id)))
+                .groupBy(_._1).map { case (us, vs) => (us, vs.map(_._2).max) }
+                .toSeq.sortBy(_._1)
+              val pend = (st.pending ++ arrivals.filter(_.side == 1)
+                .map(e => (e.us, e.event_id))).sortBy(p => (p._1, p._2))
+              val (emit, keep) = pend.partition(_._1 / 1000 <= w)
+              val out = emit.map { case (pus, pid) =>
+                val m = views.filter(_._1 <= pus).lastOption
+                AsofHit(pid, user, m.map(_._2), m.map(v => pus - v._1))
+              }
+              // prune passed views to the single newest at-or-before W
+              val (passed, live) = views.partition(_._1 / 1000 <= w)
+              val keptViews = passed.takeRight(1) ++ live
+              if (keep.isEmpty && keptViews.isEmpty) state.remove()
+              else {
+                state.update(AsofSt(keptViews, keep))
+                // a previously set timeout is cleared on every
+                // invocation; re-arm only while purchases are pending
+                if (keep.nonEmpty)
+                  state.setTimeoutTimestamp(keep.map(_._1 / 1000).min + 1)
+              }
+              out.iterator
+          }
+        appendTo(s, hits)
+      }
+      spark.read.parquet(s.out)
         .filter(col("user_id") >= 0) // sentinels never emit; belt+braces
         .select(col("purchase_id"), col("user_id"),
           col("view_id"), col("gap_us"))
         .orderBy("purchase_id")
-        .localCheckpoint() // scratch dirs are deleted on return
-    } finally Seq(dir, outDir, cpDir).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteDirectory(p.toFile))
+        .localCheckpoint() // the scratch root is deleted on return
+    }
   }
 
   /** The native AS-OF join inside a streaming query: a purchase
@@ -1027,32 +660,21 @@ object EventsStreaming {
     * rolled up per tier.
     */
   def asofViaStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val name = s"graft_stream_asof_${counter.incrementAndGet()}"
-    val usCol = graft.operators.AsofJoin.usFromTs(schema("ts").dataType)
-    val dim = spark.read.parquet(s"$sfDir/events.parquet")
+    val ev = Tables.events(spark, sfDir)
+    val usCol = graft.operators.AsofJoin.usFromTs(ev.schema("ts").dataType)
+    val dim = ev
       .filter(col("event_type") === "signup")
       .withColumn("us", usCol)
       .groupBy(col("user_id").as("s_user"), col("us").as("s_us"))
       .agg((max("event_id") % 5).as("tier"))
-    val fact = spark.readStream
-      .schema(schema)
-      .parquet(s"$sfDir/events*.parquet")
+    val fact = events(spark, sfDir, "")
       .filter(col("event_type") === "purchase")
       .withColumn("us", usCol)
       .select(col("event_id").as("purchase_id"), col("user_id"), col("us"))
     val joined = graft.operators.AsofJoin.join(
       fact, dim, Seq("user_id" -> "s_user"), "us", "s_us",
       None, outer = true, broadcastRight = true)
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    spark.table(name)
+    toMemory(joined, "append")
       .groupBy(coalesce(col("tier"), lit(-1L)).as("tier"))
       .agg(count(lit(1)).as("n_purchases"),
         coalesce(sum(col("us") - col("s_us")), lit(0L)).as("sum_age_us"))

@@ -1,9 +1,10 @@
 package graft.streaming
 
+import graft.Tables
 import graft.operators.MvtTiles
+import graft.streaming.StreamHarness._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental MVT tile refresh — the production pattern for keeping
   * a tile set current against a live feature stream without
@@ -37,8 +38,6 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object TilesStreaming {
 
-  private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** One micro-batch of the incremental refresh. foreachBatch is
     * at-least-once: a micro-batch may REPLAY after a failure. Every
     * write here keys its output directory by batchId and OVERWRITES,
@@ -68,60 +67,40 @@ object TilesStreaming {
       .write.mode("overwrite").parquet(s"$tilesDir/b$batchId")
   }
 
-  def refreshViaStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.Files
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val run = counter.incrementAndGet()
-    val stage = graft.TempDirs.scoped(s"graft_tiles_stage_${run}_")
-    val spotsDir = graft.TempDirs.scoped(s"graft_tiles_spots_${run}_")
-      .resolve("store").toString
-    val tilesDir = graft.TempDirs.scoped(s"graft_tiles_log_${run}_")
-      .resolve("store").toString
+  def refreshViaStream(spark: SparkSession, sfDir: String): DataFrame =
+    withScratch("graft_tiles_") { s =>
+      val spotsDir = s.dir("spots")
+      val tilesDir = s.dir("tiles")
+      // stage the events as THREE files, one micro-batch each, in a
+      // pinned arrival order. The split is by id RANGE, not id mod 3:
+      // the synthetic spot positions are functions of the id, and every
+      // same-tile id delta happens to be ≡ 0 (mod 3), so a mod split
+      // would never produce a cross-batch tile rewrite — the range
+      // split straddles those deltas and exercises last-writer-wins on
+      // the real data (at sf0.1; TilesStreamingSpec adds a crafted
+      // collision fixture for the small scales)
+      val events = Tables.events(spark, sfDir)
+      val maxId = events.agg(max("event_id")).head().getLong(0)
+      val step = maxId / 3 + 1
+      stage(s, (0 until 3).map(b => events.filter(
+        col("event_id") >= step * b && col("event_id") < step * (b + 1))))
+      runAvailableNow(StreamHarness.events(spark, sfDir, "", s.staged,
+          oneFilePerTrigger = true).writeStream
+        .option("checkpointLocation", s.ckpt)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          processBatch(batch, batchId, spotsDir, tilesDir)
+        })
 
-    // stage the events as THREE micro-batch files with pinned mtimes
-    // so maxFilesPerTrigger=1 yields a deterministic three-batch
-    // arrival order. The split is by id RANGE, not id mod 3: the
-    // synthetic spot positions are functions of the id, and every
-    // same-tile id delta happens to be ≡ 0 (mod 3), so a mod split
-    // would never produce a cross-batch tile rewrite — the range
-    // split straddles those deltas and exercises last-writer-wins on
-    // the real data (at sf0.1; TilesStreamingSpec adds a crafted
-    // collision fixture for the small scales)
-    val events = spark.read.parquet(s"$sfDir/events.parquet")
-    val maxId = events.agg(max("event_id")).head().getLong(0)
-    val step = maxId / 3 + 1
-    (0 until 3).foreach { b =>
-      EventsStreaming.writeEventsFile(
-        events.filter(col("event_id") >= step * b &&
-          col("event_id") < step * (b + 1)),
-        stage, s"e${b}_events.parquet")
-      stage.resolve(s"e${b}_events.parquet").toFile
-        .setLastModified(1000000L * (b + 1))
+      // resolve last writer per tile key, then decode to the oracled
+      // stats columns — hash-equal to the batch rebuild of the layer
+      import org.apache.spark.sql.expressions.Window
+      val latest = spark.read.parquet(s"$tilesDir/b*")
+        .withColumn("rn", row_number().over(
+          Window.partitionBy("zoom", "tile_x", "tile_y")
+            .orderBy(col("ver").desc)))
+        .filter(col("rn") === 1)
+        .drop("rn", "ver", "n_layers")
+      MvtTiles.decodedStats(latest)
+        .localCheckpoint() // the scratch root is deleted on return
     }
-
-    val q = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$stage/*.parquet")
-      .writeStream
-      .option("checkpointLocation", s"$stage-ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, spotsDir, tilesDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-
-    // resolve last writer per tile key, then decode to the oracled
-    // stats columns — hash-equal to the batch rebuild of the layer
-    import org.apache.spark.sql.expressions.Window
-    val latest = spark.read.parquet(s"$tilesDir/b*")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("zoom", "tile_x", "tile_y")
-          .orderBy(col("ver").desc)))
-      .filter(col("rn") === 1)
-      .drop("rn", "ver", "n_layers")
-    MvtTiles.decodedStats(latest)
-  }
 }

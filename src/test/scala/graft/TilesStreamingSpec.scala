@@ -109,4 +109,21 @@ class TilesStreamingSpec extends SparkSpec {
         s"batch $i dirties $c of $all — not incremental")
     }
   }
+
+  test("a drive leaves nothing behind in the temp dir once it returns") {
+    // every input, sink and checkpoint dir of a drive lives under its
+    // scratch root, which is deleted on return. Matched by the names
+    // these drives use, since other suites share the temp dir.
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val ours = Seq("graft_tiles", "graft_stage", "graft-stream-index")
+    def entries(): Set[String] = tmp.list().toSet
+      .filter(n => ours.exists(n.startsWith))
+    val before = entries()
+    val tiles = streaming.TilesStreaming.refreshViaStream(spark, sf)
+    val index = streaming.DocsStreaming.indexViaStream(spark, sf, 3, 12)
+    val left = entries() -- before
+    assert(left.isEmpty, s"left in $tmp: ${left.mkString(", ")}")
+    // what they returned no longer needs those files
+    assert(tiles.count() > 0 && index.count() > 0)
+  }
 }
