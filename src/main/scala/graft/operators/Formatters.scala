@@ -1,26 +1,22 @@
 package graft.operators
 
-import graft.functions.HashFunctions
-import graft.functions.TagFunctions._
+import graft.functions.{HashFunctions, LiftTagsKernel, RunTagsExpr,
+  RunTagsKernel}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Run formatter (SURVEY P1): the reference's per-record normalization
-  * (`/root/reference/src/transforms/RunFormatter.ts:30-189`) as one
-  * declarative select over (way_id, tags, coords) —
-  * lifecycle status (P7), `piste:type` list → validated uses,
-  * difficulty validation, grooming normalization + defaulting, gladed
-  * fallback from `natural=wood`/`landuse=forest`, oneway default for
-  * downhill, patrolled/snowmaking/snowfarming/tunnel/lit booleans,
-  * name/ref extraction with ref-prefix strip, website/wikidata, and a
-  * content-hash id (P11, `FeatureBuilder.ts:4-21`).
+/** The feature formatters (SURVEY P1-P4): the reference's per-record
+  * normalization of runs (`reference/src/transforms/RunFormatter.ts:30-189`),
+  * lifts, ski areas and spots, each with a content-hash id (P11,
+  * `FeatureBuilder.ts:4-21`).
   *
-  * Everything is a column expression → single map stage, no shuffle,
-  * predicate pushdown unobstructed.
+  * The run, lift and OSM ski-area tag cascades are single-pass kernels
+  * over the OSM tag rules of [[graft.functions.OsmTags]]; every
+  * formatter is one map stage, no shuffle.
   */
 object Formatters {
 
-  /** P1 multi-part explode (`/root/reference/src/transforms/RunFormatter.ts:83-99`):
+  /** P1 multi-part explode (`reference/src/transforms/RunFormatter.ts:83-99`):
     * the reference emits one feature per part of a MultiLineString /
     * MultiPolygon run, recomputing the content-hash id per part. Input
     * rows carry the full canonical geometry (geomType, parts) from
@@ -40,116 +36,30 @@ object Formatters {
           .otherwise(col("geomType")))
   }
 
-  /** openskidata-format LiftType enum values. */
-  val ValidLiftTypes: Seq[String] = Seq("cable_car", "gondola", "chair_lift",
-    "mixed_lift", "drag_lift", "t-bar", "j-bar", "platter", "rope_tow",
-    "magic_carpet", "funicular", "railway")
-
-  /** railway= values that map to LiftType.Railway
-    * (`LiftFormatter.ts:120-133`; funicular stays its own lift type).
-    */
-  val RailwayTypes: Seq[String] = Seq("narrow_gauge", "rail", "light_rail",
-    "tram", "subway", "monorail")
-
   /** Lift formatter (SURVEY P2,
-    * `/root/reference/src/transforms/LiftFormatter.ts:27-155`):
-    * lifecycle status over `aerialway`, falling back to `railway` when
-    * the aerialway VALUE is null (rail values → "railway", funicular
-    * kept); drop predicate per `LiftFormatter.ts:42-53` (passenger=no,
-    * access=no/forestry, foot=no/private, usage=freight/industrial,
-    * railway:traffic_mode=freight — access=private is NOT dropped, it
-    * becomes the `access` column); `aerialway:duration`
-    * "mm:ss"-or-minutes → seconds (null unless exactly 2 components);
-    * occupancy/capacity numbers; bubble/heating/detachable booleans;
-    * name with ref-prefix strip.
-    * Input: (lift_id, tags map).
+    * `reference/src/transforms/LiftFormatter.ts:27-155`): the tag
+    * cascade runs through the single-pass kernel
+    * [[graft.functions.LiftTagsKernel]] (see its doc for the rules),
+    * which is null for a dropped lift. Input: (lift_id, tags, ...); the
+    * other input columns pass through.
     */
   def formatLifts(features: DataFrame): DataFrame = {
-    val tags = col("tags")
-    val dropPred =
-      element_at(tags, "passenger") === "no" ||
-        element_at(tags, "access").isin("forestry", "no") ||
-        element_at(tags, "foot").isin("no", "private") ||
-        element_at(tags, "usage").isin("freight", "industrial") ||
-        element_at(tags, "railway:traffic_mode") === "freight"
-
-    val useRail = col("ast").getField("value").isNull
-    val st = when(useRail, col("rst")).otherwise(col("ast"))
-    val rawType = col("st").getField("value")
-    val mappedType = when(col("useRail") &&
-        rawType.isin(RailwayTypes.map(x => x: Any): _*), lit("railway"))
-      .otherwise(rawType)
-    val liftType =
-      when(mappedType.isin(ValidLiftTypes.map(x => x: Any): _*), mappedType)
-
-    val dur = element_at(tags, "aerialway:duration")
-    // LiftFormatter.mapDuration parity: isNumeric(s) (= whole string is
-    // a finite JS Number AND parseFloat parses) → Math.round(parseFloat
-    // (s)*60); else "a:b" with exactly 2 components → parseInt each
-    // (prefix parse; either NaN → null); anything else (incl. "h:m:s")
-    // → null. Regex-gated casts so ANSI mode never throws.
-    val durNum = tagNumber(dur)
-    val durPf = jsParseFloat(dur)
-    val durFinite = durNum.isNotNull &&
-      durNum =!= Double.PositiveInfinity && durNum =!= Double.NegativeInfinity
-    val colonParts = split(dur, ":", -1)
-    def parseIntPart(i: Int) = {
-      val p = regexp_extract(colonParts.getItem(i),
-        "^[\\s\\u00A0\\uFEFF]*([+-]?[0-9]+)", 1)
-      when(p =!= "", p.cast("long"))
-    }
-    val durationS =
-      when(durFinite && durPf.isNotNull,
-        floor(durPf * 60 + 0.5).cast("long"))
-      .when(size(colonParts) === 2,
-        parseIntPart(0) * 60 + parseIntPart(1))
-
-    val ref = osmRef(tags)
-
+    val k = RunTagsExpr.on(col("tags"), LiftTagsKernel)
+    val fields = LiftTagsKernel.schema.fieldNames
     features
-      .filter(!coalesce(dropPred, lit(false)))
-      .withColumn("ast", lifecycleStatus(tags, "aerialway"))
-      .withColumn("rst", lifecycleStatus(tags, "railway"))
-      .withColumn("useRail", useRail)
-      .withColumn("st", st)
-      .withColumn("status", col("st").getField("status"))
-      .withColumn("lift_type", liftType)
-      .filter(not(col("status") <=> "dropped") && col("lift_type").isNotNull)
-      .withColumn("duration_s", durationS)
-      .withColumn("occupancy",
-        tagNumberInt(element_at(tags, "aerialway:occupancy")))
-      .withColumn("capacity",
-        tagNumberInt(element_at(tags, "aerialway:capacity")))
-      .withColumn("bubble", tagBoolean(element_at(tags, "aerialway:bubble")))
-      .withColumn("heating", tagBoolean(element_at(tags, "aerialway:heating")))
-      .withColumn("detachable",
-        tagBoolean(element_at(tags, "aerialway:detachable")))
-      .withColumn("oneway", tagBoolean(element_at(tags, "oneway")))
-      .withColumn("tunnel",
-        when(element_at(tags, "tunnel").isNotNull, lit(true)))
-      .withColumn("access",
-        when(element_at(tags, "access") === "private", lit("private")))
-      .withColumn("ref", ref)
-      .withColumn("name", osmName(tags, "name", None, ref))
-      .withColumn("wikidata_id", tagFirstValue(tags, "wikidata"))
-      .withColumn("website", element_at(tags, "website"))
-      .withColumn("id", HashFunctions.contentId(lit("lift"), col("lift_id"),
-        col("status"), col("lift_type"), col("name")))
-      .drop("ast", "rst", "useRail", "st", "tags")
+      .withColumn("__lt", k)
+      .filter(col("__lt").isNotNull)
+      .select(features.columns.filter(_ != "tags").map(col).toSeq ++
+        fields.map(f => col(s"__lt.$f").as(f)) :+
+        HashFunctions.contentId(lit("lift"), col("lift_id"),
+          col("__lt.status"), col("__lt.lift_type"), col("__lt.name"))
+          .as("id"): _*)
   }
 
   val ValidStationPositions: Seq[String] = Seq("top", "mid", "bottom")
 
-  /** Spot formatter (SURVEY P4,
-    * `/root/reference/src/transforms/SpotFormatter.ts:30-192`): ONE
-    * input node can emit up to 5 spots — crossing, lift station (with
-    * validated top/mid/bottom position), transceiver training,
-    * transceiver checkpoint, halfpipe — each gated by its own tag
-    * predicate. Input: (node_id, tags); output one row per emitted
-    * spot (node_id, spot_type, position).
-    */
   /** P3: the three-source ski-area formatter as ONE distinct operator
-    * (`/root/reference/src/transforms/SkiAreaFormatter.ts:32-192`) —
+    * (`reference/src/transforms/SkiAreaFormatter.ts:32-192`) —
     * a union of three typed projections:
     *
     *  - OSM landuse (`:66-109`): kept only when `sport` is absent or
@@ -175,45 +85,31 @@ object Formatters {
   def formatSkiAreas(landuse: DataFrame, sites: DataFrame,
       skimap: DataFrame): DataFrame = {
     import graft.functions.GeoFunctions._
-    val tags = col("tags")
+    import graft.functions.{AreaTagsKernel, LanduseTagsKernel, SiteTagsKernel}
     val noActs = array().cast("array<string>")
-    // Status.ts returns null status ONLY for the unsupported states
-    // (demolished/removed/razed) — our cascade reports those as
-    // "dropped"; an absent key is status "operating" with null value,
-    // and the reference KEEPS such features (`if (status === null)
-    // return null` is the only gate, SkiAreaFormatter.ts:95-97).
-    def keptStatus(df: DataFrame, key: String) = df
-      .withColumn("st", lifecycleStatus(tags, key))
-      .withColumn("status", col("st").getField("status"))
-      .filter(not(col("status") <=> "dropped"))
-    val lu = keptStatus(
-      landuse
-        .filter(element_at(tags, "sport").isNull ||
-          element_at(tags, "sport").isin("skiing", "ski"))
-        .filter(col("geomType").isin("Polygon", "MultiPolygon"))
-        .filter(ringValid(force2D(col("coords")))), "landuse")
-      .select(lit("openstreetmap").as("source"),
-        concat(lit("way/"), col("area_id")).as("src_id"),
-        col("status"),
-        osmName(tags, "name").as("name"),
-        element_at(tags, "website").as("website"),
-        tagFirstValue(tags, "wikidata").as("wikidata_id"),
-        OutputFormats.difficultyConvention(
-          element_at(element_at(col("coords"), 1), 1),
-          element_at(element_at(col("coords"), 1), 2)).as("run_convention"),
-        noActs.as("activities"),
-        element_at(element_at(col("coords"), 1), 1).as("lon"),
-        element_at(element_at(col("coords"), 1), 2).as("lat"))
-    val si = keptStatus(sites, "site")
-      .select(lit("openstreetmap").as("source"),
-        concat(lit("relation/"), col("site_id")).as("src_id"),
-        col("status"),
-        osmName(tags, "name").as("name"),
-        element_at(tags, "website").as("website"),
-        tagFirstValue(tags, "wikidata").as("wikidata_id"),
-        lit("north_america").as("run_convention"),
-        noActs.as("activities"),
-        lit(360.0).as("lon"), lit(360.0).as("lat"))
+    // the kernel is null for an area the reference drops: a dropped
+    // status (an absent key is "operating", and KEPT —
+    // SkiAreaFormatter.ts:95-97) or, on landuse, a non-ski sport
+    def osm(df: DataFrame, kernel: AreaTagsKernel,
+        srcId: Column, runConvention: Column, lon: Column, lat: Column) = df
+      .withColumn("__at", RunTagsExpr.on(col("tags"), kernel))
+      .filter(col("__at").isNotNull)
+      .select(lit("openstreetmap").as("source"), srcId.as("src_id"),
+        col("__at.status").as("status"), col("__at.name").as("name"),
+        col("__at.website").as("website"),
+        col("__at.wikidata_id").as("wikidata_id"),
+        runConvention.as("run_convention"), noActs.as("activities"),
+        lon.as("lon"), lat.as("lat"))
+    val lon0 = element_at(element_at(col("coords"), 1), 1)
+    val lat0 = element_at(element_at(col("coords"), 1), 2)
+    val lu = osm(
+      landuse.filter(col("geomType").isin("Polygon", "MultiPolygon") &&
+        ringValid(force2D(col("coords")))),
+      LanduseTagsKernel, concat(lit("way/"), col("area_id")),
+      OutputFormats.difficultyConvention(lon0, lat0), lon0, lat0)
+    val si = osm(sites, SiteTagsKernel,
+      concat(lit("relation/"), col("site_id")), lit("north_america"),
+      lit(360.0), lit(360.0))
     val sm = skimap
       .select(lit("skimap_org").as("source"),
         col("sm_id").cast("string").as("src_id"),
@@ -230,6 +126,14 @@ object Formatters {
         col("source"), col("src_id"), col("status"), col("name")))
   }
 
+  /** Spot formatter (SURVEY P4,
+    * `reference/src/transforms/SpotFormatter.ts:30-192`): ONE
+    * input node can emit up to 5 spots — crossing, lift station (with
+    * validated top/mid/bottom position), transceiver training,
+    * transceiver checkpoint, halfpipe — each gated by its own tag
+    * predicate. Input: (node_id, tags); output one row per emitted
+    * spot (node_id, spot_type, position).
+    */
   def formatSpots(features: DataFrame): DataFrame = {
     val tags = col("tags")
     def cand(cond: Column, t: String, pos: Column) =
@@ -266,7 +170,7 @@ object Formatters {
     * replaced.
     */
   def formatRuns(features: DataFrame): DataFrame = {
-    val k = graft.functions.RunTagsExpr.runTags(col("tags"))
+    val k = RunTagsExpr.on(col("tags"), RunTagsKernel)
     features
       .withColumn("__rt", k)
       .filter(not(col("__rt.st_status") <=> "dropped"))

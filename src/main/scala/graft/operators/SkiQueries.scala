@@ -826,7 +826,7 @@ object SkiQueries {
       Formatters.formatLifts(liftFeatures(s, d)).localCheckpoint())
 
   /** Synthesized raw lift features (lift_id, tags). */
-  private def liftFeatures(s: org.apache.spark.sql.SparkSession,
+  private[graft] def liftFeatures(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     val o = graft.Tables.orders(s, d)
     val lifecycle = pmod(col("o_orderkey"), lit(5))

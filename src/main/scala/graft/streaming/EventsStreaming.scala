@@ -529,11 +529,10 @@ object EventsStreaming {
         date_format(timestamp_millis(col("ms") - col("ms") % 86400000L),
           "yyyy-MM-dd").as("day"))
       .agg(count(lit(1)).as("n"))
-    // localCheckpoint: anomalyFromDaily self-joins its input (stats
-    // branch), and two references to the memory-sink relation fail
-    // attribute dedup — the materialized RDD plan dedups fine
-    graft.operators.Events.anomalyFromDaily(
-      toMemory(stream, "complete").localCheckpoint())
+    // anomalyFromDaily self-joins its input (stats branch): toMemory's
+    // checkpointed rows dedup their attributes, where two references to
+    // the memory-sink relation would not
+    graft.operators.Events.anomalyFromDaily(toMemory(stream, "complete"))
   }
 
   /** Rows for the stream-stream as-of (side 0 = view/right, 1 =

@@ -30,12 +30,17 @@ private[streaming] object StreamHarness {
     finally q.stop()
   }
 
-  /** Drains `stream` into a fresh memory-sink table and returns it. */
+  /** Drains `stream` into a fresh memory-sink table and returns its
+    * rows, checkpointed. The table is dropped on return, so the sink's
+    * rows live no longer than the frame returned.
+    */
   def toMemory(stream: Dataset[_], outputMode: String): DataFrame = {
     val name = s"graft_stream_${counter.incrementAndGet()}"
-    runAvailableNow(stream.writeStream.outputMode(outputMode)
-      .format("memory").queryName(name))
-    stream.sparkSession.table(name)
+    try {
+      runAvailableNow(stream.writeStream.outputMode(outputMode)
+        .format("memory").queryName(name))
+      stream.sparkSession.table(name).localCheckpoint()
+    } finally stream.sparkSession.catalog.dropTempView(name)
   }
 
   /** A drive's scratch root. Its staged input files, its sinks and its

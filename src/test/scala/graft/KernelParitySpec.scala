@@ -202,6 +202,21 @@ class KernelParitySpec extends AnyFunSuite {
     Gen.oneOf("yes", "no", "downhill", "Downhill;Nordic", "nordic;junk",
       "easy", "classic;skating", "Q5;Q999", "R7 - Çà-Piste ÉTÉ"))
 
+  private val formatterTagKeys = Seq("aerialway", "railway",
+    "proposed:aerialway", "disused:railway", "passenger", "access", "foot",
+    "aerialway:duration", "aerialway:occupancy", "aerialway:bubble",
+    "oneway", "tunnel", "name", "name:en", "ref", "piste:ref", "wikidata",
+    "website", "removed", "abandoned", "landuse", "abandoned:landuse",
+    "site", "proposed:site", "sport")
+  private val formatterTagVals: Gen[String] = Gen.oneOf(
+    Gen.const(null: String), str, Gen.oneOf("yes", "no", "chair_lift",
+      "gondola", "funicular", "tram", "demolished", "abandoned", "private",
+      "skiing", "soccer", "2:30", "5.5", "0x1F", "1e300",
+      "99999999999999999999:00", "L7 - Apex ÉTÉ"))
+  private val formatterTags: Gen[Seq[Any]] = one(orNull(Gen.listOf(
+    Gen.zip(Gen.oneOf(formatterTagKeys), formatterTagVals))
+    .map(_.take(10).toMap)))
+
   // ---- kernels ------------------------------------------------------------
 
   private case class Kernel(name: String, in: Seq[DataType],
@@ -276,7 +291,13 @@ class KernelParitySpec extends AnyFunSuite {
     // ---- the hand-written kernels ----
     dsl("RunTagsExpr", Seq(MapType(StringType, StringType)),
       one(orNull(Gen.listOf(Gen.zip(Gen.oneOf(tagKeys), tagVals))
-        .map(_.take(10).toMap))))(c => RunTagsExpr.runTags(c(0))),
+        .map(_.take(10).toMap))))(c => RunTagsExpr.on(c(0), RunTagsKernel)),
+    dsl("liftTags", Seq(MapType(StringType, StringType)), formatterTags)(c =>
+      RunTagsExpr.on(c(0), LiftTagsKernel)),
+    dsl("areaTags(landuse)", Seq(MapType(StringType, StringType)),
+      formatterTags)(c => RunTagsExpr.on(c(0), LanduseTagsKernel)),
+    dsl("areaTags(site)", Seq(MapType(StringType, StringType)),
+      formatterTags)(c => RunTagsExpr.on(c(0), SiteTagsKernel)),
     dsl("L2SqToLitExpr", Seq(longs), one(arr(lng)))(c =>
       L2SqToLitExpr.l2sqToLit(c(0), Array(1.5, -2.0, 1e9))),
     dsl("SynthTagsExpr", Seq(LongType, LongType, LongType, IntegerType,

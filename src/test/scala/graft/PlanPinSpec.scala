@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
@@ -139,6 +140,37 @@ class PlanPinSpec extends SparkSpec {
     val (exchanges, plan) = audit(df)
     assert(exchanges <= 4,
       s"q_tiles_mvt_bytes at sf0.01 grew to $exchanges exchanges:\n$plan")
+  }
+
+  test("the formatter stages compile, every method under HotSpot's huge-method limit") {
+    // A whole-stage method over 8000 bytes of bytecode is never JIT
+    // compiled, and one over 64 KB does not compile at all: Spark then
+    // runs the stage interpreted, re-trying the compile in every
+    // session. q_ski_format_runs and q_ski_format_lifts read their
+    // formatter through a checkpointed memo, so their stages are the
+    // memo's source frames; the area union formats inline.
+    import graft.operators.{Formatters, SkiFeatures, SkiQueries}
+    val frames = Seq(
+      "q_ski_format_runs" -> Formatters.formatRuns(SkiFeatures.build(spark, sf)),
+      "q_ski_format_lifts" ->
+        Formatters.formatLifts(SkiQueries.liftFeatures(spark, sf)),
+      "q_ski_area_format_union" ->
+        SparkEntry.queries("q_ski_area_format_union")(spark, sf))
+    for ((name, df) <- frames) {
+      df.queryExecution.toRdd.count()
+      val stages = planNodes(df.queryExecution.executedPlan)
+        .collect { case w: WholeStageCodegenExec => w }
+      assert(stages.nonEmpty, s"$name has no whole-stage codegen")
+      for (w <- stages) {
+        val id = s"$name stage ${w.codegenStageId}"
+        val stats =
+          try CodeGenerator.compile(w.doCodeGen()._2)._2
+          catch { case e: Exception =>
+            fail(s"$id does not compile: ${e.getMessage.take(500)}") }
+        assert(stats.maxMethodCodeSize <= 8000,
+          s"$id has a ${stats.maxMethodCodeSize}-byte method:\n${w.child}")
+      }
+    }
   }
 
   test("audit still fires on a genuine non-scalar BNLJ and a cartesian") {

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * walk. The sinks' rules have one owner each too: `Statistics` the
   * lift-serviced elevations, `Formatters` the id parts of runs, lifts,
   * ski areas and spots, `HashFunctions` the content-id hash, and
-  * `GeoFunctions` the oracles' segment snap.
+  * `GeoFunctions` the oracles' segment snap. `OsmTags` owns the OSM tag
+  * rules every formatter kernel reads tags through.
   */
 class SkiFeaturesOwnerSpec extends AnyFunSuite {
 
@@ -58,11 +59,20 @@ class SkiFeaturesOwnerSpec extends AnyFunSuite {
       """contentId\(\s*lit\(\s*"(run|lift|skiArea|spot)"|md5\(\s*'(skiArea|spot)\||"'(run|lift|skiArea|spot)'"""",
       "Formatters.scala"),
     ("oracle segment snap clamp (ax * ddx + ay * ddy)",
-      """ax\s*\*\s*ddx\s*\+\s*ay\s*\*\s*ddy""", "GeoFunctions.scala"))
+      """ax\s*\*\s*ddx\s*\+\s*ay\s*\*\s*ddy""", "GeoFunctions.scala"),
+    // not Similarity's `s"$j:$i"` digest seeds
+    ("{state}:{key} prefixed lifecycle key",
+      """(states|element_at|tags)\b.*s"\$\{?\w+\}?:|s"\$\{?\w+\}?:.*\b(states|element_at|tags)""",
+      "OsmTags.scala"),
+    ("map_filter over tags", """map_filter\(""", "OsmTags.scala"),
+    ("ref-prefix strip regex", """\\{1,2}s\*-\?\\{1,2}s\+""", "OsmTags.scala"))
 
   /** The owners of the sinks' per-area and per-feature rules. */
   private val SinkOwners = Set("Statistics.scala", "Formatters.scala",
     "HashFunctions.scala", "GeoFunctions.scala")
+
+  /** The owner of the OSM tag rules. */
+  private val TagOwner = "OsmTags.scala"
 
   /** The offending lines: a form outside its owner. */
   private def copies(forms: Seq[(String, String, String)]): Seq[String] = {
@@ -87,7 +97,7 @@ class SkiFeaturesOwnerSpec extends AnyFunSuite {
 
   test("the duplicate-run input, the quantizer and the oracle walk each have one owner") {
     val offenders = copies(OwnedForms.filter(f =>
-      f._3 != "SkiFeatures.scala" && !SinkOwners(f._3)))
+      f._3 != "SkiFeatures.scala" && !SinkOwners(f._3) && f._3 != TagOwner))
     assert(offenders.isEmpty,
       "copies outside their owner; call the owner (or its SQL twin in an " +
         "oracle) instead:\n" + offenders.mkString("\n"))
@@ -98,6 +108,14 @@ class SkiFeaturesOwnerSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "copies outside their owner; select the owner's column (or call its " +
         "SQL twin in an oracle) instead:\n" + offenders.mkString("\n"))
+  }
+
+  test("the OSM tag rules each have one owner") {
+    val offenders = copies(OwnedForms.filter(_._3 == TagOwner))
+    assert(offenders.isEmpty,
+      "copies of an OSM tag rule outside OsmTags; read the tags through " +
+        "an OsmTags.Layout and call its rules instead:\n" +
+        offenders.mkString("\n"))
   }
 
   /** The files whose lines match `form`. */

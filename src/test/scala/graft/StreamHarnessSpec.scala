@@ -1,13 +1,12 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The streaming drives share one harness (`graft.streaming.StreamHarness`):
   * only it starts a query under AvailableNow and waits for it, and input
   * tables are read through `Tables`, whose schema memo only works if no
-  * one reads the files behind its back.
+  * one reads the files behind its back. A drive's memory-sink table is
+  * gone once the drive returns.
   */
-class StreamHarnessSpec extends AnyFunSuite {
+class StreamHarnessSpec extends SparkSpec {
 
   /** (what, pattern); each may appear only in [[Owners]]. */
   private val OwnedForms = Seq(
@@ -39,6 +38,15 @@ class StreamHarnessSpec extends AnyFunSuite {
       val hits = MainSources.lines(harness)
         .filter(l => re.r.findFirstIn(l._3).nonEmpty)
       assert(hits.size == 1, s"$what: ${hits.mkString("\n")}")
+    }
+  }
+
+  test("a memory-sink drive leaves no graft_stream_ table behind") {
+    def streamTables() = spark.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith("graft_stream_")).toSeq
+    for (q <- Seq("q_stream_events_hourly", "q_stream_events_anomaly")) {
+      assert(SparkEntry.queries(q)(spark, sf).collect().nonEmpty, q)
+      assert(streamTables().isEmpty, s"$q left ${streamTables()}")
     }
   }
 }

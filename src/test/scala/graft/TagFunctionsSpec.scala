@@ -1,22 +1,40 @@
 package graft
 
-import graft.functions.TagFunctions._
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
+import graft.functions.OsmTags
+import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Golden cases for the OSM tag operators, mirroring the reference's
-  * Status/OSMTransforms unit-test expectations (SURVEY §5).
+/** Golden cases for the OSM tag rules ([[graft.functions.OsmTags]]),
+  * mirroring the reference's Status/OSMTransforms unit-test
+  * expectations (SURVEY §5). FormatterTagsSpec checks these inputs
+  * through the lift and ski-area kernels too.
   */
 class TagFunctionsSpec extends SparkSpec {
-  import scala.jdk.CollectionConverters._
+
+  private def read(layout: OsmTags.Layout,
+      tags: Map[String, String]): OsmTags.Tags =
+    layout.read(ArrayBasedMapData(
+      tags.keys.map(UTF8String.fromString).toArray[Any],
+      tags.values.map(UTF8String.fromString).toArray[Any]))
+
+  private def str(v: UTF8String): String =
+    if (v == null) null else v.toString
+
+  private val pisteType = new OsmTags.Layout(Nil, Seq("piste:type"))
 
   private def statusOf(tags: Map[String, String]): (String, String) = {
-    import spark.implicits._
-    val df = Seq(tags).toDF("tags")
-      .select(lifecycleStatus(col("tags"), "piste:type").as("st"))
-      .select(col("st.status"), col("st.value"))
-    val r = df.collect().head
-    (r.getString(0), r.getString(1))
+    val st = OsmTags.lifecycle(read(pisteType, tags),
+      pisteType.slot("piste:type"))
+    (str(st.status), str(st.value))
+  }
+
+  private val names = new OsmTags.Layout(Nil, nameRoots = Seq("name"))
+
+  /** The name of `tags` under `layout`, stripped of its ref's prefix. */
+  private def nameOf(layout: OsmTags.Layout, tags: Map[String, String],
+      strip: Boolean = false): String = {
+    val t = read(layout, tags)
+    str(OsmTags.name(t, if (strip) OsmTags.ref(t) else null))
   }
 
   test("plain base tag → operating") {
@@ -80,56 +98,45 @@ class TagFunctionsSpec extends SparkSpec {
   }
 
   test("osmRef precedence piste:loc_ref > piste:ref > loc_ref > ref") {
-    import spark.implicits._
-    val df = Seq(
+    val got = Seq(
       Map("ref" -> "d", "loc_ref" -> "c", "piste:ref" -> "b", "piste:loc_ref" -> "a"),
       Map("ref" -> "d", "piste:ref" -> "b"),
-      Map("ref" -> "d")).toDF("tags")
-      .select(osmRef(col("tags")))
-    assert(df.collect().map(_.getString(0)).toSeq == Seq("a", "b", "d"))
+      Map("ref" -> "d")).map(m => str(OsmTags.ref(read(names, m))))
+    assert(got == Seq("a", "b", "d"))
   }
 
   test("osmName emits values in KEY-sorted order, uniqued, comma-joined") {
-    import spark.implicits._
     // primary 'name' key sorts first even when its value sorts last
-    val df = Seq(
+    val got = Seq(
       Map("name" -> "Zeta", "name:en" -> "Alpha", "name:fr" -> "Zeta"),
-      Map("other" -> "x")).toDF("tags").select(osmName(col("tags"), "name"))
-    val got = df.collect().map(_.getString(0)).toSeq
+      Map("other" -> "x")).map(nameOf(names, _))
     assert(got == Seq("Zeta, Alpha", null))
   }
 
   test("osmName falls back to the fallback root key (piste:name > name)") {
-    import spark.implicits._
-    val df = Seq(
+    val fallback = new OsmTags.Layout(Nil, nameRoots = Seq("piste:name", "name"))
+    val got = Seq(
       Map("piste:name" -> "Piste", "name" -> "Base"),
-      Map("name" -> "Base")).toDF("tags")
-      .select(osmName(col("tags"), "piste:name", Some("name")))
-    assert(df.collect().map(_.getString(0)).toSeq == Seq("Piste", "Base"))
+      Map("name" -> "Base")).map(nameOf(fallback, _))
+    assert(got == Seq("Piste", "Base"))
   }
 
   test("osmName strips the ref prefix") {
-    import spark.implicits._
-    val df = Seq(Map("name" -> "11 - Peak Chair", "ref" -> "11"))
-      .toDF("tags")
-      .select(osmName(col("tags"), "name", None, osmRef(col("tags"))))
-    assert(df.collect().head.getString(0) == "Peak Chair")
+    assert(nameOf(names, Map("name" -> "11 - Peak Chair", "ref" -> "11"),
+      strip = true) == "Peak Chair")
   }
 
   test("stripRefPrefix removes leading ref") {
-    import spark.implicits._
-    val df = Seq(("12 - Foo run", "12"), ("12a Bar", "12a"), ("Baz", "9"))
-      .toDF("name", "ref")
-      .select(stripRefPrefix(col("name"), col("ref")))
-    assert(df.collect().map(_.getString(0)).toSeq == Seq("Foo run", "Bar", "Baz"))
+    val got = Seq(("12 - Foo run", "12"), ("12a Bar", "12a"), ("Baz", "9"))
+      .map { case (n, r) => nameOf(names, Map("name" -> n, "ref" -> r),
+        strip = true) }
+    assert(got == Seq("Foo run", "Bar", "Baz"))
   }
 
   test("tagBoolean maps strictly yes/no (reference mapOSMBoolean)") {
-    import spark.implicits._
-    val df = Seq("yes", "no", "1", "0", "maybe").toDF("v")
-      .select(tagBoolean(col("v")))
-    assert(df.collect().map(r => if (r.isNullAt(0)) null else r.getBoolean(0)).toSeq
-      == Seq(true, false, null, null, null))
+    val got = Seq("yes", "no", "1", "0", "maybe")
+      .map(v => OsmTags.yesNo(UTF8String.fromString(v)))
+    assert(got == Seq(true, false, null, null, null))
   }
 
   test("formatRuns end to end on a hand-built feature") {
