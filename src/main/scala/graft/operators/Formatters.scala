@@ -132,7 +132,9 @@ object Formatters {
     * validated top/mid/bottom position), transceiver training,
     * transceiver checkpoint, halfpipe — each gated by its own tag
     * predicate. Input: (node_id, tags); output one row per emitted
-    * spot (node_id, spot_type, position).
+    * spot (node_id, spot_type, position). Every spot sink reads it
+    * through `SkiQueries.formattedSpots`, which adds the attributes the
+    * sinks render.
     */
   def formatSpots(features: DataFrame): DataFrame = {
     val tags = col("tags")

@@ -69,37 +69,13 @@ object GeoPackage {
         |      coalesce(CAST((floor((mx) * 1e2 + 0.5) / 1e2) AS VARCHAR), ''),
         |      ($aconv), printf('%.6f', alon), printf('%.6f', alat)) AS line
         |  FROM areas a LEFT JOIN el ON a.area_id = el.area_id),
-        |sp AS (
-        |  SELECT event_id, u.spot_type,
-        |    CASE WHEN u.spot_type = 'lift_station' THEN
-        |      CASE CAST(floor(value) AS BIGINT) % 4
-        |        WHEN 0 THEN 'top' WHEN 1 THEN 'mid' WHEN 2 THEN 'bottom' END
-        |    END AS position
-        |  FROM events, unnest(
-        |    CASE event_type
-        |      WHEN 'click' THEN ['crossing']
-        |      WHEN 'signup' THEN ['lift_station']
-        |      WHEN 'error' THEN ['avalanche_transceiver_training', 'halfpipe']
-        |      WHEN 'view' THEN ['avalanche_transceiver_checkpoint']
-        |      ELSE ['lift_station', 'crossing'] END) AS u(spot_type)),
+        |${SkiQueries.spotOracleCtes},
         |spot_rows AS (
-        |  SELECT 'spots' AS layer,
-        |    ${Formatters.sql.spotId("event_id", "spot_type")} AS fid,
-        |    concat_ws('|', spot_type,
-        |      CASE WHEN spot_type = 'crossing' THEN
-        |        CASE event_id % 3 WHEN 0 THEN 'yes' WHEN 1 THEN 'no'
-        |          ELSE 'sometimes' END ELSE '' END,
-        |      CASE WHEN spot_type = 'lift_station'
-        |        THEN 'Station ' || CAST(event_id AS VARCHAR) ELSE '' END,
-        |      CASE WHEN spot_type = 'lift_station'
-        |        THEN coalesce(position, '') ELSE '' END,
-        |      CASE WHEN spot_type = 'lift_station' THEN
-        |        CASE WHEN event_id % 2 = 0 THEN '1' ELSE '0' END
-        |        ELSE '' END,
-        |      CASE WHEN spot_type = 'lift_station' THEN
-        |        CASE WHEN event_id % 5 < 2 THEN '1' ELSE '0' END
-        |        ELSE '' END) AS line
-        |  FROM sp)
+        |  SELECT 'spots' AS layer, id AS fid,
+        |    concat_ws('|', spot_type, coalesce(dismount, ''),
+        |      coalesce(name, ''), coalesce(position, ''),
+        |      ${sqlB01("entry")}, ${sqlB01("exit")}) AS line
+        |  FROM sfmt)
         |SELECT layer, fid, line FROM (
         |  SELECT * FROM run_rows UNION ALL SELECT * FROM lift_rows
         |  UNION ALL SELECT * FROM area_rows UNION ALL SELECT * FROM spot_rows)
@@ -143,37 +119,11 @@ object GeoPackage {
           difficultyConvention(col("alon"), col("alat")),
           format_string("%.6f", col("alon")),
           format_string("%.6f", col("alat"))).as("line"))
-    val pidx = pmod(floor(col("value")).cast("long"), lit(4))
-    val stationPos = when(pidx === 0, "top").when(pidx === 1, "mid")
-      .when(pidx === 2, "bottom")
-    val isStation = col("spot_type") === "lift_station"
-    val spotRows = graft.Tables.events(s, d)
-      .select(col("event_id"), col("event_type"), stationPos.as("pos"))
-      .select(col("event_id"), col("pos"),
-        explode(when(col("event_type") === "click", array(lit("crossing")))
-          .when(col("event_type") === "signup", array(lit("lift_station")))
-          .when(col("event_type") === "error",
-            array(lit("avalanche_transceiver_training"), lit("halfpipe")))
-          .when(col("event_type") === "view",
-            array(lit("avalanche_transceiver_checkpoint")))
-          .otherwise(array(lit("lift_station"), lit("crossing"))))
-          .as("spot_type"))
-      .select(lit("spots").as("layer"),
-        Formatters.spotId(col("event_id"), col("spot_type")).as("fid"),
-        concat_ws("|", col("spot_type"),
-          when(col("spot_type") === "crossing",
-            when(pmod(col("event_id"), lit(3)) === 0, "yes")
-              .when(pmod(col("event_id"), lit(3)) === 1, "no")
-              .otherwise("sometimes")).otherwise(""),
-          when(isStation, concat(lit("Station "), col("event_id")))
-            .otherwise(""),
-          when(isStation, coalesce(col("pos"), lit(""))).otherwise(""),
-          when(isStation,
-            when(pmod(col("event_id"), lit(2)) === 0, "1").otherwise("0"))
-            .otherwise(""),
-          when(isStation,
-            when(pmod(col("event_id"), lit(5)) < 2, "1").otherwise("0"))
-            .otherwise("")).as("line"))
+    val spotRows = SkiQueries.formattedSpots(s, d)
+      .select(lit("spots").as("layer"), col("id").as("fid"),
+        concat_ws("|", col("spot_type"), coalesce(col("dismount"), lit("")),
+          coalesce(col("name"), lit("")), coalesce(col("position"), lit("")),
+          b01(col("entry")), b01(col("exit"))).as("line"))
     runRows.unionByName(liftRows).unionByName(areaRows).unionByName(spotRows)
   }
 

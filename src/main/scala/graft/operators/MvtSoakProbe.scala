@@ -95,7 +95,7 @@ object MvtSoakProbe {
     sampler.setDaemon(true)
     sampler.start()
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_soak_")
+    val dir = graft.TempDirs.scoped("graft_soak_")
     val out = dir.resolve("soak.mbtiles")
     val t0 = System.nanoTime()
     MvtTiles.writeMbtilesOf(spark, tiles, out, gzip = overflow,
@@ -139,7 +139,8 @@ object MvtSoakProbe {
       f"heap_high=${high / 1e6}%.0f MB " +
       f"delta=${(high - baseline) / 1e6}%.0f MB " +
       f"write_phase_delta=${(writeHigh - baseline) / 1e6}%.0f MB$roundTrip")
-    java.nio.file.Files.deleteIfExists(out)
+    // the container and (overflow) the extracted tiles/ tree
+    graft.TempDirs.deleteTree(dir)
     spark.stop()
   }
 }

@@ -321,6 +321,9 @@ object OutputFormats {
   private def yn(c: Column): Column =
     when(c.isNull, "").when(c, "yes").otherwise("no")
 
+  private val sqlYn = (x: String) =>
+    s"CASE WHEN $x IS NULL THEN '' WHEN $x THEN 'yes' ELSE 'no' END"
+
   /** JS `Math.round(x).toString()` (round half toward +inf). */
   private def fixed0(c: Column): Column =
     floor(c + 0.5).cast("long").cast("string")
@@ -346,20 +349,14 @@ object OutputFormats {
       |SELECT lift_id,
       |  concat_ws(',', name, ref, '', lift_type, status,
       |    coalesce(access, ''), '', '', '', '',
-      |    CASE WHEN oneway IS NULL THEN ''
-      |         WHEN oneway THEN 'yes' ELSE 'no' END,
+      |    ${sqlYn("oneway")},
       |    CASE WHEN duration_s IS NULL OR duration_s = 0 THEN ''
       |         ELSE CAST(duration_s AS VARCHAR) END,
       |    CASE WHEN capacity IS NULL OR capacity = 0 THEN ''
       |         ELSE CAST(capacity AS VARCHAR) END,
       |    CASE WHEN occupancy IS NULL OR occupancy = 0 THEN ''
       |         ELSE CAST(occupancy AS VARCHAR) END,
-      |    CASE WHEN detachable IS NULL THEN ''
-      |         WHEN detachable THEN 'yes' ELSE 'no' END,
-      |    CASE WHEN bubble IS NULL THEN ''
-      |         WHEN bubble THEN 'yes' ELSE 'no' END,
-      |    CASE WHEN heating IS NULL THEN ''
-      |         WHEN heating THEN 'yes' ELSE 'no' END,
+      |    ${sqlYn("detachable")}, ${sqlYn("bubble")}, ${sqlYn("heating")},
       |    '', '', '', '', '', '', '',
       |    '', '',
       |    'https://openskimap.org/?obj=' || id, id,
@@ -462,92 +459,25 @@ object OutputFormats {
   // ---- P6: CSV spot export rows -------------------------------------------
   // CSVFormatter.formatSpot (CSVFormatter.ts:407-444): shared columns +
   // a type-specific block — dismount for crossings; name / position /
-  // entry / exit for lift stations; empty for the rest. Spot geometry
-  // and the crossing/station attributes synthesize deterministically
-  // from the event id.
+  // entry / exit for lift stations; empty for the rest. The rows render
+  // SkiQueries.formattedSpots (its twin: SkiQueries.spotOracleCtes).
   private val qCsvSpots = QuerySpec.of(
     "q_csv_spots",
-    s"""WITH e AS (
-      |  SELECT event_id, event_type,
-      |    CAST(floor(value) AS BIGINT) % 4 AS pidx
-      |  FROM events),
-      |s AS (
-      |  SELECT event_id, u.spot_type,
-      |    CASE WHEN u.spot_type = 'lift_station' THEN
-      |      CASE pidx WHEN 0 THEN 'top' WHEN 1 THEN 'mid'
-      |        WHEN 2 THEN 'bottom' END
-      |    END AS position
-      |  FROM e, unnest(
-      |    CASE event_type
-      |      WHEN 'click' THEN ['crossing']
-      |      WHEN 'signup' THEN ['lift_station']
-      |      WHEN 'error' THEN ['avalanche_transceiver_training', 'halfpipe']
-      |      WHEN 'view' THEN ['avalanche_transceiver_checkpoint']
-      |      ELSE ['lift_station', 'crossing'] END) AS u(spot_type)),
-      |x AS (
-      |  SELECT event_id AS node_id, spot_type, position,
-      |    ${SkiFeatures.sql.anchorLon("event_id")} AS lon,
-      |    ${SkiFeatures.sql.anchorLat("event_id")} AS lat,
-      |    ${Formatters.sql.spotId("event_id", "spot_type")} AS id
-      |  FROM s)
+    s"""WITH ${SkiQueries.spotOracleCtes}
       |SELECT node_id, spot_type,
-      |  concat_ws(',', id, spot_type,
-      |    printf('%.6f', lon), printf('%.6f', lat),
-      |    '', '', '', '', '',
-      |    CASE WHEN spot_type = 'crossing' THEN
-      |      CASE node_id % 3 WHEN 0 THEN 'yes' WHEN 1 THEN 'no'
-      |        ELSE 'sometimes' END ELSE '' END,
-      |    CASE WHEN spot_type = 'lift_station'
-      |      THEN 'Station ' || CAST(node_id AS VARCHAR) ELSE '' END,
-      |    CASE WHEN spot_type = 'lift_station'
-      |      THEN coalesce(position, '') ELSE '' END,
-      |    CASE WHEN spot_type = 'lift_station' THEN
-      |      CASE WHEN node_id % 2 = 0 THEN 'yes' ELSE 'no' END ELSE '' END,
-      |    CASE WHEN spot_type = 'lift_station' THEN
-      |      CASE WHEN node_id % 5 < 2 THEN 'yes' ELSE 'no' END ELSE '' END
-      |  ) AS line
-      |FROM x ORDER BY node_id, spot_type""".stripMargin) { (s, d) =>
-    val pidx = pmod(floor(col("value")).cast("long"), lit(4))
-    val stationPos = when(pidx === 0, "top").when(pidx === 1, "mid")
-      .when(pidx === 2, "bottom").otherwise("junk")
-    val tags = map(
-      lit("ski"),
-      when(col("event_type").isin("click", "purchase"), "crossing"),
-      lit("aerialway"),
-      when(col("event_type").isin("signup", "purchase"), "station"),
-      lit("aerialway:station"), stationPos,
-      lit("avalanche_transceiver"),
-      when(col("event_type") === "error", "training")
-        .when(col("event_type") === "view", "checkpoint"),
-      lit("halfpipe"), when(col("event_type") === "error", "yes"))
-    val features = graft.Tables.fanout(Events.eventsMs(s, d))
-      .select(col("event_id").as("node_id"), tags.as("tags"))
-      .localCheckpoint()
-    val isStation = col("spot_type") === "lift_station"
-    Formatters.formatSpots(features)
-      .withColumn("lon",
-        SkiFeatures.anchorLon(col("node_id")))
-      .withColumn("lat",
-        SkiFeatures.anchorLat(col("node_id")))
-      .withColumn("id", Formatters.spotId(col("node_id"), col("spot_type")))
+      |  concat_ws(',', id, spot_type, printf('%.6f', lon), printf('%.6f', lat),
+      |    '', '', '', '', '', coalesce(dismount, ''), coalesce(name, ''),
+      |    coalesce(position, ''), ${sqlYn("entry")}, ${sqlYn("exit")}) AS line
+      |FROM sfmt ORDER BY node_id, spot_type""".stripMargin) { (s, d) =>
+    SkiQueries.formattedSpots(s, d)
       .select(col("node_id"), col("spot_type"), concat_ws(",",
         col("id"), col("spot_type"),
         format_string("%.6f", col("lon")),
         format_string("%.6f", col("lat")),
         lit(""), lit(""), lit(""), lit(""), lit(""),
-        when(col("spot_type") === "crossing",
-          when(pmod(col("node_id"), lit(3)) === 0, "yes")
-            .when(pmod(col("node_id"), lit(3)) === 1, "no")
-            .otherwise("sometimes")).otherwise(""),
-        when(isStation, concat(lit("Station "), col("node_id")))
-          .otherwise(""),
-        when(isStation, coalesce(col("position"), lit(""))).otherwise(""),
-        when(isStation,
-          when(pmod(col("node_id"), lit(2)) === 0, "yes").otherwise("no"))
-          .otherwise(""),
-        when(isStation,
-          when(pmod(col("node_id"), lit(5)) < 2, "yes").otherwise("no"))
-          .otherwise("")).as("line"))
+        coalesce(col("dismount"), lit("")), coalesce(col("name"), lit("")),
+        coalesce(col("position"), lit("")),
+        yn(col("entry")), yn(col("exit"))).as("line"))
       .orderBy("node_id", "spot_type")
   }
 
@@ -620,77 +550,20 @@ object OutputFormats {
   // MapboxGLFormatter.formatSpot (MapboxGLFormatter.ts:153-196): base
   // {id, spotType, skiAreas} plus lift-station {name, liftId, position,
   // entry, exit} or crossing {dismount}; the transceiver/halfpipe types
-  // carry base properties only (null type-specific columns here).
+  // carry base properties only (null type-specific columns here). The
+  // point rounds to 1e-6°.
   private val qGlSpots = QuerySpec.of(
     "q_mapbox_spots",
-    s"""WITH e AS (
-      |  SELECT event_id, event_type,
-      |    CAST(floor(value) AS BIGINT) % 4 AS pidx
-      |  FROM events),
-      |s AS (
-      |  SELECT event_id, u.spot_type,
-      |    CASE WHEN u.spot_type = 'lift_station' THEN
-      |      CASE pidx WHEN 0 THEN 'top' WHEN 1 THEN 'mid'
-      |        WHEN 2 THEN 'bottom' END
-      |    END AS position
-      |  FROM e, unnest(
-      |    CASE event_type
-      |      WHEN 'click' THEN ['crossing']
-      |      WHEN 'signup' THEN ['lift_station']
-      |      WHEN 'error' THEN ['avalanche_transceiver_training', 'halfpipe']
-      |      WHEN 'view' THEN ['avalanche_transceiver_checkpoint']
-      |      ELSE ['lift_station', 'crossing'] END) AS u(spot_type))
-      |SELECT event_id AS node_id, spot_type,
-      |  ${Formatters.sql.spotId("event_id", "spot_type")} AS id,
-      |  CASE WHEN spot_type = 'lift_station'
-      |    THEN 'Station ' || CAST(event_id AS VARCHAR) END AS name,
-      |  CASE WHEN spot_type = 'lift_station'
-      |    THEN 'lift_' || CAST(event_id % 97 AS VARCHAR) END AS lift_id,
-      |  CASE WHEN spot_type = 'lift_station' THEN position END AS position,
-      |  CASE WHEN spot_type = 'lift_station'
-      |    THEN event_id % 2 = 0 END AS entry,
-      |  CASE WHEN spot_type = 'lift_station'
-      |    THEN event_id % 5 < 2 END AS exit,
-      |  CASE WHEN spot_type = 'crossing' THEN
-      |    CASE event_id % 3 WHEN 0 THEN 'yes' WHEN 1 THEN 'no'
-      |      ELSE 'sometimes' END END AS dismount,
-      |  (floor(${SkiFeatures.sql.anchorLon("event_id")} * 1e6 + 0.5) / 1e6)
-      |    AS lon,
-      |  (floor(${SkiFeatures.sql.anchorLat("event_id")} * 1e6 + 0.5) / 1e6)
-      |    AS lat
-      |FROM s ORDER BY node_id, spot_type""".stripMargin) { (s, d) =>
-    val pidx = pmod(floor(col("value")).cast("long"), lit(4))
-    val stationPos = when(pidx === 0, "top").when(pidx === 1, "mid")
-      .when(pidx === 2, "bottom").otherwise("junk")
-    val tags = map(
-      lit("ski"),
-      when(col("event_type").isin("click", "purchase"), "crossing"),
-      lit("aerialway"),
-      when(col("event_type").isin("signup", "purchase"), "station"),
-      lit("aerialway:station"), stationPos,
-      lit("avalanche_transceiver"),
-      when(col("event_type") === "error", "training")
-        .when(col("event_type") === "view", "checkpoint"),
-      lit("halfpipe"), when(col("event_type") === "error", "yes"))
-    val features = graft.Tables.fanout(Events.eventsMs(s, d))
-      .select(col("event_id").as("node_id"), tags.as("tags"))
-      .localCheckpoint()
-    val isStation = col("spot_type") === "lift_station"
-    Formatters.formatSpots(features)
-      .select(col("node_id"), col("spot_type"),
-        Formatters.spotId(col("node_id"), col("spot_type")).as("id"),
-        when(isStation, concat(lit("Station "), col("node_id"))).as("name"),
-        when(isStation, concat(lit("lift_"),
-          pmod(col("node_id"), lit(97)))).as("lift_id"),
-        when(isStation, col("position")).as("position"),
-        when(isStation, pmod(col("node_id"), lit(2)) === 0).as("entry"),
-        when(isStation, pmod(col("node_id"), lit(5)) < 2).as("exit"),
-        when(col("spot_type") === "crossing",
-          when(pmod(col("node_id"), lit(3)) === 0, "yes")
-            .when(pmod(col("node_id"), lit(3)) === 1, "no")
-            .otherwise("sometimes")).as("dismount"),
-        (floor(SkiFeatures.anchorLon(col("node_id")) * 1e6 + 0.5) / 1e6).as("lon"),
-        (floor(SkiFeatures.anchorLat(col("node_id")) * 1e6 + 0.5) / 1e6).as("lat"))
+    s"""WITH ${SkiQueries.spotOracleCtes}
+      |SELECT node_id, spot_type, id, name, lift_id, position, entry, exit,
+      |  dismount, (floor(lon * 1e6 + 0.5) / 1e6) AS lon,
+      |  (floor(lat * 1e6 + 0.5) / 1e6) AS lat
+      |FROM sfmt ORDER BY node_id, spot_type""".stripMargin) { (s, d) =>
+    SkiQueries.formattedSpots(s, d)
+      .select(col("node_id"), col("spot_type"), col("id"), col("name"),
+        col("lift_id"), col("position"), col("entry"), col("exit"),
+        col("dismount"), (floor(col("lon") * 1e6 + 0.5) / 1e6).as("lon"),
+        (floor(col("lat") * 1e6 + 0.5) / 1e6).as("lat"))
       .orderBy("node_id", "spot_type")
   }
 

@@ -903,30 +903,18 @@ object SkiQueries {
       .orderBy("lift_id")
   }
 
-  // ---- P4: multi-spot emission -------------------------------------------
+  // ---- P4: spots -----------------------------------------------------------
   // Spot features synthesized from events; 'error' and 'purchase'
   // events carry tag combinations that emit TWO spots each, exercising
   // the one-input-many-outputs explode path.
-  private val qSpots = QuerySpec.of(
-    "q_ski_format_spots",
-    """WITH e AS (
-      |  SELECT event_id, event_type, CAST(floor(value) AS BIGINT) % 4 AS pidx
-      |  FROM events),
-      |s AS (
-      |  SELECT event_id, u.spot_type,
-      |    coalesce(CASE WHEN u.spot_type = 'lift_station' THEN
-      |      CASE pidx WHEN 0 THEN 'top' WHEN 1 THEN 'mid' WHEN 2 THEN 'bottom' END
-      |    END, '') AS position
-      |  FROM e, unnest(
-      |    CASE event_type
-      |      WHEN 'click' THEN ['crossing']
-      |      WHEN 'signup' THEN ['lift_station']
-      |      WHEN 'error' THEN ['avalanche_transceiver_training', 'halfpipe']
-      |      WHEN 'view' THEN ['avalanche_transceiver_checkpoint']
-      |      ELSE ['lift_station', 'crossing'] END) AS u(spot_type))
-      |SELECT spot_type, position, count(*) AS n
-      |FROM s GROUP BY spot_type, position
-      |ORDER BY spot_type, position""".stripMargin) { (s, d) =>
+
+  /** Synthesized raw spot features (node_id, tags): a click tags a
+    * crossing, a signup a lift station, an error a transceiver training
+    * ground and a halfpipe, a view a transceiver checkpoint, a purchase
+    * a crossing and a lift station.
+    */
+  private def spotFeatures(s: org.apache.spark.sql.SparkSession,
+      d: String): DataFrame = {
     val pidx = pmod(floor(col("value")).cast("long"), lit(4))
     val stationPos = when(pidx === 0, "top").when(pidx === 1, "mid")
       .when(pidx === 2, "bottom").otherwise("junk")
@@ -940,10 +928,78 @@ object SkiQueries {
       when(col("event_type") === "error", "training")
         .when(col("event_type") === "view", "checkpoint"),
       lit("halfpipe"), when(col("event_type") === "error", "yes"))
-    val features = graft.Tables.fanout(Events.eventsMs(s, d))
+    graft.Tables.fanout(Events.eventsMs(s, d))
       .select(col("event_id").as("node_id"), tags.as("tags"))
       .localCheckpoint()
-    Formatters.formatSpots(features)
+  }
+
+  /** Formatted spots: [[Formatters.formatSpots]] over [[spotFeatures]]
+    * (node_id, spot_type, position) plus the attributes every spot sink
+    * renders — id, a station's name, lift_id, entry and exit, a
+    * crossing's dismount, and the anchor point (lon, lat). An attribute
+    * is null on a spot type that has none.
+    */
+  private[graft] def formattedSpots(s: org.apache.spark.sql.SparkSession,
+      d: String): DataFrame = {
+    val node = col("node_id")
+    val isStation = col("spot_type") === "lift_station"
+    Formatters.formatSpots(spotFeatures(s, d))
+      .select(node, col("spot_type"), col("position"),
+        Formatters.spotId(node, col("spot_type")).as("id"),
+        when(isStation, concat(lit("Station "), node)).as("name"),
+        when(isStation, concat(lit("lift_"), pmod(node, lit(97))))
+          .as("lift_id"),
+        when(isStation, pmod(node, lit(2)) === 0).as("entry"),
+        when(isStation, pmod(node, lit(5)) < 2).as("exit"),
+        when(col("spot_type") === "crossing",
+          when(pmod(node, lit(3)) === 0, "yes")
+            .when(pmod(node, lit(3)) === 1, "no")
+            .otherwise("sometimes")).as("dismount"),
+        SkiFeatures.anchorLon(node).as("lon"),
+        SkiFeatures.anchorLat(node).as("lat"))
+  }
+
+  /** DuckDB twin of [[formattedSpots]]: `sev` is one row per event and
+    * spot type it emits, `sfmt` the formatted spot with its attributes.
+    */
+  private[operators] val spotOracleCtes: String =
+    s"""sev AS (
+      |  SELECT event_id AS node_id, u.spot_type,
+      |    CASE WHEN u.spot_type = 'lift_station' THEN
+      |      CASE CAST(floor(value) AS BIGINT) % 4
+      |        WHEN 0 THEN 'top' WHEN 1 THEN 'mid' WHEN 2 THEN 'bottom' END
+      |    END AS position
+      |  FROM events, unnest(
+      |    CASE event_type
+      |      WHEN 'click' THEN ['crossing']
+      |      WHEN 'signup' THEN ['lift_station']
+      |      WHEN 'error' THEN ['avalanche_transceiver_training', 'halfpipe']
+      |      WHEN 'view' THEN ['avalanche_transceiver_checkpoint']
+      |      ELSE ['lift_station', 'crossing'] END) AS u(spot_type)),
+      |sfmt AS (
+      |  SELECT node_id, spot_type, position,
+      |    ${Formatters.sql.spotId("node_id", "spot_type")} AS id,
+      |    CASE WHEN spot_type = 'lift_station'
+      |      THEN 'Station ' || CAST(node_id AS VARCHAR) END AS name,
+      |    CASE WHEN spot_type = 'lift_station'
+      |      THEN 'lift_' || CAST(node_id % 97 AS VARCHAR) END AS lift_id,
+      |    CASE WHEN spot_type = 'lift_station' THEN node_id % 2 = 0 END AS entry,
+      |    CASE WHEN spot_type = 'lift_station' THEN node_id % 5 < 2 END AS exit,
+      |    CASE WHEN spot_type = 'crossing' THEN
+      |      CASE node_id % 3 WHEN 0 THEN 'yes' WHEN 1 THEN 'no'
+      |        ELSE 'sometimes' END END AS dismount,
+      |    ${SkiFeatures.sql.anchorLon("node_id")} AS lon,
+      |    ${SkiFeatures.sql.anchorLat("node_id")} AS lat
+      |  FROM sev)""".stripMargin
+
+  // P4 multi-spot emission: spots per (type, position).
+  private val qSpots = QuerySpec.of(
+    "q_ski_format_spots",
+    s"""WITH $spotOracleCtes
+      |SELECT spot_type, coalesce(position, '') AS position, count(*) AS n
+      |FROM sfmt GROUP BY ALL
+      |ORDER BY spot_type, position""".stripMargin) { (s, d) =>
+    formattedSpots(s, d)
       .withColumn("position", coalesce(col("position"), lit("")))
       .groupBy("spot_type", "position")
       .agg(count(lit(1)).as("n"))

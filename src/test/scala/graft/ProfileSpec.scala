@@ -26,6 +26,11 @@ class ProfileSpec extends SparkSpec {
     assert(e.getMessage.contains("pipeline.enrich"))
   }
 
+  test("format. selects the run, lift and spot formatter frames in order") {
+    assert(Profile.select(Seq("format.")).map(_._1) ==
+      Seq("format.runs", "format.lifts", "format.spots"))
+  }
+
   test("options parse; an unknown flag fails") {
     val o = Profile.parse(Seq("d", "a", "--runs", "2", "b",
       "--conf", "k=v=w", "--plan", "p"))

@@ -13,12 +13,26 @@ import org.scalatest.funsuite.AnyFunSuite
   * lift-serviced elevations, `Formatters` the id parts of runs, lifts,
   * ski areas and spots, `HashFunctions` the content-id hash, and
   * `GeoFunctions` the oracles' segment snap. `OsmTags` owns the OSM tag
-  * rules every formatter kernel reads tags through.
+  * rules every formatter kernel reads tags through. `SkiQueries` owns
+  * the spot fixture: `formattedSpots` (the events' spot tags and the
+  * station and crossing attributes every spot sink renders) and its
+  * DuckDB twin `spotOracleCtes`.
   */
 class SkiFeaturesOwnerSpec extends AnyFunSuite {
 
+  /** The spot fixture's forms, owned by `SkiQueries`. Not `% 97` alone:
+    * GeoPackage's merge and RangeJoin use it for other fixtures.
+    */
+  private val SpotForms = Seq(
+    ("event type to spot type mapping",
+      """isin\(\s*"click",\s*"purchase"\)|===\s*"click",\s*array\(lit\("crossing"\)\)|'click'\s+THEN\s+\['crossing'\]""",
+      "SkiQueries.scala"),
+    ("lift-station name", """"Station "|'Station '""", "SkiQueries.scala"),
+    ("lift-station lift id", """lit\(\s*"lift_"\s*\)|'lift_'\s*\|\|""",
+      "SkiQueries.scala"))
+
   /** What only its owner may spell out: (what, pattern, owner file). */
-  private val OwnedForms = Seq(
+  private val OwnedForms = SpotForms ++ Seq(
     ("area-anchor Column formula",
       """\*\s*(7919\s*,\s*lit\(\s*360000|104729\s*,\s*lit\(\s*120000)""",
       "SkiFeatures.scala"),
@@ -96,8 +110,8 @@ class SkiFeaturesOwnerSpec extends AnyFunSuite {
   }
 
   test("the duplicate-run input, the quantizer and the oracle walk each have one owner") {
-    val offenders = copies(OwnedForms.filter(f =>
-      f._3 != "SkiFeatures.scala" && !SinkOwners(f._3) && f._3 != TagOwner))
+    val offenders = copies(OwnedForms.filter(f => f._3 != "SkiFeatures.scala" &&
+      !SinkOwners(f._3) && f._3 != TagOwner && !SpotForms.contains(f)))
     assert(offenders.isEmpty,
       "copies outside their owner; call the owner (or its SQL twin in an " +
         "oracle) instead:\n" + offenders.mkString("\n"))
@@ -116,6 +130,14 @@ class SkiFeaturesOwnerSpec extends AnyFunSuite {
       "copies of an OSM tag rule outside OsmTags; read the tags through " +
         "an OsmTags.Layout and call its rules instead:\n" +
         offenders.mkString("\n"))
+  }
+
+  test("the spot fixture has one owner") {
+    val offenders = copies(SpotForms)
+    assert(offenders.isEmpty,
+      "copies of the spot fixture outside SkiQueries; select from " +
+        "SkiQueries.formattedSpots (or SkiQueries.spotOracleCtes' sfmt in " +
+        "an oracle) instead:\n" + offenders.mkString("\n"))
   }
 
   /** The files whose lines match `form`. */
