@@ -207,12 +207,6 @@ object Bench {
         failed += q.name
       }
     }
-    // every long-lived memoized scaffold (SkiQueries.fmtMemo etc.)
-    // exists after the warmup touched every query; anything persisted
-    // AFTER this snapshot is a per-run checkpoint, safe to drop
-    // between samples
-    val scaffoldIds: Set[Int] =
-      spark.sparkContext.getPersistentRDDs.keySet.toSet
     val samples = scala.collection.mutable.LinkedHashMap[
       String, scala.collection.mutable.ArrayBuffer[Double]]()
     val sampleLoads = scala.collection.mutable.LinkedHashMap[
@@ -234,14 +228,10 @@ object Bench {
         // blocks otherwise linger across the round-robin, pressuring
         // storage memory and the page cache and skewing the NEXT
         // query's samples (a finished noop write references nothing;
-        // every run rebuilds its own checkpoints). The long-lived
-        // memoized scaffolds (all created during warmup — see
-        // scaffoldIds) must survive: their checkpoints truncated
-        // lineage, so unpersisting them would strand every later run
-        // on CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
-        spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!scaffoldIds.contains(id)) rdd.unpersist(blocking = true)
-        }
+        // every run rebuilds its own checkpoints; the frames queries
+        // share are Scaffold artifacts on disk, not blocks).
+        spark.sparkContext.getPersistentRDDs.values
+          .foreach(_.unpersist(blocking = true))
         System.gc()
         Thread.sleep(sys.env.getOrElse("SPARK_GRAFT_BENCH_SETTLE_MS",
           "300").toInt)

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.types.{BinaryType, DoubleType, IntegerType, LongType, StringType}
 import graft.functions.{AudioMetaExpr, GeoFunctions, GeoKernels, GpkgGeomExpr,
   GpkgKernel, GramHashExpr, HilbertExpr, ImageDimsExpr, ImageKernels,
@@ -34,28 +37,37 @@ import graft.plans.{AsofJoinRule, AsofJoinStrategy, DistanceJoinRule,
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.descriptions.foreach(ext.injectFunction)
-    // Distance-join planning: rewrites JOIN ... ON graft_st_dwithin(..)
-    // from a cartesian product into the grid-cell equi-join + refine.
-    ext.injectOptimizerRule(_ => DistanceJoinRule)
-    // Range-join planning: JOIN ... ON graft_in_range(t, lo, hi, bin)
-    // becomes a binned equi-join instead of a nested loop.
-    ext.injectOptimizerRule(_ => IntervalJoinRule)
-    // As-of planning: JOIN ... ON keys AND graft_asof_match(lt, rt)
-    // lifts to the native AsofJoinPlan, which the strategy then plans
-    // as the co-partitioned merge (or broadcast) exec. The DataFrame
-    // API (graft.operators.AsofJoin.join) builds the node directly.
-    ext.injectOptimizerRule(_ => AsofJoinRule)
-    ext.injectPlannerStrategy(_ => AsofJoinStrategy)
-    // Sorted-stream whole-tile MVT encode (aggregation-free tile
-    // build): plans TileStreamEncodePlan as the streaming exec.
-    ext.injectPlannerStrategy(_ => TileStreamEncodeStrategy)
-    // Sorted-stream run re-segmentation (aggregation-free N2):
-    // plans NormalizeSegmentsPlan as the streaming exec.
-    ext.injectPlannerStrategy(_ => NormalizeSegmentsStrategy)
+    GraftExtensions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
+    GraftExtensions.strategies.foreach(st => ext.injectPlannerStrategy(_ => st))
   }
 }
 
 object GraftExtensions {
+
+  /** The optimizer rules both entry points install, in order. */
+  val rules: Seq[Rule[LogicalPlan]] = Seq(
+    // Distance-join planning: rewrites JOIN ... ON graft_st_dwithin(..)
+    // from a cartesian product into the grid-cell equi-join + refine.
+    DistanceJoinRule,
+    // Range-join planning: JOIN ... ON graft_in_range(t, lo, hi, bin)
+    // becomes a binned equi-join instead of a nested loop.
+    IntervalJoinRule,
+    // As-of planning: JOIN ... ON keys AND graft_asof_match(lt, rt)
+    // lifts to the native AsofJoinPlan, which AsofJoinStrategy then
+    // plans as the co-partitioned merge (or broadcast) exec. The
+    // DataFrame API (graft.operators.AsofJoin.join) builds the node
+    // directly.
+    AsofJoinRule)
+
+  /** The planner strategies both entry points install, in order. */
+  val strategies: Seq[SparkStrategy] = Seq(
+    AsofJoinStrategy,
+    // Sorted-stream whole-tile MVT encode (aggregation-free tile
+    // build): plans TileStreamEncodePlan as the streaming exec.
+    TileStreamEncodeStrategy,
+    // Sorted-stream run re-segmentation (aggregation-free N2):
+    // plans NormalizeSegmentsPlan as the streaming exec.
+    NormalizeSegmentsStrategy)
 
   private def oneArg(name: String, f: Expression => Expression)
       : Seq[Expression] => Expression = {
@@ -262,25 +274,8 @@ object GraftExtensions {
     */
   def registerPlanning(spark: SparkSession): Unit =
     spark.experimental.synchronized {
-      if (!spark.experimental.extraOptimizations.contains(DistanceJoinRule))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ DistanceJoinRule
-      if (!spark.experimental.extraOptimizations.contains(IntervalJoinRule))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ IntervalJoinRule
-      if (!spark.experimental.extraOptimizations.contains(AsofJoinRule))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ AsofJoinRule
-      if (!spark.experimental.extraStrategies.contains(AsofJoinStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ AsofJoinStrategy
-      if (!spark.experimental.extraStrategies
-          .contains(TileStreamEncodeStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ TileStreamEncodeStrategy
-      if (!spark.experimental.extraStrategies
-          .contains(NormalizeSegmentsStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ NormalizeSegmentsStrategy
+      val exp = spark.experimental
+      exp.extraOptimizations ++= rules.filterNot(exp.extraOptimizations.contains)
+      exp.extraStrategies ++= strategies.filterNot(exp.extraStrategies.contains)
     }
 }

@@ -51,14 +51,13 @@ object Profile {
     * query materializes, or where a stage is isolated from its upstream.
     */
   val phases: ListMap[String, Frame] = ListMap(
-    // the formatters behind q_ski_format_runs' and q_ski_format_lifts'
-    // memos (which checkpoint the formatted frame once per session, so
-    // the queries time only the read), and the spot sinks' one frame
+    // the formatters behind the run, lift and spot scaffold artifacts
+    // (built once per process, so the queries time only the scan)
     "format.runs" -> ((s, d) =>
       Formatters.formatRuns(SkiFeatures.synthesize(s, d))),
     "format.lifts" -> ((s, d) =>
       Formatters.formatLifts(SkiQueries.liftFeatures(s, d))),
-    "format.spots" -> ((s, d) => SkiQueries.formattedSpots(s, d)),
+    "format.spots" -> ((s, d) => SkiQueries.spotFrame(s, d)),
     // tile pipeline: features → fan-out → cap → prep → encode
     "mvt.features" -> ((s, d) => MvtTiles.features(s, d)),
     "mvt.fanout" -> ((s, d) =>

@@ -16,35 +16,45 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Each table's parquet schema, inferred once per file set: keyed by
-    * [[fingerprint]] and the session's parquet confs, which change what
+  /** Parquet schemas, inferred once per file set: keyed by the path,
+    * its [[listing]] and the session's parquet confs, which change what
     * inference returns (`ts` is a long under
     * `spark.sql.legacy.parquet.nanosAsLong`).
     */
   private val schemas =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
-  /** Table `name` of `sfDir`. Only the first load of a file set runs
-    * the schema-inference job; later loads read with the schema it
-    * found, and a rewritten file (new size or mtime) is inferred again.
-    * A missing table fails as `spark.read.parquet` does.
+  private def schemaKey(spark: SparkSession, path: String): Option[String] =
+    scala.util.Try(listing(spark, path)).toOption.map(l =>
+      s"$path@$l" + spark.conf.getAll.filter(_._1.contains("parquet"))
+        .toSeq.sorted.mkString("|", "|", ""))
+
+  /** The parquet file set at `path` (a file or a directory, partitioned
+    * or not). Only the first read of a file set runs the
+    * schema-inference job; later reads use the schema it found, and a
+    * rewritten file set (new names, sizes or mtimes) is inferred again.
+    * A missing path fails as `spark.read.parquet` does.
     */
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
-    scala.util.Try(fingerprint(spark, sfDir, name)).toOption match {
-      case None => spark.read.parquet(path)
-      case Some(fp) =>
-        val key = fp + spark.conf.getAll
-          .filter(_._1.contains("parquet")).toSeq.sorted.mkString("|", "|", "")
-        Option(schemas.get(key)) match {
-          case Some(schema) => spark.read.schema(schema).parquet(path)
-          case None =>
-            val df = spark.read.parquet(path)
-            schemas.put(key, df.schema)
-            df
-        }
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    schemaKey(spark, path) match {
+      case Some(key) if schemas.containsKey(key) =>
+        spark.read.schema(schemas.get(key)).parquet(path)
+      case key =>
+        val df = spark.read.parquet(path)
+        key.foreach(schemas.put(_, df.schema))
+        df
     }
-  }
+
+  /** Records `schema` as that of the unpartitioned file set its writer
+    * just committed at `path`: no read infers it.
+    */
+  private[graft] def seed(spark: SparkSession, path: String,
+      schema: StructType): Unit =
+    schemaKey(spark, path).foreach(schemas.put(_, schema))
+
+  /** Table `name` of `sfDir`, read through [[parquet]]. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    parquet(spark, s"$sfDir/$name.parquet")
 
   /** Round-robin fan-out to all cores. The test tables are single-
     * row-group parquet files (one input split), so heavy per-row work
@@ -58,24 +68,26 @@ object Tables {
   def fanout(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
-  /** Content fingerprint of one table's file set — sorted
-    * (name, length, mtime) triples hashed, prefixed with the path.
-    * Memo caches (ANN plane count, minhash signatures) key on this
+  /** Content fingerprint of one table's file set — its [[listing]]
+    * hashed, prefixed with the path. Scaffold artifacts key on this
     * instead of the bare directory so data regenerated at the same
-    * path within one JVM lifetime invalidates the entry instead of
-    * silently serving stale state. One filesystem listing; no data
-    * read.
+    * path invalidates them instead of silently serving stale state.
+    * One filesystem listing; no data read.
     */
-  def fingerprint(spark: SparkSession, sfDir: String, name: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def fingerprint(spark: SparkSession, sfDir: String, name: String): String =
+    s"$sfDir/$name@${java.lang.Integer.toHexString(
+      listing(spark, s"$sfDir/$name.parquet").hashCode)}"
+
+  /** Sorted (name, length, mtime) triples of the entries at `path`. */
+  private def listing(spark: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stats =
-      if (fs.getFileStatus(path).isDirectory) fs.listStatus(path)
-      else Array(fs.getFileStatus(path))
-    val sig = stats
+      if (fs.getFileStatus(p).isDirectory) fs.listStatus(p)
+      else Array(fs.getFileStatus(p))
+    stats
       .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
       .sorted.mkString("|")
-    s"$sfDir/$name@${java.lang.Integer.toHexString(sig.hashCode)}"
   }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")

@@ -145,24 +145,15 @@ object SkiFeatures {
   private[operators] val dx = (pmod(wayId, lit(5)) + 1).cast("double") * 0.001
   private[operators] val dy = (pmod(wayId, lit(3)) + 1).cast("double") * 0.0005
 
-  private val memo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-
-  /** Memo key covering both input tables, fingerprinted so data
-    * regenerated at the same path invalidates the entry (the same
-    * invalidation contract as Similarity.planeCache).
+  /** Scaffold key covering both input tables, fingerprinted so data
+    * regenerated at the same path invalidates the artifact.
     */
   private[operators] def memoKey(s: SparkSession, d: String): String =
     graft.Tables.fingerprint(s, d, "lineitem") + "|" +
       graft.Tables.fingerprint(s, d, "part")
 
-  /** way_id, tags (map), coords — memoized + checkpointed (see the
-    * trailing comment in [[build]]).
-    */
-  def synthesize(s: SparkSession, d: String): DataFrame =
-    memo.getOrElseUpdate((s, memoKey(s, d)), build(s, d))
-
-  /** The synthesis plan, memo-free. The tag map comes from the native
+  /** way_id, tags (map), coords: a lazy plan, never materialized (see
+    * the trailing comment). The tag map comes from the native
     * [[graft.functions.SynthTagsExpr]] kernel in one call per row: the
     * 27-entry CreateMap-of-when-cascades it replaced generated so much
     * Java that the whole-stage-codegen span passed HotSpot's
@@ -170,7 +161,7 @@ object SkiFeatures {
     * on the whole 6M-row stage; see the kernel doc). SynthTagsSpec pins
     * the map to golden data that CreateMap form produced.
     */
-  private[graft] def build(s: SparkSession, d: String): DataFrame = {
+  def synthesize(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d)
     val part = Tables.part(s, d).select("p_partkey", "p_name", "p_brand")
     val tags = graft.functions.SynthTagsExpr.synthTags(
@@ -196,8 +187,8 @@ object SkiFeatures {
     // row, consumed once, never stored), and Enrichment reads only
     // way_id/coords (ColumnPruning now deletes the map from its plan
     // entirely). The materialization barrier every ski query shares
-    // moved one level up, to SkiQueries.formatted's localCheckpoint
-    // of the NARROW formatted columns.
+    // is one level up: SkiQueries.formatted's scaffold artifact of the
+    // NARROW formatted columns.
     li.join(broadcast(part), col("l_partkey") === col("p_partkey"))
       .repartition(s.sparkContext.defaultParallelism)
       .select(wayId.as("way_id"), tags.as("tags"), coords.as("coords"))

@@ -78,17 +78,15 @@ object SkiQueries {
       |  SELECT * FROM fmt WHERE status = 'operating' AND len(uses) > 0)""".stripMargin
   }
 
-  private val fmtMemo = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-
-  // formatted runs are shared scaffolding for every ski query —
-  // memoized + checkpointed so the interpreted formatter expressions
-  // evaluate once per (session, dataset fingerprint) instead of being
-  // re-inlined into each query plan (see SkiFeatures.build; fingerprint
-  // keying per the planeCache invalidation contract).
-  private[operators] def formatted(s: org.apache.spark.sql.SparkSession, d: String) =
-    fmtMemo.getOrElseUpdate((s, SkiFeatures.memoKey(s, d)),
-      Formatters.formatRuns(SkiFeatures.synthesize(s, d)).localCheckpoint())
+  /** Formatted runs, the frame every run query reads: one
+    * [[graft.Scaffold]] artifact per dataset, so the formatter kernels
+    * run once instead of in each query plan.
+    */
+  private[operators] def formatted(s: org.apache.spark.sql.SparkSession,
+      d: String): DataFrame =
+    graft.Scaffold.table(s, "ski-format-runs", SkiFeatures.memoKey(s, d)) {
+      Formatters.formatRuns(SkiFeatures.synthesize(s, d))
+    }
 
   // ---- P1/P7-P12: full run formatting ------------------------------------
   private val qFormat = QuerySpec.of(
@@ -813,17 +811,15 @@ object SkiQueries {
       |    'L' || CAST(refn AS VARCHAR) AS ref
       |  FROM o WHERE ck13 > 7 AND tidx <> 4)""".stripMargin
 
-  private val liftMemo = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-
-  /** Formatted lift features (memoized + checkpointed scaffolding;
-    * fingerprint-keyed like [[formatted]]).
+  /** Formatted lift features: one [[graft.Scaffold]] artifact per
+    * `orders` fingerprint, like [[formatted]].
     */
   private[operators] def formattedLifts(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    liftMemo.getOrElseUpdate(
-      (s, graft.Tables.fingerprint(s, d, "orders")),
-      Formatters.formatLifts(liftFeatures(s, d)).localCheckpoint())
+    graft.Scaffold.table(s, "ski-format-lifts",
+        graft.Tables.fingerprint(s, d, "orders")) {
+      Formatters.formatLifts(liftFeatures(s, d))
+    }
 
   /** Synthesized raw lift features (lift_id, tags). */
   private[graft] def liftFeatures(s: org.apache.spark.sql.SparkSession,
@@ -883,7 +879,6 @@ object SkiQueries {
       lit("ref"), concat(lit("L"), refn.cast("string")))
     graft.Tables.fanout(o)
       .select(col("o_orderkey").as("lift_id"), tags.as("tags"))
-      .localCheckpoint()
   }
 
   // ---- P2: lift formatter ------------------------------------------------
@@ -930,16 +925,24 @@ object SkiQueries {
       lit("halfpipe"), when(col("event_type") === "error", "yes"))
     graft.Tables.fanout(Events.eventsMs(s, d))
       .select(col("event_id").as("node_id"), tags.as("tags"))
-      .localCheckpoint()
   }
 
-  /** Formatted spots: [[Formatters.formatSpots]] over [[spotFeatures]]
-    * (node_id, spot_type, position) plus the attributes every spot sink
-    * renders — id, a station's name, lift_id, entry and exit, a
-    * crossing's dismount, and the anchor point (lon, lat). An attribute
-    * is null on a spot type that has none.
+  /** Formatted spots, the frame every spot sink reads: one
+    * [[graft.Scaffold]] artifact of [[spotFrame]] per `events`
+    * fingerprint, like [[formatted]].
     */
   private[graft] def formattedSpots(s: org.apache.spark.sql.SparkSession,
+      d: String): DataFrame =
+    graft.Scaffold.table(s, "ski-format-spots",
+      graft.Tables.fingerprint(s, d, "events"))(spotFrame(s, d))
+
+  /** [[Formatters.formatSpots]] over [[spotFeatures]] (node_id,
+    * spot_type, position) plus the attributes every spot sink renders —
+    * id, a station's name, lift_id, entry and exit, a crossing's
+    * dismount, and the anchor point (lon, lat). An attribute is null on
+    * a spot type that has none.
+    */
+  private[graft] def spotFrame(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
     val node = col("node_id")
     val isStation = col("spot_type") === "lift_station"

@@ -8,8 +8,7 @@ package graft
 class BucketedJoinSpec extends SparkSpec {
 
   test("bucketed orders⋈customer join plans without a shuffle exchange") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_bkt_spec_").toString
+    val dir = TempDirs.scoped("graft_bkt_spec_").toString
     try {
       val joined = operators.RelationalQueries.bucketedJoin(spark, sf, dir)
       val plan = joined.queryExecution.executedPlan.toString

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class GeoJsonlSourceSpec extends SparkSpec {
 
   private lazy val fixture: String = {
-    val dir = Files.createTempDirectory("geojsonl-src")
+    val dir = TempDirs.scoped("geojsonl-src")
     val lines = Seq(
       """{"type":"Feature","properties":{"name":"pt","lift":"yes"},"geometry":{"type":"Point","coordinates":[7.5,46.5]}}""",
       """{"type":"Feature","properties":{"name":"ls"},"geometry":{"type":"LineString","coordinates":[[7.0,46.0],[7.1,46.1]]}}""",
@@ -45,7 +45,7 @@ class GeoJsonlSourceSpec extends SparkSpec {
   }
 
   test("write path round-trips: read(write(df)) is the identity") {
-    val out = Files.createTempDirectory("geojsonl-out").toString
+    val out = TempDirs.scoped("geojsonl-out").toString
     val original = spark.read.format("geojsonl").load(fixture)
     original.write.format("geojsonl").mode("overwrite").save(out)
     val back = spark.read.format("geojsonl").load(out)
@@ -58,7 +58,7 @@ class GeoJsonlSourceSpec extends SparkSpec {
   }
 
   test("bbox metadata columns: range filters push down, prune files, stay exact") {
-    val dir = Files.createTempDirectory("geojsonl-bbox").toString
+    val dir = TempDirs.scoped("geojsonl-bbox").toString
     import spark.implicits._
     // three lon bands -> three shard files with disjoint bboxes, plus
     // one feature without geometry (null bbox)
@@ -124,7 +124,7 @@ class GeoJsonlSourceSpec extends SparkSpec {
 
   test("commit cleans only this job's temps; a concurrent job's survive") {
     import scala.jdk.CollectionConverters._
-    val out = Files.createTempDirectory("geojsonl-joblocal")
+    val out = TempDirs.scoped("geojsonl-joblocal")
     // another job's in-flight temp (different job UUID in the suffix)
     val foreign = out.resolve(
       ".part-00000-deadbeef.jsonl.11111111-2222-3333-4444-555555555555.tmp")
@@ -145,7 +145,7 @@ class GeoJsonlSourceSpec extends SparkSpec {
 
   test("malformed lines: failfast throws with context, permissive skips") {
     import scala.jdk.CollectionConverters._
-    val dir = Files.createTempDirectory("geojsonl-bad")
+    val dir = TempDirs.scoped("geojsonl-bad")
     val lines = Seq(
       """{"type":"Feature","properties":{"name":"ok"},"geometry":{"type":"Point","coordinates":[1.0,2.0]}}""",
       """{"this is not json""",
@@ -167,7 +167,7 @@ class GeoJsonlSourceSpec extends SparkSpec {
 
   test("streaming read tails the directory across appended shards") {
     import scala.jdk.CollectionConverters._
-    val dir = Files.createTempDirectory("geojsonl-stream")
+    val dir = TempDirs.scoped("geojsonl-stream")
     def feature(name: String, x: Double) =
       s"""{"type":"Feature","properties":{"name":"$name"},"geometry":{"type":"Point","coordinates":[$x,0.0]}}"""
     Files.write(dir.resolve("a.jsonl"),
@@ -191,14 +191,14 @@ class GeoJsonlSourceSpec extends SparkSpec {
 
   test("stream restart keeps offsets stable when new files sort before old ones") {
     import scala.jdk.CollectionConverters._
-    val dir = Files.createTempDirectory("geojsonl-restart")
-    val ckpt = Files.createTempDirectory("geojsonl-ckpt").toString
+    val dir = TempDirs.scoped("geojsonl-restart")
+    val ckpt = TempDirs.scoped("geojsonl-ckpt").toString
     def feature(name: String) =
       s"""{"type":"Feature","properties":{"name":"$name"},"geometry":{"type":"Point","coordinates":[1.0,0.0]}}"""
     // first file deliberately sorts LAST alphabetically
     Files.write(dir.resolve("z.jsonl"),
       Seq(feature("z1")).map(l => l: CharSequence).asJava)
-    val outDir = Files.createTempDirectory("geojsonl-restart-out").toString
+    val outDir = TempDirs.scoped("geojsonl-restart-out").toString
     // memory sink can't recover from a checkpoint — use the file sink
     def start() = spark.readStream.format("geojsonl")
       .load(dir.toString)
@@ -222,13 +222,13 @@ class GeoJsonlSourceSpec extends SparkSpec {
 
   test("file-list log is versioned; legacy + interrupted-write states recover") {
     import scala.jdk.CollectionConverters._
-    val dir = Files.createTempDirectory("geojsonl-verlog")
-    val ckpt = Files.createTempDirectory("geojsonl-verlog-ckpt")
+    val dir = TempDirs.scoped("geojsonl-verlog")
+    val ckpt = TempDirs.scoped("geojsonl-verlog-ckpt")
     def feature(name: String) =
       s"""{"type":"Feature","properties":{"name":"$name"},"geometry":{"type":"Point","coordinates":[1.0,0.0]}}"""
     Files.write(dir.resolve("z.jsonl"),
       Seq(feature("z1")).map(l => l: CharSequence).asJava)
-    val outDir = Files.createTempDirectory("geojsonl-verlog-out").toString
+    val outDir = TempDirs.scoped("geojsonl-verlog-out").toString
     def start() = spark.readStream.format("geojsonl")
       .load(dir.toString)
       .select(col("properties").getItem("name").as("name"))
@@ -266,13 +266,13 @@ class GeoJsonlSourceSpec extends SparkSpec {
 
   test("legacy unversioned file-list log is honored on restart") {
     import scala.jdk.CollectionConverters._
-    val dir = Files.createTempDirectory("geojsonl-legacylog")
-    val ckpt = Files.createTempDirectory("geojsonl-legacylog-ckpt")
+    val dir = TempDirs.scoped("geojsonl-legacylog")
+    val ckpt = TempDirs.scoped("geojsonl-legacylog-ckpt")
     def feature(name: String) =
       s"""{"type":"Feature","properties":{"name":"$name"},"geometry":{"type":"Point","coordinates":[1.0,0.0]}}"""
     Files.write(dir.resolve("z.jsonl"),
       Seq(feature("z1")).map(l => l: CharSequence).asJava)
-    val outDir = Files.createTempDirectory("geojsonl-legacylog-out").toString
+    val outDir = TempDirs.scoped("geojsonl-legacylog-out").toString
     def start() = spark.readStream.format("geojsonl")
       .load(dir.toString)
       .select(col("properties").getItem("name").as("name"))
@@ -316,7 +316,7 @@ class GeoJsonlSourceSpec extends SparkSpec {
     assert(base.filter(col("geomType") =!= "Point").count() == 5)
     // negation over null geomType must NOT match (three-valued logic)
     import scala.jdk.CollectionConverters._
-    val dir = Files.createTempDirectory("geojsonl-nullgeom")
+    val dir = TempDirs.scoped("geojsonl-nullgeom")
     Files.write(dir.resolve("part-0.jsonl"), Seq(
       """{"type":"Feature","properties":{"name":"nogeom"},"geometry":null}""",
       """{"type":"Feature","properties":{"name":"pt"},"geometry":{"type":"Point","coordinates":[1.0,2.0]}}""")

@@ -24,7 +24,7 @@ $script
   }
 
   test("the gpkg file is a valid GeoPackage an independent reader accepts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gpkg_spec_")
+    val dir = TempDirs.scoped("graft_gpkg_spec_")
     val db = dir.resolve("test.gpkg")
     val written = operators.GeoPackage.writeGpkgFile(spark, sf, db)
     assert(written.map(_._1).count(_.startsWith("gpkg_")) == 4)
@@ -63,7 +63,7 @@ $script
     // extension per feature table, nga_table_index lists the tables,
     // and nga_geometry_index carries one envelope row per fid —
     // queried back through the independent stdlib reader
-    val dir = java.nio.file.Files.createTempDirectory("graft_gpkg_idx_")
+    val dir = TempDirs.scoped("graft_gpkg_idx_")
     val db = dir.resolve("test.gpkg")
     operators.GeoPackage.writeGpkgFile(spark, sf, db)
     val expected = operators.GeoPackage.gpkgGeoms(spark, sf)
@@ -105,7 +105,7 @@ $script
   }
 
   test("a sampled geometry BLOB round-trips byte-exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gpkg_spec2_")
+    val dir = TempDirs.scoped("graft_gpkg_spec2_")
     val db = dir.resolve("test.gpkg")
     operators.GeoPackage.writeGpkgFile(spark, sf, db)
     val sample = operators.GeoPackage.gpkgGeoms(spark, sf)

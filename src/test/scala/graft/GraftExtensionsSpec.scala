@@ -139,6 +139,24 @@ class GraftExtensionsSpec extends SparkSpec {
         "graft_vec_dot", "graft_video_meta"))
   }
 
+  test("both entry points install the one rule and strategy list") {
+    // the SparkSessionExtensions path: the hooks injected into them
+    // (their build methods are package-private, so reached reflectively)
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    def built(method: String): Any = ext.getClass
+      .getMethod(method, classOf[org.apache.spark.sql.SparkSession])
+      .invoke(ext, spark)
+    assert(built("buildOptimizerRules") == GraftExtensions.rules)
+    assert(built("buildPlannerStrategies") == GraftExtensions.strategies)
+    // the live-session path, applied twice: the same list, once
+    val s = spark.newSession()
+    GraftExtensions.registerPlanning(s)
+    GraftExtensions.registerPlanning(s)
+    assert(s.experimental.extraOptimizations == GraftExtensions.rules)
+    assert(s.experimental.extraStrategies == GraftExtensions.strategies)
+  }
+
   test("tile and geopackage kernels answer from pure SQL") {
     GraftExtensions.register(spark)
     // encode one single-spot tile with the batch kernel, decode it

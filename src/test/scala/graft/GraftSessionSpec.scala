@@ -19,7 +19,7 @@ class GraftSessionSpec extends AnyFunSuite {
 
   test("a missing directory sizes to 0; a directory sums its files") {
     assert(GraftSession.inputBytes("/nonexistent/graft-input") == 0L)
-    val dir = Files.createTempDirectory("graft-session")
+    val dir = TempDirs.scoped("graft-session")
     Files.write(dir.resolve("a"), new Array[Byte](3))
     Files.createDirectories(dir.resolve("t"))
     Files.write(dir.resolve("t").resolve("b"), new Array[Byte](5))
@@ -29,7 +29,7 @@ class GraftSessionSpec extends AnyFunSuite {
   test("Bench and Verify resolve the same conf for the same (cpus, sfDir)") {
     assume(!sys.env.contains("SPARK_GRAFT_AGG_FALLBACK"))
     val bytes = GraftSession.inputBytes(
-      Files.createTempDirectory("graft-sf").toString)
+      TempDirs.scoped("graft-sf").toString)
     val bench = GraftSession.conf("graft-bench", 6, bytes)
     val verify = GraftSession.conf("graft-verify", 6, bytes)
     assert(bench - "spark.app.name" == verify - "spark.app.name")

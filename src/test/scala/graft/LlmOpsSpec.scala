@@ -10,11 +10,8 @@ import org.apache.spark.sql.functions._
 class LlmOpsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def fixtureDir(name: String): String = {
-    val d = java.nio.file.Files
-      .createTempDirectory(s"graft-llm-$name").toString
-    d
-  }
+  private def fixtureDir(name: String): String =
+    TempDirs.scoped(s"graft-llm-$name").toString
 
   test("stream convert: 30-minute boundary is inclusive, prior-view only") {
     val dir = fixtureDir("convert")

@@ -22,7 +22,7 @@ $script
   }
 
   test("mbtiles file: integrity, counts, TMS flip, tile round-trip") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mb_spec_")
+    val dir = TempDirs.scoped("graft_mb_spec_")
     val db = dir.resolve("t.mbtiles")
     operators.MvtTiles.writeMbtilesFile(spark, sf, db)
 
@@ -59,7 +59,7 @@ $script
     // tippecanoe's default artifact gzips tile_data; the opt-in flag
     // must produce members an INDEPENDENT gzip implementation accepts,
     // decompressing to the exact uncompressed tile bytes
-    val dir = java.nio.file.Files.createTempDirectory("graft_mb_gz_")
+    val dir = TempDirs.scoped("graft_mb_gz_")
     val db = dir.resolve("t.mbtiles")
     val key = operators.MvtTiles.GzipKey
     spark.conf.set(key, "true")

@@ -9,7 +9,7 @@ class OpsEdgeSpec extends SparkSpec {
   import spark.implicits._
 
   private def fixtureDir(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-edge-$name").toString
+    TempDirs.scoped(s"graft-edge-$name").toString
 
   private def writeEvents(dir: String,
       rows: Seq[(Long, Long, Long, String, Double)]): Unit =

@@ -100,8 +100,8 @@ class PlanPinSpec extends SparkSpec {
     // exchange. A second shuffle of encoded frames or a cap window
     // leaking onto the z>=9 bulk fails here; the feature-synthesis
     // subtree upstream of the checkpoint is NOT audited by this test
-    // (its shape is covered by q_ski_normalize's pin over the shared
-    // formatted() lineage).
+    // (the formatted runs it starts from are a Scaffold artifact, whose
+    // build stages the formatter-stage test below compiles).
     assert(exchanges <= 4,
       s"q_tiles_mvt_bytes grew to $exchanges exchanges:\n$plan")
   }
@@ -146,12 +146,12 @@ class PlanPinSpec extends SparkSpec {
     // A whole-stage method over 8000 bytes of bytecode is never JIT
     // compiled, and one over 64 KB does not compile at all: Spark then
     // runs the stage interpreted, re-trying the compile in every
-    // session. q_ski_format_runs and q_ski_format_lifts read their
-    // formatter through a checkpointed memo, so their stages are the
-    // memo's source frames; the area union formats inline.
+    // session. q_ski_format_runs and q_ski_format_lifts scan their
+    // formatter's scaffold artifact, so their stages are the frames the
+    // artifact is built from; the area union formats inline.
     import graft.operators.{Formatters, SkiFeatures, SkiQueries}
     val frames = Seq(
-      "q_ski_format_runs" -> Formatters.formatRuns(SkiFeatures.build(spark, sf)),
+      "q_ski_format_runs" -> Formatters.formatRuns(SkiFeatures.synthesize(spark, sf)),
       "q_ski_format_lifts" ->
         Formatters.formatLifts(SkiQueries.liftFeatures(spark, sf)),
       "q_ski_area_format_union" ->

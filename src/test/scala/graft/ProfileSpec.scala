@@ -41,7 +41,7 @@ class ProfileSpec extends SparkSpec {
   }
 
   test("--plan writes <name>.txt with the conf header") {
-    val dir = Files.createTempDirectory("graft-profile")
+    val dir = TempDirs.scoped("graft-profile")
     Profile.run(spark, Profile.parse(Seq(sf, "q6_forecast_revenue",
       "--plan", dir.toString)))
     val lines = Files.readAllLines(dir.resolve("q6_forecast_revenue.txt"))

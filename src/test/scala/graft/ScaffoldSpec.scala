@@ -1,13 +1,14 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.struct
 
 /** Contract tests for the persisted phase-scaffold store. */
 class ScaffoldSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(): java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft-scaffold-spec")
+    val p = TempDirs.scoped("graft-scaffold-spec")
     spark.conf.set("spark.graft.scaffoldDir", p.toString)
     p
   }
@@ -77,6 +78,57 @@ class ScaffoldSpec extends SparkSpec {
         Seq(1L, 2L, 3L, 4L).toDF("k")
       }
       assert(rebuilt.count() == 4) // rebuilt from scratch
+    } finally spark.conf.unset("spark.graft.scaffoldDir")
+  }
+
+  test("with no scaffoldDir conf the root is one scoped temp dir per process") {
+    assert(spark.conf.getOption("spark.graft.scaffoldDir").isEmpty)
+    val root = Scaffold.root(spark)
+    assert(TempDirs.live.contains(java.nio.file.Paths.get(root)),
+      s"$root is not deleted at exit")
+    assert(Scaffold.root(spark.newSession()) == root)
+  }
+
+  test("a re-read of an artifact runs no Spark job and keeps its schema") {
+    val root = freshRoot()
+    try {
+      def build: DataFrame = Seq((1L, "a", Seq(1.5), Map("k" -> 2)))
+        .toDF("k", "v", "xs", "m")
+        .select($"*", struct($"k", $"xs").as("s"))
+      val first = Scaffold.table(spark, "spec", "fp-reread")(build)
+      var again: DataFrame = null
+      assert(jobsDuring { again = Scaffold.table(spark, "spec", "fp-reread")(build) } == 0,
+        "a re-read ran a job")
+      // the seeded schema is the one inference finds in the files
+      val dir = java.nio.file.Files.list(root).iterator().asScala
+        .find(_.getFileName.toString.startsWith("spec-")).get
+      val inferred = spark.read.parquet(dir.toString).schema
+      assert(first.schema == inferred && again.schema == inferred,
+        s"${again.schema} vs $inferred")
+      assert(again.collect().toSeq == build.collect().toSeq)
+    } finally spark.conf.unset("spark.graft.scaffoldDir")
+  }
+
+  test("the spot sinks build one ski-format-spots artifact and each scans it") {
+    val root = freshRoot()
+    try {
+      val names = Seq("q_ski_format_spots", "q_csv_spots", "q_mapbox_spots")
+      val plans = names.map { n =>
+        val df = SparkEntry.queries(n)(spark, sf)
+        df.queryExecution.toRdd.count()
+        n -> df.queryExecution.executedPlan
+      }
+      val artifacts = java.nio.file.Files.list(root).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("ski-format-spots-"))
+        .toSeq
+      assert(artifacts.size == 1, s"spot artifacts: $artifacts")
+      for ((n, plan) <- plans) {
+        val scanned = planNodes(plan).collect {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+            f.relation.location.rootPaths.map(_.getName)
+        }.flatten
+        assert(scanned.contains(artifacts.head), s"$n scans $scanned:\n$plan")
+      }
     } finally spark.conf.unset("spark.graft.scaffoldDir")
   }
 

@@ -55,7 +55,7 @@ class SourcesSpec extends SparkSpec {
 
   // ---- S1/S2 ingest utility ----
   private def tmpDir(): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-ingest")
+    TempDirs.scoped("graft-ingest")
 
   test("downloadToFile retries with backoff and succeeds within budget") {
     val dir = tmpDir()

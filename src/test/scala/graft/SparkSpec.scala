@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -25,6 +26,34 @@ trait SparkSpec extends AnyFunSuite {
     }
     Seq(p) ++ within ++ p.children.flatMap(planNodes) ++
       p.subqueries.flatMap(planNodes)
+  }
+
+  /** The Spark jobs `body` starts. Listener events arrive
+    * asynchronously, so a marker job runs last and the count waits for
+    * it: the bus delivers events in order.
+    */
+  protected def jobsDuring(body: => Unit): Int = {
+    val marker = "graft-spec-jobs-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(marker), "the marker job never reached the listener")
+      seen.size - 1
+    } finally sc.removeSparkListener(listener)
   }
 }
 

@@ -9,6 +9,9 @@ import graft.sources.SqliteFile
   */
 class SqliteFileSpec extends SparkSpec {
 
+  /** Where the specs' db files go: deleted at JVM exit. */
+  private lazy val scratch = TempDirs.scoped("graft_sq_")
+
   /** Run a python snippet against a db file; returns stdout lines. */
   private def py(db: java.nio.file.Path, script: String): Seq[String] = {
     val full = s"""
@@ -24,7 +27,7 @@ $script
   }
 
   test("single-page db: integrity ok, typed values round-trip") {
-    val db = java.nio.file.Files.createTempFile("graft_sq_", ".db")
+    val db = java.nio.file.Files.createTempFile(scratch, "graft_sq_", ".db")
     SqliteFile.write(db, Seq(SqliteFile.Table(
       "t",
       "CREATE TABLE t (i INTEGER, r REAL, s TEXT, b BLOB, n TEXT)",
@@ -49,7 +52,7 @@ $script
   }
 
   test("multi-page b-tree: 20k rows survive an interior level") {
-    val db = java.nio.file.Files.createTempFile("graft_sq_big_", ".db")
+    val db = java.nio.file.Files.createTempFile(scratch, "graft_sq_big_", ".db")
     val n = 20000
     SqliteFile.write(db, Seq(SqliteFile.Table(
       "big", "CREATE TABLE big (k INTEGER, pad TEXT)",
@@ -68,7 +71,7 @@ $script
 
   test("the from-scratch reader round-trips writer output exactly") {
     import graft.sources.SqliteReader
-    val db = java.nio.file.Files.createTempFile("graft_sq_rt_", ".db")
+    val db = java.nio.file.Files.createTempFile(scratch, "graft_sq_rt_", ".db")
     val rows = Seq(
       Seq[Any](7L, 2.25, "text-ü", Array[Byte](9, 8), null),
       Seq[Any](-1L, -1e100, "", Array.emptyByteArray, "y"))
@@ -84,7 +87,7 @@ $script
       }
     }
     // and the 20k-row interior-level tree walks completely, in order
-    val big = java.nio.file.Files.createTempFile("graft_sq_rt2_", ".db")
+    val big = java.nio.file.Files.createTempFile(scratch, "graft_sq_rt2_", ".db")
     val n = 20000
     SqliteFile.write(big, Seq(SqliteFile.Table(
       "big", "CREATE TABLE big (k INTEGER)",
@@ -123,7 +126,7 @@ $script
     // streaming page writer, filled leaf pages are already on disk
     // long before the iterator is exhausted (a buffering writer would
     // hold every page until the end and the length would still be 0)
-    val db = java.nio.file.Files.createTempFile("graft_sq_stream_", ".db")
+    val db = java.nio.file.Files.createTempFile(scratch, "graft_sq_stream_", ".db")
     val n = 60000
     var lenAtMid = -1L
     val rows = (1 to n).iterator.map { i =>
@@ -149,7 +152,7 @@ $script
     // q_mbtiles_file): a silent misparse would silently corrupt a
     // hash the driver trusts, so every corruption class must throw
     import graft.sources.{SqliteFile, SqliteReader}
-    val db = java.nio.file.Files.createTempFile("graft_sq_corrupt_", ".db")
+    val db = java.nio.file.Files.createTempFile(scratch, "graft_sq_corrupt_", ".db")
     SqliteFile.write(db, Seq(SqliteFile.Table(
       "t", "CREATE TABLE t (k, v)",
       (1 to 500).iterator.map(i => Seq(i.toLong, "v" * (i % 40))))))
@@ -158,7 +161,7 @@ $script
     def openBytes(mutate: Array[Byte] => Unit): Unit = {
       val b = good.clone()
       mutate(b)
-      val p = java.nio.file.Files.createTempFile("graft_sq_mut_", ".db")
+      val p = java.nio.file.Files.createTempFile(scratch, "graft_sq_mut_", ".db")
       java.nio.file.Files.write(p, b)
       SqliteReader.open(p).table("t").foreach(_ => ())
     }
@@ -172,7 +175,7 @@ $script
       openBytes(b => b((root - 1) * 4096) = 0x02)) // index-interior type
     // truncated file: the second page gone — offsets run off the end
     intercept[Exception] {
-      val p = java.nio.file.Files.createTempFile("graft_sq_trunc_", ".db")
+      val p = java.nio.file.Files.createTempFile(scratch, "graft_sq_trunc_", ".db")
       java.nio.file.Files.write(p, good.take(4096 + 50))
       SqliteReader.open(p).table("t").foreach(_ => ())
     }
@@ -184,7 +187,7 @@ $script
   test("overflow payloads: blobs past the 4061-byte local max round-trip") {
     // real planet tiles exceed one page — spilled cells must chain
     // through standard overflow pages that stock SQLite reads back
-    val db = java.nio.file.Files.createTempFile("graft_sq_ovf_", ".db")
+    val db = java.nio.file.Files.createTempFile(scratch, "graft_sq_ovf_", ".db")
     def blob(n: Int): Array[Byte] =
       Array.tabulate(n)(i => ((i * 31 + n) & 0xff).toByte)
     val sizes = Seq(4061, 4062, 5000, 50000, 200001)
@@ -213,7 +216,7 @@ $script
       assert(vs(2) == s"tail-$n")
     }
     // a HUGE string (text spills identically to blobs)
-    val db2 = java.nio.file.Files.createTempFile("graft_sq_ovf2_", ".db")
+    val db2 = java.nio.file.Files.createTempFile(scratch, "graft_sq_ovf2_", ".db")
     val big = ("abcdefgh" * 10000) + "Z"
     SqliteFile.write(db2, Seq(SqliteFile.Table(
       "t", "CREATE TABLE t (s TEXT)", Iterator(Seq(big)))))
@@ -229,7 +232,7 @@ $script
     // 250^2 real leaves would be a 470 MB fixture; force depth with a
     // tiny fan-out instead — the same code path stock SQLite then
     // walks (maxKids is the writer's only branching knob)
-    val db = java.nio.file.Files.createTempFile("graft_sq_deep_", ".db")
+    val db = java.nio.file.Files.createTempFile(scratch, "graft_sq_deep_", ".db")
     val n = 3000 // ~430 leaves at 7 rows/leaf; maxKids=3 → depth >= 5
     SqliteFile.write(db, Seq(SqliteFile.Table(
       "d", "CREATE TABLE d (k INTEGER, pad TEXT)",
@@ -256,7 +259,7 @@ $script
   }
 
   test("empty table and multiple tables coexist") {
-    val db = java.nio.file.Files.createTempFile("graft_sq_multi_", ".db")
+    val db = java.nio.file.Files.createTempFile(scratch, "graft_sq_multi_", ".db")
     SqliteFile.write(db, Seq(
       SqliteFile.Table("a", "CREATE TABLE a (x INTEGER)",
         Iterator(Seq(42L))),

@@ -38,7 +38,7 @@ class StreamAsofSpec extends SparkSpec {
       (50L, ts(100), 5L, "view"), (51L, ts(200), 5L, "view"),
       (52L, ts(300), 5L, "view"), (53L, ts(700), 5L, "view"),
       (54L, ts(800), 5L, "view"), (55L, ts(900), 5L, "view"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ssasof_fix_")
+    val dir = TempDirs.scoped("graft_ssasof_fix_")
     try {
       rows.toDF("event_id", "ts", "user_id", "event_type")
         .withColumn("value", lit(0.0))

@@ -28,7 +28,7 @@ class SynthTagsSpec extends SparkSpec {
   test("kernel map equals the CreateMap form on every sf0.001 row") {
     val golden = Golden.lines("synth_tags_createmap.txt")
     val want = Golden.header(golden)
-    val rows = SkiFeatures.build(spark, sf)
+    val rows = SkiFeatures.synthesize(spark, sf)
       .select(col("way_id"), map_entries(col("tags")).as("e"),
         col("coords"))
       .collect().map(r => (r.getLong(0), canon(r))).sorted.map(_._2).toSeq
@@ -42,7 +42,7 @@ class SynthTagsSpec extends SparkSpec {
   }
 
   test("default build uses the kernel") {
-    val kplan = SkiFeatures.build(spark, sf)
+    val kplan = SkiFeatures.synthesize(spark, sf)
       .queryExecution.optimizedPlan.toString.toLowerCase
     assert(kplan.contains("synthtags"), s"kernel missing:\n${kplan.take(500)}")
   }

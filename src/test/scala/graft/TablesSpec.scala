@@ -1,39 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** `Tables.load` infers each table's schema once per file set. */
 class TablesSpec extends SparkSpec {
-
-  /** The Spark jobs `body` starts. Listener events arrive
-    * asynchronously, so a marker job runs last and the count waits for
-    * it: the bus delivers events in order.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val marker = "graft-tables-spec-marker"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.contains(marker) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(marker), "the marker job never reached the listener")
-      seen.size - 1
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** Writes `df` as the single parquet FILE `dir/t.parquet`. */
   private def writeTable(df: org.apache.spark.sql.DataFrame, dir: Path): Unit = {
@@ -46,7 +17,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("a table's schema is inferred once, and again once its file changes") {
-    val dir = Files.createTempDirectory("graft_tables_")
+    val dir = TempDirs.scoped("graft_tables_")
     try {
       writeTable(spark.range(10).toDF("a"), dir)
       assert(jobsDuring(Tables.load(spark, dir.toString, "t")) > 0,

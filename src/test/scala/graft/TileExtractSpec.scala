@@ -11,7 +11,7 @@ import graft.operators.MvtTiles
 class TileExtractSpec extends SparkSpec {
 
   private lazy val (outDir, nExtracted, direct) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_extract_spec_")
+    val dir = TempDirs.scoped("graft_extract_spec_")
     val mb = dir.resolve("in.mbtiles")
     MvtTiles.writeMbtilesFile(spark, sf, mb)
     val out = dir.resolve("tiles")
@@ -61,7 +61,7 @@ class TileExtractSpec extends SparkSpec {
       (3, 1L, 3L, 1, blob(100, 9)),     // local
       (4, 5L, 5L, 1, blob(4062, 11)))   // first spilled size
       .toDF("zoom", "tile_x", "tile_y", "n_layers", "tile")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bigtile_")
+    val dir = TempDirs.scoped("graft_bigtile_")
     val mb = dir.resolve("big.mbtiles")
     graft.operators.MvtTiles.writeMbtilesOf(spark, tiles, mb, gzip = false)
     val out = dir.resolve("tiles")
@@ -100,7 +100,7 @@ class TileExtractSpec extends SparkSpec {
     import spark.implicits._
     val tiles = Seq((2, 1L, 1L, 1, Array.tabulate(300)(_.toByte)))
       .toDF("zoom", "tile_x", "tile_y", "n_layers", "tile")
-    val dir = java.nio.file.Files.createTempDirectory("graft_gzct_")
+    val dir = TempDirs.scoped("graft_gzct_")
     val mb = dir.resolve("gz.mbtiles")
     MvtTiles.writeMbtilesOf(spark, tiles, mb, gzip = true)
     val out = dir.resolve("tiles")
@@ -118,7 +118,7 @@ class TileExtractSpec extends SparkSpec {
     // independent subtrees (an interior root) — the property the
     // distributed walk relies on; a single-leaf fixture would leave
     // the parallel path untested
-    val mb = java.nio.file.Files.createTempDirectory("graft_extract_spl_")
+    val mb = TempDirs.scoped("graft_extract_spl_")
       .resolve("s.mbtiles")
     MvtTiles.writeMbtilesFile(spark, sf, mb)
     val roots = graft.sources.SqliteReader.openMapped(mb)

@@ -27,7 +27,7 @@ class TilesStreamingSpec extends SparkSpec {
     // avoids the ±60° latitude wrap id 0 sits on) and the range
     // stager puts each in its OWN micro-batch, so the shared tile is
     // written three times and only the last version may win
-    val dir = java.nio.file.Files.createTempDirectory("graft_ts_fixture_")
+    val dir = TempDirs.scoped("graft_ts_fixture_")
     val events = spark.read.parquet(s"$sf/events.parquet")
       .filter(col("event_id") < 3)
       .withColumn("event_id", col("event_id") * 25185L + 1L)
@@ -56,9 +56,9 @@ class TilesStreamingSpec extends SparkSpec {
     // store, replay batch 1 verbatim, and require the identical
     // resolved state (same tiles, same bytes, same feature store).
     import java.nio.file.Files
-    val spotsDir = Files.createTempDirectory("graft_replay_spots_")
+    val spotsDir = TempDirs.scoped("graft_replay_spots_")
       .resolve("store").toString
-    val tilesDir = Files.createTempDirectory("graft_replay_tiles_")
+    val tilesDir = TempDirs.scoped("graft_replay_tiles_")
       .resolve("store").toString
     val events = spark.read.parquet(s"$sf/events.parquet")
     val maxId = events.agg(max("event_id")).head().getLong(0)
