@@ -88,8 +88,7 @@ object Scaffold {
         if (fs.exists(dir)) fs.delete(dir, true)
         val tmp = new Path(dir.getParent,
           s".${dir.getName}.tmp-${java.util.UUID.randomUUID}")
-        val df = build
-        val w = df.write.mode("overwrite")
+        val w = build.write.mode("overwrite")
         (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
           .parquet(tmp.toString)
         if (!fs.rename(tmp, dir)) {
@@ -99,11 +98,6 @@ object Scaffold {
           if (!fs.exists(done))
             sys.error(s"scaffold commit failed for $dir")
         }
-        // a partitioned artifact's partition-column types come from
-        // inference over its directory names, which the build's types
-        // need not match (a long column reads back as int), so only an
-        // unpartitioned artifact reads back with the build's schema
-        if (partCols.isEmpty) Tables.seed(spark, dir.toString, df.schema)
       }
     }
     Tables.parquet(spark, dir.toString)

@@ -45,13 +45,6 @@ object Tables {
         df
     }
 
-  /** Records `schema` as that of the unpartitioned file set its writer
-    * just committed at `path`: no read infers it.
-    */
-  private[graft] def seed(spark: SparkSession, path: String,
-      schema: StructType): Unit =
-    schemaKey(spark, path).foreach(schemas.put(_, schema))
-
   /** Table `name` of `sfDir`, read through [[parquet]]. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     parquet(spark, s"$sfDir/$name.parquet")

@@ -55,7 +55,7 @@ object PipelineE2E {
     * from re-running the chain per iteration.
     */
   private[graft] def normalized(s: SparkSession, d: String): DataFrame =
-    graft.Scaffold.table(s, "pipeline-norm", SkiFeatures.memoKey(s, d)) {
+    graft.Scaffold.table(s, "pipeline-norm", SkiFeatures.scaffoldKey(s, d)) {
       Normalization.normalizeRuns(SkiQueries.normalizePropsInput(s, d),
         Normalization.RunPropsLattice)
     }

@@ -148,7 +148,7 @@ object SkiFeatures {
   /** Scaffold key covering both input tables, fingerprinted so data
     * regenerated at the same path invalidates the artifact.
     */
-  private[operators] def memoKey(s: SparkSession, d: String): String =
+  private[operators] def scaffoldKey(s: SparkSession, d: String): String =
     graft.Tables.fingerprint(s, d, "lineitem") + "|" +
       graft.Tables.fingerprint(s, d, "part")
 

@@ -84,7 +84,7 @@ object SkiQueries {
     */
   private[operators] def formatted(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    graft.Scaffold.table(s, "ski-format-runs", SkiFeatures.memoKey(s, d)) {
+    graft.Scaffold.table(s, "ski-format-runs", SkiFeatures.scaffoldKey(s, d)) {
       Formatters.formatRuns(SkiFeatures.synthesize(s, d))
     }
 

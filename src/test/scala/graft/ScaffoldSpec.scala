@@ -99,7 +99,7 @@ class ScaffoldSpec extends SparkSpec {
       var again: DataFrame = null
       assert(jobsDuring { again = Scaffold.table(spark, "spec", "fp-reread")(build) } == 0,
         "a re-read ran a job")
-      // the seeded schema is the one inference finds in the files
+      // both reads carry the schema inference finds in the files
       val dir = java.nio.file.Files.list(root).iterator().asScala
         .find(_.getFileName.toString.startsWith("spec-")).get
       val inferred = spark.read.parquet(dir.toString).schema
